@@ -530,20 +530,6 @@ object FieldedIndex {
         topGroups, docsPerGroup)
     }
 
-    /** Classic query-string scoring over the fielded deployment — the
-      * QueryParser front door WITH `field:` support
-      * ([[graft.query.QueryParser.parseFielded]]): clauses group by
-      * field (un-prefixed clauses belong to `defaultField`) and each
-      * field's subset resolves through ITS searcher — its analyzer, its
-      * collection statistics (Lucene's per-field stats: a term's idf and
-      * a doc's dl/avgdl are field-local). The per-field contribution
-      * frames union (doc_ids are aligned across roots) into ONE fold
-      * (invariant 11's single definition, [[graft.query.Searcher
-      * .foldPrepared]] — contributions were computed per field BEFORE
-      * the union so no field borrows another's avgdl), MUST requirements
-      * gate globally (field-prefixed req keys can't collide), and
-      * MUST_NOT doc sets exclude regardless of which field they came
-      * from. A MUST unsatisfiable in ANY field ⇒ MatchNoDocs. */
     /** `field:` query string → per-field clause subsets in clause order,
       * validated against the deployment's fields (the ONE grouping
       * definition [[scoreQuery]] and [[explainQuery]] share). */
@@ -565,32 +551,26 @@ object FieldedIndex {
       }
     }
 
+    /** Classic query-string scoring over the fielded deployment — the
+      * QueryParser front door WITH `field:` support
+      * ([[graft.query.QueryParser.parseFielded]]): clauses group by
+      * field (un-prefixed clauses belong to `defaultField`) and each
+      * field's subset resolves through ITS searcher — its analyzer, its
+      * collection statistics (Lucene's per-field stats: a term's idf and
+      * a doc's dl/avgdl are field-local). The per-field contribution
+      * frames union (doc_ids are aligned across roots) into ONE fold
+      * through the single-index executor's own fold/gate/exclude step
+      * ([[graft.query.Searcher.foldGated]] — contributions were computed
+      * per field BEFORE the union so no field borrows another's avgdl):
+      * MUST requirements gate globally (field-prefixed req keys can't
+      * collide), and MUST_NOT doc sets exclude regardless of which field
+      * they came from. A MUST unsatisfiable in ANY field ⇒ MatchNoDocs. */
     def scoreQuery(q: String, defaultField: String,
-                   maxExpansions: Int = 1024): DataFrame = {
-      def emptyMatches: DataFrame = {
-        val sp = spark
-        import sp.implicits._
-        Seq.empty[(Long, Int, Double)].toDF("doc_id", "matched", "score")
-      }
-      val parts = clausesByField(q, defaultField).map { case (f, inner) =>
-        searchers(f).parsedFrames(inner, maxExpansions, keyPrefix = f + ":")
-      }
-      if (parts.exists(_.matchNone)) return emptyMatches
-      val rowFrames = parts.flatMap(_.rows)
-      if (rowFrames.isEmpty) return emptyMatches // pure NOT / nothing resolved
-      val perTerm = rowFrames.reduce(_ unionByName _)
-      val reqCount = parts.map(_.reqCount).sum
-      val folded = graft.query.Searcher.foldPrepared(perTerm,
-        withReq = reqCount > 0)
-      val gated =
-        if (reqCount == 0) folded
-        else folded.filter(col("matched_req") === reqCount)
-      val out = parts.flatMap(_.notFrames).reduceOption(_ union _) match {
-        case Some(nd) => gated.join(nd, Seq("doc_id"), "left_anti")
-        case None => gated
-      }
-      out.select("doc_id", "matched", "score")
-    }
+                   maxExpansions: Int = 1024): DataFrame =
+      graft.query.Searcher.foldGated(clausesByField(q, defaultField).map {
+        case (f, inner) =>
+          searchers(f).parsedFrames(inner, maxExpansions, keyPrefix = f + ":")
+      }).getOrElse(graft.query.Searcher.emptyMatches(spark))
 
     /** Ranked page over [[scoreQuery]] — `field:` query strings through
       * the fielded deployment (`+body:spark path:seven^2 -body:fast`). */

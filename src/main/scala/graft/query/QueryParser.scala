@@ -54,8 +54,10 @@ object QueryParser {
                            boost: Double) extends Clause
   final case class PrefixQ(prefix: String, occur: Occur,
                            boost: Double) extends Clause
-  /** Lucene-style pattern (`*` / `?`), converted to SQL LIKE by the
-    * executor. */
+  /** Lucene-style pattern (`*` any run, `?` one char, everything else
+    * literal), matched by the executor as an anchored `rlike` with
+    * quoted literals — NOT SQL LIKE, so `%`/`_` stay literal. Only
+    * [[Searcher.searchWildcard]] takes SQL LIKE syntax. */
   final case class WildcardQ(pattern: String, occur: Occur,
                              boost: Double) extends Clause
   final case class FuzzyQ(term: String, maxEdits: Int, occur: Occur,

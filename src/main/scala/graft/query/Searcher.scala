@@ -128,7 +128,7 @@ final class Searcher(
     * (parquet-backed; column pruning keeps narrow reads cheap). The
     * `text` column is O(corpus bytes) — the same class as posting blobs
     * under the no-blob-persist invariant — so it is never cached: page
-    * fetches read it from parquet for ≤ k ids ([[fetchByIds]]). */
+    * fetches read it from parquet for ≤ k ids ([[doc]]). */
   val docstore: DataFrame = unionSegs(_.docstore)
 
   /** The cached per-query hot set (doc_id, url, warc_ts, lang, dl):
@@ -161,15 +161,6 @@ final class Searcher(
     * unknown column fails analysis loudly on the docstore plan. */
   private def resolvesOnNarrow(cols: Seq[Column]): Boolean =
     cols.forall(c => refNames(c).subsetOf(narrowSet))
-
-  /** Stored-field rows for an explicit id set: a `doc_id IN (...)`
-    * literal against the docstore parquet. doc_ids are assigned in url
-    * sort order, so docstore row groups carry tight doc_id ranges and
-    * the scan prunes to ~|ids| row groups — the text column is read for
-    * the page, never the corpus. */
-  private def fetchByIds(ids: Array[Long]): DataFrame =
-    if (ids.isEmpty) docstore.limit(0)
-    else docstore.filter(col("doc_id").isin(ids: _*))
 
   /** One postings relation per segment, created ONCE (in [[segTables]]):
     * re-reading per query would re-list the partition directories on
@@ -414,35 +405,17 @@ final class Searcher(
     * (Searcher.java:722-725). */
   private def termIdfs(terms: Seq[String]): Seq[TermInfo] =
     if (terms.isEmpty) Seq.empty
-    else termInfosWhere(col("term").isin(terms: _*), cap = None)
+    else termStats.filter(col("term").isin(terms: _*))
+      .select("term", "df", "max_tf", "min_dl").as[(String, Long, Int, Int)]
+      .collect().sortBy(_._1).toSeq
+      .map { case (t, df, mt, md) => mkTermInfo(t, df, mt, md) }
 
-  /** The ONE term_stats-row → TermInfo/idf construction every query
-    * path shares (invariant 11's single-definition discipline: literal
-    * terms and multi-term expansions must never diverge on idf
-    * arithmetic). Rows matching `pred` from the cached term_stats probe,
-    * term-sorted. `cap` (the Lucene maxClauseCount analog) fails LOUDLY
-    * on overflow — silent truncation would silently change results. */
-  private def termInfosWhere(pred: Column, cap: Option[Int]): Seq[TermInfo] = {
-    val base = termStats.filter(pred).select("term", "df", "max_tf", "min_dl")
-    val rows = cap.map(c => base.limit(c + 1)) // +1 only to detect overflow cheaply
-      .getOrElse(base).as[(String, Long, Int, Int)].collect()
-    cap.foreach(c => require(rows.length <= c,
-      s"multi-term query expands to > maxExpansions=$c index terms — " +
-        "narrow the pattern or raise the cap"))
-    rows.sortBy(_._1).toSeq.map { case (t, df, mt, md) =>
-      mkTermInfo(t, df, mt, md)
-    }
-  }
-
-  /** THE idf arithmetic (invariant 11: one definition — [[termInfosWhere]]
-    * and the parsed-query probe must never diverge). */
+  /** THE idf arithmetic (invariant 11: one definition — [[termIdfs]]
+    * and the executor's probe must never diverge). */
   private def mkTermInfo(term: String, df: Long, maxTf: Int,
                          minDl: Int): TermInfo =
     TermInfo(term, df,
       math.log(1.0 + (docCount - df + 0.5) / (df + 0.5)), maxTf, minDl)
-
-  private def emptyMatches: DataFrame =
-    spark.emptyDataset[(Long, Int, Double)].toDF("doc_id", "matched", "score")
 
   /** Serving-path actions run with AQE disabled: adaptive execution
     * re-plans at every shuffle-stage boundary, adding a scheduler
@@ -504,26 +477,18 @@ final class Searcher(
     * `(term, doc_id, tf, dl, idf)`: per-term contributions summed in
     * ascending term order — the bit-identical-determinism contract
     * shared with the golden model and the WAND rescore phase. ONE
-    * definition for every exact path (invariant 11): the single-query
-    * paths group by doc_id, [[searchBatch]] by (query_id, doc_id). */
+    * definition for every exact path (invariant 11): the executor and
+    * [[searchWand]] group by doc_id, [[searchBatch]] by (query_id,
+    * doc_id), and the restricted WAND θ seed ranks by it. */
   private def contribBase: Column =
     col("idf") * (col("tf") * lit(k1 + 1.0)) /
       (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / lit(avgdl)))
 
   private def foldScores(perTerm: DataFrame,
                          keys: Seq[String] = Seq("doc_id"),
-                         withReq: Boolean = false,
-                         pivotTerms: Option[Seq[String]] = None): DataFrame = {
-    // query-time clause boosts ([[scoreParsed]]) ride as a `weight`
-    // multiplier when the per-term rows carry one; paths without the
-    // column keep the invariant-3 arithmetic shape literally untouched.
-    // Weighted rows never pivot: a zero/negative weight could break the
-    // `+0.0 is exact` argument in [[Searcher.foldPrepared]].
-    val weighted = perTerm.columns.contains("weight")
-    val contrib = if (weighted) col("weight") * contribBase else contribBase
-    Searcher.foldPrepared(perTerm.withColumn("contrib", contrib), keys,
-      withReq, if (weighted) None else pivotTerms)
-  }
+                         pivotTerms: Option[Seq[String]] = None): DataFrame =
+    Searcher.foldPrepared(perTerm.withColumn("contrib", contribBase), keys,
+      pivotTerms = pivotTerms)
 
   /** The non-scoring filter clause (Q1): narrow-column predicates
     * (lang/url/ts/dl) hit the cache; a text predicate pushes into the
@@ -552,39 +517,6 @@ final class Searcher(
                                         filter: Option[Column]): DataFrame =
     dropDead(applyFilterClause(rows, filter))
 
-  /** Match + score: returns (doc_id, matched, score). The posting scan is
-    * a literal `term IN (...)` filter, so Parquet row-group pruning (term
-    * is the sort key within each part) skips everything else; blobs
-    * decode via the codegen'd vb_decode expression. `dl` rides inside the
-    * postings (norms colocation), so scoring needs NO docstore join — the
-    * docstore is touched only by an explicit filter clause. */
-  private def scoredMatches(terms: Seq[String], idfs: Seq[TermInfo],
-                            filter: Option[Column],
-                            among: Option[DataFrame] = None,
-                            required: Set[String] = Set.empty): DataFrame = {
-    if (terms.isEmpty || docCount == 0 || idfs.isEmpty) return emptyMatches
-
-    val idfDf =
-      if (required.isEmpty) idfs.map(i => (i.term, i.idf)).toDF("term", "idf")
-      else idfs.map(i => (i.term, i.idf,
-          if (required(i.term)) i.term else null))
-        .toDF("term", "idf", "req_clause")
-
-    val decoded = postingsForTerms(idfs.map(_.term))
-      .select(col("term"), explode(vb_decode(col("blob"))).as("p"))
-      .select(col("term"), col("p.doc_id").as("doc_id"),
-        col("p.tf").as("tf"), col("p.dl").as("dl"))
-      .join(broadcast(idfDf), Seq("term"))
-
-    // candidate restriction BEFORE the fold: the groupBy then shuffles
-    // only the intersection's per-term rows
-    val restricted = applyMatchSetRestrictions(decoded, filter)
-    foldScores(among.fold(restricted)(c =>
-      restricted.join(c.select("doc_id"), Seq("doc_id"), "left_semi")),
-      withReq = required.nonEmpty,
-      pivotTerms = Some(idfs.map(_.term)))
-  }
-
   /** Doc set containing ANY of the given index-present NOT terms
     * (unscored): the MUST_NOT side of the reference's BooleanQuery
     * (`Occur` clauses, Searcher.java:734-736). Presence must already be
@@ -595,8 +527,10 @@ final class Searcher(
       .select(explode(vb_decode(col("blob"))).as("p"))
       .select(col("p.doc_id").as("doc_id")).distinct())
 
-  /** Conjunctive (AND, Q5) or disjunctive (OR) match set with scores.
-    * AND with any zero-df term ⇒ MatchNoDocs (BooleanQuery MUST).
+  /** Conjunctive (AND, Q5) or disjunctive (OR) match set with scores:
+    * (doc_id, matched, score). AND = each analyzed term its own MUST
+    * requirement (any zero-df term ⇒ MatchNoDocs, BooleanQuery MUST);
+    * OR = every term SHOULD.
     * `notQuery` terms are MUST_NOT clauses: matching docs are excluded
     * and never score (left-anti on the NOT-term doc set).
     * `minShouldMatch` (OR mode only) is Lucene's
@@ -609,33 +543,19 @@ final class Searcher(
     * fields' per-term rows to the most selective field's matches, so
     * their fold shuffles O(intersection) instead of O(field match
     * set)). Scores of surviving docs are bit-identical: restriction
-    * removes whole docs, never per-term contributions. */
+    * removes whole docs, never per-term contributions. The posting
+    * scan is a literal `term IN (...)` filter and `dl` rides inside the
+    * postings (norms colocation), so scoring needs NO docstore join —
+    * the docstore is touched only by an explicit filter clause. */
   def score(query: String, conjunctive: Boolean = true,
             filter: Option[Column] = None,
             notQuery: Option[String] = None,
             minShouldMatch: Int = 0,
             among: Option[DataFrame] = None): DataFrame = {
-    val terms = analyzeQuery(query)
-    val notTerms = notQuery.map(analyzeQuery).getOrElse(Seq.empty)
-    // ONE driver lookup covers MUST and MUST_NOT terms (per-query
-    // latency is job-count-bound: one cached term_stats probe, always)
-    val all = termIdfs((terms ++ notTerms).distinct)
-    val termSet = terms.toSet
-    val idfs = all.filter(i => termSet.contains(i.term))
-    val notSet = notTerms.toSet
-    val presentNot = all.map(_.term).filter(notSet.contains)
-    val scored = scoredMatches(terms, idfs, filter, among)
-    val must =
-      if (conjunctive) {
-        if (idfs.size < terms.size) scored.where(lit(false))
-        else scored.filter(col("matched") === terms.size)
-      } else if (minShouldMatch > 0)
-        scored.filter(col("matched") >= minShouldMatch)
-      else scored
-    notDocSet(presentNot) match {
-      case Some(nd) => must.join(nd, Seq("doc_id"), "left_anti")
-      case None => must
-    }
+    import QueryParser._
+    execute(resolve(TermQ(query, if (conjunctive) Must else Should, 1.0) +:
+        notQuery.map(TermQ(_, MustNot, 1.0)).toSeq),
+      filter, among, if (conjunctive) 0 else minShouldMatch)
   }
 
   /** Mixed MUST/SHOULD BooleanQuery (the reference's full Occur clause
@@ -652,27 +572,12 @@ final class Searcher(
                    filter: Option[Column] = None,
                    notQuery: Option[String] = None): DataFrame = {
     val must = analyzeQuery(mustQuery)
-    val mustSet = must.toSet
-    val terms = (must ++ analyzeQuery(shouldQuery)).distinct.sorted
-    val notTerms = notQuery.map(analyzeQuery).getOrElse(Seq.empty)
-    if (terms.isEmpty) return emptyMatches
-    val all = termIdfs((terms ++ notTerms).distinct)
-    val present = all.map(_.term).toSet
-    // a MUST term absent from the index matches nothing (MatchNoDocs)
-    if (!must.forall(present)) return emptyMatches
-    val termSet = terms.toSet
-    val idfs = all.filter(i => termSet.contains(i.term))
-    val presentNot = notTerms.distinct.filter(present)
-    val scored0 =
-      scoredMatches(terms, idfs, filter, required = mustSet)
-    val scored =
-      if (must.isEmpty) scored0
-      else scored0.filter(col("matched_req") === must.size)
-    val out = notDocSet(presentNot) match {
-      case Some(nd) => scored.join(nd, Seq("doc_id"), "left_anti")
-      case None => scored
-    }
-    out.select("doc_id", "matched", "score")
+    val should = analyzeQuery(shouldQuery).filterNot(must.toSet)
+    execute(Resolved(
+      terms = must.zipWithIndex.map { case (t, r) => (t, 1.0, r) } ++
+        should.map(t => (t, 1.0, -1)),
+      notTerms = notQuery.map(analyzeQuery).getOrElse(Nil),
+      reqCount = must.size), filter)
   }
 
   /** BooleanQuery top-k page over [[scoreBoolean]]. */
@@ -680,53 +585,48 @@ final class Searcher(
                     start: Int = 0, filter: Option[Column] = None,
                     notQuery: Option[String] = None): DataFrame =
     withServingConf {
-      val topk = scoreBoolean(mustQuery, shouldQuery, filter, notQuery)
-        .orderBy(col("score").desc, col("doc_id").asc)
-        .offset(start).limit(k)
-      fetchPage(topk)
+      rankedPage(scoreBoolean(mustQuery, shouldQuery, filter, notQuery),
+        k, start)
     }
 
-  // ---- parsed-query execution (the classic QueryParser analog) -------
+  // ---- the exact executor: term, boolean, expansion, phrase and
+  //      parsed (classic QueryParser analog) queries share one path ----
 
-  /** Resolves a parsed clause list ([[QueryParser]]) into the weighted
-    * per-(term, doc) rows every exact path folds, plus the MUST-clause
-    * count and the MUST_NOT doc-set frames. `None` = MatchNoDocs (a
-    * MUST term absent from the index, a MUST expansion matching
-    * nothing, a MUST phrase with an absent term, or no scoring clause
-    * at all — a pure-NOT query matches nothing, like Lucene).
-    *
-    * Job shape (the 100-TB posture): ONE term_stats probe resolves
-    * every literal term AND every expansion predicate together — the
-    * clause-membership flags ride the same collect as extra boolean
-    * columns — then one `term IN` row-group-pruned posting scan covers
-    * all non-phrase clauses and one positional scan serves each phrase
-    * clause. Clause weights and MUST markers travel in the broadcast
-    * term frame, so the fold stays a single aggregation. */
-  private[graft] def parsedFrames(clauses: Seq[QueryParser.Clause],
-                                  maxExpansions: Int,
-                                  keyPrefix: String = "")
-      : Searcher.ParsedFrames = {
+  /** A clause set resolved to analysis-level sub-clauses — the exact
+    * executor's input. Every positive sub carries its clause weight and
+    * requirement id (`>= 0` ⇒ MUST requirement #id, counted once per doc
+    * however many of its members match; `-1` ⇒ pure SHOULD):
+    *  - `terms`: analyzed literal terms (term, weight, req)
+    *  - `exps`: dictionary-expansion predicates over `term` (pred,
+    *    weight, req), each capped at `maxExpansions` index terms
+    *  - `phrases`: ordered analyzed phrase terms (ordered, slop, weight,
+    *    req), matched by positional alignment
+    *  - `notTerms` / `notExps` / `notPhrases`: the MUST_NOT doc sets
+    *  - `known`: term stats the caller already probed — those terms
+    *    skip the executor's probe. */
+  private final case class Resolved(
+      terms: Seq[(String, Double, Int)] = Nil,
+      exps: Seq[(Column, Double, Int)] = Nil,
+      phrases: Seq[(Seq[String], Int, Double, Int)] = Nil,
+      notTerms: Seq[String] = Nil,
+      notExps: Seq[Column] = Nil,
+      notPhrases: Seq[(Seq[String], Int)] = Nil,
+      reqCount: Int = 0,
+      known: Map[String, TermInfo] = Map.empty)
+
+  /** The resolver: a parsed clause list ([[QueryParser]]) → [[Resolved]]
+    * sub-clauses. An ungrouped MUST term clause fans each analyzed term
+    * into its OWN requirement (`+a b` composes exactly like the
+    * conjunctive contract); a parenthesized MUST group is ONE
+    * requirement satisfied by ANY member — the same any-of shape a MUST
+    * expansion clause already has. Clauses whose analysis is empty are
+    * dropped (the classic parser does the same). */
+  private def resolve(clauses: Seq[QueryParser.Clause]): Resolved = {
     import QueryParser._
-    import Searcher.ParsedFrames
     import scala.collection.mutable.ArrayBuffer
     require(!clauses.exists(_.isInstanceOf[FieldQ]),
       "a field-scoped clause reached a single-index executor — run " +
         "fielded queries through FieldedSearcher.searchQuery")
-    if (docCount == 0)
-      // an empty index: any MUST clause ⇒ MatchNoDocs (Lucene); pure
-      // SHOULD/NOT subsets contribute and exclude nothing
-      return if (clauses.exists(_.occur == Must)) Searcher.matchNoDocs
-      else ParsedFrames(None, 0, Nil, matchNone = false)
-
-    // -- resolution: clauses → analysis-level sub-clauses, each tagged
-    // with its requirement group (reqId >= 0 ⇒ the sub belongs to MUST
-    // requirement #reqId, counted once per doc however many members
-    // match; -1 ⇒ pure SHOULD). An ungrouped MUST term clause fans each
-    // analyzed term into its OWN requirement (`+a b` composes exactly
-    // like the established conjunctive contract); a parenthesized MUST
-    // group is ONE requirement satisfied by ANY member — the same
-    // any-of shape a MUST expansion clause already has. Clauses whose
-    // analysis is empty are dropped (the classic parser does the same).
     val termSubs = ArrayBuffer.empty[(String, Double, Int)]
     val expSubs = ArrayBuffer.empty[(Column, Double, Int)]
     val phraseSubs = ArrayBuffer.empty[(Seq[String], Int, Double, Int)]
@@ -792,6 +692,8 @@ final class Searcher(
           val p = p0.trim // never case-folded (regex syntax)
           if (p.nonEmpty) addExp(col("term").rlike("^(?:" + p + ")$"))
         case RangeQ(lo0, hi0, incLo, incHi, _, _) =>
+          // open-open = match-all dictionary (Lucene semantics); on any
+          // real dictionary the maxExpansions cap then fails LOUDLY
           val lo = lo0.map(s => Tokenizer.foldCase(s.trim)).filter(_.nonEmpty)
           val hi = hi0.map(s => Tokenizer.foldCase(s.trim)).filter(_.nonEmpty)
           addExp((lo.map(l =>
@@ -831,34 +733,91 @@ final class Searcher(
       case c =>
         addClause(c, c.boost, should, forNot = false)
     }
-    if (termSubs.isEmpty && expSubs.isEmpty && phraseSubs.isEmpty &&
-        notTerms.isEmpty && notExpPreds.isEmpty && notPhrases.isEmpty)
-      return ParsedFrames(None, 0, Nil, matchNone = false)
+    Resolved(termSubs.toSeq, expSubs.toSeq, phraseSubs.toSeq,
+      notTerms.toSeq, notExpPreds.toSeq, notPhrases.toSeq, nReq)
+  }
+
+  /** A parsed clause list resolved to foldable frames — the
+    * cross-Searcher composition unit ([[Searcher.ParsedFrames]]). */
+  private[graft] def parsedFrames(clauses: Seq[QueryParser.Clause],
+                                  maxExpansions: Int,
+                                  keyPrefix: String = "")
+      : Searcher.ParsedFrames =
+    resolvedFrames(resolve(clauses), maxExpansions, keyPrefix)
+
+  /** THE exact executor: [[Resolved]] sub-clauses → (doc_id, matched,
+    * score) through [[resolvedFrames]] and the shared fold/gate/exclude
+    * step [[Searcher.foldGated]]. */
+  private def execute(r: Resolved, filter: Option[Column] = None,
+                      among: Option[DataFrame] = None,
+                      minShouldMatch: Int = 0,
+                      maxExpansions: Int = 1024): DataFrame =
+    Searcher.foldGated(
+        Seq(resolvedFrames(r, maxExpansions, "", filter, among)),
+        minShouldMatch)
+      .getOrElse(Searcher.emptyMatches(spark))
+
+  /** Resolved sub-clauses → the weighted, restricted per-(sub-term, doc)
+    * rows the fold sums, plus the MUST requirement count and the
+    * MUST_NOT doc-set frames. `matchNone` = a MUST requirement has no
+    * satisfiable member (an absent term, an expansion matching nothing,
+    * a phrase with an absent term); `rows = None` = no positive sub
+    * resolved to anything (a pure-NOT query matches nothing, like
+    * Lucene).
+    *
+    * Job shape (invariant 7): ONE term_stats probe resolves every
+    * literal term AND every expansion predicate together — the
+    * expansion-membership flags ride the same collect as extra boolean
+    * columns, and a literal-only probe is a plain collect (ONE job; a
+    * `limit` would plan executeTake's incremental scans) — then one
+    * `term IN` row-group-pruned posting scan covers all non-phrase subs
+    * and one positional scan serves each phrase. Clause weights and
+    * requirement keys travel in the broadcast term frame, so the fold
+    * stays a single aggregation. The `filter`/`among`/dead-doc
+    * restrictions run on the per-term rows before the fold, and — with
+    * the NOT sets — on the raw positional rows before each phrase
+    * alignment, so it shuffles only eligible docs. */
+  private def resolvedFrames(r: Resolved, maxExpansions: Int,
+                             keyPrefix: String = "",
+                             filter: Option[Column] = None,
+                             among: Option[DataFrame] = None)
+      : Searcher.ParsedFrames = {
+    import Searcher.{ParsedFrames, matchNoDocs}
+    val noRows = ParsedFrames(None, 0, Nil, matchNone = false)
+    // an empty index: any MUST requirement ⇒ MatchNoDocs (Lucene); pure
+    // SHOULD/NOT subsets contribute and exclude nothing
+    if (docCount == 0) return if (r.reqCount > 0) matchNoDocs else noRows
+    val litTerms = (r.terms.map(_._1) ++ r.notTerms ++
+      r.phrases.flatMap(_._1) ++ r.notPhrases.flatMap(_._1))
+      .distinct.filterNot(r.known.contains).sorted
+    val expPreds = r.exps.map(_._1) ++ r.notExps
+    if (litTerms.isEmpty && expPreds.isEmpty && r.known.isEmpty) return noRows
 
     // -- ONE term_stats probe for literals + every expansion -----------
-    val litTerms = (termSubs.map(_._1) ++ notTerms ++
-      phraseSubs.flatMap(_._1) ++ notPhrases.flatMap(_._1))
-      .distinct.sorted.toSeq
-    val expPreds = (expSubs.map(_._1) ++ notExpPreds).toSeq
-    val probePred =
-      ((if (litTerms.nonEmpty) Seq(col("term").isin(litTerms: _*)) else Nil)
-        ++ expPreds).reduce(_ || _)
-    val flagCols = expPreds.zipWithIndex.map { case (p, j) => p.as(s"__c$j") }
-    val totalCap = litTerms.size + expPreds.size * maxExpansions
-    val probeRows = termStats.filter(probePred)
-      .select(Seq(col("term"), col("df"), col("max_tf"), col("min_dl")) ++
-        flagCols: _*)
-      .limit(totalCap + 1).collect()
-    require(probeRows.length <= totalCap,
-      s"parsed query expands to > $totalCap index terms — narrow the " +
-        "expansions or raise maxExpansions")
-    val infoOf: Map[String, TermInfo] = probeRows.map { r =>
-      val t = r.getString(0)
-      t -> mkTermInfo(t, r.getLong(1), r.getInt(2), r.getInt(3))
-    }.toMap
+    val probeRows =
+      if (litTerms.isEmpty && expPreds.isEmpty) Array.empty[org.apache.spark.sql.Row]
+      else {
+        val probe = termStats
+          .filter(((if (litTerms.nonEmpty) Seq(col("term").isin(litTerms: _*))
+            else Nil) ++ expPreds).reduce(_ || _))
+          .select(Seq(col("term"), col("df"), col("max_tf"), col("min_dl")) ++
+            expPreds.zipWithIndex.map { case (p, j) => p.as(s"__c$j") }: _*)
+        if (expPreds.isEmpty) probe.collect()
+        else {
+          val totalCap = litTerms.size + expPreds.size * maxExpansions
+          val rows = probe.limit(totalCap + 1).collect() // +1 detects overflow
+          require(rows.length <= totalCap, s"query expands to > $totalCap " +
+            "index terms — narrow the expansions or raise maxExpansions")
+          rows
+        }
+      }
+    val infoOf: Map[String, TermInfo] = r.known ++ probeRows.map { row =>
+      val t = row.getString(0)
+      t -> mkTermInfo(t, row.getLong(1), row.getInt(2), row.getInt(3))
+    }
     val expMatches: IndexedSeq[Seq[String]] = expPreds.indices.map { j =>
       val ts = probeRows.iterator
-        .filter(r => !r.isNullAt(4 + j) && r.getBoolean(4 + j))
+        .filter(row => !row.isNullAt(4 + j) && row.getBoolean(4 + j))
         .map(_.getString(0)).toSeq.sorted
       require(ts.size <= maxExpansions, s"expansion clause #$j matches " +
         s"${ts.size} > maxExpansions=$maxExpansions index terms — " +
@@ -866,88 +825,81 @@ final class Searcher(
       ts
     }
 
-    // -- MatchNoDocs short-circuit (no job runs): every requirement
-    // group needs at least ONE satisfiable member — a present term, a
-    // non-empty expansion, or an all-terms-present phrase. An ungrouped
-    // MUST clause is a single-member group, so this reduces to the
-    // absent-MUST-term / empty-MUST-expansion / absent-phrase-term
-    // checks; a parenthesized MUST group dies only when EVERY member is
-    // unsatisfiable (Lucene: a disjunction matches if any arm can).
-    val reqSatisfiable = Array.fill(nReq)(false)
-    termSubs.foreach { case (t, _, r) =>
-      if (r >= 0 && infoOf.contains(t)) reqSatisfiable(r) = true
-    }
-    expSubs.zipWithIndex.foreach { case ((_, _, r), j) =>
-      if (r >= 0 && expMatches(j).nonEmpty) reqSatisfiable(r) = true
-    }
-    phraseSubs.foreach { case (ordered, _, _, r) =>
-      if (r >= 0 && ordered.distinct.forall(infoOf.contains))
-        reqSatisfiable(r) = true
-    }
-    if (!reqSatisfiable.forall(identity)) return Searcher.matchNoDocs
-
-    // -- weighted per-term rows (one row per clause-term) ---------------
-    val mustCount = nReq
-    def keyOf(r: Int): String = if (r >= 0) s"$keyPrefix g$r" else null
-    val wRows = ArrayBuffer.empty[(String, Double, Double, String)]
-    termSubs.foreach { case (t, w, r) =>
-      infoOf.get(t).foreach(inf => wRows += ((t, inf.idf, w, keyOf(r))))
-    }
-    expSubs.zipWithIndex.foreach { case ((_, w, r), j) =>
-      expMatches(j).foreach(t => wRows += ((t, infoOf(t).idf, w, keyOf(r))))
-    }
-    val nonPhrase =
-      if (wRows.isEmpty) Nil
-      else {
-        val wDf = wRows.toSeq.toDF("term", "idf", "weight", "req_clause")
-        Seq(postingsForTerms(wRows.map(_._1).distinct.sorted.toSeq)
-          .select(col("term"), explode(vb_decode(col("blob"))).as("p"))
-          .select(col("term"), col("p.doc_id").as("doc_id"),
-            col("p.tf").as("tf"), col("p.dl").as("dl"))
-          .join(broadcast(wDf), Seq("term")))
-      }
-    val phraseFrames = phraseSubs.flatMap { case (ordered, slop, w, r) =>
+    // -- each positive sub's index-present member terms (weight, req);
+    // a phrase with an absent term has no alignments, hence no members
+    val termSubs = r.terms.map { case (t, w, q) =>
+      (Seq(t).filter(infoOf.contains), w, q) }
+    val expSubs = r.exps.zip(expMatches).map { case ((_, w, q), ts) =>
+      (ts, w, q) }
+    val phraseSubs = r.phrases.map { case (ordered, _, w, q) =>
       val dts = ordered.distinct.sorted
-      if (!dts.forall(infoOf.contains)) None // absent term: no alignments
-      else {
-        val idfs = dts.map(infoOf)
-        val idfDf = idfs.map(i => (i.term, i.idf)).toDF("term", "idf")
-        Some(phraseAlignedRows(ordered, dts, idfs, slop, identity)
-          .join(broadcast(idfDf), Seq("term"))
-          .withColumn("weight", lit(w))
-          .withColumn("req_clause", lit(keyOf(r)).cast("string")))
-      }
+      (if (dts.forall(infoOf.contains)) dts else Nil, w, q)
     }
-    val cols = Seq("doc_id", "term", "tf", "dl", "idf", "weight",
-      "req_clause")
-    val frames = (nonPhrase ++ phraseFrames)
-      .map(_.select(cols.map(col): _*))
+    // MatchNoDocs short-circuit (no job runs): every requirement needs
+    // at least ONE satisfiable member — a parenthesized MUST group dies
+    // only when EVERY member is unsatisfiable (Lucene: a disjunction
+    // matches if any arm can)
+    val live = (termSubs ++ expSubs ++ phraseSubs).filter(_._1.nonEmpty)
+    if (live.map(_._3).filter(_ >= 0).distinct.size < r.reqCount)
+      return matchNoDocs
 
     // -- MUST_NOT doc-set frames ----------------------------------------
-    val notSetTerms = (notTerms.distinct.filter(infoOf.contains) ++
-      (expSubs.size until expPreds.size).flatMap(expMatches))
-      .distinct.toSeq
-    val notFrames = notDocSet(notSetTerms).toSeq ++
-      notPhrases.flatMap { case (ordered, slop) =>
+    val notFrames = notDocSet((r.notTerms.distinct.filter(infoOf.contains) ++
+        (r.exps.size until expPreds.size).flatMap(expMatches)).distinct)
+      .toSeq ++ r.notPhrases.flatMap { case (ordered, slop) =>
         val dts = ordered.distinct.sorted
         if (!dts.forall(infoOf.contains)) None // absent term: matches nothing
         else Some(phraseAlignedRows(ordered, dts, dts.map(infoOf), slop,
           identity).select("doc_id").distinct())
       }
 
-    // every positive clause resolved to nothing (SHOULD expansions with
-    // empty matches, SHOULD terms absent) ⇒ rows = None — the NOT frames
-    // still travel (a cross-field composition may score on other fields)
-    val rows =
-      if (frames.isEmpty) None
-      else Some(dropDead(frames.reduce(_ union _)
-        .withColumn("contrib", col("weight") * contribBase)))
-    ParsedFrames(rows, mustCount, notFrames, matchNone = false)
+    // -- restricted, weighted per-term rows (one row per sub-term) ------
+    def keyOf(q: Int): String = if (q >= 0) s"$keyPrefix g$q" else null
+    def restrict(rows: DataFrame): DataFrame = {
+      val r0 = applyMatchSetRestrictions(rows, filter)
+      among.fold(r0)(c => r0.join(c.select("doc_id"), Seq("doc_id"), "left_semi"))
+    }
+    val wRows = (termSubs ++ expSubs).flatMap { case (ts, w, q) =>
+      ts.map(t => (t, infoOf(t).idf, w, keyOf(q)))
+    }
+    val nonPhrase =
+      if (wRows.isEmpty) Nil
+      else Seq(restrict(postingsForTerms(wRows.map(_._1).distinct.sorted)
+        .select(col("term"), explode(vb_decode(col("blob"))).as("p"))
+        .select(col("term"), col("p.doc_id").as("doc_id"),
+          col("p.tf").as("tf"), col("p.dl").as("dl"))
+        .join(broadcast(wRows.toDF("term", "idf", "weight", "req_clause")),
+          Seq("term"))))
+    val phraseFrames = r.phrases.zip(phraseSubs).collect {
+      case ((ordered, slop, w, q), (dts, _, _)) if dts.nonEmpty =>
+        val idfs = dts.map(infoOf)
+        phraseAlignedRows(ordered, dts, idfs, slop, rows =>
+            notFrames.foldLeft(restrict(rows))(_.join(_, Seq("doc_id"), "left_anti")))
+          .join(broadcast(idfs.map(i => (i.term, i.idf)).toDF("term", "idf")),
+            Seq("term"))
+          .withColumn("weight", lit(w))
+          .withColumn("req_clause", lit(keyOf(q)).cast("string"))
+    }
+    // unit weights with no index term reached through two subs fold on
+    // the pivot shape, gating requirements on its columns; anything else
+    // folds the sorted (term, contrib) list
+    val unit = live.forall(_._2 == 1.0)
+    val members = live.flatMap(_._1)
+    val pivot =
+      if (!unit || members.distinct.size < members.size) None
+      else Some((members,
+        (0 until r.reqCount).map(q => live.filter(_._3 == q).flatMap(_._1))))
+    val cols = Seq("doc_id", "term", "tf", "dl", "idf", "weight", "req_clause")
+    val rows = (nonPhrase ++ phraseFrames).map(_.select(cols.map(col): _*))
+      .reduceOption(_ union _)
+      .map(_.withColumn("contrib",
+        if (unit) contribBase else col("weight") * contribBase))
+    ParsedFrames(rows, r.reqCount, notFrames, matchNone = false, pivot)
   }
 
   /** Generalized boolean scoring over a parsed clause list
-    * ([[QueryParser]]) — Lucene clause semantics on the same primitives
-    * every other exact path uses:
+    * ([[QueryParser]]) — Lucene clause semantics on the one exact
+    * executor every other exact path uses:
     *
     *  - match set: docs satisfying EVERY MUST clause (term clause =
     *    each analyzed term its own MUST; expansion clause = ANY
@@ -966,26 +918,8 @@ final class Searcher(
     * terms — a term reached through two clauses counts twice). */
   def scoreParsed(clauses: Seq[QueryParser.Clause],
                   filter: Option[Column] = None,
-                  maxExpansions: Int = 1024): DataFrame = {
-    val pf = parsedFrames(clauses, maxExpansions)
-    pf.rows match {
-      // matchNone, pure-NOT, or nothing resolved ⇒ MatchNoDocs (Lucene)
-      case None => emptyMatches
-      case Some(rows) =>
-        // dead docs were already dropped inside parsedFrames
-        val restricted = applyFilterClause(rows, filter)
-        val folded = Searcher.foldPrepared(restricted,
-          withReq = pf.reqCount > 0)
-        val gated =
-          if (pf.reqCount == 0) folded
-          else folded.filter(col("matched_req") === pf.reqCount)
-        val out = pf.notFrames.reduceOption(_ union _) match {
-          case Some(nd) => gated.join(nd, Seq("doc_id"), "left_anti")
-          case None => gated
-        }
-        out.select("doc_id", "matched", "score")
-    }
-  }
+                  maxExpansions: Int = 1024): DataFrame =
+    execute(resolve(clauses), filter, maxExpansions = maxExpansions)
 
   /** Lucene-classic-syntax search — the QueryParser front door:
     * `+must -not "a phrase"~2 term^2.5 pre* wi?ld fuzzy~1 /S[A-Z]+/
@@ -994,10 +928,8 @@ final class Searcher(
   def searchQuery(q: String, k: Int, start: Int = 0,
                   filter: Option[Column] = None,
                   maxExpansions: Int = 1024): DataFrame = withServingConf {
-    val topk = scoreParsed(QueryParser.parse(q), filter, maxExpansions)
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .offset(start).limit(k)
-    fetchPage(topk)
+    rankedPage(scoreParsed(QueryParser.parse(q), filter, maxExpansions),
+      k, start)
   }
 
   /** Score explanation (the Lucene Explanation analog): the per-term
@@ -1033,10 +965,8 @@ final class Searcher(
              minShouldMatch: Int = 0): DataFrame = withServingConf {
     if (filter.isEmpty) captureWarmup(Searcher.WarmupQuery(query, "exact",
       conjunctive, k, start, 0, notQuery, minShouldMatch))
-    val topk = score(query, conjunctive, filter, notQuery, minShouldMatch)
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .offset(start).limit(k)
-    fetchPage(topk)
+    rankedPage(score(query, conjunctive, filter, notQuery, minShouldMatch),
+      k, start)
   }
 
   // ---- block-max WAND top-k (north-star fast path) -------------------
@@ -1045,7 +975,7 @@ final class Searcher(
     * DAG in ONE collect, then serve the stored fields through the
     * document LRU ([[docCached]] — the reference's doc cache,
     * Searcher.java:703-720): cache misses are fetched in one
-    * row-group-pruned [[fetchByIds]] scan, warm pages add ZERO jobs.
+    * row-group-pruned [[doc]] scan, warm pages add ZERO jobs.
     * The text column is therefore read for at most ~k row groups per
     * query, never for the corpus — a cached-docstore page join would
     * stream the whole O(corpus-bytes) text cache through the join.
@@ -1069,6 +999,12 @@ final class Searcher(
     }.sortBy(r => (-r.getDouble(1), r.getLong(0)))
     spark.createDataFrame(page.asJava, emptyPage.schema)
   }
+
+  /** The (score desc, doc_id asc) page `[start, start + k)` of a scored
+    * match set, fetched through [[fetchPage]]. */
+  private def rankedPage(scored: DataFrame, k: Int, start: Int): DataFrame =
+    fetchPage(scored.orderBy(col("score").desc, col("doc_id").asc)
+      .offset(start).limit(k))
 
   private def emptyPage: DataFrame =
     spark.emptyDataset[(Long, Double, String, java.sql.Timestamp, String,
@@ -1111,11 +1047,19 @@ final class Searcher(
     *    over-prune; a restricted one cannot).
     * Candidates are then rescored exactly via docId-skip decode
     * ([[graft.codec.VarByte.decodeForDocs]]) with the SAME restrictions
-    * applied before the shared term-ordered fold. Falls back to
-    * [[search]] only for `minShouldMatch` (msm removes docs from the
-    * universe without a seedable per-doc bound) and when the candidate
-    * set exceeds `maxRescore` (the 10^12-scale guard: pruning is an
-    * optimization, never a correctness risk). */
+    * applied before the shared term-ordered fold. Falls back to the
+    * exact [[search]] in five cases — pruning is an optimization, never
+    * a correctness risk:
+    *  1. `minShouldMatch > 0` (msm removes docs from the universe
+    *     without a seedable per-doc bound);
+    *  2. a single-term query under a restriction (filter / NOT / dead
+    *     docs: block pruning has nothing extra to skip);
+    *  3. Σ df of the terms below `wandMinDf` (the 3-4 job pipeline
+    *     costs more than the decode it saves);
+    *  4. even the rarest term's df above `maxRescore` (the candidate
+    *     set is certain to trip the cap);
+    *  5. the collected candidate set above `maxRescore` (the
+    *     10^12-scale guard). */
   def searchWand(query: String, k: Int, start: Int = 0,
                  conjunctive: Boolean = true,
                  filter: Option[Column] = None,
@@ -1214,18 +1158,16 @@ final class Searcher(
             else Double.NegativeInfinity
           } else {
             // restricted θ seed: the best term's exact contributions
-            // (same arithmetic shape as foldScores — a θ even one ulp
+            // (contribBase, the fold's own arithmetic — a θ even one ulp
             // above the true restricted kth could over-prune), restricted
             // to the eligible docset, kth best
-            val bi = idfs.find(_.term == best).get
             val seedRows = postingsForTerms(Seq(best))
               .select(explode(vb_decode(col("blob"))).as("p"))
               .select(col("p.doc_id").as("doc_id"),
-                col("p.tf").as("tf"), col("p.dl").as("dl"))
-            val contrib = lit(bi.idf) * (col("tf") * lit(k1c + 1.0)) /
-              (col("tf") + lit(k1c) * (lit(1.0 - bc) + lit(bc) * col("dl") / lit(ac)))
+                col("p.tf").as("tf"), col("p.dl").as("dl"),
+                lit(idfMap(best)).as("idf"))
             val seed = restrict(seedRows)
-              .select(col("doc_id"), contrib.as("score"))
+              .select(col("doc_id"), contribBase.as("score"))
               .orderBy(col("score").desc, col("doc_id").asc).limit(n)
               .select("score").as[Double].collect()
             if (seed.length >= n) seed.last else Double.NegativeInfinity
@@ -1274,26 +1216,10 @@ final class Searcher(
     * each query; `roundScoresTo` rounds BEFORE ranking (the same
     * oracle-parity knob as [[graft.index.FieldedIndex.FieldedSearcher
     * .searchMulti]]). Filter/NOT/msm clauses stay on the single-query
-    * surface.
-    *
-    * `prune = true` (conjunctive batches only) swaps the full decode of
-    * every query's terms for the batched analog of the single-query AND
-    * pruning: one pass decodes only the queries' RAREST terms into
-    * per-query candidate sets (collected under `maxRescore`, as in
-    * [[searchWand]]), then the rescore scan decodes each term only at
-    * the union of its queries' candidates (block-skipped docId decode).
-    * Lossless: a full AND match contains its query's rarest term, so
-    * each candidate set is complete; a fanned (query, doc) row coming
-    * from ANOTHER query's candidates reaches `matched == nt` only when
-    * the doc genuinely contains every term of that query — in which
-    * case it was in that query's candidates anyway. Scores stay
-    * bit-identical (same term-ordered fold over the same (tf, dl)).
-    * OR batches and cap overflows fall back to the exact scan. */
+    * surface. */
   def searchBatch(queries: Map[String, String], k: Int,
                   conjunctive: Boolean = true,
-                  roundScoresTo: Option[Int] = None,
-                  prune: Boolean = false,
-                  maxRescore: Int = 2000000): DataFrame = {
+                  roundScoresTo: Option[Int] = None): DataFrame = {
     val emptyOut = spark.emptyDataset[(String, Long, Double)]
       .toDF("query_id", "doc_id", "score")
     val analyzed = queries.view.mapValues(analyzeQuery).toMap
@@ -1312,58 +1238,14 @@ final class Searcher(
     val qtDf = qTerm.toDF("query_id", "term", "idf")
     val nTermsDf = analyzed.toSeq
       .map { case (qid, ts) => (qid, ts.size) }.toDF("query_id", "__nt")
-    // candidate-restricted per-term rows (prune) or the full decode scan
-    val perTermRows: Option[DataFrame] =
-      if (!prune || !conjunctive) None
-      else {
-        val liveQids = qTerm.map(_._1).distinct.toSet
-        val rarestOf: Map[String, String] = analyzed.collect {
-          case (qid, terms) if liveQids.contains(qid) =>
-            qid -> terms.minBy(t => infos(t).df)
-        }
-        val rtDf = rarestOf.toSeq.map { case (q, t) => (t, q) }
-          .toDF("term", "query_id")
-        val cand: Array[(String, Long)] =
-          postingsForTerms(rarestOf.values.toSeq.distinct)
-            .select("term", "blob").as[(String, Array[Byte])]
-            .flatMap { case (t, blob) =>
-              graft.codec.VarByte.decode(blob)._1.iterator.map(d => (t, d))
-            }.toDF("term", "doc_id")
-            .join(broadcast(rtDf), Seq("term"))
-            .select("query_id", "doc_id").as[(String, Long)]
-            .take(maxRescore + 1)
-        if (cand.length > maxRescore) None // cap tripped: exact path
-        else {
-          val byQid: Map[String, Array[Long]] =
-            cand.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-          // term → sorted distinct union of its queries' candidates
-          val needDocs: Map[String, Array[Long]] = qTerm
-            .groupBy(_._2).view.mapValues { qs =>
-              val a = qs.map(_._1).distinct
-                .flatMap(q => byQid.getOrElse(q, Array.empty[Long]))
-                .distinct.toArray
-              java.util.Arrays.sort(a)
-              a
-            }.toMap
-          val bcNeed = spark.sparkContext.broadcast(needDocs)
-          Some(postingsForTerms(qTerm.map(_._2).distinct)
-            .select("term", "blob").as[(String, Array[Byte])]
-            .flatMap { case (t, blob) =>
-              val (ds, tfs, dls) = graft.codec.VarByte.decodeForDocs(blob,
-                bcNeed.value.getOrElse(t, Array.empty[Long]))
-              ds.indices.iterator.map(i => (t, ds(i), tfs(i), dls(i)))
-            }.toDF("term", "doc_id", "tf", "dl"))
-        }
-      }
     // one scan over the union of terms; the broadcast (query_id, term,
     // idf) join fans each posting row to every query using its term
-    val decoded = perTermRows.getOrElse(
-        postingsForTerms(qTerm.map(_._2).distinct)
-          .select(col("term"), explode(vb_decode(col("blob"))).as("p"))
-          .select(col("term"), col("p.doc_id").as("doc_id"),
-            col("p.tf").as("tf"), col("p.dl").as("dl")))
+    val decoded = postingsForTerms(qTerm.map(_._2).distinct)
+      .select(col("term"), explode(vb_decode(col("blob"))).as("p"))
+      .select(col("term"), col("p.doc_id").as("doc_id"),
+        col("p.tf").as("tf"), col("p.dl").as("dl"))
       .join(broadcast(qtDf), Seq("term"))
-    val scored = foldScores(applyMatchSetRestrictions(decoded, None),
+    val scored = foldScores(dropDead(decoded),
         keys = Seq("query_id", "doc_id"),
         // pivot over the UNION of the batch's terms: within a
         // (query_id, doc_id) group only that query's terms occur, and
@@ -1410,38 +1292,20 @@ final class Searcher(
       "phrase queries need an index built with indexPositions = true")
     if (filter.isEmpty) captureWarmup(Searcher.WarmupQuery(phrase, "phrase",
       conjunctive = true, k, start, slop, notQuery, 0))
-    val ordered = analyzePhrase(phrase)
-    if (ordered.isEmpty || docCount == 0) return emptyPage
-    val distinctTerms = ordered.distinct.sorted
-    val notTerms = notQuery.map(analyzeQuery).getOrElse(Seq.empty)
-    val all = termIdfs((distinctTerms ++ notTerms).distinct) // one probe
-    val termSet = distinctTerms.toSet
-    val idfs = all.filter(i => termSet.contains(i.term))
-    if (idfs.size < distinctTerms.size) return emptyPage // MUST semantics
-    val notSet = notTerms.toSet
-    val aligned = phraseAlignedRows(ordered, distinctTerms, idfs, slop,
-      rows0 => {
-        val restricted0 = applyMatchSetRestrictions(rows0, filter)
-        notDocSet(all.map(_.term).filter(notSet.contains)) match {
-          case Some(nd) => restricted0.join(nd, Seq("doc_id"), "left_anti")
-          case None => restricted0
-        }
-      })
-    val idfDf = idfs.map(i => (i.term, i.idf)).toDF("term", "idf")
-    val perTerm = aligned.join(broadcast(idfDf), Seq("term"))
-    val page = foldScores(perTerm, pivotTerms = Some(idfs.map(_.term)))
-      .orderBy(col("score").desc, col("doc_id").asc).offset(start).limit(k)
-    fetchPage(page)
+    import QueryParser._
+    rankedPage(execute(resolve(PhraseQ(phrase, slop, Must, 1.0) +:
+        notQuery.map(TermQ(_, MustNot, 1.0)).toSeq), filter),
+      k, start)
   }
 
   /** Positional per-(term, doc) rows for docs with an ordered
-    * within-slop alignment of `ordered` — the shared alignment core of
-    * [[searchPhrase]] and phrase clauses in [[scoreParsed]]. `restrict`
-    * runs on the raw positional rows BEFORE the alignment groupBy
-    * ([[searchPhrase]] pushes its filter/NOT/dead restrictions here so
-    * the alignment shuffles only eligible docs; callers restricting
-    * later pass identity — restriction removes whole docs, never rows
-    * of a surviving doc, so scores are unaffected either way). Returns
+    * within-slop alignment of `ordered` — the alignment core of the
+    * executor's phrase subs and MUST_NOT phrases. `restrict` runs on the
+    * raw positional rows BEFORE the alignment groupBy (the executor
+    * pushes its filter/among/NOT/dead restrictions here so the alignment
+    * shuffles only eligible docs; NOT phrases pass identity —
+    * restriction removes whole docs, never rows of a surviving doc, so
+    * scores are unaffected either way). Returns
     * (doc_id, term, tf, dl) over the DISTINCT phrase terms of aligned
     * docs. */
   private def phraseAlignedRows(ordered: Seq[String],
@@ -1577,36 +1441,23 @@ final class Searcher(
     val scored = score(query, conjunctive, filter).localCheckpoint(true)
     val m = scored.agg(count(lit(1)), max("score")).head()
     val meta = Meta(m.getLong(0), if (m.isNullAt(1)) 0.0 else m.getDouble(1))
-    val page = fetchPage(
-      scored.orderBy(col("score").desc, col("doc_id").asc)
-        .offset(start).limit(k))
-    (page, meta)
+    (rankedPage(scored, k, start), meta)
   }
 
   // ---- multi-term query expansion (PrefixQuery / WildcardQuery /
   // FuzzyQuery analog under the scoring BooleanQuery rewrite) ----------
 
-  /** Dictionary expansion for multi-term queries: the index terms
-    * matching `pred`, resolved from the ONE cached term_stats frame
-    * (the invariant-7 probe every query path already pays — expansion
-    * adds no extra job class). Capped at `maxExpansions` (the Lucene
-    * maxClauseCount analog) with a LOUD failure: silent truncation
-    * would silently change results. */
-  private def expandTermInfos(pred: Column,
-                              maxExpansions: Int): Seq[TermInfo] =
-    termInfosWhere(pred, Some(maxExpansions))
-
-  /** Disjunctive ranked page over pre-expanded terms — each expanded
-    * term scores with its own idf (Lucene's SCORING_BOOLEAN rewrite;
-    * the golden model pins the same contract). */
-  private def expandedPage(infos: Seq[TermInfo], k: Int, start: Int,
-                           filter: Option[Column]): DataFrame = {
-    if (infos.isEmpty || docCount == 0) return emptyPage
-    val topk = scoredMatches(infos.map(_.term), infos, filter)
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .offset(start).limit(k)
-    fetchPage(topk)
-  }
+  /** Disjunctive ranked page over ONE multi-term clause: every index
+    * term it expands to scores with its own idf (Lucene's
+    * SCORING_BOOLEAN rewrite; the golden model pins the same contract).
+    * The expansion resolves inside the executor's ONE term_stats probe,
+    * capped at `maxExpansions` (the Lucene maxClauseCount analog) with a
+    * LOUD failure: silent truncation would silently change results. */
+  private def expansionPage(c: QueryParser.Clause, k: Int, start: Int,
+                            filter: Option[Column],
+                            maxExpansions: Int): DataFrame =
+    rankedPage(execute(resolve(Seq(c)), filter,
+      maxExpansions = maxExpansions), k, start)
 
   /** Prefix query (PrefixQuery analog): every index term starting with
     * the folded prefix, scored as one disjunctive BooleanQuery.
@@ -1615,22 +1466,23 @@ final class Searcher(
   def searchPrefix(prefix: String, k: Int, start: Int = 0,
                    filter: Option[Column] = None,
                    maxExpansions: Int = 1024): DataFrame = withServingConf {
-    val p = Tokenizer.foldCase(prefix.trim)
-    if (p.isEmpty) return emptyPage
-    expandedPage(expandTermInfos(col("term").startsWith(p), maxExpansions),
-      k, start, filter)
+    expansionPage(QueryParser.PrefixQ(prefix, QueryParser.Should, 1.0), k,
+      start, filter, maxExpansions)
   }
 
-  /** Wildcard query (WildcardQuery analog), SQL LIKE pattern over the
-    * dictionary (`%`/`_`). A leading wildcard scans the whole term
+  /** Wildcard query (WildcardQuery analog) in SQL LIKE syntax over the
+    * dictionary (`%` any run, `_` one char) — the ONE path that takes
+    * LIKE syntax: the parser's `*`/`?` wildcard clause
+    * ([[QueryParser.WildcardQ]]) runs as an anchored regex with quoted
+    * literals instead. A leading wildcard scans the whole term
     * dictionary — the same cost profile the reference family has. */
   def searchWildcard(pattern: String, k: Int, start: Int = 0,
                      filter: Option[Column] = None,
                      maxExpansions: Int = 1024): DataFrame = withServingConf {
     val p = Tokenizer.foldCase(pattern.trim)
     if (p.isEmpty) return emptyPage
-    expandedPage(expandTermInfos(col("term").like(p), maxExpansions),
-      k, start, filter)
+    rankedPage(execute(Resolved(exps = Seq((col("term").like(p), 1.0, -1))),
+      filter, maxExpansions = maxExpansions), k, start)
   }
 
   /** Term range query (TermRangeQuery analog, the remaining
@@ -1645,16 +1497,9 @@ final class Searcher(
                       filter: Option[Column] = None,
                       maxExpansions: Int = 1024): DataFrame =
     withServingConf {
-      val lo = lower.map(s => Tokenizer.foldCase(s.trim)).filter(_.nonEmpty)
-      val hi = upper.map(s => Tokenizer.foldCase(s.trim)).filter(_.nonEmpty)
-      // open-open = match-all dictionary (Lucene semantics); on any real
-      // dictionary the maxExpansions cap then fails LOUDLY, never silently
-      val pred = (lo.map(l =>
-          if (includeLower) col("term") >= l else col("term") > l) ++
-        hi.map(h =>
-          if (includeUpper) col("term") <= h else col("term") < h))
-        .reduceOption(_ && _).getOrElse(lit(true))
-      expandedPage(expandTermInfos(pred, maxExpansions), k, start, filter)
+      expansionPage(QueryParser.RangeQ(lower, upper, includeLower,
+        includeUpper, QueryParser.Should, 1.0), k, start, filter,
+        maxExpansions)
     }
 
   /** Regexp query (RegexpQuery analog): dictionary terms fully matching
@@ -1665,11 +1510,8 @@ final class Searcher(
   def searchRegexp(pattern: String, k: Int, start: Int = 0,
                    filter: Option[Column] = None,
                    maxExpansions: Int = 1024): DataFrame = withServingConf {
-    val p = pattern.trim
-    if (p.isEmpty) return emptyPage
-    expandedPage(
-      expandTermInfos(col("term").rlike("^(?:" + p + ")$"), maxExpansions),
-      k, start, filter)
+    expansionPage(QueryParser.RegexpQ(pattern, QueryParser.Should, 1.0), k,
+      start, filter, maxExpansions)
   }
 
   /** Fuzzy query (FuzzyQuery analog): index terms within `maxEdits`
@@ -1681,13 +1523,8 @@ final class Searcher(
   def searchFuzzy(term: String, k: Int, maxEdits: Int = 1, start: Int = 0,
                   filter: Option[Column] = None,
                   maxExpansions: Int = 1024): DataFrame = withServingConf {
-    require(maxEdits >= 0, s"maxEdits must be >= 0, got $maxEdits")
-    val t = Tokenizer.foldCase(term.trim)
-    if (t.isEmpty) return emptyPage
-    expandedPage(
-      expandTermInfos(levenshtein(col("term"), lit(t)) <= maxEdits,
-        maxExpansions),
-      k, start, filter)
+    expansionPage(QueryParser.FuzzyQ(term, maxEdits, QueryParser.Should,
+      1.0), k, start, filter, maxExpansions)
   }
 
   /** More-like-this (MoreLikeThis analog, golden-model contract):
@@ -1697,7 +1534,8 @@ final class Searcher(
     * descending (term ascending on ties — rounded so the rank is
     * portable across `ln` implementations), and runs the top
     * `maxQueryTerms` as one disjunctive query with the source doc
-    * excluded. Costs one S8 doc fetch + the single term_stats probe. */
+    * excluded. Costs one S8 doc fetch + the single term_stats probe
+    * (the executor reuses the probed stats). */
   def searchMoreLikeThis(docId: Long, k: Int, maxQueryTerms: Int = 10,
                          start: Int = 0,
                          filter: Option[Column] = None): DataFrame =
@@ -1710,17 +1548,16 @@ final class Searcher(
         dict.expand(Tokenizer.tokenize(text, analyzerMode).toIndexedSeq)
       if (toks.isEmpty) return emptyPage
       val tf = toks.groupBy(identity).view.mapValues(_.size).toMap
-      val infos = termIdfs(tf.keys.toSeq.sorted) // ONE probe
-      val top = infos
-        .map(i => (i.term, BigDecimal(tf(i.term) * i.idf)
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
-        .sortBy { case (t, w) => (-w, t) }
-        .take(maxQueryTerms).map(_._1).toSet
+      val top = termIdfs(tf.keys.toSeq.sorted) // ONE probe
+        .sortBy(i => (-BigDecimal(tf(i.term) * i.idf)
+          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble, i.term))
+        .take(maxQueryTerms)
       val excl = filter match {
         case Some(f) => f && col("doc_id") =!= docId
         case None => col("doc_id") =!= docId
       }
-      expandedPage(infos.filter(i => top(i.term)), k, start, Some(excl))
+      rankedPage(execute(Resolved(terms = top.map(i => (i.term, 1.0, -1)),
+        known = top.map(i => i.term -> i).toMap), Some(excl)), k, start)
     }
 
   /** Highlighter analog: attaches (match_pos, snippet) to the ≤ k page
@@ -1777,7 +1614,7 @@ final class Searcher(
         .orderBy(sortCols :+ col("doc_id").asc: _*)
         .offset(start).limit(k)
         .select("doc_id").as[Long].collect()
-      fetchByIds(ids).orderBy(sortCols :+ col("doc_id").asc: _*)
+      doc(ids.toSeq).orderBy(sortCols :+ col("doc_id").asc: _*)
     } else // sort references text — rank over the parquet frame
       matches.join(docstore, Seq("doc_id"))
         .orderBy(sortCols :+ col("doc_id").asc: _*)
@@ -1794,9 +1631,14 @@ final class Searcher(
                filter: Option[Column] = None): DataFrame =
     score(query, conjunctive, filter).select("doc_id")
 
-  /** Stored-field fetch by docID (S8). */
+  /** Stored-field fetch by docID (S8): a `doc_id IN (...)` literal
+    * against the docstore parquet. doc_ids are assigned in url sort
+    * order, so docstore row groups carry tight doc_id ranges and the
+    * scan prunes to ~|ids| row groups — the text column is read for the
+    * page, never the corpus. */
   def doc(docIds: Seq[Long]): DataFrame =
-    docstore.filter(col("doc_id").isin(docIds: _*))
+    if (docIds.isEmpty) docstore.limit(0)
+    else docstore.filter(col("doc_id").isin(docIds: _*))
 
   // ---- index-integrated facets (reference facetSearch,
   //      Searcher.java:1086-1283, over build-time facet fields) --------
@@ -1997,11 +1839,8 @@ final class Searcher(
     val scored0 = score(query, conjunctive)
     val scored = roundScoresTo.fold(scored0)(d =>
       scored0.withColumn("score", round(col("score"), d)))
-    val topk = scored
-      .join(docsWithJsonField(key, pred), Seq("doc_id"), "left_semi")
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .offset(start).limit(k)
-    fetchPage(topk)
+    rankedPage(scored.join(docsWithJsonField(key, pred), Seq("doc_id"),
+      "left_semi"), k, start)
   }
 
   /** Matches ordered by a dynamic numeric field (the reference's
@@ -2025,7 +1864,7 @@ final class Searcher(
           org.apache.spark.sql.types.LongType, nullable = false),
         org.apache.spark.sql.types.StructField("__v",
           org.apache.spark.sql.types.DoubleType, nullable = true))))
-    pageDf.join(fetchByIds(ranked.map(_.getLong(0))), Seq("doc_id"))
+    pageDf.join(doc(ranked.map(_.getLong(0)).toSeq), Seq("doc_id"))
       .select(col("doc_id"), col("__v").as("sort_value"), col("url"),
         col("lang"), col("text"))
       .orderBy(ordOut, col("doc_id").asc)
@@ -2066,11 +1905,20 @@ final class Searcher(
       case _ => new LruCache[Long, org.apache.spark.sql.Row](1024)
     }
 
+  /** Stored fields of `docIds`, in order (unknown ids are skipped):
+    * hits come from the LRU, misses from ONE [[doc]] fetch whose rows
+    * are returned directly — never re-read from the LRU, which may
+    * already have evicted them (a page larger than its capacity, or a
+    * concurrent caller). */
   def docCached(docIds: Seq[Long]): Seq[org.apache.spark.sql.Row] = {
-    val missing = docIds.filter(id => documentCache.get(id).isEmpty)
-    if (missing.nonEmpty)
-      doc(missing).collect().foreach(r => documentCache.put(r.getLong(0), r))
-    docIds.flatMap(id => documentCache.get(id))
+    val hit = docIds.distinct.flatMap(id => documentCache.get(id).map(id -> _))
+      .toMap
+    val missing = docIds.distinct.filterNot(hit.contains)
+    val fetched =
+      if (missing.isEmpty) Map.empty[Long, org.apache.spark.sql.Row]
+      else doc(missing).collect().map(r => r.getLong(0) -> r).toMap
+    fetched.foreach { case (id, r) => documentCache.put(id, r) }
+    docIds.flatMap(id => hit.get(id).orElse(fetched.get(id)))
   }
 
   /** Search timeout (Q10, reference TimeLimitingCollector :822-825):
@@ -2222,8 +2070,8 @@ object Searcher {
       termStats: DataFrame, stats: DataFrame,
       config: Option[IndexStore.SegmentConfig])
 
-  /** A parsed clause subset resolved to foldable frames (the
-    * cross-Searcher composition unit behind [[Searcher.scoreParsed]] and
+  /** A clause subset resolved to foldable frames (the cross-Searcher
+    * composition unit behind every exact single-index path and
     * [[graft.index.FieldedIndex.FieldedSearcher.searchQuery]]):
     *  - `rows`: per-(clause-term, doc) rows carrying a pre-computed
     *    `contrib` (weight × BM25 with the OWNING searcher's collection
@@ -2234,14 +2082,51 @@ object Searcher {
     *    satisfiable, else `matchNone`)
     *  - `notFrames`: MUST_NOT doc-set frames
     *  - `matchNone`: a MUST requirement is unsatisfiable — the WHOLE
-    *    query (all fields) is MatchNoDocs */
-  private[graft] final case class ParsedFrames(rows: Option[DataFrame],
-                                               reqCount: Int,
-                                               notFrames: Seq[DataFrame],
-                                               matchNone: Boolean)
+    *    query (all fields) is MatchNoDocs
+    *  - `pivot`: (terms, member terms of each requirement) when the
+    *    subset alone may fold on the pivot shape ([[foldPrepared]]) */
+  private[graft] final case class ParsedFrames(
+      rows: Option[DataFrame], reqCount: Int, notFrames: Seq[DataFrame],
+      matchNone: Boolean,
+      pivot: Option[(Seq[String], Seq[Seq[String]])] = None)
 
   private[graft] val matchNoDocs: ParsedFrames =
     ParsedFrames(None, 0, Nil, matchNone = true)
+
+  private[graft] def emptyMatches(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    spark.emptyDataset[(Long, Int, Double)].toDF("doc_id", "matched", "score")
+  }
+
+  /** THE fold → requirement gate → exclusion step every exact path
+    * shares (single-index executor and the fielded union): one
+    * [[foldPrepared]] over the union of the parts' rows, docs kept only
+    * when they satisfy EVERY MUST requirement (and, when
+    * `minShouldMatch > 0`, match at least that many rows), then the
+    * anti-join on the union of every part's MUST_NOT doc sets.
+    * (doc_id, matched, score); None = MatchNoDocs. A single part folds
+    * on its own pivot shape; a cross-field union folds the merged
+    * (term, contrib) list (invariant 11's carve-out — the same term may
+    * come from two fields). */
+  private[graft] def foldGated(parts: Seq[ParsedFrames],
+                               minShouldMatch: Int = 0): Option[DataFrame] = {
+    val rows = parts.flatMap(_.rows)
+    if (parts.exists(_.matchNone) || rows.isEmpty) return None
+    val reqCount = parts.map(_.reqCount).sum
+    val pivot = if (parts.size == 1) parts.head.pivot else None
+    val folded = foldPrepared(rows.reduce(_ unionByName _),
+      withReq = reqCount > 0, pivotTerms = pivot.map(_._1),
+      reqGroups = pivot.fold(Seq.empty[Seq[String]])(_._2))
+    val gated =
+      if (reqCount == 0) folded
+      else folded.filter(col("matched_req") === reqCount)
+    val msm =
+      if (minShouldMatch > 0) gated.filter(col("matched") >= minShouldMatch)
+      else gated
+    val out = parts.flatMap(_.notFrames).reduceOption(_ union _)
+      .fold(msm)(nd => msm.join(nd, Seq("doc_id"), "left_anti"))
+    Some(out.select("doc_id", "matched", "score"))
+  }
 
   /** Above this many distinct query terms the pivoted fold would widen
     * the aggregation buffer past ~0.5 KB/group; the list fold takes
@@ -2289,10 +2174,15 @@ object Searcher {
     *    object/sort-based aggregation — JVM-object memory the manager
     *    cannot see — and OOM'd a flat 8g heap at 32 concurrent tasks.
     *
+    *    With `withReq`, `matched_req` (satisfied MUST requirements)
+    *    comes from the same columns: a requirement counts when any of
+    *    its `reqGroups` member terms' column is non-null.
+    *
     *  - `pivotTerms = None` (dynamic/weighted folds: parsed-query
-    *    clause weights, cross-field merged pairs, req-clause gating):
-    *    collect the group's (term, contrib) pairs, sort, fold. Volumes
-    *    on these paths are expansion-capped.
+    *    clause weights, a term reached through two clauses, cross-field
+    *    merged pairs): collect the group's (term, contrib) pairs, sort,
+    *    fold; `matched_req` counts the distinct `req_clause` keys.
+    *    Volumes on these paths are expansion-capped.
     *
     * A term may appear at most once per key group on every caller's
     * path (chunk rows split disjoint doc ranges; doc_ids are unique
@@ -2301,7 +2191,8 @@ object Searcher {
   private[graft] def foldPrepared(perTerm: DataFrame,
                                   keys: Seq[String] = Seq("doc_id"),
                                   withReq: Boolean = false,
-                                  pivotTerms: Option[Seq[String]] = None)
+                                  pivotTerms: Option[Seq[String]] = None,
+                                  reqGroups: Seq[Seq[String]] = Nil)
       : DataFrame = {
     // sorted in UTF-8 BINARY order — Spark's string ordering, hence
     // sort_array's — NOT JVM String order (UTF-16 code units): the two
@@ -2309,7 +2200,8 @@ object Searcher {
     // shape-dependent fold order would break the bit-identity between
     // the pivot and list folds exactly where ties are decided.
     val pivot = pivotTerms.map(_.distinct.sorted(Utf8Ordering))
-      .filter(ts => ts.nonEmpty && ts.size <= MaxPivotTerms && !withReq)
+      .filter(ts => ts.nonEmpty && ts.size <= MaxPivotTerms &&
+        (!withReq || reqGroups.nonEmpty))
     pivot match {
       case Some(ts) =>
         val pivots = ts.zipWithIndex.map { case (t, i) =>
@@ -2317,11 +2209,16 @@ object Searcher {
         }
         val score = ts.indices.foldLeft(lit(0.0d))((acc, i) =>
           acc + coalesce(col(s"__c$i"), lit(0.0d)))
+        val slot = ts.zipWithIndex.toMap
+        val req = reqGroups.map(g => when(g.map(t =>
+          col(s"__c${slot(t)}").isNotNull).reduce(_ || _), 1).otherwise(0))
         perTerm
           .groupBy(keys.map(col): _*)
           .agg(count(lit(1)).cast("int").as("matched"), pivots: _*)
           .withColumn("score", score)
-          .select(keys.map(col) ++ Seq(col("matched"), col("score")): _*)
+          .select(keys.map(col) ++ Seq(col("matched")) ++
+            (if (withReq) Seq(req.reduce(_ + _).as("matched_req")) else Nil)
+            :+ col("score"): _*)
       case None =>
         val extraAggs =
           Seq(sort_array(collect_list(struct(col("term"), col("contrib"))))

@@ -238,12 +238,11 @@ class SearchEndToEndSpec extends AnyFunSuite with SparkTestBase {
   test("searchBatch: N queries in one plan are rank- and score-identical " +
     "to N sequential searches (both AND and OR modes), including a " +
     "zero-df-term query and an unknown-only query") {
-    def run(conj: Boolean, prune: Boolean): Unit = {
+    def run(conj: Boolean): Unit = {
       val qs = querySet.filter(q => q.conjunctive == conj && q.filterLang.isEmpty)
         .take(8).map(q => q.name -> q.query).toMap +
         ("qz" -> "spark zzznotaword", "qe" -> "zzznotaword")
-      val batch = searcher.searchBatch(qs, K, conjunctive = conj,
-          prune = prune)
+      val batch = searcher.searchBatch(qs, K, conjunctive = conj)
         .collect()
         .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
         .groupBy(_._1).view.mapValues(_.map(x => (x._2, x._3)).toSeq).toMap
@@ -252,22 +251,11 @@ class SearchEndToEndSpec extends AnyFunSuite with SparkTestBase {
           .select("doc_id", "score")
           .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
         assert(batch.getOrElse(qid, Seq.empty) == single,
-          s"batch ≠ sequential for '$qid' ($query) conj=$conj prune=$prune")
+          s"batch ≠ sequential for '$qid' ($query) conj=$conj")
       }
     }
-    run(conj = true, prune = false)
-    run(conj = false, prune = false)
-    // pruned (candidate-restricted) batch: bit-identical to exact, incl.
-    // its silent fallbacks (OR batch; tiny cap) — plus a tripped-cap case
-    run(conj = true, prune = true)
-    run(conj = false, prune = true)
-    val qs = querySet.filter(q => q.conjunctive && q.filterLang.isEmpty)
-      .take(4).map(q => q.name -> q.query).toMap
-    val capped = searcher.searchBatch(qs, K, prune = true, maxRescore = 3)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
-    val exact = searcher.searchBatch(qs, K)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(capped == exact, "tripped-cap fallback diverged")
+    run(conj = true)
+    run(conj = false)
   }
 
   test("plan guard: the postings scan keeps term pushdown, plan-time " +
