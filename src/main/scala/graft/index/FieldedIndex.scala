@@ -208,39 +208,35 @@ object FieldedIndex {
     // doc_id) triples, which are IDENTICAL across field roots — compute
     // it once on the first field and fan it as a byte copy (the same
     // write-once-copy-N shape as the coordinated tombstones)
-    var fannedDead: Option[Option[String]] = None
-    fields.foreach { f =>
+    val firstRoot = fieldRoot(root, fields.head.name)
+    val first = snaps(fields.head.name)
+    val advanced = IndexBuilder.advanceForAppend(spark, firstRoot, first,
+      f"seg-${first.id + 1}%06d")
+    val newBatch = advanced.deadBatches.diff(first.deadBatches)
+    IndexStore.writeSnapshot(spark, firstRoot, advanced)
+    fields.tail.foreach { f =>
       val fr = fieldRoot(root, f.name)
       val snap = snaps(f.name)
-      val seg = f"seg-${snap.id + 1}%06d"
-      val advanced = (snap.dead, fannedDead) match {
-        case (None, _) => // legacy root: no sidecar to maintain
-          IndexStore.Snapshot(snap.id + 1, snap.segments :+ seg,
-            snap.tombstones, None)
-        case (Some(batches), None) => // first maintained field: compute
-          val adv = IndexBuilder.advanceForAppend(spark, fr, snap, seg)
-          fannedDead = Some(adv.dead.get.diff(batches).headOption)
-          adv
-        case (Some(batches), Some(batchName)) => // fan the byte copy
-          batchName.foreach { name =>
-            val conf = spark.sparkContext.hadoopConfiguration
-            val fsys = IndexStore.fs(spark, root)
-            val src = fieldRoot(root,
-              fields.find(x => snaps(x.name).dead.isDefined).get.name)
-            Seq(s"dead/$name", s"dead/$name.count").foreach { rel =>
-              org.apache.hadoop.fs.FileUtil.copy(
-                fsys, new org.apache.hadoop.fs.Path(s"$src/$rel"),
-                fsys, new org.apache.hadoop.fs.Path(s"$fr/$rel"),
-                false, true, conf)
-            }
-          }
-          IndexStore.Snapshot(snap.id + 1, snap.segments :+ seg,
-            snap.tombstones, Some(batches ++ batchName.toSeq))
-      }
-      IndexStore.writeSnapshot(spark, fr, advanced)
+      newBatch.foreach(name => copyBatch(spark, firstRoot, fr, s"dead/$name"))
+      IndexStore.writeSnapshot(spark, fr,
+        IndexStore.Snapshot(snap.id + 1, snap.segments :+ f"seg-${snap.id + 1}%06d",
+          snap.tombstones, Some(snap.deadBatches ++ newBatch)))
     }
     dropBuildDir(spark, root)
     reports
+  }
+
+  /** Byte-copy one deletion batch (`<dir>/<name>` plus its `.count`
+    * sidecar) between field roots — no Spark job. */
+  private def copyBatch(spark: SparkSession, from: String, to: String,
+                        rel: String): Unit = {
+    val fs = IndexStore.fs(spark, from)
+    Seq(rel, s"$rel.count").foreach { r =>
+      org.apache.hadoop.fs.FileUtil.copy(
+        fs, new org.apache.hadoop.fs.Path(s"$from/$r"),
+        fs, new org.apache.hadoop.fs.Path(s"$to/$r"),
+        false, true, spark.sparkContext.hadoopConfiguration)
+    }
   }
 
   /** Coordinated delete-by-PK: the tombstone batch is WRITTEN once (one
@@ -257,17 +253,8 @@ object FieldedIndex {
     val name = f"tomb-${snaps(fields.head.name).id + 1}%06d"
     val firstRoot = fieldRoot(root, fields.head.name)
     IndexStore.writeTombstonesDf(spark, firstRoot, name, urls)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = IndexStore.fs(spark, root)
-    fields.tail.foreach { f =>
-      val dst = fieldRoot(root, f.name)
-      Seq(s"tombstones/$name", s"tombstones/$name.count").foreach { rel =>
-        org.apache.hadoop.fs.FileUtil.copy(
-          fs, new org.apache.hadoop.fs.Path(s"$firstRoot/$rel"),
-          fs, new org.apache.hadoop.fs.Path(s"$dst/$rel"),
-          false, true, conf)
-      }
-    }
+    fields.tail.foreach(f =>
+      copyBatch(spark, firstRoot, fieldRoot(root, f.name), s"tombstones/$name"))
     fields.foreach { f =>
       val snap = snaps(f.name)
       IndexStore.writeSnapshot(spark, fieldRoot(root, f.name),
@@ -298,9 +285,8 @@ object FieldedIndex {
     // the all-fields decision can never diverge from the per-root one
     val uniformAll = fields.forall { f =>
       val fr = fieldRoot(root, f.name)
-      val stored = snaps(f.name).segments.flatMap(s =>
-        IndexStore.readSegmentConfig(spark, fr, s))
-      IndexBuilder.layoutUniform(stored, snaps(f.name).segments.size)
+      IndexBuilder.layoutUniform(snaps(f.name).segments.map(s =>
+        IndexStore.readSegmentConfig(spark, fr, s)))
     }
     perFieldParallel(fields) { (f, _) =>
       val fr = fieldRoot(root, f.name)

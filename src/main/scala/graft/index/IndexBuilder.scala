@@ -1173,32 +1173,32 @@ object IndexBuilder {
   /** Next APPEND doc_id base for a root: max `id_ceiling` across the
     * snapshot's segments (stats rows — no docstore scan). NOT Σ
     * doc_count: a compacted segment keeps original ids with gaps, so its
-    * ceiling exceeds its live count. Legacy segments without the column
-    * fall back to a column-pruned max(doc_id) scan. */
+    * ceiling exceeds its live count. */
   def nextAppendBase(spark: SparkSession, root: String,
                      snap: IndexStore.Snapshot): Long =
     snap.segments.map { s =>
-      val st = spark.read.parquet(IndexStore.statsPath(root, s))
-      if (st.columns.contains("id_ceiling"))
-        st.agg(max("id_ceiling")).head() match {
-          case r if r.isNullAt(0) => 0L
-          case r => r.getLong(0)
-        }
-      else spark.read.parquet(IndexStore.docstorePath(root, s))
-        .agg(max("doc_id")).head() match {
-          case r if r.isNullAt(0) => 0L
-          case r => r.getLong(0) + 1L
-        }
+      spark.read.parquet(IndexStore.statsPath(root, s))
+        .agg(max("id_ceiling")).head() match {
+        case r if r.isNullAt(0) => 0L
+        case r => r.getLong(0)
+      }
     }.max
+
+  /** THE latest-wins order per url: newest `warc_ts` first, ties to the
+    * later segment (higher doc_id). Every superseded-id batch
+    * ([[supersededByAppend]]) and the rebuild [[merge]] rank by it, so
+    * the dead sidecar the Searcher serves and the rebuilt segment agree. */
+  private val latestFirst = Window.partitionBy("url")
+    .orderBy(col("warc_ts").desc, col("doc_id").desc)
 
   /** doc_ids superseded by the arrival of segment `newSeg`: for each url
     * present in the new segment, every doc across old segments AND the
-    * new one that loses the latest-wins rule ((warc_ts, doc_id) desc —
-    * EXACTLY the Searcher's window order, including the case where the
-    * INCOMING doc is older than an existing version and is dead on
-    * arrival). The old-segment scan is column-pruned to 3 narrow
-    * columns and semi-joined to the batch's urls before the window, so
-    * the shuffle is O(matched urls) = O(batch), never O(corpus). */
+    * new one that loses the latest-wins rule ([[latestFirst]]) —
+    * including the case where the INCOMING doc is older than an existing
+    * version and is dead on arrival. The old-segment scan is
+    * column-pruned to 3 narrow columns and semi-joined to the batch's
+    * urls before the window, so the shuffle is O(matched urls) =
+    * O(batch), never O(corpus). */
   private def supersededByAppend(spark: SparkSession, root: String,
                                  oldSegments: Seq[String],
                                  newSeg: String): DataFrame = {
@@ -1223,30 +1223,23 @@ object IndexBuilder {
       .reduce(_ unionByName _)
     val matched = oldDocs
       .join(newDocs.select("url").distinct(), Seq("url"), "left_semi")
-    val w = Window.partitionBy("url")
-      .orderBy(col("warc_ts").desc, col("doc_id").desc)
     matched.unionByName(newDocs.select(matched.columns.map(col): _*))
-      .withColumn("__rn", row_number().over(w))
+      .withColumn("__rn", row_number().over(latestFirst))
       .filter(col("__rn") > 1).select("doc_id")
   }
 
   /** Advance `snap` for appended segment `newSeg`, maintaining the
-    * superseded-id sidecar when the root has one (an empty batch writes
-    * nothing — streams of fresh urls accumulate zero batches). A legacy
-    * root (`dead = None`) stays legacy: its Searcher keeps the window
-    * fallback, and a [[merge]]/[[mergeCompact]] upgrades it. The
-    * returned snapshot is NOT yet written — the caller commits it. */
+    * superseded-id sidecar (an empty batch is not named — streams of
+    * fresh urls accumulate zero batches). The returned snapshot is NOT
+    * yet written — the caller commits it. */
   private[graft] def advanceForAppend(spark: SparkSession, root: String,
                                       snap: IndexStore.Snapshot,
                                       newSeg: String): IndexStore.Snapshot = {
-    val dead = snap.dead.map { batches =>
-      val name = f"dead-${snap.id + 1}%06d"
-      val n = IndexStore.writeDeadIdsDf(spark, root, name,
-        supersededByAppend(spark, root, snap.segments, newSeg))
-      if (n == 0L) batches else batches :+ name
-    }
-    IndexStore.Snapshot(snap.id + 1, snap.segments :+ newSeg,
-      snap.tombstones, dead)
+    val name = f"dead-${snap.id + 1}%06d"
+    val n = IndexStore.writeDeadIdsDf(spark, root, name,
+      supersededByAppend(spark, root, snap.segments, newSeg))
+    IndexStore.Snapshot(snap.id + 1, snap.segments :+ newSeg, snap.tombstones,
+      Some(if (n == 0L) snap.deadBatches else snap.deadBatches :+ name))
   }
 
   /** APPEND build (reference `CREATE_OR_APPEND` + PK upsert, S1/S4): adds
@@ -1333,7 +1326,7 @@ object IndexBuilder {
     // segment configs so a merge can never silently rewrite a
     // keyword-analyzer or positional index as a default text one. The
     // passed cfg keeps control of sizing (numParts, salting, ...).
-    val stored = snap.segments.flatMap(s =>
+    val stored = snap.segments.map(s =>
       IndexStore.readSegmentConfig(spark, root, s))
     // facet/json sidecars are CARRIED OVER (url-remapped below), never
     // regenerated: a regeneration would silently replace custom
@@ -1343,35 +1336,30 @@ object IndexBuilder {
     // the rebuild path IS the v2→v3 upgrade tool (it re-encodes every
     // blob from the docstore; pre-v2 segments, whose blobs are
     // unreadable but whose docstores are fine, upgrade the same way).
-    val cfg1 = (stored.headOption match {
-      case Some(sc) => cfg.copy(
-        analyzer = sc.analyzer,
-        indexPositions = stored.forall(_.hasPositions),
-        formatVersion = (cfg.formatVersion +: stored.map(_.formatVersion)
-          .filter(graft.codec.VarByte.SupportedVersions.contains)).max)
-      case None => cfg
-    }).copy(buildFacets = false, facetSpecs = Nil)
+    val cfg1 = cfg.copy(
+      analyzer = stored.head.analyzer,
+      indexPositions = stored.forall(_.hasPositions),
+      formatVersion = (cfg.formatVersion +: stored.map(_.formatVersion)
+        .filter(graft.codec.VarByte.SupportedVersions.contains)).max,
+      buildFacets = false, facetSpecs = Nil)
     val all = snap.segments.map(s =>
       spark.read.parquet(IndexStore.docstorePath(root, s))).reduce(_ unionByName _)
     val live =
-      IndexStore.readTombstonesDf(spark, root, snap.tombstones) match {
+      IndexStore.readBatches(spark, root, "tombstones", snap.tombstones) match {
         case None => all
         case Some(tombs) =>
           // size-gated like the Searcher's deadDocs: a mass-deletion
           // tombstone table must anti-join via shuffle, not broadcast
           // (count from the write-time sidecar — no job)
-          val n = IndexStore.tombstoneCount(spark, root, snap.tombstones)
-            .getOrElse(tombs.count())
+          val n = IndexStore.sidecarCount(spark, root, "tombstones",
+            snap.tombstones)
           val side =
             if (n <= maxBroadcastTombstones) broadcast(tombs)
             else tombs
           all.join(side, Seq("url"), "left_anti")
       }
-    // cross-segment latest-wins: newest warc_ts wins, ties to the later
-    // segment (higher doc_id) — exactly the query-time liveDocs rule
-    val w = Window.partitionBy("url")
-      .orderBy(col("warc_ts").desc, col("doc_id").desc)
-    val winners = live.withColumn("__rn", row_number().over(w))
+    // cross-segment latest-wins, the same rule the dead sidecar records
+    val winners = live.withColumn("__rn", row_number().over(latestFirst))
       .filter(col("__rn") === 1).drop("__rn")
     // docstore.text is already extracted; present it in the pages shape
     val pages = winners.select(col("url"), col("warc_ts"), lit(null).cast("binary").as("html"),
@@ -1402,9 +1390,7 @@ object IndexBuilder {
     remapSidecar(IndexStore.facetsPath)
     remapSidecar(IndexStore.jsonFieldsPath)
 
-    // single fresh segment: no superseded docs survive, and a LEGACY
-    // root upgrades to sidecar-maintained here (the rebuild is the
-    // migration point for the dead sidecar exactly as for formatVersion)
+    // single fresh segment: no superseded docs survive
     IndexStore.writeSnapshot(spark, root,
       IndexStore.Snapshot(snap.id + 1, Seq(seg), Seq.empty,
         dead = Some(Seq.empty)))
@@ -1527,18 +1513,12 @@ object IndexBuilder {
     * merged segment records. The rebuild merge re-encodes from the
     * docstore, so it handles any layout — fall back, never error
     * (invariant 14). */
-  private[index] def layoutUniform(stored: Seq[IndexStore.SegmentConfig],
-                                   nSegments: Int): Boolean =
-    stored.size == nSegments &&
-      stored.forall(c =>
-        graft.codec.VarByte.SupportedVersions.contains(c.formatVersion)) &&
+  private[index] def layoutUniform(stored: Seq[IndexStore.SegmentConfig]): Boolean =
+    stored.forall(c =>
+      graft.codec.VarByte.SupportedVersions.contains(c.formatVersion)) &&
       stored.map(c => (c.numParts, c.saltFanout, c.hasPositions, c.analyzer,
         c.formatVersion)).distinct.size == 1
 
-  /** Posting-level compaction of `targets` (a subset of, or all of, the
-    * snapshot's segments) into one fresh segment. Returns None when the
-    * caller must fall back to the rebuild [[merge]] (mixed layouts /
-    * old format / dead set past the broadcast gate — invariant 14). */
   /** The GLOBAL dead-id set (superseded versions + tombstoned urls over
     * every segment — exactly the Searcher's liveDocs rule), sorted;
     * None when it exceeds the broadcast gate. One action: fetch at most
@@ -1550,36 +1530,26 @@ object IndexBuilder {
                             maxBroadcastDeadIds: Long)
       : Option[Array[Long]] = {
     import spark.implicits._
-    val allDocs = snap.segments.map(s =>
-        spark.read.parquet(IndexStore.docstorePath(root, s)))
-      .reduce(_ unionByName _)
-    val w = Window.partitionBy("url")
-      .orderBy(col("warc_ts").desc, col("doc_id").desc)
-    // sidecar-maintained roots read their superseded ids (may include
-    // ids whose rows an earlier tier pass already dropped — they match
-    // nothing downstream); only legacy roots pay the corpus window
-    val superseded = snap.dead match {
-      case Some(batches) =>
-        IndexStore.readDeadIdsDf(spark, root, batches)
-          .getOrElse(spark.emptyDataset[Long].toDF("doc_id"))
-      case None if snap.segments.size == 1 =>
-        spark.emptyDataset[Long].toDF("doc_id")
-      case None => allDocs.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") > 1).select("doc_id")
-    }
+    // superseded ids may include ids whose rows an earlier tier pass
+    // already dropped — they match nothing downstream
+    val superseded = IndexStore.readBatches(spark, root, "dead", snap.deadBatches)
+      .getOrElse(spark.emptyDataset[Long].toDF("doc_id"))
     val tombstoned =
-      IndexStore.readTombstonesDf(spark, root, snap.tombstones) match {
+      IndexStore.readBatches(spark, root, "tombstones", snap.tombstones) match {
         case None => spark.emptyDataset[Long].toDF("doc_id")
         case Some(tombs) =>
           // url rows are wider than dead ids — gate at the same 2M-row
           // threshold the Searcher and rebuild merge use for this table,
           // not the 4M id gate (count from the write-time sidecar)
-          val n = IndexStore.tombstoneCount(spark, root, snap.tombstones)
-            .getOrElse(tombs.count())
+          val n = IndexStore.sidecarCount(spark, root, "tombstones",
+            snap.tombstones)
           val side =
             if (n <= 2000000L) broadcast(tombs)
             else tombs
-          allDocs.join(side, Seq("url"), "left_semi").select("doc_id")
+          snap.segments.map(s =>
+              spark.read.parquet(IndexStore.docstorePath(root, s)))
+            .reduce(_ unionByName _)
+            .join(side, Seq("url"), "left_semi").select("doc_id")
       }
     val deadDf = superseded.union(tombstoned).distinct()
     val fetchCap =
@@ -1589,6 +1559,10 @@ object IndexBuilder {
     else { java.util.Arrays.sort(deadSorted); Some(deadSorted) }
   }
 
+  /** Posting-level compaction of `targets` (a subset of, or all of, the
+    * snapshot's segments) into one fresh segment. Returns None when the
+    * caller must fall back to the rebuild [[merge]] (mixed layouts /
+    * old format / dead set past the broadcast gate — invariant 14). */
   private def mergeCompactImpl(spark: SparkSession, root: String,
                                snap: IndexStore.Snapshot,
                                targets: Seq[String],
@@ -1606,9 +1580,9 @@ object IndexBuilder {
       phases += name -> (now - tPrev) / 1000000
       tPrev = now
     }
-    val stored = targets.flatMap(s =>
+    val stored = targets.map(s =>
       IndexStore.readSegmentConfig(spark, root, s))
-    if (!layoutUniform(stored, targets.size)) return None
+    if (!layoutUniform(stored)) return None
     val sc0 = stored.head
     val (numParts, withPos, blockSize) =
       (sc0.numParts, sc0.hasPositions, cfg.blockSize)
@@ -1623,8 +1597,8 @@ object IndexBuilder {
         spark.read.parquet(IndexStore.docstorePath(root, s)))
       .reduce(_ unionByName _)
 
-    // the dead set is GLOBAL (window over every segment's docstore +
-    // all tombstones): a subset compact must drop a target row
+    // the dead set is GLOBAL (every superseded-id batch + every
+    // tombstoned url over all segments): a subset compact must drop a target row
     // superseded by a newer version living OUTSIDE the subset. The
     // tiered driver precomputes it once for all its passes.
     val deadGlobal: Array[Long] = precomputedDead match {
@@ -1814,7 +1788,7 @@ object IndexBuilder {
     val termCount = termObs.get("terms").asInstanceOf[Long]
     val remaining = snap.segments.filterNot(targets.contains)
     // full compact (clearTombstones): one clean segment, no superseded
-    // rows left → sidecar resets to empty (upgrading legacy roots).
+    // rows left → sidecar resets to empty.
     // Tier passes carry the batches: REMAINING segments still hold
     // superseded rows those batches name; ids whose rows this pass
     // dropped match nothing in the anti-join — harmless, same stance as

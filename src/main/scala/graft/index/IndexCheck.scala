@@ -25,7 +25,11 @@ import org.apache.spark.sql.functions._
   *  3. cross-table: term_stats.df == Σ df_local per term;
   *     stats.doc_count == docstore row count; stats.id_ceiling > max
   *     doc_id; every posting doc_id exists in the docstore (orphan
-  *     postings ⇒ ghost hits).
+  *     postings ⇒ ghost hits);
+  *  4. deletion batches: every tombstone and superseded-id batch the
+  *     snapshot names holds exactly the rows its `.count` sidecar
+  *     claims (the sidecar alone sizes the broadcast-vs-shuffle
+  *     gates — an undercount would force-broadcast an O(corpus) table).
   *
   * Returns a frame of issues `(segment, part, term, problem)` — empty ⇔
   * healthy. CLI: `graft.Main check --index <root>`.
@@ -41,7 +45,7 @@ object IndexCheck {
       .getOrElse(sys.error(s"no snapshot at $root"))
 
     val perSegment = snap.segments.map { seg =>
-      val cfgOpt = IndexStore.readSegmentConfig(spark, root, seg)
+      val cfg = IndexStore.readSegmentConfig(spark, root, seg)
       val postings = IndexStore.readPostingsOrEmpty(spark, root, seg)
         .select("part", "term", "df_local", "max_tf", "min_dl", "blob")
         .as[(Int, String, Long, Int, Int, Array[Byte])]
@@ -122,12 +126,9 @@ object IndexCheck {
           } catch {
             case e: Exception => problems += s"blob decode failed: ${e.getMessage}"
           }
-          cfgOpt.foreach { c =>
-            val ok = (0 until c.saltFanout)
-              .exists(s0 => IndexBuilder.partOf(term, s0, c.numParts) == part)
-            if (!ok) problems +=
-              s"part=$part outside partOf(term, salt<${c.saltFanout})"
-          }
+          if (!(0 until cfg.saltFanout)
+              .exists(s0 => IndexBuilder.partOf(term, s0, cfg.numParts) == part))
+            problems += s"part=$part outside partOf(term, salt<${cfg.saltFanout})"
           problems.result().map(p => Issue(seg, part, term, p))
         }
       }
@@ -157,9 +158,7 @@ object IndexCheck {
       val (nDocs, maxId) = (agg.getLong(0),
         if (agg.isNullAt(1)) -1L else agg.getLong(1))
       val nDistinct = agg.getLong(2)
-      val srow = stats.agg(sum("doc_count"),
-        if (stats.columns.contains("id_ceiling")) max("id_ceiling")
-        else lit(null).cast("long")).head()
+      val srow = stats.agg(sum("doc_count"), max("id_ceiling")).head()
       val statIssues = Seq.newBuilder[Issue]
       val statCount = if (srow.isNullAt(0)) 0L else srow.getLong(0)
       if (statCount != nDocs)
@@ -207,9 +206,26 @@ object IndexCheck {
         .unionByName(spark.createDataset(statIssues.result()).toDF())
         .unionByName(orphanIssues.toDF())
     }
+    // 4: one job counts every batch the snapshot names (a missing batch
+    // or sidecar fails naming the file, like every other reader)
+    val batches =
+      snap.tombstones.map("tombstones" -> _) ++ snap.deadBatches.map("dead" -> _)
+    val rows: Map[String, Long] = batches.map { case (d, n) =>
+        spark.read.parquet(s"$root/$d/$n").select(lit(s"$d/$n").as("batch"))
+      }.reduceOption(_ unionByName _)
+      .fold(Map.empty[String, Long])(
+        _.groupBy("batch").count().as[(String, Long)].collect().toMap)
+    val batchIssues = batches.flatMap { case (d, n) =>
+      val claimed = IndexStore.sidecarCount(spark, root, d, Seq(n))
+      val actual = rows.getOrElse(s"$d/$n", 0L)
+      if (claimed == actual) None
+      else Some(Issue(s"$d/$n", -1, "",
+        s"$n.count says $claimed but the batch holds $actual rows"))
+    }
     // a damaged/segment-less snapshot must audit as "no per-segment
     // issues", not crash the auditor on an empty reduce
     perSegment.reduceOption(_ unionByName _)
       .getOrElse(spark.emptyDataset[Issue].toDF())
+      .unionByName(spark.createDataset(batchIssues).toDF())
   }
 }

@@ -21,7 +21,8 @@ import org.apache.spark.sql.SparkSession
   *   <root>/segments/<segName>/stats/           parquet (1 row)
   *   <root>/segments/<segName>/manifest.jsonl   per-part lineage + metrics
   *   <root>/tombstones/<name>/                  deleted PKs (urls), parquet
-  *                                              (legacy <name>.txt readable)
+  *   <root>/dead/<name>/                        superseded doc_ids, parquet
+  *                                              (each batch + <name>.count)
   *   <root>/snapshots/snap-<n>.json             active segment list
   *   <root>/snapshots/LATEST                    atomic pointer (rename swap)
   * }}}
@@ -39,16 +40,19 @@ object IndexStore {
                                wallMs: Long)
 
   /** `dead` = the superseded-doc_id sidecar batches (upsert losers,
-    * maintained INCREMENTALLY at append time — SURVEY §8 round-5 item:
-    * without them a cold multi-segment Searcher open re-derives the
-    * liveDocs set with an O(corpus) window). `Some(batches)` means the
-    * root is sidecar-maintained (possibly empty — no upserts yet);
-    * `None` means a legacy root whose Searcher must fall back to the
-    * window derivation. Tombstones stay separate: they are url-keyed
-    * deletion intents, these are doc_id-keyed facts. */
+    * maintained INCREMENTALLY at append time, so a cold multi-segment
+    * Searcher open never re-derives liveDocs with an O(corpus) window).
+    * Every writer states them (`Some(Nil)`: no upserts yet), and every
+    * read snapshot carries them: the `dead` key is the layout gate —
+    * [[parseSnapshot]] refuses a snapshot without it, since everything
+    * older (sidecar-less tombstones, stats without `id_ceiling`,
+    * partial `config.json`) predates the key. Tombstones stay separate:
+    * they are url-keyed deletion intents, these are doc_id-keyed facts. */
   final case class Snapshot(id: Long, segments: Seq[String],
                             tombstones: Seq[String],
-                            dead: Option[Seq[String]] = None)
+                            dead: Option[Seq[String]]) {
+    def deadBatches: Seq[String] = dead.getOrElse(Nil)
+  }
 
   def fs(spark: SparkSession, root: String): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -60,9 +64,8 @@ object IndexStore {
     * that is the difference between scanning ≤fanout files and scanning
     * the whole index layout. */
   final case class SegmentConfig(numParts: Int, saltFanout: Int, blockSize: Int,
-                                 formatVersion: Int = graft.codec.VarByte.DefaultFormatVersion,
-                                 hasPositions: Boolean = false,
-                                 analyzer: String = graft.analysis.Tokenizer.Text)
+                                 formatVersion: Int, hasPositions: Boolean,
+                                 analyzer: String)
 
   def writeSegmentConfig(spark: SparkSession, root: String, seg: String,
                          cfg: SegmentConfig): Unit =
@@ -71,30 +74,21 @@ object IndexStore {
         s""""block_size":${cfg.blockSize},"format_version":${cfg.formatVersion},""" +
         s""""positions":${cfg.hasPositions},"analyzer":"${cfg.analyzer}"}""")
 
-  private val numPartsRe = """"num_parts":(\d+)""".r
-  private val fanoutRe = """"salt_fanout":(\d+)""".r
-  private val blockRe = """"block_size":(\d+)""".r
-  private val versionRe = """"format_version":(\d+)""".r
-  private val positionsRe = """"positions":(true|false)""".r
-  private val analyzerRe = """"analyzer":"([a-z]+)"""".r
-
+  /** The segment's `config.json`; the file and every key are required
+    * (a missing one fails naming the file). An old `format_version`
+    * reads as written — the Searcher refuses it (invariant 10). */
   def readSegmentConfig(spark: SparkSession, root: String,
-                        seg: String): Option[SegmentConfig] = {
-    val f = fs(spark, root)
+                        seg: String): SegmentConfig = {
     val p = new Path(s"${segmentDir(root, seg)}/config.json")
-    if (!f.exists(p)) return None
-    val s = readString(f, p)
-    for {
-      n <- numPartsRe.findFirstMatchIn(s).map(_.group(1).toInt)
-      sf <- fanoutRe.findFirstMatchIn(s).map(_.group(1).toInt)
-      b <- blockRe.findFirstMatchIn(s).map(_.group(1).toInt)
-    } yield SegmentConfig(n, sf, b,
-      // absent field = a pre-versioning segment (format 1): recorded as
-      // such so the Searcher can refuse it loudly
-      versionRe.findFirstMatchIn(s).map(_.group(1).toInt).getOrElse(1),
-      positionsRe.findFirstMatchIn(s).exists(_.group(1) == "true"),
-      analyzerRe.findFirstMatchIn(s).map(_.group(1))
-        .getOrElse(graft.analysis.Tokenizer.Text))
+    val s = readString(fs(spark, root), p)
+    def key(name: String, value: String): String =
+      s""""$name":$value""".r.findFirstMatchIn(s).map(_.group(1))
+        .getOrElse(throw new IllegalStateException(s"$p has no '$name' key"))
+    SegmentConfig(key("num_parts", "(\\d+)").toInt,
+      key("salt_fanout", "(\\d+)").toInt, key("block_size", "(\\d+)").toInt,
+      key("format_version", "(\\d+)").toInt,
+      key("positions", "(true|false)") == "true",
+      key("analyzer", "\"([a-z]+)\""))
   }
 
   def segmentDir(root: String, seg: String) = s"$root/segments/$seg"
@@ -267,12 +261,12 @@ object IndexStore {
     val f = fs(spark, root)
     val segs = snap.segments.map(s => s""""$s"""").mkString("[", ",", "]")
     val tombs = snap.tombstones.map(s => s""""$s"""").mkString("[", ",", "]")
-    // "dead" is written ONLY for sidecar-maintained roots: its absence is
-    // the legacy marker that routes a Searcher to the window fallback
-    val dead = snap.dead.fold("")(ds =>
-      s""","dead":${ds.map(s => s""""$s"""").mkString("[", ",", "]")}""")
+    // readers refuse a snapshot without the "dead" key: never write one
+    val dead = snap.dead.getOrElse(throw new IllegalArgumentException(
+      s"snapshot ${snap.id} at $root states no superseded-id batches"))
+      .map(s => s""""$s"""").mkString("[", ",", "]")
     val body =
-      s"""{"id":${snap.id},"segments":$segs,"tombstones":$tombs$dead}"""
+      s"""{"id":${snap.id},"segments":$segs,"tombstones":$tombs,"dead":$dead}"""
     val snapPath = new Path(s"$root/snapshots/snap-${snap.id}.json")
     writeString(f, snapPath, body)
     // atomic pointer flip: write tmp, OVERWRITE-rename over LATEST —
@@ -293,15 +287,25 @@ object IndexStore {
   private val tombsRe = """"tombstones":\[([^\]]*)\]""".r
   private val deadRe = """"dead":\[([^\]]*)\]""".r
 
-  private def parseSnapshot(body: String): Snapshot = {
+  /** THE layout gate, on every snapshot read (and so under every
+    * reader: Searcher, append, delete, merge, compact, FieldedIndex,
+    * StreamIndexer, IndexCheck, expireSnapshots). A snapshot without the
+    * `dead` key was written before the superseded-id sidecar, and so
+    * before every other current layout feature — it is refused loudly
+    * (the invariant-10 stance; Iceberg readers likewise reject table
+    * metadata of a format they do not support). */
+  private def parseSnapshot(f: FileSystem, p: Path): Snapshot = {
+    val body = readString(f, p)
     val id = idRe.findFirstMatchIn(body).map(_.group(1).toLong).getOrElse(0L)
     def parseList(s: String): Seq[String] =
       s.split(',').map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty).toSeq
     val segs = segsRe.findFirstMatchIn(body).map(m => parseList(m.group(1))).getOrElse(Seq.empty)
     val tombs = tombsRe.findFirstMatchIn(body).map(m => parseList(m.group(1))).getOrElse(Seq.empty)
-    // key absent (legacy snapshot) → None; present-but-empty → Some(Nil)
     val dead = deadRe.findFirstMatchIn(body).map(m => parseList(m.group(1)))
-    Snapshot(id, segs, tombs, dead)
+      .getOrElse(throw new IllegalStateException(s"snapshot $p has no " +
+        "\"dead\" key: its layout predates the superseded-id sidecar and " +
+        "is no longer readable — rebuild the index with buildFull"))
+    Snapshot(id, segs, tombs, Some(dead))
   }
 
   def readLatestSnapshot(spark: SparkSession, root: String): Option[Snapshot] = {
@@ -309,7 +313,7 @@ object IndexStore {
     val latest = new Path(s"$root/snapshots/LATEST")
     if (!f.exists(latest)) return None
     val name = readString(f, latest).trim
-    Some(parseSnapshot(readString(f, new Path(s"$root/snapshots/$name"))))
+    Some(parseSnapshot(f, new Path(s"$root/snapshots/$name")))
   }
 
   /** TIME TRAVEL (the Iceberg snapshot-read analog): read a specific
@@ -321,7 +325,7 @@ object IndexStore {
                      id: Long): Option[Snapshot] = {
     val f = fs(spark, root)
     val p = new Path(s"$root/snapshots/snap-$id.json")
-    if (!f.exists(p)) None else Some(parseSnapshot(readString(f, p)))
+    if (!f.exists(p)) None else Some(parseSnapshot(f, p))
   }
 
   /** All retained snapshot ids, ascending. */
@@ -363,11 +367,10 @@ object IndexStore {
     val expired = expire.flatMap(readSnapshotAt(spark, root, _))
     val liveSegs = retained.flatMap(_.segments).toSet
     val liveTombs = retained.flatMap(_.tombstones).toSet
-    val liveDead = retained.flatMap(_.dead.getOrElse(Seq.empty)).toSet
+    val liveDead = retained.flatMap(_.deadBatches).toSet
     val deadSegs = expired.flatMap(_.segments).toSet -- liveSegs
     val deadTombs = expired.flatMap(_.tombstones).toSet -- liveTombs
-    val deadDeadBatches =
-      expired.flatMap(_.dead.getOrElse(Seq.empty)).toSet -- liveDead
+    val deadDeadBatches = expired.flatMap(_.deadBatches).toSet -- liveDead
     // POINTER BEFORE DATA: delete the expired snapshot JSONs first so a
     // crash mid-expire can never leave a readable snap-N.json pointing
     // at already-deleted segment dirs (a time-travel open would then
@@ -385,8 +388,7 @@ object IndexStore {
     val tombDir = new Path(s"$root/tombstones")
     if (f.exists(tombDir))
       f.listStatus(tombDir).foreach { st =>
-        val n = st.getPath.getName
-        val base = n.stripSuffix(".count").stripSuffix(".txt")
+        val base = st.getPath.getName.stripSuffix(".count")
         if (deadTombs.contains(base)) f.delete(st.getPath, true)
       }
     val deadDir = new Path(s"$root/dead")
@@ -398,110 +400,67 @@ object IndexStore {
     (expire.size, segsDeleted)
   }
 
-  // --- tombstones (delete-by-PK, S5) ---
+  // --- deletion batches: tombstones and superseded ids ---
   //
-  // Stored as PARQUET per deletion batch, never as driver-resident lists:
-  // a GDPR-style purge of 1% of 10^12 urls is a 10^10-row table — it must
-  // flow executor-to-executor (write from a DataFrame, read as one, join
-  // against the docstore) with the driver only tracking the batch NAMES
-  // in the snapshot. Legacy `<name>.txt` batches (round ≤2 layouts) are
-  // still readable.
+  // Tombstones (`<root>/tombstones/<name>/`, one `url` column) are the
+  // deleted PKs of one delete-by-PK call (S5). Superseded-id batches
+  // (`<root>/dead/<name>/`, one `doc_id` column) are the incremental
+  // liveDocs substrate: each APPEND writes the doc_ids its batch
+  // superseded (upsert losers across ALL segments, winners included when
+  // the incoming doc loses), so a cold Searcher open unions O(appends)
+  // small parquet batches instead of paying a full-corpus window shuffle.
+  //
+  // Both are PARQUET per batch, never driver-resident lists: a GDPR-style
+  // purge of 1% of 10^12 urls is a 10^10-row table — it must flow
+  // executor-to-executor with the driver only tracking the batch NAMES
+  // in the snapshot. Each batch has a write-time `<name>.count` sidecar
+  // that sizes every broadcast-vs-shuffle gate without a job (invariant
+  // 21: never write a wrong one).
 
-  def writeTombstonesDf(spark: SparkSession, root: String, name: String,
-                        urls: org.apache.spark.sql.DataFrame): Unit = {
-    // observe the row count during the write and store it as a sidecar:
-    // every later consumer (Searcher.deadDocs, merge, mergeCompact) needs
-    // the count only for its broadcast-vs-shuffle size gate, and reading
-    // it back here saves them a count() job per lifecycle op
+  /** One writer for both batch kinds: the row count is observed during
+    * the parquet write (no extra job) and stored as the sidecar. */
+  private def writeBatch(spark: SparkSession, root: String, dir: String,
+                         name: String, df: org.apache.spark.sql.DataFrame): Long = {
     val obs = org.apache.spark.sql.Observation()
-    urls.toDF("url")
-      .observe(obs, org.apache.spark.sql.functions.count(
+    df.observe(obs, org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("cnt"))
       .write.mode("overwrite")
-      .parquet(s"$root/tombstones/$name")
-    writeString(fs(spark, root), new Path(s"$root/tombstones/$name.count"),
-      obs.get("cnt").asInstanceOf[Long].toString)
-  }
-
-  /** Total row count across the named tombstone batches WITHOUT a Spark
-    * job, from the `.count` sidecars written alongside each batch; None
-    * when any batch lacks one (legacy layouts) — callers then fall back
-    * to a count() action on the unioned frame. */
-  def tombstoneCount(spark: SparkSession, root: String,
-                     names: Seq[String]): Option[Long] = {
-    if (names.isEmpty) return Some(0L)
-    val f = fs(spark, root)
-    val counts = names.map { n =>
-      val p = new Path(s"$root/tombstones/$n.count")
-      if (f.exists(p)) readString(f, p).trim.toLongOption else None
-    }
-    if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
-  }
-
-  /** Union of the named tombstone batches as a 1-column (`url`) frame;
-    * None when there are none. Each batch is a parquet dir (current) or a
-    * one-url-per-line `.txt` (legacy). */
-  def readTombstonesDf(spark: SparkSession, root: String,
-                       names: Seq[String]): Option[org.apache.spark.sql.DataFrame] = {
-    if (names.isEmpty) return None
-    val f = fs(spark, root)
-    import spark.implicits._
-    val dfs = names.flatMap { n =>
-      val dir = new Path(s"$root/tombstones/$n")
-      val txt = new Path(s"$root/tombstones/$n.txt")
-      if (f.exists(dir)) Some(spark.read.parquet(dir.toString).toDF("url"))
-      else if (f.exists(txt))
-        Some(readString(f, txt).linesIterator.filter(_.nonEmpty)
-          .toSeq.toDF("url"))
-      else None
-    }
-    if (dfs.isEmpty) None else Some(dfs.reduce(_ unionByName _))
-  }
-
-  // --- superseded-doc_id batches (`<root>/dead/<name>/`) ---
-  //
-  // The incremental liveDocs substrate (SURVEY §8 round-5 item): each
-  // APPEND writes the doc_ids its batch superseded (upsert losers across
-  // ALL segments, winners included when the incoming doc loses), so a
-  // cold Searcher open unions O(appends) small parquet batches instead
-  // of paying a full-corpus window shuffle. Same parquet + `.count`
-  // sidecar shape as tombstones (invariant 21 applies: the sidecar
-  // count feeds broadcast gates — never write a wrong one).
-
-  /** Write a superseded-id batch; returns its row count (from the write
-    * observation — no extra job). */
-  def writeDeadIdsDf(spark: SparkSession, root: String, name: String,
-                     ids: org.apache.spark.sql.DataFrame): Long = {
-    val obs = org.apache.spark.sql.Observation()
-    ids.toDF("doc_id")
-      .observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("cnt"))
-      .write.mode("overwrite")
-      .parquet(s"$root/dead/$name")
+      .parquet(s"$root/$dir/$name")
     val n = obs.get("cnt").asInstanceOf[Long]
-    writeString(fs(spark, root), new Path(s"$root/dead/$name.count"),
-      n.toString)
+    writeString(fs(spark, root), new Path(s"$root/$dir/$name.count"), n.toString)
     n
   }
 
-  /** Union of the named superseded-id batches (`doc_id` frame); None
-    * when there are none. */
-  def readDeadIdsDf(spark: SparkSession, root: String, names: Seq[String])
-      : Option[org.apache.spark.sql.DataFrame] =
+  /** Union of the named batches under `<root>/<dir>/` (`tombstones`: a
+    * `url` frame; `dead`: a `doc_id` frame); None when there are none.
+    * Every named batch is read: a missing one fails loudly (skipping it
+    * would silently serve its deleted docs again). */
+  def readBatches(spark: SparkSession, root: String, dir: String,
+                  names: Seq[String]): Option[org.apache.spark.sql.DataFrame] =
     if (names.isEmpty) None
-    else Some(names.map(n => spark.read.parquet(s"$root/dead/$n"))
+    else Some(names.map(n => spark.read.parquet(s"$root/$dir/$n"))
       .reduce(_ unionByName _))
 
-  /** Total rows across the named dead batches from the `.count`
-    * sidecars — no Spark job; None when any batch lacks one. */
-  def deadIdsCount(spark: SparkSession, root: String,
-                   names: Seq[String]): Option[Long] = {
-    if (names.isEmpty) return Some(0L)
+  def writeTombstonesDf(spark: SparkSession, root: String, name: String,
+                        urls: org.apache.spark.sql.DataFrame): Unit =
+    writeBatch(spark, root, "tombstones", name, urls.toDF("url"))
+
+  /** Write a superseded-id batch; returns its row count. */
+  def writeDeadIdsDf(spark: SparkSession, root: String, name: String,
+                     ids: org.apache.spark.sql.DataFrame): Long =
+    writeBatch(spark, root, "dead", name, ids.toDF("doc_id"))
+
+  /** Total rows across the named batches under `<root>/<dir>/`
+    * (`tombstones` or `dead`), summed from their `.count` sidecars — no
+    * Spark job. A missing or unparsable sidecar fails naming the file. */
+  def sidecarCount(spark: SparkSession, root: String, dir: String,
+                   names: Seq[String]): Long = {
     val f = fs(spark, root)
-    val counts = names.map { n =>
-      val p = new Path(s"$root/dead/$n.count")
-      if (f.exists(p)) readString(f, p).trim.toLongOption else None
-    }
-    if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
+    names.map { n =>
+      val p = new Path(s"$root/$dir/$n.count")
+      val s = readString(f, p).trim
+      s.toLongOption.getOrElse(
+        throw new IllegalStateException(s"$p holds '$s', not a row count"))
+    }.sum
   }
 }

@@ -116,13 +116,8 @@ final class Searcher(
     }
   }
 
-  // allowMissingColumns: a legacy segment's stats lack `id_ceiling` while
-  // a round-3 append's carry it — a strict unionByName would make a valid
-  // mixed-version index unreadable (missing columns read as null, and
-  // every consumer aggregates only columns present in both)
   private def unionSegs(tableOf: Searcher.SegTables => DataFrame): DataFrame =
-    snapshot.segments.map(s => tableOf(segTables(s)))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+    snapshot.segments.map(s => tableOf(segTables(s))).reduce(_ unionByName _)
 
   /** Row store (S8): doc_id, url, warc_ts, lang, text, dl — UNCACHED
     * (parquet-backed; column pruning keeps narrow reads cheap). The
@@ -173,7 +168,7 @@ final class Searcher(
   val postings: DataFrame =
     snapshot.segments.map(segPostings).reduce(_ unionByName _)
 
-  private val segConfigs: Map[String, Option[IndexStore.SegmentConfig]] =
+  private val segConfigs: Map[String, IndexStore.SegmentConfig] =
     segTables.view.mapValues(_.config).toMap
 
   // fail LOUDLY on a posting-format mismatch: a stale segment would
@@ -182,23 +177,21 @@ final class Searcher(
   // segments are FINE to serve — every blob self-describes — only
   // unsupported (pre-v2) formats are refused.
   segConfigs.foreach { case (seg, c) =>
-    c.foreach(cc => require(
-      graft.codec.VarByte.SupportedVersions.contains(cc.formatVersion),
-      s"segment $seg has posting format v${cc.formatVersion}; this build " +
+    require(graft.codec.VarByte.SupportedVersions.contains(c.formatVersion),
+      s"segment $seg has posting format v${c.formatVersion}; this build " +
         s"reads v${graft.codec.VarByte.SupportedVersions.toSeq.sorted
-          .mkString("/v")} — rebuild or merge"))
+          .mkString("/v")} — rebuild or merge")
   }
 
   /** Phrase queries need every segment built with `indexPositions`. */
-  val positionsIndexed: Boolean =
-    segConfigs.values.forall(_.exists(_.hasPositions))
+  val positionsIndexed: Boolean = segConfigs.values.forall(_.hasPositions)
 
   /** Per-index analyzer mode (the reference's per-field analyzer
     * dispatch, Indexer.java:420): the query side MUST analyze with the
     * same mode the index was built with, so it is read from the segment
     * configs and required to be uniform across segments. */
   val analyzerMode: String = {
-    val modes = segConfigs.values.flatten.map(_.analyzer).toSet
+    val modes = segConfigs.values.map(_.analyzer).toSet
     require(modes.size <= 1,
       s"segments were built with different analyzers: $modes — merge first")
     modes.headOption.getOrElse(Tokenizer.Text)
@@ -208,19 +201,14 @@ final class Searcher(
     * each segment's candidate `part=` set is recomputed from its stored
     * build config ({partOf(term, salt) | salt < fanout} per term) — the
     * scan touches ≤ |terms|·fanout partition directories instead of the
-    * whole layout. Row-group stats on `term` prune within the survivors.
-    * Segments without a config file (none in practice) fall back to the
-    * term-filtered full scan. */
+    * whole layout. Row-group stats on `term` prune within the survivors. */
   private def postingsForTerms(terms: Seq[String]): DataFrame =
     snapshot.segments.map { seg =>
-      val df = segPostings(seg).filter(col("term").isin(terms: _*))
-      segConfigs(seg) match {
-        case Some(c) =>
-          val parts = terms.flatMap(t => (0 until c.saltFanout).map(s =>
-            graft.index.IndexBuilder.partOf(t, s, c.numParts))).distinct
-          df.filter(col("part").isin(parts: _*))
-        case None => df
-      }
+      val c = segConfigs(seg)
+      val parts = terms.flatMap(t => (0 until c.saltFanout).map(s =>
+        graft.index.IndexBuilder.partOf(t, s, c.numParts))).distinct
+      segPostings(seg).filter(col("term").isin(terms: _*))
+        .filter(col("part").isin(parts: _*))
     }.reduce(_ unionByName _)
       // bound the CONCURRENCY of blob scans, not their volume: each
       // scan task transiently holds a whole row-group batch plus the
@@ -261,53 +249,25 @@ final class Searcher(
     * [[graft.index.IndexBuilder.appendSegment]]), so a cold open on a
     * churned 50-segment root reads O(appends) tiny parquet files
     * instead of paying a full-corpus window shuffle before the first
-    * query. Only LEGACY snapshots (no `dead` key, pre-round-5 layouts)
-    * fall back to deriving the set with the window. */
+    * query. Each batch side is semi-joined to the docstore: superseded
+    * ids by `doc_id` (restricting to ids whose rows still EXIST — a
+    * tiered compaction pass drops its tier's dead rows but carries the
+    * batches, and stale ids would inflate deadDocCount), tombstones by
+    * `url`. The `.count` sidecars (no job) gate broadcast-vs-shuffle:
+    * after a mass deletion either table is O(corpus), and force-
+    * broadcasting it would OOM the driver. */
   val deadDocs: DataFrame = {
-    val w = Window.partitionBy("url")
-      .orderBy(col("warc_ts").desc, col("doc_id").desc)
-    val superseded = snapshot.dead match {
-      case Some(batches) =>
-        IndexStore.readDeadIdsDf(spark, root, batches) match {
-          case None => spark.emptyDataset[Long].toDF("doc_id")
-          case Some(raw) =>
-            // restrict to ids whose rows still EXIST: a tiered
-            // compaction pass drops its tier's dead rows but carries
-            // the batches, so raw ids can be stale — harmless in the
-            // anti-joins but they would inflate deadDocCount and make
-            // numDocs undercount. The batch count comes from the
-            // write-time `.count` sidecars (no job) and gates
-            // broadcast-vs-shuffle exactly like the tombstone side.
-            val n = IndexStore.deadIdsCount(spark, root, batches)
-              .getOrElse(raw.count())
-            val side = if (n <= maxBroadcastDeadDocs) broadcast(raw) else raw
-            docstoreNarrow.join(side, Seq("doc_id"), "left_semi")
-              .select("doc_id")
-        }
-      case None if snapshot.segments.size == 1 =>
-        spark.emptyDataset[Long].toDF("doc_id")
-      case None =>
-        docstoreNarrow.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") > 1).select("doc_id")
-    }
-    val deleted =
-      IndexStore.readTombstonesDf(spark, root, snapshot.tombstones) match {
+    def docIdsIn(dir: String, batches: Seq[String], key: String): DataFrame =
+      IndexStore.readBatches(spark, root, dir, batches) match {
         case None => spark.emptyDataset[Long].toDF("doc_id")
-        case Some(tombs) =>
-          // same size gate as the deadDocs broadcast below: after a mass
-          // deletion the tombstone table is O(corpus) and force-
-          // broadcasting it would OOM the driver — fall back to a
-          // shuffle semi-join. The count comes from the write-time
-          // sidecar (zero jobs); only legacy batches pay a count()
-          val n = IndexStore
-            .tombstoneCount(spark, root, snapshot.tombstones)
-            .getOrElse(tombs.count())
-          val side =
-            if (n <= maxBroadcastDeadDocs) broadcast(tombs)
-            else tombs
-          docstoreNarrow.join(side, Seq("url"), "left_semi").select("doc_id")
+        case Some(df) =>
+          val n = IndexStore.sidecarCount(spark, root, dir, batches)
+          val side = if (n <= maxBroadcastDeadDocs) broadcast(df) else df
+          docstoreNarrow.join(side, Seq(key), "left_semi").select("doc_id")
       }
-    superseded.union(deleted).distinct().persist(StorageLevel.MEMORY_AND_DISK)
+    docIdsIn("dead", snapshot.deadBatches, "doc_id")
+      .union(docIdsIn("tombstones", snapshot.tombstones, "url"))
+      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
   }
   private lazy val deadDocCount: Long = deadDocs.count()
   private lazy val hasDeadDocs: Boolean = deadDocCount > 0
@@ -2068,7 +2028,7 @@ object Searcher {
   private[query] final case class SegTables(
       docstore: DataFrame, postings: DataFrame,
       termStats: DataFrame, stats: DataFrame,
-      config: Option[IndexStore.SegmentConfig])
+      config: IndexStore.SegmentConfig)
 
   /** A clause subset resolved to foldable frames (the cross-Searcher
     * composition unit behind every exact single-index path and

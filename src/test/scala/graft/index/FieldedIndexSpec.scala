@@ -206,8 +206,8 @@ class FieldedIndexSpec extends AnyFunSuite with SparkTestBase {
       val fr = FieldedIndex.fieldRoot(r, f)
       val snap = IndexStore.readLatestSnapshot(spark, fr).get
       assert(snap.tombstones.size == 1, s"$f tombstone batch")
-      assert(IndexStore.tombstoneCount(spark, fr, snap.tombstones)
-        .contains(delUrls.distinct.size.toLong), s"$f tombstone count sidecar")
+      assert(IndexStore.sidecarCount(spark, fr, "tombstones", snap.tombstones)
+        == delUrls.distinct.size.toLong, s"$f tombstone count sidecar")
     }
 
     FieldedIndex.mergeCompact(spark, r, mkFields, cfg)

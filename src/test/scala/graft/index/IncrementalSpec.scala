@@ -6,7 +6,8 @@ import graft.SparkTestBase
 import graft.analysis.{SynonymDict, TextExtract, Tokenizer}
 import graft.golden.GoldenBM25
 import graft.query.Searcher
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, lit, row_number}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Incremental indexing (SURVEY.md §7 step 5): APPEND segments with
@@ -322,31 +323,6 @@ class IncrementalSpec extends AnyFunSuite with SparkTestBase {
     } finally { sm.close(); sf.close() }
   }
 
-  test("legacy segment whose stats lack id_ceiling: append falls back to " +
-    "the max(doc_id) scan and the mixed-schema index stays readable") {
-    val root = tmpDir("graft-legacy-")
-    IndexBuilder.buildFull(spark, toDf(batch1), dict, root, cfg, "b1")
-    // simulate a round-2 segment: rewrite its stats without id_ceiling
-    val statsPath = IndexStore.statsPath(root, "seg-000000")
-    val legacy = spark.read.parquet(statsPath)
-      .select("doc_count", "sum_dl", "avgdl").collect()
-    import spark.implicits._
-    legacy.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .toSeq.toDF("doc_count", "sum_dl", "avgdl")
-      .write.mode("overwrite").parquet(statsPath)
-    // append writes NEW-schema stats next to the legacy segment's
-    IndexBuilder.appendSegment(spark, toDf(batch2), dict, root, cfg, "b2")
-    val s = new Searcher(spark, root, dict)
-    try {
-      // a strict stats unionByName would throw here on the missing column
-      assert(s.docCount == (batch1.size + batch2.size).toLong)
-      // ids must not collide across the schema generations
-      val ids = s.docstore.select("doc_id").collect().map(_.getLong(0))
-      assert(ids.distinct.length == ids.length)
-      assert(s.search("spark", 10).count() > 0)
-    } finally s.close()
-  }
-
   test("chunked posting blobs: a tiny maxBlobPostings build stores head " +
     "terms as multiple rows per (part, term) and is search-identical — " +
     "exact, WAND-pruned, and through append + compact") {
@@ -394,7 +370,7 @@ class IncrementalSpec extends AnyFunSuite with SparkTestBase {
     val b2 = (N until N + 100).map(i => WebtextGen.page(Seed, i.toLong))
     IndexBuilder.appendSegment(spark, toDf(b2), dict, root, cfg, "b2")
     // mark the first segment as a pre-versioning layout (format v1)
-    val sc = IndexStore.readSegmentConfig(spark, root, "seg-000000").get
+    val sc = IndexStore.readSegmentConfig(spark, root, "seg-000000")
     IndexStore.writeSegmentConfig(spark, root, "seg-000000",
       sc.copy(formatVersion = 1))
     val rep = IndexBuilder.mergeCompact(spark, root, dict, cfg)
@@ -487,9 +463,9 @@ class IncrementalSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("superseded-id sidecar: a multi-segment cold open derives " +
-    "liveDocs from per-append batches with NO corpus window, the set " +
-    "equals the legacy window derivation exactly (incl. a doc dead on " +
-    "arrival), and search views agree") {
+    "liveDocs from per-append batches with NO corpus window, and the set " +
+    "equals a latest-wins window over the docstores plus the tombstoned " +
+    "urls (incl. a doc dead on arrival)") {
     val root = tmpDir("graft-deadsc-")
     IndexBuilder.buildFull(spark, toDf(batch1), dict, root, cfg, "b1")
     IndexBuilder.appendSegment(spark, toDf(batch2), dict, root, cfg, "b2")
@@ -517,27 +493,27 @@ class IncrementalSpec extends AnyFunSuite with SparkTestBase {
       assert(!plan.contains("Window"),
         "sidecar-maintained open still runs the corpus window")
       val sidecarDead = s.deadDocs.collect().map(_.getLong(0)).toSet
-      // legacy twin: same root, snapshot stripped of the dead key → the
-      // window fallback derives the set from scratch
-      IndexStore.writeSnapshot(spark, root,
-        IndexStore.Snapshot(snap.id + 1, snap.segments, snap.tombstones,
-          dead = None))
-      val sLegacy = new Searcher(spark, root, dict)
-      try {
-        val planL = sLegacy.deadDocs.queryExecution.executedPlan.toString
-        assert(planL.contains("Window"), "legacy fallback should window")
-        val windowDead = sLegacy.deadDocs.collect().map(_.getLong(0)).toSet
-        assert(sidecarDead == windowDead,
-          s"sidecar ≠ window: only-sidecar=${(sidecarDead -- windowDead).take(5)} " +
-            s"only-window=${(windowDead -- sidecarDead).take(5)}")
-        assert(sLegacy.numDocs == s.numDocs)
-        // and the served views agree query-by-query
-        for (q <- Seq("spark", "index", "data")) {
-          def view(x: Searcher) = x.search(q, 50).select("url", "score")
-            .collect().map(r => (r.getString(0), r.getDouble(1))).toSet
-          assert(view(s) == view(sLegacy), s"'$q'")
-        }
-      } finally sLegacy.close()
+      // test-side derivation from scratch: every version that loses the
+      // latest-wins order, plus every version of a tombstoned url
+      val all = snap.segments.map(seg =>
+          spark.read.parquet(IndexStore.docstorePath(root, seg)))
+        .reduce(_ unionByName _)
+      val w = Window.partitionBy("url")
+        .orderBy(col("warc_ts").desc, col("doc_id").desc)
+      val windowDead = (all.withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") > 1)
+          .unionByName(all.filter(col("url").isin(deletedUrls: _*))
+            .withColumn("__rn", lit(0)))
+          .select("doc_id").collect().map(_.getLong(0))).toSet
+      assert(sidecarDead == windowDead,
+        s"sidecar ≠ window: only-sidecar=${(sidecarDead -- windowDead).take(5)} " +
+          s"only-window=${(windowDead -- sidecarDead).take(5)}")
+      assert(s.numDocs == all.count() - windowDead.size)
+      // and no served hit is a dead doc
+      for (q <- Seq("spark", "index", "data")) {
+        val hits = s.search(q, 50).select("doc_id").collect().map(_.getLong(0))
+        assert(hits.nonEmpty && hits.forall(id => !windowDead.contains(id)), s"'$q'")
+      }
       // dead-on-arrival: batch3's OLDER re-crawl of batch1(3).url must be
       // dead while the original (newer) doc stays live
       val u = batch1(3).url
@@ -548,6 +524,47 @@ class IncrementalSpec extends AnyFunSuite with SparkTestBase {
       assert(live.size == 1 && live.head == versions.min,
         s"older re-crawl must lose: versions=$versions dead=$sidecarDead")
     } finally s.close()
+  }
+
+  test("a snapshot without the dead key is refused at read, naming the " +
+    "snapshot file, by every reader") {
+    val root = tmpDir("graft-refuse-")
+    IndexBuilder.buildFull(spark, toDf(batch1.take(50)), dict, root, cfg, "b1")
+    // the snapshot shape written before the superseded-id sidecar
+    val fs = IndexStore.fs(spark, root)
+    val out = fs.create(
+      new org.apache.hadoop.fs.Path(s"$root/snapshots/snap-0.json"), true)
+    try out.write("""{"id":0,"segments":["seg-000000"],"tombstones":[]}"""
+      .getBytes("UTF-8")) finally out.close()
+    val readers: Seq[(String, () => Any)] = Seq(
+      "Searcher" -> (() => new Searcher(spark, root, dict)),
+      "appendSegment" -> (() => IndexBuilder.appendSegment(spark,
+        toDf(batch2.take(5)), dict, root, cfg)),
+      "deleteByPk" -> (() => IndexBuilder.deleteByPk(spark, root,
+        deletedUrls)),
+      "mergeCompact" -> (() => IndexBuilder.mergeCompact(spark, root, dict,
+        cfg)),
+      "IndexCheck" -> (() => IndexCheck.check(spark, root)))
+    readers.foreach { case (name, call) =>
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains("snap-0.json") &&
+        e.getMessage.contains("buildFull"), s"$name: ${e.getMessage}")
+    }
+    // nothing was written past the refusal
+    assert(IndexStore.listSnapshots(spark, root) == Seq(0L))
+  }
+
+  test("a tombstone batch named by the snapshot but missing on disk fails " +
+    "the Searcher open instead of serving its deleted urls again") {
+    val root = tmpDir("graft-losttomb-")
+    IndexBuilder.buildFull(spark, toDf(batch1), dict, root, cfg, "b1")
+    IndexBuilder.deleteByPk(spark, root, deletedUrls)
+    val snap = IndexStore.readLatestSnapshot(spark, root).get
+    val batch = s"$root/tombstones/${snap.tombstones.head}"
+    IndexStore.fs(spark, root)
+      .delete(new org.apache.hadoop.fs.Path(batch), true)
+    val e = intercept[Exception](new Searcher(spark, root, dict).close())
+    assert(e.getMessage.contains(snap.tombstones.head), e.getMessage)
   }
 
   test("stale sidecar ids (rows already dropped by a compaction pass) " +

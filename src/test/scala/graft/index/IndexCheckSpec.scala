@@ -137,4 +137,35 @@ class IndexCheckSpec extends AnyFunSuite with SparkTestBase {
     assert(got.exists(_.contains("stats.doc_count")))
   }
   }
+
+  test("a deletion batch whose .count sidecar disagrees with its rows is " +
+    "detected, for tombstone and superseded-id batches alike") {
+    val root = tmpDir("graft-check-sidecar-")
+    val cfg = IndexBuilder.IndexConfig(numParts = 4, rangeParts = 2)
+    val pages = WebtextGen.df(spark, 34L, 120)
+    IndexBuilder.buildFull(spark, pages, dict, root, cfg)
+    // 10 upserts a day later → a superseded-id batch of 10 rows
+    IndexBuilder.appendSegment(spark, pages.orderBy("url").limit(10)
+      .withColumn("warc_ts", col("warc_ts") + expr("INTERVAL 1 DAY")),
+      dict, root, cfg)
+    IndexBuilder.deleteByPk(spark, root,
+      pages.orderBy(col("url").desc).limit(3).select("url"))
+    val snap = IndexStore.readLatestSnapshot(spark, root).get
+    assert(snap.tombstones.size == 1 && snap.dead.get.size == 1)
+    def problems(): Seq[String] = IndexCheck.check(spark, root).collect()
+      .map(_.getAs[String]("problem")).toSeq
+    assert(problems().isEmpty)
+    val fs = IndexStore.fs(spark, root)
+    def overwrite(rel: String, body: String): Unit = {
+      val out = fs.create(new org.apache.hadoop.fs.Path(s"$root/$rel"), true)
+      try out.write(body.getBytes("UTF-8")) finally out.close()
+    }
+    overwrite(s"tombstones/${snap.tombstones.head}.count", "1")
+    overwrite(s"dead/${snap.dead.get.head}.count", "11")
+    val got = problems()
+    assert(got.exists(_.contains(s"${snap.tombstones.head}.count says 1 " +
+      "but the batch holds 3 rows")), got)
+    assert(got.exists(_.contains(s"${snap.dead.get.head}.count says 11 " +
+      "but the batch holds 10 rows")), got)
+  }
 }

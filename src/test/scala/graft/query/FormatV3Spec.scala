@@ -47,7 +47,7 @@ class FormatV3Spec extends AnyFunSuite with SparkTestBase {
       .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
       .map(_.split('\t')).filter(f => f(3) == "-").take(12)
     assert(IndexStore.readSegmentConfig(spark, rootV3, "seg-000000")
-      .exists(_.formatVersion == 3))
+      .formatVersion == 3)
     // and the blobs themselves really are v3 (not just the config)
     val aBlob = searcherV3.postings.select("blob").head()
       .getAs[Array[Byte]](0)
@@ -113,7 +113,7 @@ class FormatV3Spec extends AnyFunSuite with SparkTestBase {
     // rebuild upgraded to the max supported version present (v3) even
     // though the passed cfg said v2 — merges never downgrade
     assert(IndexStore.readSegmentConfig(spark, root, snap.segments.head)
-      .exists(_.formatVersion == 3))
+      .formatVersion == 3)
     val s2 = new Searcher(spark, root, dict)
     try {
       // ids re-assign under rebuild, so compare (url, score) views
@@ -143,7 +143,7 @@ class FormatV3Spec extends AnyFunSuite with SparkTestBase {
       s"expected blob-level compact, got phases=${rep.phases.map(_._1)}")
     val snap = IndexStore.readLatestSnapshot(spark, root).get
     assert(IndexStore.readSegmentConfig(spark, root, snap.segments.head)
-      .exists(_.formatVersion == 3))
+      .formatVersion == 3)
 
     val twinRoot = tmpDir("graft-v3twin-")
     val vset = victims.toSet
