@@ -272,6 +272,51 @@ case class QubeSetHitsExpr(child: Expression, sets: Seq[Seq[String]])
     copy(child = newChild)
 }
 
+/** `lookup_rows(key STRING) → ARRAY<STRUCT<…>>` — the rows a small
+  * driver-side table holds under `key` (null when it holds none, so an
+  * `explode` drops the input row exactly as an inner join would, and
+  * fans it out once per held row). The table is a plan-embedded
+  * `HashMap` reference object: one O(1) probe per row, and the generated
+  * code is the same whatever the table holds — the per-query term frames
+  * of the serving paths (term → (idf, weight, requirement)) ride here
+  * instead of a broadcast join over a driver-local relation, which
+  * starts a job of its own. */
+case class LookupRowsExpr(child: Expression, valueType: StructType,
+    table: Map[String, Seq[org.apache.spark.sql.Row]])
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(StringType)
+  override def dataType: DataType = ArrayType(valueType, containsNull = false)
+  override def nullable: Boolean = true
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "lookup_rows"
+  // the table can hold 1,024 expansion terms: plans show its size only
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, s"${table.size} keys")
+  @transient private lazy val hashed: java.util.HashMap[
+      org.apache.spark.unsafe.types.UTF8String,
+      org.apache.spark.sql.catalyst.util.ArrayData] = {
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(valueType)
+    val h = new java.util.HashMap[org.apache.spark.unsafe.types.UTF8String,
+      org.apache.spark.sql.catalyst.util.ArrayData]()
+    table.foreach { case (k, rows) =>
+      h.put(org.apache.spark.unsafe.types.UTF8String.fromString(k),
+        new org.apache.spark.sql.catalyst.util.GenericArrayData(
+          rows.map(toRow).toArray[Any]))
+    }
+    h
+  }
+  override protected def nullSafeEval(input: Any): Any = hashed.get(input)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("lookupRows", hashed, "java.util.HashMap")
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.get($c);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+  }
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
 /** `vec_lsh_buckets(v ARRAY<DOUBLE>) → ARRAY<BIGINT>` — one sign-LSH
   * bucket per seed with the seeded hyperplanes as a plan-embedded
   * reference object; same arithmetic as the interpreted
@@ -377,6 +422,9 @@ object graftFunctions {
     col(QubePhraseMatchExpr(expr(c), terms, slop))
   def qube_set_hits(c: Column, sets: Seq[Seq[String]]): Column =
     col(QubeSetHitsExpr(expr(c), sets))
+  def lookup_rows(key: Column, valueType: StructType,
+                  table: Map[String, Seq[org.apache.spark.sql.Row]]): Column =
+    col(LookupRowsExpr(expr(key), valueType, table))
 
   /** Register for `spark.sql` use. */
   def register(spark: SparkSession): Unit = {

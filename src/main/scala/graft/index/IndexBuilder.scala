@@ -1229,15 +1229,22 @@ object IndexBuilder {
   }
 
   /** Advance `snap` for appended segment `newSeg`, maintaining the
-    * superseded-id sidecar (an empty batch is not named — streams of
-    * fresh urls accumulate zero batches). The returned snapshot is NOT
-    * yet written — the caller commits it. */
+    * superseded-id sidecar. An empty batch is deleted again and not
+    * named — streams of fresh urls accumulate zero batches, and no batch
+    * is left on disk that no snapshot names (`expireSnapshots` sweeps
+    * only named ones). The returned snapshot is NOT yet written — the
+    * caller commits it. */
   private[graft] def advanceForAppend(spark: SparkSession, root: String,
                                       snap: IndexStore.Snapshot,
                                       newSeg: String): IndexStore.Snapshot = {
     val name = f"dead-${snap.id + 1}%06d"
     val n = IndexStore.writeDeadIdsDf(spark, root, name,
       supersededByAppend(spark, root, snap.segments, newSeg))
+    if (n == 0L) {
+      val f = IndexStore.fs(spark, root)
+      Seq(name, s"$name.count").foreach(r =>
+        f.delete(new org.apache.hadoop.fs.Path(s"$root/dead/$r"), true))
+    }
     IndexStore.Snapshot(snap.id + 1, snap.segments :+ newSeg, snap.tombstones,
       Some(if (n == 0L) snap.deadBatches else snap.deadBatches :+ name))
   }

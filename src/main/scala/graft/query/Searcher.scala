@@ -3,9 +3,10 @@ package graft.query
 import graft.analysis.{SynonymDict, Tokenizer}
 import graft.functions.graftFunctions._
 import graft.index.IndexStore
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** BM25 top-k query engine over the term-partitioned compressed index
@@ -450,6 +451,21 @@ final class Searcher(
     Searcher.foldPrepared(perTerm.withColumn("contrib", contribBase), keys,
       pivotTerms = pivotTerms)
 
+  /** `rows` fanned out to the rows `table` holds under each row's
+    * `key` value, with those rows' `valueType` fields as new columns; a
+    * key the table lacks drops its rows, as an inner join would. The
+    * per-query term frame as a lookup ([[graft.functions.LookupRowsExpr]])
+    * instead of a broadcast join: a broadcast of a driver-local frame
+    * starts a job of its own, the lookup none, and its generated code
+    * does not change with the query. */
+  private def withTermFrame(rows: DataFrame, valueType: StructType,
+                            table: Map[String, Seq[Row]],
+                            key: String = "term"): DataFrame =
+    rows.select(col("*"), explode(lookup_rows(col(key), valueType, table))
+        .as("__f"))
+      .select(rows.columns.map(col) ++
+        valueType.fieldNames.map(f => col(s"__f.$f").as(f)): _*)
+
   /** The non-scoring filter clause (Q1): narrow-column predicates
     * (lang/url/ts/dl) hit the cache; a text predicate pushes into the
     * parquet scan instead. */
@@ -732,8 +748,9 @@ final class Searcher(
     * `limit` would plan executeTake's incremental scans) — then one
     * `term IN` row-group-pruned posting scan covers all non-phrase subs
     * and one positional scan serves each phrase. Clause weights and
-    * requirement keys travel in the broadcast term frame, so the fold
-    * stays a single aggregation. The `filter`/`among`/dead-doc
+    * requirement keys travel in the per-query term frame — a lookup
+    * ([[withTermFrame]]), not a broadcast join, so it starts no job —
+    * and the fold stays a single aggregation. The `filter`/`among`/dead-doc
     * restrictions run on the per-term rows before the fold, and — with
     * the NOT sets — on the raw positional rows before each phrase
     * alignment, so it shuffles only eligible docs. */
@@ -824,21 +841,20 @@ final class Searcher(
     }
     val nonPhrase =
       if (wRows.isEmpty) Nil
-      else Seq(restrict(postingsForTerms(wRows.map(_._1).distinct.sorted)
-        .select(col("term"), explode(vb_decode(col("blob"))).as("p"))
-        .select(col("term"), col("p.doc_id").as("doc_id"),
-          col("p.tf").as("tf"), col("p.dl").as("dl"))
-        .join(broadcast(wRows.toDF("term", "idf", "weight", "req_clause")),
-          Seq("term"))))
+      else Seq(restrict(withTermFrame(
+        postingsForTerms(wRows.map(_._1).distinct.sorted)
+          .select(col("term"), explode(vb_decode(col("blob"))).as("p"))
+          .select(col("term"), col("p.doc_id").as("doc_id"),
+            col("p.tf").as("tf"), col("p.dl").as("dl")),
+        Searcher.TermFrameType, wRows.groupBy(_._1).map { case (t, rs) =>
+          t -> rs.map { case (_, idf, w, key) => Row(idf, w, key) } })))
     val phraseFrames = r.phrases.zip(phraseSubs).collect {
       case ((ordered, slop, w, q), (dts, _, _)) if dts.nonEmpty =>
         val idfs = dts.map(infoOf)
-        phraseAlignedRows(ordered, dts, idfs, slop, rows =>
-            notFrames.foldLeft(restrict(rows))(_.join(_, Seq("doc_id"), "left_anti")))
-          .join(broadcast(idfs.map(i => (i.term, i.idf)).toDF("term", "idf")),
-            Seq("term"))
-          .withColumn("weight", lit(w))
-          .withColumn("req_clause", lit(keyOf(q)).cast("string"))
+        withTermFrame(phraseAlignedRows(ordered, dts, idfs, slop, rows =>
+            notFrames.foldLeft(restrict(rows))(_.join(_, Seq("doc_id"), "left_anti"))),
+          Searcher.TermFrameType,
+          idfs.map(i => i.term -> Seq(Row(i.idf, w, keyOf(q)))).toMap)
     }
     // unit weights with no index term reached through two subs fold on
     // the pivot shape, gating requirements on its columns; anything else
@@ -1007,19 +1023,26 @@ final class Searcher(
     *    over-prune; a restricted one cannot).
     * Candidates are then rescored exactly via docId-skip decode
     * ([[graft.codec.VarByte.decodeForDocs]]) with the SAME restrictions
-    * applied before the shared term-ordered fold. Falls back to the
-    * exact [[search]] in five cases — pruning is an optimization, never
-    * a correctness risk:
+    * applied before the shared term-ordered fold.
+    *
+    * Job shape (invariant 7), page fetch aside: ONE term_stats probe,
+    * then AND = candidate collect + rescore/page (3 jobs), OR = θ seed +
+    * the candidates' `distinct().take` (2 jobs) + rescore/page (5).
+    * Falls back to the exact [[search]] result in five cases — pruning
+    * is an optimization, never a correctness risk:
     *  1. `minShouldMatch > 0` (msm removes docs from the universe
     *     without a seedable per-doc bound);
     *  2. a single-term query under a restriction (filter / NOT / dead
     *     docs: block pruning has nothing extra to skip);
-    *  3. Σ df of the terms below `wandMinDf` (the 3-4 job pipeline
+    *  3. Σ df of the terms below `wandMinDf` (the 3-5 job pipeline
     *     costs more than the decode it saves);
     *  4. even the rarest term's df above `maxRescore` (the candidate
     *     set is certain to trip the cap);
     *  5. the collected candidate set above `maxRescore` (the
-    *     10^12-scale guard). */
+    *     10^12-scale guard).
+    * Fallback 1 runs [[search]] itself; 2-5 run the exact executor on
+    * the probe already taken (no second probe job), so an exact-path
+    * answer costs the probe plus the page job, as [[search]] does. */
   def searchWand(query: String, k: Int, start: Int = 0,
                  conjunctive: Boolean = true,
                  filter: Option[Column] = None,
@@ -1067,20 +1090,28 @@ final class Searcher(
     }
     val (k1c, bc, ac) = (k1, b, avgdl)
     val idfMap = idfs.map(i => i.term -> i.idf).toMap
+    // the exact fallbacks run the executor on THIS probe: the present
+    // terms with the requirement ids and count [[score]] gives them, the
+    // present NOT terms, their stats as `known` — no second probe job
+    def exact(): DataFrame = rankedPage(execute(Resolved(
+        terms = idfs.zipWithIndex.map { case (i, q) =>
+          (i.term, 1.0, if (conjunctive) q else -1) },
+        notTerms = presentNot,
+        reqCount = if (conjunctive) idfs.size else 0,
+        known = all.map(i => i.term -> i).toMap), filter), k, start)
 
     if (idfs.size == 1 && !isRestricted) {
       val i = idfs.head
       return fetchPage(singleTermTopK(i.term, i.idf, n).offset(start).limit(k))
     }
 
-    // cost-based path choice: the multi-term WAND pipeline spends 3-4
-    // Spark jobs (seed θ, candidates, rescore) to AVOID decode work —
+    // cost-based path choice: the multi-term WAND pipeline spends 2-4
+    // Spark jobs (θ seed, candidates, rescore) to AVOID decode work —
     // worth it only when the posting volume dominates the fixed per-job
     // cost. Below the threshold (and for restricted single-term queries,
     // where block pruning has nothing extra to skip) the exact path is
     // strictly faster.
-    if (idfs.size == 1 || idfs.map(_.df).sum < wandMinDf)
-      return search(query, k, start, conjunctive, filter, notQuery)
+    if (idfs.size == 1 || idfs.map(_.df).sum < wandMinDf) return exact()
 
     // head-only pre-gate (pure economics — the exact fallback is
     // always correct): when even the RAREST term's df exceeds the
@@ -1093,8 +1124,7 @@ final class Searcher(
     // candidate rows, then fell back). Genuinely mixed queries (any
     // term with df ≤ maxRescore) keep the full WAND pipeline — that
     // asymmetry is WAND's actual win.
-    if (idfs.map(_.df).min > maxRescore)
-      return search(query, k, start, conjunctive, filter, notQuery)
+    if (idfs.map(_.df).min > maxRescore) return exact()
 
     // per-term upper bounds straight from the cached term_stats lookup —
     // no extra job, no posting-file touch
@@ -1105,10 +1135,12 @@ final class Searcher(
 
     val candidates: Array[Long] =
       if (conjunctive) {
-        // posting-list intersection driven by the rarest term
+        // posting-list intersection driven by the rarest term; ONE
+        // collect job (a `take` plans executeTake's incremental scans) —
+        // the head-only pre-gate above already bounds it by maxRescore
         val rarest = idfs.minBy(_.df).term
         termBlobs(rarest).flatMap(b => graft.codec.VarByte.decode(b)._1)
-          .take(maxRescore + 1)
+          .collect()
       } else {
         val best = ubs.maxBy(_._2)._1
         val theta =
@@ -1121,11 +1153,12 @@ final class Searcher(
             // (contribBase, the fold's own arithmetic — a θ even one ulp
             // above the true restricted kth could over-prune), restricted
             // to the eligible docset, kth best
-            val seedRows = postingsForTerms(Seq(best))
-              .select(explode(vb_decode(col("blob"))).as("p"))
-              .select(col("p.doc_id").as("doc_id"),
-                col("p.tf").as("tf"), col("p.dl").as("dl"),
-                lit(idfMap(best)).as("idf"))
+            val seedRows = withTermFrame(postingsForTerms(Seq(best))
+                .select(col("term"), explode(vb_decode(col("blob"))).as("p"))
+                .select(col("term"), col("p.doc_id").as("doc_id"),
+                  col("p.tf").as("tf"), col("p.dl").as("dl")),
+              Searcher.TermFrameType,
+              Map(best -> Seq(Row(idfMap(best), 1.0, null))))
             val seed = restrict(seedRows)
               .select(col("doc_id"), contribBase.as("score"))
               .orderBy(col("score").desc, col("doc_id").asc).limit(n)
@@ -1142,19 +1175,18 @@ final class Searcher(
           }
           .distinct().take(maxRescore + 1)
       }
-    if (candidates.length > maxRescore)
-      return search(query, k, start, conjunctive, filter, notQuery)
+    if (candidates.length > maxRescore) return exact()
 
     java.util.Arrays.sort(candidates)
     val bcCand = spark.sparkContext.broadcast(candidates)
-    val idfDf = idfs.map(i => (i.term, i.idf)).toDF("term", "idf")
+    // each term's idf rides the decode closure (no term-frame join)
     val rescored = postingsForTerms(idfs.map(_.term))
       .select("term", "blob").as[(String, Array[Byte])]
       .flatMap { case (t, blob) =>
         val (ds, tfs, dls) = graft.codec.VarByte.decodeForDocs(blob, bcCand.value)
-        ds.indices.iterator.map(i => (t, ds(i), tfs(i), dls(i)))
-      }.toDF("term", "doc_id", "tf", "dl")
-      .join(broadcast(idfDf), Seq("term"))
+        val idf = idfMap(t)
+        ds.indices.iterator.map(i => (t, ds(i), tfs(i), dls(i), idf))
+      }.toDF("term", "doc_id", "tf", "dl", "idf")
     val scored = foldScores(restrict(rescored),
       pivotTerms = Some(idfs.map(_.term)))
     val page =
@@ -1176,7 +1208,12 @@ final class Searcher(
     * each query; `roundScoresTo` rounds BEFORE ranking (the same
     * oracle-parity knob as [[graft.index.FieldedIndex.FieldedSearcher
     * .searchMulti]]). Filter/NOT/msm clauses stay on the single-query
-    * surface. */
+    * surface.
+    *
+    * Job shape (invariant 7): the probe is the only job at call time;
+    * the caller's action on the returned plan runs the scan, fold and
+    * rank. The (query_id, idf) term frame and the per-query term count
+    * are lookups ([[withTermFrame]]), so no broadcast job runs first. */
   def searchBatch(queries: Map[String, String], k: Int,
                   conjunctive: Boolean = true,
                   roundScoresTo: Option[Int] = None): DataFrame = {
@@ -1195,16 +1232,16 @@ final class Searcher(
       info <- infos.get(t).toSeq
     } yield (qid, t, info.idf)
     if (qTerm.isEmpty) return emptyOut
-    val qtDf = qTerm.toDF("query_id", "term", "idf")
-    val nTermsDf = analyzed.toSeq
-      .map { case (qid, ts) => (qid, ts.size) }.toDF("query_id", "__nt")
-    // one scan over the union of terms; the broadcast (query_id, term,
-    // idf) join fans each posting row to every query using its term
-    val decoded = postingsForTerms(qTerm.map(_._2).distinct)
-      .select(col("term"), explode(vb_decode(col("blob"))).as("p"))
-      .select(col("term"), col("p.doc_id").as("doc_id"),
-        col("p.tf").as("tf"), col("p.dl").as("dl"))
-      .join(broadcast(qtDf), Seq("term"))
+    // one scan over the union of terms; the (query_id, idf) term frame
+    // fans each posting row to every query using its term
+    val decoded = withTermFrame(postingsForTerms(qTerm.map(_._2).distinct)
+        .select(col("term"), explode(vb_decode(col("blob"))).as("p"))
+        .select(col("term"), col("p.doc_id").as("doc_id"),
+          col("p.tf").as("tf"), col("p.dl").as("dl")),
+      StructType(Seq(StructField("query_id", StringType, nullable = false),
+        StructField("idf", DoubleType, nullable = false))),
+      qTerm.groupBy(_._2).map { case (t, qs) =>
+        t -> qs.map { case (qid, _, idf) => Row(qid, idf) } })
     val scored = foldScores(dropDead(decoded),
         keys = Seq("query_id", "doc_id"),
         // pivot over the UNION of the batch's terms: within a
@@ -1214,7 +1251,10 @@ final class Searcher(
       .withColumnRenamed("score", "score0")
     val must =
       if (conjunctive)
-        scored.join(broadcast(nTermsDf), Seq("query_id"))
+        withTermFrame(scored,
+          StructType(Seq(StructField("__nt", IntegerType, nullable = false))),
+          analyzed.map { case (qid, ts) => qid -> Seq(Row(ts.size)) },
+          key = "query_id")
           .filter(col("matched") === col("__nt"))
       else scored
     val ranked = roundScoresTo.fold(must.withColumn("score", col("score0")))(
@@ -1591,14 +1631,23 @@ final class Searcher(
                filter: Option[Column] = None): DataFrame =
     score(query, conjunctive, filter).select("doc_id")
 
-  /** Stored-field fetch by docID (S8): a `doc_id IN (...)` literal
-    * against the docstore parquet. doc_ids are assigned in url sort
-    * order, so docstore row groups carry tight doc_id ranges and the
-    * scan prunes to ~|ids| row groups — the text column is read for the
-    * page, never the corpus. */
+  /** Stored-field fetch by docID (S8): a `doc_id IN (...)` set against
+    * the docstore parquet. doc_ids are assigned in url sort order, so
+    * docstore row groups carry tight doc_id ranges and the scan prunes
+    * to ~|ids| row groups — the text column is read for the page, never
+    * the corpus. The set is an `InSet`, whose ids ride as a reference
+    * object, not `isin`: over ≤ 10 longs that stays an `In` of numeric
+    * literals, which codegen inlines, so each new page would compile new
+    * classes. It is always a `HashSet`, because the generated code casts
+    * the reference to its runtime class (`toSet` gives `Set1`..`Set4`
+    * below 5 ids, one code variant each). Both push down to parquet as
+    * the same `sources.In`. */
   def doc(docIds: Seq[Long]): DataFrame =
     if (docIds.isEmpty) docstore.limit(0)
-    else docstore.filter(col("doc_id").isin(docIds: _*))
+    else docstore.filter(org.apache.spark.sql.graft.Bridge.column(
+      org.apache.spark.sql.catalyst.expressions.InSet(
+        org.apache.spark.sql.graft.Bridge.expression(col("doc_id")),
+        scala.collection.immutable.HashSet.from[Any](docIds.map(Long.box)))))
 
   // ---- index-integrated facets (reference facetSearch,
   //      Searcher.java:1086-1283, over build-time facet fields) --------
@@ -2049,6 +2098,13 @@ object Searcher {
       rows: Option[DataFrame], reqCount: Int, notFrames: Seq[DataFrame],
       matchNone: Boolean,
       pivot: Option[(Seq[String], Seq[Seq[String]])] = None)
+
+  /** The executor's per-query term frame row: a sub-term's idf, clause
+    * weight and requirement key (null for a pure SHOULD sub). */
+  private[query] val TermFrameType: StructType = StructType(Seq(
+    StructField("idf", DoubleType, nullable = false),
+    StructField("weight", DoubleType, nullable = false),
+    StructField("req_clause", StringType)))
 
   private[graft] val matchNoDocs: ParsedFrames =
     ParsedFrames(None, 0, Nil, matchNone = true)

@@ -19,6 +19,15 @@ trait SparkTestBase extends BeforeAndAfterAll { self: Suite =>
     spark.sparkContext.setLogLevel("ERROR")
   }
 
+  /** Every directory [[tmpDir]] made, deleted after the suite. */
+  private val tmpDirs =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  override protected def afterAll(): Unit =
+    try super.afterAll()
+    finally tmpDirs.forEach(p =>
+      org.apache.commons.io.FileUtils.deleteQuietly(p.toFile))
+
   def resourceLines(name: String): Seq[String] = {
     val in = getClass.getResourceAsStream(name)
     require(in != null, s"missing test resource $name")
@@ -26,6 +35,9 @@ trait SparkTestBase extends BeforeAndAfterAll { self: Suite =>
     finally in.close()
   }
 
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  def tmpDir(prefix: String): String = {
+    val p = java.nio.file.Files.createTempDirectory(prefix)
+    tmpDirs.add(p)
+    p.toString
+  }
 }

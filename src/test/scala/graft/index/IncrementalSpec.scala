@@ -567,6 +567,28 @@ class IncrementalSpec extends AnyFunSuite with SparkTestBase {
     assert(e.getMessage.contains(snap.tombstones.head), e.getMessage)
   }
 
+  test("an append of fresh urls only leaves no dead batch on disk that " +
+    "the latest snapshot does not name") {
+    val root = tmpDir("graft-deadorphan-")
+    val c = IndexBuilder.IndexConfig(numParts = 4, rangeParts = 2)
+    IndexBuilder.buildFull(spark, WebtextGen.df(spark, 61L, 80), dict, root, c)
+    val fresh = WebtextGen.df(spark, 62L, 40)
+      .withColumn("url", org.apache.spark.sql.functions
+        .concat(lit("fresh-"), col("url")))
+    IndexBuilder.appendSegment(spark, fresh, dict, root, c)
+    val snap = IndexStore.readLatestSnapshot(spark, root).get
+    assert(snap.deadBatches.isEmpty, snap.deadBatches)
+    val named = snap.deadBatches.flatMap(n => Seq(n, s"$n.count")).toSet
+    val deadDir = new org.apache.hadoop.fs.Path(s"$root/dead")
+    val f = IndexStore.fs(spark, root)
+    val onDisk =
+      if (!f.exists(deadDir)) Set.empty[String]
+      else f.listStatus(deadDir).map(_.getPath.getName)
+        .filterNot(n => n.startsWith(".") || n.startsWith("_")).toSet
+    assert((onDisk -- named).isEmpty,
+      s"dead/ entries no snapshot names: ${(onDisk -- named).toSeq.sorted}")
+  }
+
   test("stale sidecar ids (rows already dropped by a compaction pass) " +
     "do not inflate deadDocCount: numDocs stays exact") {
     val root = tmpDir("graft-deadstale-")

@@ -11,9 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Per-query latency is job-count-bound in local mode (invariant 7),
   * so the Spark jobs each warm serving call runs are pinned here. Every
   * call runs once to warm the searcher (persisted frames, dead-doc
-  * count, document LRU) and is counted on its second run. The pinned counts are the ones measured before the exact paths
-  * were folded into one executor, and are upper bounds: a change may
-  * lower them, never raise them. */
+  * count, document LRU) and is counted on its second run. The pins are
+  * the measured counts and upper bounds: a change may lower them, never
+  * raise them. */
 class JobCountSpec extends AnyFunSuite with SparkTestBase {
 
   private lazy val dict = SynonymDict.parse(resourceLines("/synonyms.txt"))
@@ -51,29 +51,57 @@ class JobCountSpec extends AnyFunSuite with SparkTestBase {
   test("warm serving calls run no more Spark jobs than pinned") {
     val K = 10
     val en = Some(col("lang") === "en")
-    // probe + broadcast term frame + page collect, plus one broadcast per
-    // NOT set / filter side; an expansion probe is a limited collect
-    // (executeTake: 2 jobs here)
+    // exact paths: ONE probe + the page collect (warm pages fetch no
+    // stored fields), plus one broadcast per NOT set / filter side; an
+    // expansion probe is a limited collect (executeTake: 2 jobs here).
+    // Per-query term frames are lookups and start no job. searchWand's
+    // exact fallbacks (below wandMinDf, restricted single term) reuse
+    // its probe, so they cost what `search` costs; its WAND pipeline is
+    // probe + candidates + rescore/page (AND) and probe + θ seed +
+    // the candidates' distinct().take (2) + rescore/page (OR)
     val pinned = Seq(
-      "search AND" -> (() => searcher.search("spark index", K), 3),
+      "search AND" -> (() => searcher.search("spark index", K), 2),
       "search OR" -> (() => searcher.search("spark index", K,
-        conjunctive = false), 3),
+        conjunctive = false), 2),
       "search NOT" -> (() => searcher.search("spark index", K,
-        notQuery = Some("fast")), 4),
+        notQuery = Some("fast")), 3),
       "search filter" -> (() => searcher.search("spark index", K,
-        filter = en), 4),
+        filter = en), 3),
       "searchBoolean" -> (() => searcher.searchBoolean("spark",
-        "index fast", K), 3),
-      "searchPrefix" -> (() => searcher.searchPrefix("IND", K), 4),
-      "searchPhrase" -> (() => searcher.searchPhrase("spark index", K), 3),
+        "index fast", K), 2),
+      "searchPrefix" -> (() => searcher.searchPrefix("IND", K), 3),
+      "searchPhrase" -> (() => searcher.searchPhrase("spark index", K), 2),
       "searchQuery" -> (() => searcher.searchQuery("+spark index -fast", K),
-        5))
+        3),
+      "searchWand term" -> (() => searcher.searchWand("spark", K), 2),
+      "searchWand AND exact" -> (() => searcher.searchWand("spark index", K),
+        2),
+      "searchWand OR exact" -> (() => searcher.searchWand("spark index", K,
+        conjunctive = false), 2),
+      "searchWand NOT" -> (() => searcher.searchWand("spark index", K,
+        notQuery = Some("fast")), 3),
+      "searchWand filter" -> (() => searcher.searchWand("spark index", K,
+        filter = en), 3),
+      "searchWand AND pipeline" -> (() => searcher.searchWand("spark index",
+        K, wandMinDf = 0L), 3),
+      "searchWand OR pipeline" -> (() => searcher.searchWand("spark index",
+        K, conjunctive = false, wandMinDf = 0L), 5))
     val over = pinned.flatMap { case (name, (call, max)) =>
       val n = warmJobs(call().collect())
       info(s"$name: $n jobs (pinned $max)")
       if (n > max) Some(s"$name ran $n jobs, pinned at most $max") else None
     }
     assert(over.isEmpty, over.mkString("; "))
+  }
+
+  test("a document LRU miss fetches the page in exactly one job") {
+    val ids = searcher.search("spark index", 20, conjunctive = false)
+      .collect().map(_.getLong(0)).toSeq
+    assert(ids.size >= 4, s"degenerate corpus: ${ids.size} matches")
+    val (warm, cold) = ids.splitAt(ids.size / 2)
+    searcher.documentCache.clear()
+    searcher.docCached(warm)
+    assert(jobsOf(searcher.docCached(cold)) == 1)
   }
 
   test("a literal-only query probes term_stats in exactly one job") {

@@ -27,4 +27,30 @@ class PageFetchSpec extends AnyFunSuite with SparkTestBase {
       assert(page.forall(_.getAs[String]("url") != null))
     } finally s.close()
   }
+
+  test("a page fetch of new ids compiles no new code and still prunes " +
+    "row groups by the doc_id set") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val dir = tmpDir("graft-codestable-")
+    IndexBuilder.buildFull(spark, WebtextGen.df(spark, 7L, 200),
+      SynonymDict.empty, dir,
+      IndexBuilder.IndexConfig(numParts = 4, rangeParts = 2), "codestable")
+    val s = new Searcher(spark, dir)
+    try {
+      assert(s.doc(Seq(3L, 17L, 40L)).collect().length == 3) // warm
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      // other ids, and as many as another page's misses may number
+      val ids = Seq(5L, 23L, 61L, 90L)
+      val fetched = s.doc(ids)
+      assert(fetched.collect().map(_.getLong(0)).sorted.toSeq == ids)
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      assert(compiled == 0, s"$compiled classes compiled for a new id set")
+      val scan = fetched.queryExecution.executedPlan.collectFirst {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+      }.getOrElse(fail("no docstore scan in the page-fetch plan"))
+      assert(scan.dataFilters.nonEmpty &&
+        scan.metadata("PushedFilters").contains("In(doc_id"),
+        scan.metadata("PushedFilters"))
+    } finally s.close()
+  }
 }
