@@ -769,7 +769,8 @@ object IndexBuilder {
       .parquet(IndexStore.docstorePath(root, seg))
     lap("analyze_docstore")
 
-    val docstore = spark.read.parquet(IndexStore.docstorePath(root, seg))
+    val docstore = IndexStore.read(spark, IndexStore.Table.Docstore,
+      IndexStore.docstorePath(root, seg))
     // the docstore write above has completed, so its observed metrics
     // are available now; captured once — the stats row below reuses it
     val docObsRow = docObs.get
@@ -849,7 +850,8 @@ object IndexBuilder {
     // single posting partition holds an entire head term.
     val headSet: Set[String] =
       if (!sampledStats)
-        spark.read.parquet(IndexStore.termStatsPath(root, seg))
+        IndexStore.read(spark, IndexStore.Table.TermStats,
+            IndexStore.termStatsPath(root, seg))
           .filter(col("df") >= cfg.saltDf)
           .orderBy(col("df").desc).limit(cfg.maxSaltedTerms)
           .select("term").collect().map(_.getString(0)).toSet
@@ -1129,7 +1131,6 @@ object IndexBuilder {
     } else {
       // exact-stats builds wrote term_stats from the tokenize agg; the
       // manifest is the only read-back (no sumTf walk added here)
-      // (readPostingsOrEmpty: an empty corpus writes a footer-less dir)
       val written = IndexStore.readPostingsOrEmpty(spark, root, seg)
         .withColumn("bytes", length(col("blob")).cast("long"))
       val newParts =
@@ -1171,18 +1172,14 @@ object IndexBuilder {
   }
 
   /** Next APPEND doc_id base for a root: max `id_ceiling` across the
-    * snapshot's segments (stats rows — no docstore scan). NOT Σ
-    * doc_count: a compacted segment keeps original ids with gaps, so its
-    * ceiling exceeds its live count. */
+    * snapshot's segments (ONE read of their stats rows — no docstore
+    * scan, one job however many segments). NOT Σ doc_count: a compacted
+    * segment keeps original ids with gaps, so its ceiling exceeds its
+    * live count. */
   def nextAppendBase(spark: SparkSession, root: String,
                      snap: IndexStore.Snapshot): Long =
-    snap.segments.map { s =>
-      spark.read.parquet(IndexStore.statsPath(root, s))
-        .agg(max("id_ceiling")).head() match {
-        case r if r.isNullAt(0) => 0L
-        case r => r.getLong(0)
-      }
-    }.max
+    IndexStore.readSegmentStats(spark, root, snap.segments).values
+      .foldLeft(0L)((m, st) => math.max(m, st.idCeiling))
 
   /** THE latest-wins order per url: newest `warc_ts` first, ties to the
     * later segment (higher doc_id). Every superseded-id batch
@@ -1203,7 +1200,8 @@ object IndexBuilder {
                                  oldSegments: Seq[String],
                                  newSeg: String): DataFrame = {
     val cols = Seq("doc_id", "url", "warc_ts")
-    val newDocs = spark.read.parquet(IndexStore.docstorePath(root, newSeg))
+    val newDocs = IndexStore.read(spark, IndexStore.Table.Docstore,
+        IndexStore.docstorePath(root, newSeg))
       .select(cols.map(col): _*)
     // [minUrl, maxUrl] of the batch, pushed into every old-docstore scan:
     // docstores are written in url sort order, so parquet row-group url
@@ -1216,11 +1214,10 @@ object IndexBuilder {
     if (r.isNullAt(0)) // empty batch: nothing can be superseded
       return spark.range(0).select(col("id").as("doc_id"))
     val (loUrl, hiUrl) = (r.getString(0), r.getString(1))
-    val oldDocs = oldSegments.map(s =>
-        spark.read.parquet(IndexStore.docstorePath(root, s))
-          .select(cols.map(col): _*)
-          .where(col("url").between(loUrl, hiUrl)))
-      .reduce(_ unionByName _)
+    val oldDocs = IndexStore.read(spark, IndexStore.Table.Docstore,
+        oldSegments.map(IndexStore.docstorePath(root, _)): _*)
+      .select(cols.map(col): _*)
+      .where(col("url").between(loUrl, hiUrl))
     val matched = oldDocs
       .join(newDocs.select("url").distinct(), Seq("url"), "left_semi")
     matched.unionByName(newDocs.select(matched.columns.map(col): _*))
@@ -1284,7 +1281,8 @@ object IndexBuilder {
       .getOrElse(sys.error(s"no snapshot at $root"))
     val src = jsonByUrl.toDF("url", "json")
     snap.segments.foreach { seg =>
-      val ds = spark.read.parquet(IndexStore.docstorePath(root, seg))
+      val ds = IndexStore.read(spark, IndexStore.Table.Docstore,
+          IndexStore.docstorePath(root, seg))
         .select("doc_id", "url")
       graft.pipeline.JsonFields
         .flatten(ds.join(src, Seq("url")).select("doc_id", "json"),
@@ -1299,7 +1297,15 @@ object IndexBuilder {
     * batch is a DataFrame and is written as parquet — deletions never
     * round-trip through driver memory, so a purge of 10^10 urls is just
     * another distributed write (the reference deletes in batches through
-    * the index, Indexer.java:891-964). */
+    * the index, Indexer.java:891-964).
+    *
+    * A tombstone applies to EVERY doc with its url, including versions
+    * appended after the delete: deleting a url and then appending it
+    * again, even with a newer `warc_ts`, leaves it invisible for good
+    * (0 live versions before and after [[mergeCompact]], which drops the
+    * re-appended version too). Lucene's `deleteDocuments` removes only
+    * the docs that exist at the time (Indexer.java:915-917); matching it
+    * needs the tombstone to record an id ceiling, a layout change. */
   def deleteByPk(spark: SparkSession, root: String, urls: DataFrame): Unit = {
     val snap = IndexStore.readLatestSnapshot(spark, root)
       .getOrElse(sys.error(s"no snapshot at $root"))
@@ -1349,8 +1355,8 @@ object IndexBuilder {
       formatVersion = (cfg.formatVersion +: stored.map(_.formatVersion)
         .filter(graft.codec.VarByte.SupportedVersions.contains)).max,
       buildFacets = false, facetSpecs = Nil)
-    val all = snap.segments.map(s =>
-      spark.read.parquet(IndexStore.docstorePath(root, s))).reduce(_ unionByName _)
+    val all = IndexStore.read(spark, IndexStore.Table.Docstore,
+      snap.segments.map(IndexStore.docstorePath(root, _)): _*)
     val live =
       IndexStore.readBatches(spark, root, "tombstones", snap.tombstones) match {
         case None => all
@@ -1387,7 +1393,8 @@ object IndexBuilder {
         .reduce(_ unionByName _).withColumnRenamed("doc_id", "__old_id")
       val dataCols = old.columns.filter(_ != "__old_id").toSeq
       val winnerIds = winners.select(col("doc_id").as("__old_id"), col("url"))
-      val newIds = spark.read.parquet(IndexStore.docstorePath(root, seg))
+      val newIds = IndexStore.read(spark, IndexStore.Table.Docstore,
+          IndexStore.docstorePath(root, seg))
         .select("doc_id", "url")
       old.join(winnerIds, Seq("__old_id"))
         .join(newIds, Seq("url"))
@@ -1474,15 +1481,12 @@ object IndexBuilder {
     var ok = true
     val dead0 = globalDeadIds(spark, root, snap, maxBroadcastDeadIds)
     if (dead0.isEmpty) ok = false // past the broadcast gate ⇒ rebuild
-    // segment sizes read ONCE, then maintained from each pass's
-    // BuildReport — re-reading per pass would issue O(segments × passes)
-    // tiny driver jobs just for tier selection
+    // segment sizes read ONCE (one read of every stats row), then
+    // maintained from each pass's BuildReport — re-reading per pass would
+    // issue O(passes) tiny driver jobs just for tier selection
     val sizes = scala.collection.mutable.Map.empty[String, Long]
-    if (ok) snap.segments.foreach { s =>
-      val c = spark.read.parquet(IndexStore.statsPath(root, s))
-        .agg(sum("doc_count")).head()
-      sizes(s) = if (c.isNullAt(0)) 0L else c.getLong(0)
-    }
+    if (ok) IndexStore.readSegmentStats(spark, root, snap.segments)
+      .foreach { case (s, st) => sizes(s) = st.docCount }
     while (ok && snap.segments.size > tierFanin) {
       val tier = snap.segments.map(s => s -> sizes.getOrElse(s, 0L))
         .sortBy { case (s, n) => (n, s) }
@@ -1553,9 +1557,8 @@ object IndexBuilder {
           val side =
             if (n <= 2000000L) broadcast(tombs)
             else tombs
-          snap.segments.map(s =>
-              spark.read.parquet(IndexStore.docstorePath(root, s)))
-            .reduce(_ unionByName _)
+          IndexStore.read(spark, IndexStore.Table.Docstore,
+              snap.segments.map(IndexStore.docstorePath(root, _)): _*)
             .join(side, Seq("url"), "left_semi").select("doc_id")
       }
     val deadDf = superseded.union(tombstoned).distinct()
@@ -1600,9 +1603,8 @@ object IndexBuilder {
     // rebuild [[merge]].
     val segVer = sc0.formatVersion
 
-    val targetDocs = targets.map(s =>
-        spark.read.parquet(IndexStore.docstorePath(root, s)))
-      .reduce(_ unionByName _)
+    val targetDocs = IndexStore.read(spark, IndexStore.Table.Docstore,
+      targets.map(IndexStore.docstorePath(root, _)): _*)
 
     // the dead set is GLOBAL (every superseded-id batch + every
     // tombstoned url over all segments): a subset compact must drop a target row
@@ -1725,9 +1727,8 @@ object IndexBuilder {
     // written schema is the pinned postings layout, which carries no ttf)
     val termStats =
       if (deadCount == 0)
-        targets.map(s =>
-            spark.read.parquet(IndexStore.termStatsPath(root, s)))
-          .reduce(_ unionByName _)
+        IndexStore.read(spark, IndexStore.Table.TermStats,
+            targets.map(IndexStore.termStatsPath(root, _)): _*)
           .groupBy("term").agg(sum("df").as("df"), sum("ttf").as("ttf"),
             max("max_tf").as("max_tf"), min("min_dl").as("min_dl"))
       else written

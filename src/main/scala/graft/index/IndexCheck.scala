@@ -44,6 +44,7 @@ object IndexCheck {
     val snap = IndexStore.readLatestSnapshot(spark, root)
       .getOrElse(sys.error(s"no snapshot at $root"))
 
+    val segStats = IndexStore.readSegmentStats(spark, root, snap.segments)
     val perSegment = snap.segments.map { seg =>
       val cfg = IndexStore.readSegmentConfig(spark, root, seg)
       val postings = IndexStore.readPostingsOrEmpty(spark, root, seg)
@@ -136,7 +137,8 @@ object IndexCheck {
       // 3a: term_stats.df vs Σ df_local
       val fromBlobs = postings.toDF()
         .groupBy("term").agg(sum("df_local").as("df_blobs"))
-      val stDf = spark.read.parquet(IndexStore.termStatsPath(root, seg))
+      val stDf = IndexStore.read(spark, IndexStore.Table.TermStats,
+          IndexStore.termStatsPath(root, seg))
         .select(col("term"), col("df"))
       val dfIssues = stDf.join(fromBlobs, Seq("term"), "full_outer")
         .filter(not(col("df") <=> col("df_blobs")))
@@ -151,26 +153,25 @@ object IndexCheck {
       // see identical partitioning (invariant 1); a boundary re-sample
       // between them would overlap per-partition id ranges, which no
       // other audit catches (row counts and stats still agree)
-      val ds = spark.read.parquet(IndexStore.docstorePath(root, seg))
-      val stats = spark.read.parquet(IndexStore.statsPath(root, seg))
+      val ds = IndexStore.read(spark, IndexStore.Table.Docstore,
+        IndexStore.docstorePath(root, seg))
       val agg = ds.agg(count(lit(1)), max("doc_id"),
         countDistinct("doc_id")).head()
       val (nDocs, maxId) = (agg.getLong(0),
         if (agg.isNullAt(1)) -1L else agg.getLong(1))
       val nDistinct = agg.getLong(2)
-      val srow = stats.agg(sum("doc_count"), max("id_ceiling")).head()
+      val st = segStats(seg)
       val statIssues = Seq.newBuilder[Issue]
-      val statCount = if (srow.isNullAt(0)) 0L else srow.getLong(0)
-      if (statCount != nDocs)
+      if (st.docCount != nDocs)
         statIssues += Issue(seg, -1, "",
-          s"stats.doc_count=$statCount but docstore has $nDocs rows")
+          s"stats.doc_count=${st.docCount} but docstore has $nDocs rows")
       if (nDistinct != nDocs)
         statIssues += Issue(seg, -1, "",
           s"docstore holds $nDocs rows but only $nDistinct distinct " +
             "doc_ids (duplicate assignment)")
-      if (!srow.isNullAt(1) && srow.getLong(1) <= maxId)
+      if (st.idCeiling <= maxId)
         statIssues += Issue(seg, -1, "",
-          s"id_ceiling=${srow.getLong(1)} <= max doc_id $maxId")
+          s"id_ceiling=${st.idCeiling} <= max doc_id $maxId")
 
       // 3c: orphan posting doc_ids (ghost hits) — one distributed
       // anti-join of the exploded posting ids against the docstore.
@@ -211,7 +212,8 @@ object IndexCheck {
     val batches =
       snap.tombstones.map("tombstones" -> _) ++ snap.deadBatches.map("dead" -> _)
     val rows: Map[String, Long] = batches.map { case (d, n) =>
-        spark.read.parquet(s"$root/$d/$n").select(lit(s"$d/$n").as("batch"))
+        IndexStore.read(spark, IndexStore.batchTable(d), s"$root/$d/$n")
+          .select(lit(s"$d/$n").as("batch"))
       }.reduceOption(_ unionByName _)
       .fold(Map.empty[String, Long])(
         _.groupBy("batch").count().as[(String, Long)].collect().toMap)

@@ -75,9 +75,10 @@ final class Searcher(
 
   /** Relations carried over from the predecessor (reopen path): a
     * segment directory is immutable once its snapshot commits, so a
-    * segment present in BOTH snapshots can reuse the old searcher's
-    * relations — including their driver-side file indexes — making a
-    * refresh O(new segments) instead of O(all segments). */
+    * segment present in BOTH snapshots reuses the old searcher's
+    * relations (with their driver-side file indexes) and stats row. A
+    * refresh then opens only the new segments: one job reads their stats
+    * rows, and the pinned-schema relations run none. */
   private val reusedTables: Map[String, Searcher.SegTables] =
     reuseFrom match {
       case Some(old) if !old.isClosed && old.root == root =>
@@ -89,29 +90,31 @@ final class Searcher(
   /** How many segments [[reopen]] carried over (ops/test visibility). */
   val reusedSegmentCount: Int = reusedTables.size
 
-  /** All per-segment relations, opened IN PARALLEL: each
-    * `spark.read.parquet` pays a driver-side file listing + footer
-    * read, and doing 5 tables × N segments serially made the cold ctor
-    * the dominant open cost on churned roots (~5-7 s at 20 segments —
-    * larger than the liveDocs derivation it precedes). A bounded pool
-    * overlaps the listings; relation creation is driver-only and
-    * thread-safe. Reused segments skip the open entirely. */
+  /** All per-segment relations, opened IN PARALLEL. Each is a
+    * pinned-schema read ([[IndexStore.read]]): no Spark job, but a
+    * driver-side file listing, and the config read. Serially that is
+    * ~16 ms a segment; a bounded pool halved a 20-segment open (median
+    * 318 → 158 ms, local[4]). The stats rows of every segment opened
+    * here come from ONE read (one job). Relation creation is driver-only
+    * and thread-safe. Reused segments skip the open entirely. */
   private val segTables: Map[String, Searcher.SegTables] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
     val toOpen = snapshot.segments.filterNot(reusedTables.contains)
     if (toOpen.isEmpty) reusedTables
     else {
+      val stats = IndexStore.readSegmentStats(spark, root, toOpen)
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(math.max(toOpen.size, 1), 8))
+        math.min(toOpen.size, 8))
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
       try {
         val futs = toOpen.map(s => Future(s -> Searcher.SegTables(
-          spark.read.parquet(IndexStore.docstorePath(root, s)),
+          IndexStore.read(spark, IndexStore.Table.Docstore,
+            IndexStore.docstorePath(root, s)),
           IndexStore.readPostingsOrEmpty(spark, root, s),
-          spark.read.parquet(IndexStore.termStatsPath(root, s)),
-          spark.read.parquet(IndexStore.statsPath(root, s)),
-          IndexStore.readSegmentConfig(spark, root, s))))
+          IndexStore.read(spark, IndexStore.Table.TermStats,
+            IndexStore.termStatsPath(root, s)),
+          stats(s), IndexStore.readSegmentConfig(spark, root, s))))
         Await.result(Future.sequence(futs), 10.minutes).toMap ++ reusedTables
       } finally pool.shutdown()
     }
@@ -161,8 +164,7 @@ final class Searcher(
   /** One postings relation per segment, created ONCE (in [[segTables]]):
     * re-reading per query would re-list the partition directories on
     * every plan (driver-side latency), while a shared relation caches
-    * its file index. Schema pinned in [[IndexStore.postingsSchema]]
-    * (S7's create-empty-index case has no footers to infer from). */
+    * its file index. */
   private val segPostings: Map[String, DataFrame] =
     segTables.view.mapValues(_.postings).toMap
 
@@ -232,12 +234,13 @@ final class Searcher(
         max("max_tf").as("max_tf"), min("min_dl").as("min_dl"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-  /** Collection statistics (S10): N, avgdl over all segments. */
+  /** Collection statistics (S10): N, avgdl over all segments, summed
+    * from the per-segment stats rows (exact Long sums: the order of the
+    * segments cannot change them). */
   val (docCount: Long, avgdl: Double) = {
-    val r = unionSegs(_.stats)
-      .agg(sum("doc_count"), sum("sum_dl")).head()
-    val n = if (r.isNullAt(0)) 0L else r.getLong(0)
-    val s = if (r.isNullAt(1)) 0L else r.getLong(1)
+    val st = snapshot.segments.map(segTables(_).stats)
+    val n = st.map(_.docCount).sum
+    val s = st.map(_.sumDl).sum
     (n, if (n == 0) 0.0 else s.toDouble / n)
   }
 
@@ -1967,11 +1970,14 @@ final class Searcher(
   /** Reopen at the CURRENT latest snapshot — the
     * `DirectoryReader.openIfChanged` analog (the reference ctor's
     * `refreshReader`/`refreshTaxoReader` reuse, Searcher.java:177-227).
-    * Per-segment relations present in both snapshots are carried over,
-    * so a refresh after an append pays driver-side open work for the NEW
-    * segments only; the document LRU survives when no existing segment
-    * was replaced (see [[documentCache]]). The query-result cache never
-    * carries — cached pages depend on the serving view. The caller keeps
+    * Per-segment relations and stats rows present in both snapshots are
+    * carried over, so a refresh after an append opens the NEW segments
+    * only — one job for their stats rows, however many segments and
+    * deletion batches the root holds (`JobCountSpec` pins it); the
+    * dead-doc set and term_stats are persisted lazily, on first use. The
+    * document LRU survives when no existing segment was replaced (see
+    * [[documentCache]]). The query-result cache never carries — cached
+    * pages depend on the serving view. The caller keeps
     * serving on `this` until the new searcher is warm, then
     * [[close(drainMs:Long)* closes]] the old one (the reference's
     * hot-swap discipline). */
@@ -2070,14 +2076,13 @@ object Searcher {
     }
   }
 
-  /** One segment's five relations (docstore/postings/term_stats/stats +
-    * config), created once per open and shared across queries — and, via
-    * [[Searcher.reopen]], across searcher generations (segment dirs are
-    * immutable once their snapshot commits). */
+  /** One segment's relations (docstore/postings/term_stats), its stats
+    * row and config, created once per open and shared across queries —
+    * and, via [[Searcher.reopen]], across searcher generations (segment
+    * dirs are immutable once their snapshot commits). */
   private[query] final case class SegTables(
-      docstore: DataFrame, postings: DataFrame,
-      termStats: DataFrame, stats: DataFrame,
-      config: IndexStore.SegmentConfig)
+      docstore: DataFrame, postings: DataFrame, termStats: DataFrame,
+      stats: IndexStore.SegmentStats, config: IndexStore.SegmentConfig)
 
   /** A clause subset resolved to foldable frames (the cross-Searcher
     * composition unit behind every exact single-index path and

@@ -2,9 +2,10 @@ package graft.query
 
 import graft.SparkTestBase
 import graft.analysis.SynonymDict
-import graft.index.{IndexBuilder, WebtextGen}
+import graft.index.{IndexBuilder, IndexStore, WebtextGen}
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * call runs once to warm the searcher (persisted frames, dead-doc
   * count, document LRU) and is counted on its second run. The pins are
   * the measured counts and upper bounds: a change may lower them, never
-  * raise them. */
+  * raise them. On the write path, `appendSegment` and `reopen` are
+  * pinned to job counts that do not grow with the root's segments and
+  * deletion batches (invariant 26). */
 class JobCountSpec extends AnyFunSuite with SparkTestBase {
 
   private lazy val dict = SynonymDict.parse(resourceLines("/synonyms.txt"))
@@ -124,6 +127,86 @@ class JobCountSpec extends AnyFunSuite with SparkTestBase {
         .queryExecution.executedPlan.toString
       assert(!plan.contains("collect_list"), s"conjunctive=$conj: $plan")
     }
+  }
+
+  // --- write path: bookkeeping reads are one read per call, never one
+  // per segment or per batch, so their job counts do not grow with the
+  // root's history ---
+
+  private val writeCfg = IndexBuilder.IndexConfig(numParts = 8,
+    rangeParts = 4, saltDf = 200, saltFanout = 4)
+  private lazy val basePages = WebtextGen.pages(71L, 200)
+
+  /** 40 fresh urls (tagged `tag`) plus 10 base urls re-crawled `day`
+    * days later: every append upserts, so every append writes a dead
+    * batch. */
+  private def batch(tag: String, day: Int): DataFrame = {
+    val upserts = basePages.zipWithIndex.collect {
+      case (p, i) if i % 20 == 0 =>
+        p.copy(warc_ts = new java.sql.Timestamp(
+          p.warc_ts.getTime + day * 86400000L))
+    }
+    val fresh = (0 until 40).map { i =>
+      val p = WebtextGen.page(72L + day, i.toLong)
+      p.copy(url = s"https://$tag.example/page/$i")
+    }
+    toDf(upserts ++ fresh)
+  }
+
+  private def toDf(pages: Seq[WebtextGen.Page]): DataFrame = {
+    import spark.implicits._
+    pages.toDF()
+  }
+
+  /** A root of `1 + cycles` segments and `2 × cycles` deletion batches:
+    * each cycle appends a [[batch]] and deletes 5 base urls. */
+  private def churnedRoot(cycles: Int): String = {
+    val root = tmpDir("graft-jobs-write-")
+    IndexBuilder.buildFull(spark, toDf(basePages), dict, root, writeCfg)
+    (1 to cycles).foreach { c =>
+      IndexBuilder.appendSegment(spark, batch(s"cycle$c", c), dict, root,
+        writeCfg)
+      IndexBuilder.deleteByPk(spark, root, basePages.zipWithIndex.collect {
+        case (p, i) if i % 20 == 1 + c => p.url
+      }.take(5))
+    }
+    root
+  }
+
+  test("appendSegment runs as many jobs on a 4-segment root with 6 " +
+    "deletion batches as on a 1-segment root") {
+    val fresh = churnedRoot(0)
+    val churned = churnedRoot(3)
+    val snap = IndexStore.readLatestSnapshot(spark, churned).get
+    assert(snap.segments.size == 4 &&
+      snap.deadBatches.size + snap.tombstones.size == 6, snap)
+    val onFresh = jobsOf(IndexBuilder.appendSegment(spark,
+      batch("last", 9), dict, fresh, writeCfg))
+    val onChurned = jobsOf(IndexBuilder.appendSegment(spark,
+      batch("last", 9), dict, churned, writeCfg))
+    info(s"appendSegment: $onFresh jobs on 1 segment, $onChurned on 4")
+    assert(onChurned == onFresh)
+  }
+
+  test("reopen after one append runs at most one job, whatever the " +
+    "number of segments and batches") {
+    val counts = Seq(0, 3).map { cycles =>
+      val root = churnedRoot(cycles)
+      val s = new Searcher(spark, root, dict)
+      try {
+        s.search("spark index", 10).collect()
+        IndexBuilder.appendSegment(spark, batch("next", 9), dict, root,
+          writeCfg)
+        var next: Searcher = null
+        val n = jobsOf { next = s.reopen() }
+        try {
+          info(s"reopen on ${cycles + 1} segment(s): $n jobs")
+          assert(next.reusedSegmentCount == cycles + 1)
+        } finally next.close()
+        cycles + 1 -> n
+      } finally s.close()
+    }
+    assert(counts.forall(_._2 <= 1), s"(segments, jobs): $counts")
   }
 
   override def afterAll(): Unit = {
