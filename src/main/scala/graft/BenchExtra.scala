@@ -43,6 +43,7 @@ object BenchExtra {
     val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = session(cores)
+    // builds and battery entries only: serving plans never run adaptive
     if (sys.env.contains("BX_NOAQE"))
       spark.conf.set("spark.sql.adaptive.enabled", "false")
     println(s"[benchextra] loadavg ${loadAvg()}")

@@ -780,15 +780,10 @@ object SparkEntry {
       import graft.streaming.EventAggregates
       import s.implicits._
       import scala.jdk.CollectionConverters._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val gapMs = 86400000L // 24h sessions over the 30-day events table
       val evDs = t(s, dir, "events")
         .select("event_id", "ts", "user_id", "event_type", "value")
         .as[EventAggregates.Event]
-      val in = MemoryStream[EventAggregates.Event]
-      val sessions = EventAggregates.sessionize(s, in.toDS(), gapMs = gapMs)
-      val sink = "q_sessionize_sink"
-      if (s.catalog.tableExists(sink)) s.catalog.dropTempView(sink)
       // scale-adaptive state partitioning: a stream's state-store
       // partition count is a per-query sizing decision (pinned at first
       // checkpoint in production); derive it from input volume — one
@@ -796,17 +791,20 @@ object SparkEntry {
       // instead of inheriting the batch session's shuffle width, where
       // every micro-batch barrier pays a full set of state-store
       // open/commits for a handful of keys. Results are partitioning-
-      // independent (per-key state, explicit in-key sort).
+      // independent (per-key state, explicit in-key sort). The stream
+      // runs on a child session holding that width, so `s` keeps its own.
       val nEvents = t(s, dir, "events").count()
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val streamParts =
-        math.max(1L, math.min(prevParts.toLong, nEvents / 50000L + 1L))
-      s.conf.set("spark.sql.shuffle.partitions", streamParts.toString)
-      val q =
-        try sessions.writeStream.format("memory").queryName(sink)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .start()
-        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val streamParts = math.max(1L, math.min(
+        s.conf.get("spark.sql.shuffle.partitions").toLong, nEvents / 50000L + 1L))
+      val ss = org.apache.spark.sql.graft.Bridge.cloneSession(s)
+      ss.conf.set("spark.sql.shuffle.partitions", streamParts.toString)
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
+      val in = MemoryStream[EventAggregates.Event]
+      val sessions = EventAggregates.sessionize(ss, in.toDS(), gapMs = gapMs)
+      val sink = "q_sessionize_sink"
+      val q = sessions.writeStream.format("memory").queryName(sink)
+        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
+        .start()
       try {
         // BOUNDED feed: the table streams through the driver one
         // ts-ordered chunk at a time, and processAllAvailable between
@@ -838,7 +836,7 @@ object SparkEntry {
           new java.sql.Timestamp(flushTs + 3600000L), -1L, "flush", 0.0))
         q.processAllAvailable()
         // ms, not µs: the state buffer is Timestamp.getTime-granular
-        val rows = s.table(sink).filter(col("user_id") >= 0)
+        val rows = ss.table(sink).filter(col("user_id") >= 0)
           .select(col("user_id"), col("n_events"),
             unix_millis(col("first_ts")).as("session_start"),
             unix_millis(col("last_ts")).as("session_end"),

@@ -37,9 +37,15 @@ import org.apache.spark.storage.StorageLevel
   * Collection statistics deliberately include dead docs until [[
   * graft.index.IndexBuilder.merge]] — exactly Lucene's behavior for
   * deleted-but-unmerged docs.
+  *
+  * Every relation and frame is planned on [[spark]], the ONE serving
+  * session of the caller's session, shared by every Searcher opened on
+  * it. It is cloned from the caller's session when first made (so it
+  * holds the caller's SQL conf as of then) with AQE off (invariant 7);
+  * no serving path writes the caller's conf.
   */
 final class Searcher(
-    val spark: SparkSession,
+    caller: SparkSession,
     val root: String,
     dict: SynonymDict = SynonymDict.empty,
     k1: Double = 1.2,
@@ -63,6 +69,7 @@ final class Searcher(
     phraseJoinMinDf: Long = Searcher.PhraseJoinMinDf)
     extends AutoCloseable {
 
+  val spark: SparkSession = Searcher.servingSession(caller)
   import spark.implicits._
 
   val snapshot: IndexStore.Snapshot = snapshotId match {
@@ -284,7 +291,7 @@ final class Searcher(
 
   // serving counters (reference totalSearchCnt / currentSearchCnt /
   // isClosePossible, Searcher.java:162-163,1614-1634 — ops metrics and
-  // safe-close coordination); maintained by [[withServingConf]], the
+  // safe-close coordination); maintained by [[serving]], the
   // choke point every eager serving path passes through
   private val totalSearches = new java.util.concurrent.atomic.AtomicLong(0)
   private val activeSearches = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -381,21 +388,6 @@ final class Searcher(
     TermInfo(term, df,
       math.log(1.0 + (docCount - df + 0.5) / (df + 0.5)), maxTf, minDl)
 
-  /** Serving-path actions run with AQE disabled: adaptive execution
-    * re-plans at every shuffle-stage boundary, adding a scheduler
-    * barrier per stage — at 32-partition serving shuffles that is pure
-    * per-query latency (invariant 7; measured on the reference query
-    * set: avg −30%, max −39%, one fewer job per multi-term query). The
-    * conf flips around the EAGER serving paths only and is restored
-    * after (builds/compactions on the same session keep their setting;
-    * a concurrent query on another thread of this session during the
-    * window would also run non-adaptive — identical results, AQE is an
-    * execution strategy). The flip is REFERENCE-COUNTED so concurrent
-    * serving threads can't race a mid-query restore: the first query in
-    * flips, the last one out restores the captured previous value. */
-  private val servingConfLock = new Object
-  private var servingDepth = 0
-  private var prevAdaptive: Option[String] = None
   /** Per-thread nesting depth: serving paths compose (searchWand's
     * small-df fallback calls [[search]], searchWithMeta wraps a search,
     * …) and only the TOP-LEVEL entry is a request — admission control
@@ -406,7 +398,7 @@ final class Searcher(
   private val servingEntryDepth = new ThreadLocal[Integer] {
     override def initialValue(): Integer = 0
   }
-  private def withServingConf[T](f: => T): T = {
+  private def serving[T](f: => T): T = {
     val depth: Int = servingEntryDepth.get
     val topLevel = depth == 0
     if (topLevel) {
@@ -415,23 +407,8 @@ final class Searcher(
       activeSearches.incrementAndGet()
     }
     servingEntryDepth.set(depth + 1)
-    val key = "spark.sql.adaptive.enabled"
-    servingConfLock.synchronized {
-      servingDepth += 1
-      if (servingDepth == 1) {
-        prevAdaptive = spark.conf.getOption(key)
-        spark.conf.set(key, "false")
-      }
-    }
     try f
     finally {
-      servingConfLock.synchronized {
-        servingDepth -= 1
-        if (servingDepth == 0) prevAdaptive match {
-          case Some(v) => spark.conf.set(key, v)
-          case None => spark.conf.unset(key)
-        }
-      }
       servingEntryDepth.set(depth)
       if (topLevel) activeSearches.decrementAndGet()
     }
@@ -563,7 +540,7 @@ final class Searcher(
   def searchBoolean(mustQuery: String, shouldQuery: String, k: Int,
                     start: Int = 0, filter: Option[Column] = None,
                     notQuery: Option[String] = None): DataFrame =
-    withServingConf {
+    serving {
       rankedPage(scoreBoolean(mustQuery, shouldQuery, filter, notQuery),
         k, start)
     }
@@ -906,7 +883,7 @@ final class Searcher(
     * the grammar, [[scoreParsed]] for the execution shape). */
   def searchQuery(q: String, k: Int, start: Int = 0,
                   filter: Option[Column] = None,
-                  maxExpansions: Int = 1024): DataFrame = withServingConf {
+                  maxExpansions: Int = 1024): DataFrame = serving {
     rankedPage(scoreParsed(QueryParser.parse(q), filter, maxExpansions),
       k, start)
   }
@@ -922,7 +899,7 @@ final class Searcher(
     * ascending fold order). Empty frame = MatchNoDocs or no
     * contribution. */
   def explainScore(q: String, docId: Long,
-                   maxExpansions: Int = 1024): DataFrame = withServingConf {
+                   maxExpansions: Int = 1024): DataFrame = serving {
     val empty = spark
       .emptyDataset[(String, Double, Int, Int, Double, Double)]
       .toDF("term", "weight", "tf", "dl", "idf", "contrib")
@@ -941,7 +918,7 @@ final class Searcher(
              conjunctive: Boolean = true,
              filter: Option[Column] = None,
              notQuery: Option[String] = None,
-             minShouldMatch: Int = 0): DataFrame = withServingConf {
+             minShouldMatch: Int = 0): DataFrame = serving {
     if (filter.isEmpty) captureWarmup(Searcher.WarmupQuery(query, "exact",
       conjunctive, k, start, 0, notQuery, minShouldMatch))
     rankedPage(score(query, conjunctive, filter, notQuery, minShouldMatch),
@@ -1052,7 +1029,7 @@ final class Searcher(
                  maxRescore: Int = 2000000,
                  wandMinDf: Long = 500000,
                  notQuery: Option[String] = None,
-                 minShouldMatch: Int = 0): DataFrame = withServingConf {
+                 minShouldMatch: Int = 0): DataFrame = serving {
     if (filter.isEmpty) captureWarmup(Searcher.WarmupQuery(query, "wand",
       conjunctive, k, start, 0, notQuery, minShouldMatch))
     if (minShouldMatch > 0)
@@ -1289,7 +1266,7 @@ final class Searcher(
   def searchPhrase(phrase: String, k: Int, start: Int = 0,
                    filter: Option[Column] = None,
                    notQuery: Option[String] = None,
-                   slop: Int = 0): DataFrame = withServingConf {
+                   slop: Int = 0): DataFrame = serving {
     require(slop >= 0, s"slop must be >= 0, got $slop")
     require(positionsIndexed,
       "phrase queries need an index built with indexPositions = true")
@@ -1434,7 +1411,7 @@ final class Searcher(
   final case class Meta(total: Long, maxScore: Double)
   def searchWithMeta(query: String, k: Int, start: Int = 0,
                      conjunctive: Boolean = true,
-                     filter: Option[Column] = None): (DataFrame, Meta) = withServingConf {
+                     filter: Option[Column] = None): (DataFrame, Meta) = serving {
     // ONE evaluation of the scored set: eager localCheckpoint
     // materializes it once, then the agg job and the (lazy) page both
     // read the materialized partitions. Unlike a persist — which could
@@ -1468,7 +1445,7 @@ final class Searcher(
     * [[graft.pipeline.TextOps.bm25TopKExpanded]]. */
   def searchPrefix(prefix: String, k: Int, start: Int = 0,
                    filter: Option[Column] = None,
-                   maxExpansions: Int = 1024): DataFrame = withServingConf {
+                   maxExpansions: Int = 1024): DataFrame = serving {
     expansionPage(QueryParser.PrefixQ(prefix, QueryParser.Should, 1.0), k,
       start, filter, maxExpansions)
   }
@@ -1481,7 +1458,7 @@ final class Searcher(
     * dictionary — the same cost profile the reference family has. */
   def searchWildcard(pattern: String, k: Int, start: Int = 0,
                      filter: Option[Column] = None,
-                     maxExpansions: Int = 1024): DataFrame = withServingConf {
+                     maxExpansions: Int = 1024): DataFrame = serving {
     val p = Tokenizer.foldCase(pattern.trim)
     if (p.isEmpty) return emptyPage
     rankedPage(execute(Resolved(exps = Seq((col("term").like(p), 1.0, -1))),
@@ -1499,7 +1476,7 @@ final class Searcher(
                       includeUpper: Boolean = true,
                       filter: Option[Column] = None,
                       maxExpansions: Int = 1024): DataFrame =
-    withServingConf {
+    serving {
       expansionPage(QueryParser.RangeQ(lower, upper, includeLower,
         includeUpper, QueryParser.Should, 1.0), k, start, filter,
         maxExpansions)
@@ -1512,7 +1489,7 @@ final class Searcher(
     * terms are uppercase, so patterns should match uppercase. */
   def searchRegexp(pattern: String, k: Int, start: Int = 0,
                    filter: Option[Column] = None,
-                   maxExpansions: Int = 1024): DataFrame = withServingConf {
+                   maxExpansions: Int = 1024): DataFrame = serving {
     expansionPage(QueryParser.RegexpQ(pattern, QueryParser.Should, 1.0), k,
       start, filter, maxExpansions)
   }
@@ -1525,7 +1502,7 @@ final class Searcher(
     * the Spark-native equivalent of the same expansion. */
   def searchFuzzy(term: String, k: Int, maxEdits: Int = 1, start: Int = 0,
                   filter: Option[Column] = None,
-                  maxExpansions: Int = 1024): DataFrame = withServingConf {
+                  maxExpansions: Int = 1024): DataFrame = serving {
     expansionPage(QueryParser.FuzzyQ(term, maxEdits, QueryParser.Should,
       1.0), k, start, filter, maxExpansions)
   }
@@ -1542,7 +1519,7 @@ final class Searcher(
   def searchMoreLikeThis(docId: Long, k: Int, maxQueryTerms: Int = 10,
                          start: Int = 0,
                          filter: Option[Column] = None): DataFrame =
-    withServingConf {
+    serving {
       val src = docCached(Seq(docId))
       if (src.isEmpty) return emptyPage
       val text = src.head.getAs[String]("text")
@@ -1574,7 +1551,7 @@ final class Searcher(
   def searchHighlight(query: String, k: Int, start: Int = 0,
                       conjunctive: Boolean = true, window: Int = 2,
                       filter: Option[Column] = None): DataFrame =
-    withServingConf {
+    serving {
       import scala.jdk.CollectionConverters._
       require(window >= 0, s"window must be >= 0, got $window")
       val page = search(query, k, start, conjunctive, filter).collect()
@@ -1608,7 +1585,7 @@ final class Searcher(
     * output (Searcher.java:861-871). */
   def searchSortByField(query: String, sortCols: Seq[Column], k: Int,
                         start: Int = 0, conjunctive: Boolean = true,
-                        filter: Option[Column] = None): DataFrame = withServingConf {
+                        filter: Option[Column] = None): DataFrame = serving {
     val matches = score(query, conjunctive, filter).select("doc_id")
     if (resolvesOnNarrow(sortCols)) {
       // rank on the narrow cache (no text through the top-k heap),
@@ -1746,7 +1723,7 @@ final class Searcher(
   def searchGrouped(query: String, dim: String, topGroups: Int,
                     docsPerGroup: Int, conjunctive: Boolean = true,
                     filter: Option[Column] = None,
-                    roundScoresTo: Option[Int] = None): DataFrame = withServingConf {
+                    roundScoresTo: Option[Int] = None): DataFrame = serving {
     val scored0 = score(query, conjunctive, filter)
     val scored = roundScoresTo.fold(scored0)(d =>
       scored0.withColumn("score", round(col("score"), d)))
@@ -1760,7 +1737,7 @@ final class Searcher(
     * starting with the folded prefix, weighted by document frequency
     * (df desc, term asc ties) — served straight from the cached
     * term_stats frame, one tiny job, no posting decode. */
-  def suggest(prefix: String, k: Int): DataFrame = withServingConf {
+  def suggest(prefix: String, k: Int): DataFrame = serving {
     val p = Tokenizer.foldCase(prefix.trim)
     if (p.isEmpty)
       spark.emptyDataset[(String, Long)].toDF("term", "df")
@@ -1793,7 +1770,7 @@ final class Searcher(
     * closest correction wins. Runs on the cached term_stats frame with
     * Spark's codegen'd levenshtein. */
   def suggestSpelling(term: String, k: Int, maxEdits: Int = 2): DataFrame =
-    withServingConf {
+    serving {
       val t = Tokenizer.foldCase(term.trim)
       if (t.isEmpty)
         spark.emptyDataset[(String, Int, Long)].toDF("term", "dist", "df")
@@ -1847,7 +1824,7 @@ final class Searcher(
   def searchJsonFiltered(query: String, k: Int, key: String, pred: Column,
                          start: Int = 0,
                          conjunctive: Boolean = true,
-                         roundScoresTo: Option[Int] = None): DataFrame = withServingConf {
+                         roundScoresTo: Option[Int] = None): DataFrame = serving {
     val scored0 = score(query, conjunctive)
     val scored = roundScoresTo.fold(scored0)(d =>
       scored0.withColumn("score", round(col("score"), d)))
@@ -1859,7 +1836,7 @@ final class Searcher(
     * sort-by-dynamic-field DocValues, Indexer.java:697-728). */
   def searchSortByJsonField(query: String, key: String, k: Int,
                             descending: Boolean = true,
-                            conjunctive: Boolean = true): DataFrame = withServingConf {
+                            conjunctive: Boolean = true): DataFrame = serving {
     val vals = jsonFieldsOrFail.where(col("key") === key)
       .groupBy("doc_id").agg(min("num_val").as("__v"))
     val ord = if (descending) col("__v").desc_nulls_last else col("__v").asc_nulls_last
@@ -1889,13 +1866,14 @@ final class Searcher(
 
   /** Query-result LRU (Q13, reference QueryResultKey cache
     * :885-947): memoizes the collected page. `useCache = false` mirrors
-    * the reference's per-call opt-out. */
+    * the reference's per-call opt-out. A hit is a request like any
+    * other: a closed searcher rejects it. */
   val queryResultCache = new LruCache[QueryKey, Array[org.apache.spark.sql.Row]](128)
 
   def searchCached(query: String, k: Int, start: Int = 0,
                    conjunctive: Boolean = true,
                    filter: Option[Column] = None,
-                   useCache: Boolean = true): Array[org.apache.spark.sql.Row] = {
+                   useCache: Boolean = true): Array[org.apache.spark.sql.Row] = serving {
     val key = QueryKey(query, k, start, conjunctive,
       filter.map(_.toString).getOrElse(""))
     def compute = searchWand(query, k, start, conjunctive, filter).collect()
@@ -2026,6 +2004,21 @@ final class Searcher(
 }
 
 object Searcher {
+
+  /** Serving session per caller session, weakly keyed (see the class
+    * doc); a serving session is its own. AQE's per-stage re-plan barrier
+    * is pure serving latency (invariant 7). */
+  private val servingSessions =
+    new java.util.WeakHashMap[SparkSession, SparkSession]()
+  private[graft] def servingSession(session: SparkSession): SparkSession =
+    servingSessions.synchronized {
+      if (servingSessions.containsValue(session)) session
+      else servingSessions.computeIfAbsent(session, { s =>
+        val serving = org.apache.spark.sql.graft.Bridge.cloneSession(s)
+        serving.conf.set("spark.sql.adaptive.enabled", "false")
+        serving
+      })
+    }
 
   /** Smallest string strictly greater than EVERY string with prefix `p`
     * under code-point (== UTF-8 binary == Spark string) ordering:

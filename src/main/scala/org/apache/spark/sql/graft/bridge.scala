@@ -31,6 +31,11 @@ object Bridge {
   def internalRdd(df: DataFrame): RDD[InternalRow] =
     df.queryExecution.toRdd
 
+  /** A child session with a copy of `spark`'s SQL conf, its own after. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .cloneSession()
+
   /** Wrap an InternalRow RDD back into a DataFrame. */
   def fromInternal(spark: SparkSession, rdd: RDD[InternalRow],
                    schema: StructType): DataFrame =

@@ -110,15 +110,10 @@ class JobCountSpec extends AnyFunSuite with SparkTestBase {
   test("a literal-only query probes term_stats in exactly one job") {
     // building the scored frame runs the probe and nothing else (the
     // scoring plan is lazy), so the jobs of the build ARE the probe;
-    // counted with AQE off, as every serving call runs
-    val key = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try {
-      assert(warmJobs(searcher.score("spark index data")) == 1)
-      assert(warmJobs(searcher.scoreParsed(
-        QueryParser.parse("spark +index -data"))) == 1)
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    // the caller's session keeps AQE on, the serving session has it off
+    assert(warmJobs(searcher.score("spark index data")) == 1)
+    assert(warmJobs(searcher.scoreParsed(
+      QueryParser.parse("spark +index -data"))) == 1)
   }
 
   test("AND and OR score plans fold on the pivot shape (no collect_list)") {

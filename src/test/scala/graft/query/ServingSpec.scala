@@ -173,14 +173,15 @@ class ServingSpec extends AnyFunSuite with SparkTestBase {
     // close waited: the in-flight query completed, was never cancelled
     assert(done.get && rows.nonEmpty)
     assert(s.isClosed && s.isClosePossible)
-    // new searches are rejected LOUDLY after close
+    // new searches are rejected LOUDLY after close, cached pages too
     intercept[IllegalArgumentException](s.search("spark", 5))
+    intercept[IllegalArgumentException](s.searchCached("spark index data", 10))
     // idempotent second close
     s.close()
   }
 
   test("concurrent serving: N threads on one searcher return exactly " +
-    "the sequential results (ref-counted AQE flip, shared caches)") {
+    "the sequential results (one serving session, shared caches)") {
     val queries = Seq("spark index" -> true, "data search" -> false,
       "lucene engine" -> false, "query model" -> false)
     val prevAqe = spark.conf.getOption("spark.sql.adaptive.enabled")
@@ -201,7 +202,7 @@ class ServingSpec extends AnyFunSuite with SparkTestBase {
         val want = sequential(queries.indexWhere(_._1 == q))
         assert(rows == want, s"concurrent result diverged for '$q'")
       }
-      // the session-wide AQE flip was restored by the last query out
+      // serving never wrote the caller session's conf
       assert(spark.conf.getOption("spark.sql.adaptive.enabled") == prevAqe)
     } finally pool.shutdown()
   }
