@@ -352,31 +352,21 @@ object FieldedIndex {
                     boosts: Map[String, Double] = Map.empty): DataFrame = {
       require(queries.nonEmpty, "scoredMulti needs at least one field query")
       val ordered = queries.toSeq.sortBy(_._1)
-      // the selectivity probe and the pruning decision run ONLY when the
-      // gate can possibly fire (invariant 7: driver lookups are the
-      // local-mode latency — a disabled or single-field call must not
-      // pay extra term_stats jobs whose result it discards)
+      // the pruning decision runs ONLY when the gate can possibly fire
       val (best, skewed) =
         if (!pruneIntersect || ordered.size < 2) ("", false)
         else {
           // selectivity = min df over the field's analyzed terms (an
-          // upper bound on its conjunctive match set); one cached
-          // term_stats probe per field, same cache score() reads
+          // upper bound on its conjunctive match set), from the field
+          // searcher's term dictionaries — the lookups score() makes,
+          // no job
           val minDf: Map[String, Long] = ordered.map { case (f, q) =>
             val s = searchers(f)
             val terms = s.analyzeQuery(q)
-            val dfs =
-              if (terms.isEmpty) Seq(0L)
-              else {
-                val sp = s.spark
-                import sp.implicits._
-                val present = s.termStats
-                  .filter(col("term").isin(terms: _*))
-                  .select("df").as[Long].collect().toSeq
-                // a missing conjunctive term ⇒ empty match set ⇒ df 0
-                if (present.size < terms.size) Seq(0L) else present
-              }
-            f -> dfs.min
+            val present = s.termIdfs(terms).map(_.df)
+            // a missing conjunctive term ⇒ empty match set ⇒ df 0
+            f -> (if (terms.isEmpty || present.size < terms.size) 0L
+                  else present.min)
           }.toMap
           val b = ordered.minBy { case (f, _) => minDf(f) }._1
           (b, ordered.map { case (f, _) => minDf(f) }.max > 8 * minDf(b))

@@ -805,13 +805,14 @@ object IndexBuilder {
     // collection + per-term statistics (S10): df = docs containing term,
     // ttf = total term frequency; max_tf/min_dl are the term-level
     // block-max WAND upper-bound inputs, kept here so the query planner
-    // gets (idf, df, bounds) in ONE tiny driver lookup per query
+    // gets (idf, df, bounds) from the segment's driver-side term
+    // dictionary, with no per-query job
     val termObs = org.apache.spark.sql.Observation()
     if (!sampledStats) {
-      val termStats = tf.groupBy("term")
+      val termRows = tf.groupBy("term")
         .agg(count(lit(1)).as("df"), sum("tf").as("ttf"),
           max("tf").cast("int").as("max_tf"), min("dl").cast("int").as("min_dl"))
-      termStats.observe(termObs, count(lit(1)).as("terms"))
+      termRows.observe(termObs, count(lit(1)).as("terms"))
         .write.mode("overwrite").parquet(IndexStore.termStatsPath(root, seg))
       lap("term_stats")
     }
@@ -1725,7 +1726,7 @@ object IndexBuilder {
     // decoded for them); otherwise from the written blobs — df/bounds are
     // stored per row, live ttf is re-derived by one vb_decode fold (the
     // written schema is the pinned postings layout, which carries no ttf)
-    val termStats =
+    val termRows =
       if (deadCount == 0)
         IndexStore.read(spark, IndexStore.Table.TermStats,
             targets.map(IndexStore.termStatsPath(root, _)): _*)
@@ -1739,7 +1740,7 @@ object IndexBuilder {
           sum("ttf_local").as("ttf"),
           max("max_tf").as("max_tf"), min("min_dl").as("min_dl"))
     val termObs = org.apache.spark.sql.Observation()
-    termStats.observe(termObs, count(lit(1)).as("terms"))
+    termRows.observe(termObs, count(lit(1)).as("terms"))
       .write.mode("overwrite")
       .parquet(IndexStore.termStatsPath(root, seg))
     lap("term_stats")

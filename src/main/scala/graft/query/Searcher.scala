@@ -6,7 +6,7 @@ import graft.index.IndexStore
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField, StructType, TimestampType}
 import org.apache.spark.storage.StorageLevel
 
 /** BM25 top-k query engine over the term-partitioned compressed index
@@ -233,8 +233,50 @@ final class Searcher(
       // with total cores. Downstream shuffles restore full parallelism.
       .coalesce(math.max(8, spark.sparkContext.defaultParallelism / 4))
 
+  /** The loaded term dictionaries by segment. Seeded from the
+    * predecessor's loaded dictionaries of the segments both snapshots
+    * hold (a segment directory is immutable once committed, as for
+    * [[reusedTables]]); the rest load on the first lookup
+    * ([[segmentDicts]]). */
+  @volatile private var termDicts: Map[String, Searcher.TermDict] =
+    reuseFrom match {
+      case Some(old) if !old.isClosed && old.root == root =>
+        val segs = snapshot.segments.toSet
+        old.termDicts.filter { case (s, _) => segs.contains(s) }
+      case _ => Map.empty
+    }
+  @volatile private var termDictsRead: Seq[String] = Nil
+  private val termDictLock = new Object
+
+  /** Segments whose dictionaries this searcher read itself (the rest
+    * were carried over by [[reopen]]). */
+  private[query] def termDictSegmentsRead: Seq[String] = termDictsRead
+
+  /** Every snapshot segment's term dictionary. The first call loads
+    * all not-yet-loaded segments in ONE read (one job); racing first
+    * callers wait for that read instead of starting their own. */
+  private def segmentDicts: Seq[Searcher.TermDict] = {
+    val have = termDicts
+    val ready =
+      if (snapshot.segments.forall(have.contains)) have
+      else termDictLock.synchronized {
+        val now = termDicts
+        val missing = snapshot.segments.filterNot(now.contains)
+        if (missing.nonEmpty) {
+          termDicts = now ++ Searcher.TermDict.load(spark, root, missing)
+          termDictsRead = termDictsRead ++ missing
+        }
+        termDicts
+      }
+    snapshot.segments.map(ready)
+  }
+
   /** Global per-term stats across segments (term_stats is per segment):
-    * df, ttf, and the term-level WAND bound inputs (max tf, min dl). */
+    * df, ttf, and the term-level WAND bound inputs (max tf, min dl).
+    * Literal terms never read it — they look up the driver-side
+    * dictionaries ([[termIdfs]]); it serves the dictionary scans:
+    * expansion predicates, [[suggest]] and [[suggestSpelling]].
+    * Persisted lazily, on the first such scan. */
   val termStats: DataFrame =
     unionSegs(_.termStats)
       .groupBy("term").agg(sum("df").as("df"), sum("ttf").as("ttf"),
@@ -313,7 +355,7 @@ final class Searcher(
 
   /** Replay `queries` through the normal serving paths (the reference's
     * `warmup()`, Searcher.java:585-626): materializes the persisted
-    * narrow frames, runs the term_stats probe, and fills the query
+    * narrow frames, loads the term dictionaries, and fills the query
     * pipeline's JIT/page-cache working set before the searcher takes
     * traffic. Best-effort BY DEFINITION — a query that fails to replay
     * (e.g. a phrase captured on a positional index replayed on a
@@ -370,19 +412,22 @@ final class Searcher(
   final case class TermInfo(term: String, df: Long, idf: Double,
                             maxTf: Int, minDl: Int)
 
-  /** Per-term idf + WAND bound inputs over terms present in the index:
-    * ONE driver-side lookup of the (tiny, cached) term_stats per query —
-    * the broadcast of collection stats the reference reads per query
-    * (Searcher.java:722-725). */
-  private def termIdfs(terms: Seq[String]): Seq[TermInfo] =
+  /** Per-term idf + WAND bound inputs over the terms present in the
+    * index, in term order: driver-side lookups in the per-segment term
+    * dictionaries, aggregated across segments the way the global
+    * term_stats frame aggregates — no Spark job once the dictionaries
+    * are loaded (the reference reads collection stats per query from
+    * the segment readers the same way, Searcher.java:722-725). */
+  private[graft] def termIdfs(terms: Seq[String]): Seq[TermInfo] =
     if (terms.isEmpty) Seq.empty
-    else termStats.filter(col("term").isin(terms: _*))
-      .select("term", "df", "max_tf", "min_dl").as[(String, Long, Int, Int)]
-      .collect().sortBy(_._1).toSeq
-      .map { case (t, df, mt, md) => mkTermInfo(t, df, mt, md) }
+    else {
+      val dicts = segmentDicts
+      terms.distinct.sorted.flatMap(t => Searcher.TermDict.lookup(dicts, t)
+        .map { case (df, mt, md) => mkTermInfo(t, df, mt, md) })
+    }
 
-  /** THE idf arithmetic (invariant 11: one definition — [[termIdfs]]
-    * and the executor's probe must never diverge). */
+  /** THE idf arithmetic (invariant 11: one definition — the dictionary
+    * lookups and the expansion probe must never diverge). */
   private def mkTermInfo(term: String, df: Long, maxTf: Int,
                          minDl: Int): TermInfo =
     TermInfo(term, df,
@@ -476,7 +521,7 @@ final class Searcher(
   /** Doc set containing ANY of the given index-present NOT terms
     * (unscored): the MUST_NOT side of the reference's BooleanQuery
     * (`Occur` clauses, Searcher.java:734-736). Presence must already be
-    * resolved by the caller's single term_stats probe. */
+    * resolved by the caller's term lookup. */
   private def notDocSet(presentNotTerms: Seq[String]): Option[DataFrame] =
     if (presentNotTerms.isEmpty) None
     else Some(postingsForTerms(presentNotTerms)
@@ -523,7 +568,8 @@ final class Searcher(
     * `should` empty = pure conjunction — [[score]]'s two modes are the
     * degenerate cases. A term in both clause sets is MUST (clauses
     * dedup — documented simplification, same as duplicate query
-    * terms). ONE term_stats probe covers MUST + SHOULD + MUST_NOT. */
+    * terms). MUST, SHOULD and MUST_NOT terms are dictionary lookups
+    * (no job). */
   def scoreBoolean(mustQuery: String, shouldQuery: String,
                    filter: Option[Column] = None,
                    notQuery: Option[String] = None): DataFrame = {
@@ -557,9 +603,7 @@ final class Searcher(
     *    weight, req), each capped at `maxExpansions` index terms
     *  - `phrases`: ordered analyzed phrase terms (ordered, slop, weight,
     *    req), matched by positional alignment
-    *  - `notTerms` / `notExps` / `notPhrases`: the MUST_NOT doc sets
-    *  - `known`: term stats the caller already probed — those terms
-    *    skip the executor's probe. */
+    *  - `notTerms` / `notExps` / `notPhrases`: the MUST_NOT doc sets */
   private final case class Resolved(
       terms: Seq[(String, Double, Int)] = Nil,
       exps: Seq[(Column, Double, Int)] = Nil,
@@ -567,8 +611,7 @@ final class Searcher(
       notTerms: Seq[String] = Nil,
       notExps: Seq[Column] = Nil,
       notPhrases: Seq[(Seq[String], Int)] = Nil,
-      reqCount: Int = 0,
-      known: Map[String, TermInfo] = Map.empty)
+      reqCount: Int = 0)
 
   /** The resolver: a parsed clause list ([[QueryParser]]) → [[Resolved]]
     * sub-clauses. An ungrouped MUST term clause fans each analyzed term
@@ -721,11 +764,11 @@ final class Searcher(
     * resolved to anything (a pure-NOT query matches nothing, like
     * Lucene).
     *
-    * Job shape (invariant 7): ONE term_stats probe resolves every
-    * literal term AND every expansion predicate together — the
-    * expansion-membership flags ride the same collect as extra boolean
-    * columns, and a literal-only probe is a plain collect (ONE job; a
-    * `limit` would plan executeTake's incremental scans) — then one
+    * Job shape (invariant 7): literal terms resolve in the driver-side
+    * term dictionaries ([[termIdfs]], no job); when the query has
+    * expansion predicates, ONE capped term_stats probe resolves them all
+    * together — the expansion-membership flags ride the same collect as
+    * extra boolean columns. Then one
     * `term IN` row-group-pruned posting scan covers all non-phrase subs
     * and one positional scan serves each phrase. Clause weights and
     * requirement keys travel in the per-query term frame — a lookup
@@ -745,33 +788,29 @@ final class Searcher(
     // SHOULD/NOT subsets contribute and exclude nothing
     if (docCount == 0) return if (r.reqCount > 0) matchNoDocs else noRows
     val litTerms = (r.terms.map(_._1) ++ r.notTerms ++
-      r.phrases.flatMap(_._1) ++ r.notPhrases.flatMap(_._1))
-      .distinct.filterNot(r.known.contains).sorted
+      r.phrases.flatMap(_._1) ++ r.notPhrases.flatMap(_._1)).distinct
     val expPreds = r.exps.map(_._1) ++ r.notExps
-    if (litTerms.isEmpty && expPreds.isEmpty && r.known.isEmpty) return noRows
+    if (litTerms.isEmpty && expPreds.isEmpty) return noRows
 
-    // -- ONE term_stats probe for literals + every expansion -----------
+    // -- literal terms: dictionary lookups (no job); expansion
+    // predicates: ONE capped term_stats probe ---------------------------
     val probeRows =
-      if (litTerms.isEmpty && expPreds.isEmpty) Array.empty[org.apache.spark.sql.Row]
+      if (expPreds.isEmpty) Array.empty[Row]
       else {
-        val probe = termStats
-          .filter(((if (litTerms.nonEmpty) Seq(col("term").isin(litTerms: _*))
-            else Nil) ++ expPreds).reduce(_ || _))
+        val cap = expPreds.size * maxExpansions
+        val rows = termStats.filter(expPreds.reduce(_ || _))
           .select(Seq(col("term"), col("df"), col("max_tf"), col("min_dl")) ++
             expPreds.zipWithIndex.map { case (p, j) => p.as(s"__c$j") }: _*)
-        if (expPreds.isEmpty) probe.collect()
-        else {
-          val totalCap = litTerms.size + expPreds.size * maxExpansions
-          val rows = probe.limit(totalCap + 1).collect() // +1 detects overflow
-          require(rows.length <= totalCap, s"query expands to > $totalCap " +
-            "index terms — narrow the expansions or raise maxExpansions")
-          rows
-        }
+          .limit(cap + 1).collect() // +1 detects overflow
+        require(rows.length <= cap, s"query expands to > $cap " +
+          "index terms — narrow the expansions or raise maxExpansions")
+        rows
       }
-    val infoOf: Map[String, TermInfo] = r.known ++ probeRows.map { row =>
-      val t = row.getString(0)
-      t -> mkTermInfo(t, row.getLong(1), row.getInt(2), row.getInt(3))
-    }
+    val infoOf: Map[String, TermInfo] =
+      termIdfs(litTerms).map(i => i.term -> i).toMap ++ probeRows.map { row =>
+        val t = row.getString(0)
+        t -> mkTermInfo(t, row.getLong(1), row.getInt(2), row.getInt(3))
+      }
     val expMatches: IndexedSeq[Seq[String]] = expPreds.indices.map { j =>
       val ts = probeRows.iterator
         .filter(row => !row.isNullAt(4 + j) && row.getBoolean(4 + j))
@@ -953,7 +992,7 @@ final class Searcher(
         d.getAs[String]("url"), d.get(d.fieldIndex("warc_ts")),
         d.getAs[String]("lang"), d.getAs[String]("text"))
     }.sortBy(r => (-r.getDouble(1), r.getLong(0)))
-    spark.createDataFrame(page.asJava, emptyPage.schema)
+    spark.createDataFrame(page.asJava, Searcher.PageSchema)
   }
 
   /** The (score desc, doc_id asc) page `[start, start + k)` of a scored
@@ -963,9 +1002,8 @@ final class Searcher(
       .offset(start).limit(k))
 
   private def emptyPage: DataFrame =
-    spark.emptyDataset[(Long, Double, String, java.sql.Timestamp, String,
-        String)]
-      .toDF("doc_id", "score", "url", "warc_ts", "lang", "text")
+    spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      Searcher.PageSchema)
 
   private def termBlobs(term: String) =
     postingsForTerms(Seq(term)).select("blob").as[Array[Byte]]
@@ -1005,9 +1043,10 @@ final class Searcher(
     * ([[graft.codec.VarByte.decodeForDocs]]) with the SAME restrictions
     * applied before the shared term-ordered fold.
     *
-    * Job shape (invariant 7), page fetch aside: ONE term_stats probe,
-    * then AND = candidate collect + rescore/page (3 jobs), OR = θ seed +
-    * the candidates' `distinct().take` (2 jobs) + rescore/page (5).
+    * Job shape (invariant 7), page fetch aside: the terms are
+    * dictionary lookups (no job), then AND = candidate collect +
+    * rescore/page (2 jobs), OR = θ seed + the candidates'
+    * `distinct().take` (2 jobs) + rescore/page (4).
     * Falls back to the exact [[search]] result in five cases — pruning
     * is an optimization, never a correctness risk:
     *  1. `minShouldMatch > 0` (msm removes docs from the universe
@@ -1021,8 +1060,8 @@ final class Searcher(
     *  5. the collected candidate set above `maxRescore` (the
     *     10^12-scale guard).
     * Fallback 1 runs [[search]] itself; 2-5 run the exact executor on
-    * the probe already taken (no second probe job), so an exact-path
-    * answer costs the probe plus the page job, as [[search]] does. */
+    * the present terms, so an exact-path answer costs the page job (plus
+    * a restriction's broadcast), as [[search]] does. */
   def searchWand(query: String, k: Int, start: Int = 0,
                  conjunctive: Boolean = true,
                  filter: Option[Column] = None,
@@ -1070,15 +1109,14 @@ final class Searcher(
     }
     val (k1c, bc, ac) = (k1, b, avgdl)
     val idfMap = idfs.map(i => i.term -> i.idf).toMap
-    // the exact fallbacks run the executor on THIS probe: the present
-    // terms with the requirement ids and count [[score]] gives them, the
-    // present NOT terms, their stats as `known` — no second probe job
+    // the exact fallbacks run the executor on the present terms with the
+    // requirement ids and count [[score]] gives them and the present NOT
+    // terms
     def exact(): DataFrame = rankedPage(execute(Resolved(
         terms = idfs.zipWithIndex.map { case (i, q) =>
           (i.term, 1.0, if (conjunctive) q else -1) },
         notTerms = presentNot,
-        reqCount = if (conjunctive) idfs.size else 0,
-        known = all.map(i => i.term -> i).toMap), filter), k, start)
+        reqCount = if (conjunctive) idfs.size else 0), filter), k, start)
 
     if (idfs.size == 1 && !isRestricted) {
       val i = idfs.head
@@ -1106,8 +1144,8 @@ final class Searcher(
     // asymmetry is WAND's actual win.
     if (idfs.map(_.df).min > maxRescore) return exact()
 
-    // per-term upper bounds straight from the cached term_stats lookup —
-    // no extra job, no posting-file touch
+    // per-term upper bounds straight from the dictionary lookup — no
+    // job, no posting-file touch
     val ubs: Map[String, Double] = idfs.map { i =>
       i.term -> Wand.contrib(i.idf, i.maxTf, i.minDl, k1c, bc, ac)
     }.toMap
@@ -1175,9 +1213,9 @@ final class Searcher(
     fetchPage(page)
   }
 
-  /** BATCHED top-k: score N queries in ONE declarative plan — ONE
-    * term_stats probe, ONE posting scan over the union of all queries'
-    * terms, one per-(query, doc) fold, one window rank. Per-query
+  /** BATCHED top-k: score N queries in ONE declarative plan — the
+    * terms' dictionary lookups, ONE posting scan over the union of all
+    * queries' terms, one per-(query, doc) fold, one window rank. Per-query
     * serving latency is job-count-bound (each [[search]] spends 1-4
     * jobs of fixed scheduler cost); a batch amortizes that across the
     * whole query set, and at cluster scale it is one stage instead of
@@ -1190,19 +1228,20 @@ final class Searcher(
     * .searchMulti]]). Filter/NOT/msm clauses stay on the single-query
     * surface.
     *
-    * Job shape (invariant 7): the probe is the only job at call time;
-    * the caller's action on the returned plan runs the scan, fold and
-    * rank. The (query_id, idf) term frame and the per-query term count
+    * Job shape (invariant 7): no job at call time once the term
+    * dictionaries are loaded (a searcher's first lookup loads them in
+    * one); the caller's action on the returned plan runs the scan, fold
+    * and rank. The (query_id, idf) term frame and the per-query term count
     * are lookups ([[withTermFrame]]), so no broadcast job runs first. */
   def searchBatch(queries: Map[String, String], k: Int,
                   conjunctive: Boolean = true,
                   roundScoresTo: Option[Int] = None): DataFrame = {
-    val emptyOut = spark.emptyDataset[(String, Long, Double)]
+    def emptyOut = spark.emptyDataset[(String, Long, Double)]
       .toDF("query_id", "doc_id", "score")
     val analyzed = queries.view.mapValues(analyzeQuery).toMap
     val allTerms = analyzed.values.flatten.toSeq.distinct
     if (allTerms.isEmpty || docCount == 0) return emptyOut
-    val infos = termIdfs(allTerms).map(i => i.term -> i).toMap // ONE probe
+    val infos = termIdfs(allTerms).map(i => i.term -> i).toMap
     // a query with any zero-df term matches nothing under AND
     // (BooleanQuery MUST) — drop its rows before they reach the scan
     val qTerm: Seq[(String, String, Double)] = for {
@@ -1430,7 +1469,7 @@ final class Searcher(
   /** Disjunctive ranked page over ONE multi-term clause: every index
     * term it expands to scores with its own idf (Lucene's
     * SCORING_BOOLEAN rewrite; the golden model pins the same contract).
-    * The expansion resolves inside the executor's ONE term_stats probe,
+    * The expansion resolves in the executor's ONE term_stats probe,
     * capped at `maxExpansions` (the Lucene maxClauseCount analog) with a
     * LOUD failure: silent truncation would silently change results. */
   private def expansionPage(c: QueryParser.Clause, k: Int, start: Int,
@@ -1514,8 +1553,8 @@ final class Searcher(
     * descending (term ascending on ties — rounded so the rank is
     * portable across `ln` implementations), and runs the top
     * `maxQueryTerms` as one disjunctive query with the source doc
-    * excluded. Costs one S8 doc fetch + the single term_stats probe
-    * (the executor reuses the probed stats). */
+    * excluded. Costs one S8 doc fetch; the terms' stats are dictionary
+    * lookups (no job). */
   def searchMoreLikeThis(docId: Long, k: Int, maxQueryTerms: Int = 10,
                          start: Int = 0,
                          filter: Option[Column] = None): DataFrame =
@@ -1528,7 +1567,7 @@ final class Searcher(
         dict.expand(Tokenizer.tokenize(text, analyzerMode).toIndexedSeq)
       if (toks.isEmpty) return emptyPage
       val tf = toks.groupBy(identity).view.mapValues(_.size).toMap
-      val top = termIdfs(tf.keys.toSeq.sorted) // ONE probe
+      val top = termIdfs(tf.keys.toSeq)
         .sortBy(i => (-BigDecimal(tf(i.term) * i.idf)
           .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble, i.term))
         .take(maxQueryTerms)
@@ -1536,8 +1575,8 @@ final class Searcher(
         case Some(f) => f && col("doc_id") =!= docId
         case None => col("doc_id") =!= docId
       }
-      rankedPage(execute(Resolved(terms = top.map(i => (i.term, 1.0, -1)),
-        known = top.map(i => i.term -> i).toMap), Some(excl)), k, start)
+      rankedPage(execute(Resolved(terms = top.map(i => (i.term, 1.0, -1))),
+        Some(excl)), k, start)
     }
 
   /** Highlighter analog: attaches (match_pos, snippet) to the ≤ k page
@@ -1571,12 +1610,8 @@ final class Searcher(
           }
         org.apache.spark.sql.Row.fromSeq(r.toSeq :+ pos :+ snip)
       }
-      val schema = org.apache.spark.sql.types.StructType(
-        emptyPage.schema.fields :+
-          org.apache.spark.sql.types.StructField("match_pos",
-            org.apache.spark.sql.types.LongType) :+
-          org.apache.spark.sql.types.StructField("snippet",
-            org.apache.spark.sql.types.StringType))
+      val schema = StructType(Searcher.PageSchema.fields :+
+        StructField("match_pos", LongType) :+ StructField("snippet", StringType))
       spark.createDataFrame(rows.toSeq.asJava, schema)
     }
 
@@ -1948,12 +1983,14 @@ final class Searcher(
   /** Reopen at the CURRENT latest snapshot — the
     * `DirectoryReader.openIfChanged` analog (the reference ctor's
     * `refreshReader`/`refreshTaxoReader` reuse, Searcher.java:177-227).
-    * Per-segment relations and stats rows present in both snapshots are
-    * carried over, so a refresh after an append opens the NEW segments
-    * only — one job for their stats rows, however many segments and
-    * deletion batches the root holds (`JobCountSpec` pins it); the
-    * dead-doc set and term_stats are persisted lazily, on first use. The
-    * document LRU survives when no existing segment was replaced (see
+    * Per-segment relations, stats rows and loaded term dictionaries
+    * present in both snapshots are carried over, so a refresh after an
+    * append opens the NEW segments only — one job for their stats rows,
+    * however many segments and deletion batches the root holds
+    * (`JobCountSpec` pins it) — and the first lookup after it reads the
+    * new segments' dictionaries only, in one job; the dead-doc set and
+    * term_stats are persisted lazily, on first use. The document LRU
+    * survives when no existing segment was replaced (see
     * [[documentCache]]). The query-result cache never carries — cached
     * pages depend on the serving view. The caller keeps
     * serving on `this` until the new searcher is warm, then
@@ -2076,6 +2113,86 @@ object Searcher {
   private[query] final case class SegTables(
       docstore: DataFrame, postings: DataFrame, termStats: DataFrame,
       stats: IndexStore.SegmentStats, config: IndexStore.SegmentConfig)
+
+  /** One segment's term dictionary, held on the driver (the analog of
+    * the in-heap terms index Lucene reads collection statistics from,
+    * reference Searcher.java:722-725): the segment's term_stats rows as a
+    * sorted term array with parallel primitive columns, binary-searched.
+    * Immutable, like the segment directory it was read from; about the
+    * term strings plus 16 bytes a term. */
+  private[query] final class TermDict(terms: Array[String],
+                                      private val df: Array[Long],
+                                      private val maxTf: Array[Int],
+                                      private val minDl: Array[Int]) {
+    /** The slot of `term`, negative when the segment lacks it. */
+    def indexOf(term: String): Int =
+      java.util.Arrays.binarySearch(terms.asInstanceOf[Array[AnyRef]], term)
+  }
+
+  private[query] object TermDict {
+    /** (Σ df, max max_tf, min min_dl) of `term` over `dicts` — the
+      * aggregate the global term_stats frame computes, so idf and the
+      * WAND bounds derived from it are bit-identical; None when no
+      * segment holds the term. */
+    def lookup(dicts: Seq[TermDict], term: String): Option[(Long, Int, Int)] = {
+      var df = 0L
+      var maxTf = Int.MinValue
+      var minDl = Int.MaxValue
+      var hit = false
+      dicts.foreach { d =>
+        val i = d.indexOf(term)
+        if (i >= 0) {
+          hit = true
+          df += d.df(i)
+          maxTf = math.max(maxTf, d.maxTf(i))
+          minDl = math.min(minDl, d.minDl(i))
+        }
+      }
+      if (hit) Some((df, maxTf, minDl)) else None
+    }
+
+    /** The dictionaries of `segs` from ONE read of their term_stats
+      * tables (one job however many segments); each row is attributed to
+      * its segment by the directory its file lies in, as
+      * [[IndexStore.readSegmentStats]] does. A term held twice by one
+      * segment fails naming the segment: the binary search would
+      * otherwise see only one of the rows. */
+    def load(spark: SparkSession, root: String,
+             segs: Seq[String]): Map[String, TermDict] = {
+      val rows = IndexStore.read(spark, IndexStore.Table.TermStats,
+          segs.map(IndexStore.termStatsPath(root, _)): _*)
+        // <root>/segments/<seg>/term_stats/<file>: the 1-based position
+        // of <seg> in `segs`
+        .select(array_position(typedLit(segs),
+            element_at(split(col("_metadata.file_path"), "/"), -3))
+            .cast("int"),
+          col("term"), col("df"), col("max_tf"), col("min_dl"))
+        .collect()
+      val bySeg = rows.groupBy(_.getInt(0))
+      require(!bySeg.contains(0), s"term_stats rows outside ${segs
+        .mkString(", ")} under $root")
+      segs.zipWithIndex.map { case (seg, i) =>
+        val rs = bySeg.getOrElse(i + 1, Array.empty[Row]).sortBy(_.getString(1))
+        val terms = rs.map(_.getString(1))
+        (1 until terms.length).find(j => terms(j) == terms(j - 1)).foreach {
+          j => throw new IllegalStateException(s"segment $seg holds term " +
+            s"'${terms(j)}' twice in ${IndexStore.termStatsPath(root, seg)}")
+        }
+        seg -> new TermDict(terms, rs.map(_.getLong(2)), rs.map(_.getInt(3)),
+          rs.map(_.getInt(4)))
+      }.toMap
+    }
+  }
+
+  /** The schema of every page the serving paths return, built once:
+    * (doc_id, score, url, warc_ts, lang, text). */
+  private[query] val PageSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType, nullable = false),
+    StructField("score", DoubleType, nullable = false),
+    StructField("url", StringType),
+    StructField("warc_ts", TimestampType),
+    StructField("lang", StringType),
+    StructField("text", StringType)))
 
   /** A clause subset resolved to foldable frames (the cross-Searcher
     * composition unit behind every exact single-index path and

@@ -12,9 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Per-query latency is job-count-bound in local mode (invariant 7),
   * so the Spark jobs each warm serving call runs are pinned here. Every
   * call runs once to warm the searcher (persisted frames, dead-doc
-  * count, document LRU) and is counted on its second run. The pins are
-  * the measured counts and upper bounds: a change may lower them, never
-  * raise them. On the write path, `appendSegment` and `reopen` are
+  * count, term dictionaries, document LRU) and is counted on its second
+  * run. The pins are the measured counts and upper bounds: a change may
+  * lower them, never raise them. On the write path, `appendSegment` and `reopen` are
   * pinned to job counts that do not grow with the root's segments and
   * deletion batches (invariant 26). */
 class JobCountSpec extends AnyFunSuite with SparkTestBase {
@@ -54,41 +54,42 @@ class JobCountSpec extends AnyFunSuite with SparkTestBase {
   test("warm serving calls run no more Spark jobs than pinned") {
     val K = 10
     val en = Some(col("lang") === "en")
-    // exact paths: ONE probe + the page collect (warm pages fetch no
-    // stored fields), plus one broadcast per NOT set / filter side; an
-    // expansion probe is a limited collect (executeTake: 2 jobs here).
+    // exact paths: the page collect (warm pages fetch no stored
+    // fields; literal terms are dictionary lookups, no job), plus one
+    // broadcast per NOT set / filter side; an expansion probe is a
+    // limited collect on term_stats (executeTake: 2 jobs here).
     // Per-query term frames are lookups and start no job. searchWand's
-    // exact fallbacks (below wandMinDf, restricted single term) reuse
-    // its probe, so they cost what `search` costs; its WAND pipeline is
-    // probe + candidates + rescore/page (AND) and probe + θ seed +
-    // the candidates' distinct().take (2) + rescore/page (OR)
+    // exact fallbacks (below wandMinDf, restricted single term) cost
+    // what `search` costs; its WAND pipeline is candidates +
+    // rescore/page (AND) and θ seed + the candidates' distinct().take
+    // (2) + rescore/page (OR)
     val pinned = Seq(
-      "search AND" -> (() => searcher.search("spark index", K), 2),
+      "search AND" -> (() => searcher.search("spark index", K), 1),
       "search OR" -> (() => searcher.search("spark index", K,
-        conjunctive = false), 2),
+        conjunctive = false), 1),
       "search NOT" -> (() => searcher.search("spark index", K,
-        notQuery = Some("fast")), 3),
+        notQuery = Some("fast")), 2),
       "search filter" -> (() => searcher.search("spark index", K,
-        filter = en), 3),
+        filter = en), 2),
       "searchBoolean" -> (() => searcher.searchBoolean("spark",
-        "index fast", K), 2),
+        "index fast", K), 1),
       "searchPrefix" -> (() => searcher.searchPrefix("IND", K), 3),
-      "searchPhrase" -> (() => searcher.searchPhrase("spark index", K), 2),
+      "searchPhrase" -> (() => searcher.searchPhrase("spark index", K), 1),
       "searchQuery" -> (() => searcher.searchQuery("+spark index -fast", K),
-        3),
-      "searchWand term" -> (() => searcher.searchWand("spark", K), 2),
-      "searchWand AND exact" -> (() => searcher.searchWand("spark index", K),
         2),
+      "searchWand term" -> (() => searcher.searchWand("spark", K), 1),
+      "searchWand AND exact" -> (() => searcher.searchWand("spark index", K),
+        1),
       "searchWand OR exact" -> (() => searcher.searchWand("spark index", K,
-        conjunctive = false), 2),
+        conjunctive = false), 1),
       "searchWand NOT" -> (() => searcher.searchWand("spark index", K,
-        notQuery = Some("fast")), 3),
+        notQuery = Some("fast")), 2),
       "searchWand filter" -> (() => searcher.searchWand("spark index", K,
-        filter = en), 3),
+        filter = en), 2),
       "searchWand AND pipeline" -> (() => searcher.searchWand("spark index",
-        K, wandMinDf = 0L), 3),
+        K, wandMinDf = 0L), 2),
       "searchWand OR pipeline" -> (() => searcher.searchWand("spark index",
-        K, conjunctive = false, wandMinDf = 0L), 5))
+        K, conjunctive = false, wandMinDf = 0L), 4))
     val over = pinned.flatMap { case (name, (call, max)) =>
       val n = warmJobs(call().collect())
       info(s"$name: $n jobs (pinned $max)")
@@ -107,13 +108,13 @@ class JobCountSpec extends AnyFunSuite with SparkTestBase {
     assert(jobsOf(searcher.docCached(cold)) == 1)
   }
 
-  test("a literal-only query probes term_stats in exactly one job") {
-    // building the scored frame runs the probe and nothing else (the
-    // scoring plan is lazy), so the jobs of the build ARE the probe;
-    // the caller's session keeps AQE on, the serving session has it off
-    assert(warmJobs(searcher.score("spark index data")) == 1)
+  test("a literal-only query plans without a Spark job") {
+    // building the scored frame resolves its terms and nothing else (the
+    // scoring plan is lazy): warm, the lookups run on the driver's term
+    // dictionaries and start no job
+    assert(warmJobs(searcher.score("spark index data")) == 0)
     assert(warmJobs(searcher.scoreParsed(
-      QueryParser.parse("spark +index -data"))) == 1)
+      QueryParser.parse("spark +index -data"))) == 0)
   }
 
   test("AND and OR score plans fold on the pivot shape (no collect_list)") {
@@ -202,6 +203,26 @@ class JobCountSpec extends AnyFunSuite with SparkTestBase {
       } finally s.close()
     }
     assert(counts.forall(_._2 <= 1), s"(segments, jobs): $counts")
+  }
+
+  test("after an append and a reopen, the first literal query loads the " +
+    "new segment's dictionary in one job and the second runs none") {
+    val root = churnedRoot(1)
+    val s = new Searcher(spark, root, dict)
+    try {
+      s.search("spark index", 10).collect()
+      IndexBuilder.appendSegment(spark, batch("next", 9), dict, root,
+        writeCfg)
+      val next = s.reopen()
+      try {
+        val added = next.snapshot.segments.filterNot(s.snapshot.segments.contains)
+        assert(added.size == 1, next.snapshot.segments)
+        next.numDeletedDocs // the dead-doc count's jobs, counted apart
+        assert(jobsOf(next.score("spark index")) == 1)
+        assert(next.termDictSegmentsRead == added)
+        assert(jobsOf(next.score("spark index")) == 0)
+      } finally next.close()
+    } finally s.close()
   }
 
   override def afterAll(): Unit = {
