@@ -8,6 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField, StructType, TimestampType}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 /** BM25 top-k query engine over the term-partitioned compressed index
   * (SURVEY.md §2.4, §3.2).
@@ -119,23 +120,19 @@ final class Searcher(
           IndexStore.read(spark, IndexStore.Table.Docstore,
             IndexStore.docstorePath(root, s)),
           IndexStore.readPostingsOrEmpty(spark, root, s),
-          IndexStore.read(spark, IndexStore.Table.TermStats,
-            IndexStore.termStatsPath(root, s)),
           stats(s), IndexStore.readSegmentConfig(spark, root, s))))
         Await.result(Future.sequence(futs), 10.minutes).toMap ++ reusedTables
       } finally pool.shutdown()
     }
   }
 
-  private def unionSegs(tableOf: Searcher.SegTables => DataFrame): DataFrame =
-    snapshot.segments.map(s => tableOf(segTables(s))).reduce(_ unionByName _)
-
   /** Row store (S8): doc_id, url, warc_ts, lang, text, dl — UNCACHED
     * (parquet-backed; column pruning keeps narrow reads cheap). The
     * `text` column is O(corpus bytes) — the same class as posting blobs
     * under the no-blob-persist invariant — so it is never cached: page
     * fetches read it from parquet for ≤ k ids ([[doc]]). */
-  val docstore: DataFrame = unionSegs(_.docstore)
+  val docstore: DataFrame =
+    snapshot.segments.map(segTables(_).docstore).reduce(_ unionByName _)
 
   /** The cached per-query hot set (doc_id, url, warc_ts, lang, dl):
     * liveDocs derivation, filter clauses, and rank-time metadata all
@@ -272,16 +269,15 @@ final class Searcher(
   }
 
   /** Global per-term stats across segments (term_stats is per segment):
-    * df, ttf, and the term-level WAND bound inputs (max tf, min dl).
-    * Literal terms never read it — they look up the driver-side
-    * dictionaries ([[termIdfs]]); it serves the dictionary scans:
-    * expansion predicates, [[suggest]] and [[suggestSpelling]].
-    * Persisted lazily, on the first such scan. */
-  val termStats: DataFrame =
-    unionSegs(_.termStats)
+    * df, ttf, and the term-level WAND bound inputs (max tf, min dl). An
+    * inspection view, read afresh on each action and never cached: no
+    * engine path reads it — every term lookup and dictionary scan runs
+    * on the driver-side dictionaries ([[segmentDicts]]). */
+  lazy val termStats: DataFrame =
+    IndexStore.read(spark, IndexStore.Table.TermStats,
+        snapshot.segments.map(IndexStore.termStatsPath(root, _)): _*)
       .groupBy("term").agg(sum("df").as("df"), sum("ttf").as("ttf"),
         max("max_tf").as("max_tf"), min("min_dl").as("min_dl"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
 
   /** Collection statistics (S10): N, avgdl over all segments, summed
     * from the per-segment stats rows (exact Long sums: the order of the
@@ -422,16 +418,11 @@ final class Searcher(
     if (terms.isEmpty) Seq.empty
     else {
       val dicts = segmentDicts
+      // THE idf arithmetic (invariant 11: one definition)
       terms.distinct.sorted.flatMap(t => Searcher.TermDict.lookup(dicts, t)
-        .map { case (df, mt, md) => mkTermInfo(t, df, mt, md) })
+        .map { case (df, mt, md) => TermInfo(t, df,
+          math.log(1.0 + (docCount - df + 0.5) / (df + 0.5)), mt, md) })
     }
-
-  /** THE idf arithmetic (invariant 11: one definition — the dictionary
-    * lookups and the expansion probe must never diverge). */
-  private def mkTermInfo(term: String, df: Long, maxTf: Int,
-                         minDl: Int): TermInfo =
-    TermInfo(term, df,
-      math.log(1.0 + (docCount - df + 0.5) / (df + 0.5)), maxTf, minDl)
 
   /** Per-thread nesting depth: serving paths compose (searchWand's
     * small-df fallback calls [[search]], searchWithMeta wraps a search,
@@ -599,17 +590,18 @@ final class Searcher(
     * requirement id (`>= 0` ⇒ MUST requirement #id, counted once per doc
     * however many of its members match; `-1` ⇒ pure SHOULD):
     *  - `terms`: analyzed literal terms (term, weight, req)
-    *  - `exps`: dictionary-expansion predicates over `term` (pred,
-    *    weight, req), each capped at `maxExpansions` index terms
+    *  - `exps`: dictionary-expansion predicates over an index term
+    *    ([[Searcher.TermPred]]; pred, weight, req), each capped at
+    *    `maxExpansions` index terms
     *  - `phrases`: ordered analyzed phrase terms (ordered, slop, weight,
     *    req), matched by positional alignment
     *  - `notTerms` / `notExps` / `notPhrases`: the MUST_NOT doc sets */
   private final case class Resolved(
       terms: Seq[(String, Double, Int)] = Nil,
-      exps: Seq[(Column, Double, Int)] = Nil,
+      exps: Seq[(String => Boolean, Double, Int)] = Nil,
       phrases: Seq[(Seq[String], Int, Double, Int)] = Nil,
       notTerms: Seq[String] = Nil,
-      notExps: Seq[Column] = Nil,
+      notExps: Seq[String => Boolean] = Nil,
       notPhrases: Seq[(Seq[String], Int)] = Nil,
       reqCount: Int = 0)
 
@@ -627,20 +619,13 @@ final class Searcher(
       "a field-scoped clause reached a single-index executor — run " +
         "fielded queries through FieldedSearcher.searchQuery")
     val termSubs = ArrayBuffer.empty[(String, Double, Int)]
-    val expSubs = ArrayBuffer.empty[(Column, Double, Int)]
+    val expSubs = ArrayBuffer.empty[(String => Boolean, Double, Int)]
     val phraseSubs = ArrayBuffer.empty[(Seq[String], Int, Double, Int)]
     val notTerms = ArrayBuffer.empty[String]
-    val notExpPreds = ArrayBuffer.empty[Column]
+    val notExpPreds = ArrayBuffer.empty[String => Boolean]
     val notPhrases = ArrayBuffer.empty[(Seq[String], Int)]
     var nReq = 0
     def newReq(): Int = { nReq += 1; nReq - 1 }
-
-    def wildcardRegex(pat: String): String =
-      pat.map {
-        case '*' => ".*"
-        case '?' => "."
-        case ch => java.util.regex.Pattern.quote(ch.toString)
-      }.mkString
 
     /** A requirement id allocated on FIRST use: a MUST clause (or group)
       * whose entire analysis is empty must be DROPPED like the classic
@@ -656,7 +641,7 @@ final class Searcher(
       * provider `req` (ignored when `forNot`). */
     def addClause(c: Clause, w: Double, req: () => Int,
                   forNot: Boolean): Unit = {
-      def addExp(pred: Column): Unit =
+      def addExp(pred: String => Boolean): Unit =
         if (forNot) notExpPreds += pred else expSubs += ((pred, w, req()))
       c match {
         case TermQ(text, _, _) =>
@@ -672,39 +657,12 @@ final class Searcher(
             if (forNot) notPhrases += ((ordered, slop))
             else phraseSubs += ((ordered, slop, w, req()))
           }
-        case PrefixQ(p0, _, _) =>
-          val p = Tokenizer.foldCase(p0.trim)
-          if (p.nonEmpty) addExp(col("term").startsWith(p))
-        case WildcardQ(pat0, _, _) =>
-          // Lucene wildcard semantics (* any run, ? one char, all else
-          // literal) — rlike with quoted literals, NOT SQL LIKE, so a
-          // literal `_`/`%` in the pattern can never act as a wildcard
-          val p = Tokenizer.foldCase(pat0.trim)
-          if (p.nonEmpty)
-            addExp(col("term").rlike("^" + wildcardRegex(p) + "$"))
-        case FuzzyQ(t0, maxEdits, _, _) =>
-          require(maxEdits >= 0, s"maxEdits must be >= 0, got $maxEdits")
-          val t = Tokenizer.foldCase(t0.trim)
-          if (t.nonEmpty)
-            addExp(levenshtein(col("term"), lit(t)) <= maxEdits)
-        case RegexpQ(p0, _, _) =>
-          val p = p0.trim // never case-folded (regex syntax)
-          if (p.nonEmpty) addExp(col("term").rlike("^(?:" + p + ")$"))
-        case RangeQ(lo0, hi0, incLo, incHi, _, _) =>
-          // open-open = match-all dictionary (Lucene semantics); on any
-          // real dictionary the maxExpansions cap then fails LOUDLY
-          val lo = lo0.map(s => Tokenizer.foldCase(s.trim)).filter(_.nonEmpty)
-          val hi = hi0.map(s => Tokenizer.foldCase(s.trim)).filter(_.nonEmpty)
-          addExp((lo.map(l =>
-              if (incLo) col("term") >= l else col("term") > l) ++
-            hi.map(h =>
-              if (incHi) col("term") <= h else col("term") < h))
-            .reduceOption(_ && _).getOrElse(lit(true)))
         case GroupQ(_, _, _) =>
           sys.error("nested group reached the executor — parser bug")
         case FieldQ(_, _) =>
           sys.error("field clause inside a group reached the executor — " +
             "parser bug")
+        case e => Searcher.TermPred.of(e).foreach(addExp)
       }
     }
 
@@ -764,11 +722,10 @@ final class Searcher(
     * resolved to anything (a pure-NOT query matches nothing, like
     * Lucene).
     *
-    * Job shape (invariant 7): literal terms resolve in the driver-side
-    * term dictionaries ([[termIdfs]], no job); when the query has
-    * expansion predicates, ONE capped term_stats probe resolves them all
-    * together — the expansion-membership flags ride the same collect as
-    * extra boolean columns. Then one
+    * Job shape (invariant 7): every term resolves in the driver-side
+    * term dictionaries with no job — literal terms by lookup
+    * ([[termIdfs]]), expansion predicates by a scan for their matching
+    * terms ([[expansionTerms]]). Then one
     * `term IN` row-group-pruned posting scan covers all non-phrase subs
     * and one positional scan serves each phrase. Clause weights and
     * requirement keys travel in the per-query term frame — a lookup
@@ -789,37 +746,14 @@ final class Searcher(
     if (docCount == 0) return if (r.reqCount > 0) matchNoDocs else noRows
     val litTerms = (r.terms.map(_._1) ++ r.notTerms ++
       r.phrases.flatMap(_._1) ++ r.notPhrases.flatMap(_._1)).distinct
-    val expPreds = r.exps.map(_._1) ++ r.notExps
-    if (litTerms.isEmpty && expPreds.isEmpty) return noRows
+    if (litTerms.isEmpty && r.exps.isEmpty && r.notExps.isEmpty)
+      return noRows
 
-    // -- literal terms: dictionary lookups (no job); expansion
-    // predicates: ONE capped term_stats probe ---------------------------
-    val probeRows =
-      if (expPreds.isEmpty) Array.empty[Row]
-      else {
-        val cap = expPreds.size * maxExpansions
-        val rows = termStats.filter(expPreds.reduce(_ || _))
-          .select(Seq(col("term"), col("df"), col("max_tf"), col("min_dl")) ++
-            expPreds.zipWithIndex.map { case (p, j) => p.as(s"__c$j") }: _*)
-          .limit(cap + 1).collect() // +1 detects overflow
-        require(rows.length <= cap, s"query expands to > $cap " +
-          "index terms — narrow the expansions or raise maxExpansions")
-        rows
-      }
+    // -- every term resolves in the dictionaries (no job) ---------------
+    val expMatches = (r.exps.map(_._1) ++ r.notExps)
+      .map(expansionTerms(_, maxExpansions))
     val infoOf: Map[String, TermInfo] =
-      termIdfs(litTerms).map(i => i.term -> i).toMap ++ probeRows.map { row =>
-        val t = row.getString(0)
-        t -> mkTermInfo(t, row.getLong(1), row.getInt(2), row.getInt(3))
-      }
-    val expMatches: IndexedSeq[Seq[String]] = expPreds.indices.map { j =>
-      val ts = probeRows.iterator
-        .filter(row => !row.isNullAt(4 + j) && row.getBoolean(4 + j))
-        .map(_.getString(0)).toSeq.sorted
-      require(ts.size <= maxExpansions, s"expansion clause #$j matches " +
-        s"${ts.size} > maxExpansions=$maxExpansions index terms — " +
-        "narrow the pattern or raise the cap")
-      ts
-    }
+      termIdfs(litTerms ++ expMatches.flatten).map(i => i.term -> i).toMap
 
     // -- each positive sub's index-present member terms (weight, req);
     // a phrase with an absent term has no alignments, hence no members
@@ -841,7 +775,7 @@ final class Searcher(
 
     // -- MUST_NOT doc-set frames ----------------------------------------
     val notFrames = notDocSet((r.notTerms.distinct.filter(infoOf.contains) ++
-        (r.exps.size until expPreds.size).flatMap(expMatches)).distinct)
+        expMatches.drop(r.exps.size).flatten).distinct)
       .toSeq ++ r.notPhrases.flatMap { case (ordered, slop) =>
         val dts = ordered.distinct.sorted
         if (!dts.forall(infoOf.contains)) None // absent term: matches nothing
@@ -890,6 +824,21 @@ final class Searcher(
       .map(_.withColumn("contrib",
         if (unit) contribBase else col("weight") * contribBase))
     ParsedFrames(rows, r.reqCount, notFrames, matchNone = false, pivot)
+  }
+
+  /** The distinct index terms `pred` matches across the segment
+    * dictionaries, sorted: the MultiTermQuery rewrite's dictionary walk,
+    * on the driver (no job). More than `maxExpansions` terms fails
+    * LOUDLY (the Lucene maxClauseCount analog): silent truncation would
+    * silently change results. */
+  private[query] def expansionTerms(pred: String => Boolean,
+                                    maxExpansions: Int): Seq[String] = {
+    val ts = Searcher.TermDict.matching(segmentDicts, pred).zipWithIndex
+      .takeWhile(_._2 <= maxExpansions).map(_._1).toVector // one over: overflow
+    require(ts.size <= maxExpansions, "an expansion clause matches more " +
+      s"than maxExpansions=$maxExpansions index terms — narrow the " +
+      "pattern or raise the cap")
+    ts.sorted
   }
 
   /** Generalized boolean scoring over a parsed clause list
@@ -1469,9 +1418,10 @@ final class Searcher(
   /** Disjunctive ranked page over ONE multi-term clause: every index
     * term it expands to scores with its own idf (Lucene's
     * SCORING_BOOLEAN rewrite; the golden model pins the same contract).
-    * The expansion resolves in the executor's ONE term_stats probe,
-    * capped at `maxExpansions` (the Lucene maxClauseCount analog) with a
-    * LOUD failure: silent truncation would silently change results. */
+    * The expansion resolves on the driver, in a scan of the term
+    * dictionaries ([[expansionTerms]], no job), capped at
+    * `maxExpansions` (the Lucene maxClauseCount analog) with a LOUD
+    * failure: silent truncation would silently change results. */
   private def expansionPage(c: QueryParser.Clause, k: Int, start: Int,
                             filter: Option[Column],
                             maxExpansions: Int): DataFrame =
@@ -1500,16 +1450,16 @@ final class Searcher(
                      maxExpansions: Int = 1024): DataFrame = serving {
     val p = Tokenizer.foldCase(pattern.trim)
     if (p.isEmpty) return emptyPage
-    rankedPage(execute(Resolved(exps = Seq((col("term").like(p), 1.0, -1))),
-      filter, maxExpansions = maxExpansions), k, start)
+    rankedPage(execute(Resolved(exps = Seq((Searcher.TermPred.like(p), 1.0,
+      -1))), filter, maxExpansions = maxExpansions), k, start)
   }
 
   /** Term range query (TermRangeQuery analog, the remaining
     * MultiTermQuery sibling of prefix/wildcard/fuzzy): every index term
     * in the folded [lower, upper] interval — either bound open when
     * None, inclusivity per flag — scored as one disjunctive
-    * BooleanQuery. Bounds compare binary-lexicographically (the
-    * dictionary's own sort order). */
+    * BooleanQuery. Bounds compare in UTF-8 byte order (Spark's string
+    * order, [[Searcher.Utf8Ordering]]). */
   def searchTermRange(lower: Option[String], upper: Option[String], k: Int,
                       start: Int = 0, includeLower: Boolean = true,
                       includeUpper: Boolean = true,
@@ -1535,10 +1485,11 @@ final class Searcher(
 
   /** Fuzzy query (FuzzyQuery analog): index terms within `maxEdits`
     * Levenshtein distance of the folded term (the exact term included
-    * at distance 0), scored disjunctively. The distance runs as the
-    * codegen'd built-in `levenshtein` over the cached dictionary —
-    * Lucene guides the walk with an automaton; the dictionary scan is
-    * the Spark-native equivalent of the same expansion. */
+    * at distance 0), scored disjunctively. The distance is Spark's own
+    * `levenshtein` primitive, run on the driver over the term
+    * dictionaries behind a code-point length band — Lucene guides the
+    * walk with an automaton; the dictionary scan reaches the same
+    * expansion. */
   def searchFuzzy(term: String, k: Int, maxEdits: Int = 1, start: Int = 0,
                   filter: Option[Column] = None,
                   maxExpansions: Int = 1024): DataFrame = serving {
@@ -1770,56 +1721,43 @@ final class Searcher(
 
   /** Autocomplete (the AnalyzingSuggester analog): dictionary terms
     * starting with the folded prefix, weighted by document frequency
-    * (df desc, term asc ties) — served straight from the cached
-    * term_stats frame, one tiny job, no posting decode. */
+    * (df desc, term asc ties, in UTF-8 order) — ranked on the driver
+    * from the term dictionaries; the result is a driver-local frame, so
+    * collecting it runs no job. */
   def suggest(prefix: String, k: Int): DataFrame = serving {
-    val p = Tokenizer.foldCase(prefix.trim)
-    if (p.isEmpty)
-      spark.emptyDataset[(String, Long)].toDF("term", "df")
-    else {
-      // range form of the prefix predicate: [p, successor(p)) where the
-      // successor increments p's last code point — every p-prefixed term
-      // falls inside (code-point order == UTF-8 binary order, Spark's
-      // string comparison), INCLUDING supplementary-plane suffixes a
-      // naive `p + U+FFFF` bound would wrongly exclude. Identical match
-      // set to startsWith (kept as the authoritative predicate), but the
-      // RANGE prunes storage: in-memory cache batches skip on their term
-      // min/max stats, and a cold open pushes it into the term-sorted
-      // parquet for row-group pruning — the web-scale-vocabulary fix
-      // from the round-5 verdict (#2).
-      val ranged = Searcher.prefixSuccessor(p) match {
-        case Some(hi) => termStats.where(
-          col("term") >= p && col("term") < hi && col("term").startsWith(p))
-        case None => termStats.where(
-          col("term") >= p && col("term").startsWith(p))
-      }
-      ranged.orderBy(col("df").desc, col("term").asc)
-        .select("term", "df").limit(k)
-    }
+    Searcher.TermPred.of(QueryParser.PrefixQ(prefix, QueryParser.Should, 1.0))
+      .toSeq.flatMap(termDfs)
+      .sortBy { case (t, df) => (-df, t) }(
+        Ordering.Tuple2(Ordering.Long, Searcher.Utf8Ordering))
+      .take(k).toDF("term", "df")
   }
 
   /** Spell correction (the DirectSpellChecker analog): dictionary terms
     * within `maxEdits` Levenshtein edits of the folded input (the input
     * itself excluded), ranked the way Lucene's comparator does — fewer
     * edits first, then higher df, then term — so the most popular
-    * closest correction wins. Runs on the cached term_stats frame with
-    * Spark's codegen'd levenshtein. */
+    * closest correction wins. Ranked on the driver from the term
+    * dictionaries with Spark's own `levenshtein` primitive; the result
+    * is a driver-local frame, so collecting it runs no job. */
   def suggestSpelling(term: String, k: Int, maxEdits: Int = 2): DataFrame =
     serving {
       val t = Tokenizer.foldCase(term.trim)
-      if (t.isEmpty)
-        spark.emptyDataset[(String, Int, Long)].toDF("term", "dist", "df")
-      else termStats
-        // length-band prefilter: |len(a) − len(b)| ≤ edit distance, so
-        // the band is implied by `dist <= maxEdits` — identical results,
-        // but the O(n·m) levenshtein runs only on banded rows instead of
-        // the whole dictionary (round-5 verdict #2 / ADVICE item)
-        .where(abs(length(col("term")) - lit(t.length)) <= maxEdits)
-        .withColumn("dist", levenshtein(col("term"), lit(t)))
-        .where(col("dist") <= maxEdits && col("term") =!= t)
-        .orderBy(col("dist").asc, col("df").desc, col("term").asc)
-        .select("term", "dist", "df").limit(k)
+      val input = UTF8String.fromString(t)
+      val self = input.toString
+      (if (t.isEmpty) Nil else termDfs(Searcher.TermPred.fuzzy(t, maxEdits)))
+        .collect { case (c, df) if c != self =>
+          (c, UTF8String.fromString(c).levenshteinDistance(input), df) }
+        .sortBy { case (c, d, df) => (d, -df, c) }(
+          Ordering.Tuple3(Ordering.Int, Ordering.Long, Searcher.Utf8Ordering))
+        .take(k).toDF("term", "dist", "df")
     }
+
+  /** The dictionary terms `pred` matches, each with its Σ df. */
+  private def termDfs(pred: String => Boolean): Seq[(String, Long)] = {
+    val dicts = segmentDicts
+    Searcher.TermDict.matching(dicts, pred)
+      .map(t => t -> Searcher.TermDict.lookup(dicts, t).get._1).toSeq
+  }
 
   // ---- searchable dynamic JSON subfields (reference addJson fields,
   //      Indexer.java:639-747; discovery Searcher.java:397-477) --------
@@ -2035,7 +1973,6 @@ final class Searcher(
           Thread.currentThread().interrupt(); interrupted = true
         }
       docstoreNarrow.unpersist()
-      termStats.unpersist()
       deadDocs.unpersist()
     }
 }
@@ -2056,22 +1993,6 @@ object Searcher {
         serving
       })
     }
-
-  /** Smallest string strictly greater than EVERY string with prefix `p`
-    * under code-point (== UTF-8 binary == Spark string) ordering:
-    * increment p's last code point, skipping the surrogate gap. None
-    * when p ends in U+10FFFF (no finite successor — callers drop the
-    * upper bound). */
-  private[query] def prefixSuccessor(p: String): Option[String] = {
-    val cp = p.codePointBefore(p.length)
-    if (cp >= 0x10FFFF) None
-    else {
-      var next = cp + 1
-      if (next >= 0xD800 && next <= 0xDFFF) next = 0xE000
-      Some(p.substring(0, p.length - Character.charCount(cp)) +
-        new String(Character.toChars(next)))
-    }
-  }
 
   /** A replayable serving request for warmup capture/replay (the
     * reference's warmup-query record: query + mode + sort + paging,
@@ -2106,12 +2027,12 @@ object Searcher {
     }
   }
 
-  /** One segment's relations (docstore/postings/term_stats), its stats
-    * row and config, created once per open and shared across queries —
-    * and, via [[Searcher.reopen]], across searcher generations (segment
-    * dirs are immutable once their snapshot commits). */
+  /** One segment's relations (docstore/postings), its stats row and
+    * config, created once per open and shared across queries — and, via
+    * [[Searcher.reopen]], across searcher generations (segment dirs are
+    * immutable once their snapshot commits). */
   private[query] final case class SegTables(
-      docstore: DataFrame, postings: DataFrame, termStats: DataFrame,
+      docstore: DataFrame, postings: DataFrame,
       stats: IndexStore.SegmentStats, config: IndexStore.SegmentConfig)
 
   /** One segment's term dictionary, held on the driver (the analog of
@@ -2120,7 +2041,7 @@ object Searcher {
     * sorted term array with parallel primitive columns, binary-searched.
     * Immutable, like the segment directory it was read from; about the
     * term strings plus 16 bytes a term. */
-  private[query] final class TermDict(terms: Array[String],
+  private[query] final class TermDict(private val terms: Array[String],
                                       private val df: Array[Long],
                                       private val maxTf: Array[Int],
                                       private val minDl: Array[Int]) {
@@ -2150,6 +2071,12 @@ object Searcher {
       }
       if (hit) Some((df, maxTf, minDl)) else None
     }
+
+    /** The distinct terms of `dicts` that satisfy `pred`, lazily, in
+      * the order the scan meets them. */
+    def matching(dicts: Seq[TermDict],
+                 pred: String => Boolean): Iterator[String] =
+      dicts.iterator.flatMap(_.terms).filter(pred).distinct
 
     /** The dictionaries of `segs` from ONE read of their term_stats
       * tables (one job however many segments); each row is attributed to
@@ -2181,6 +2108,73 @@ object Searcher {
         seg -> new TermDict(terms, rs.map(_.getLong(2)), rs.map(_.getInt(3)),
           rs.map(_.getInt(4)))
       }.toMap
+    }
+  }
+
+  /** Dictionary-expansion predicates over one index term. Each calls
+    * the primitive its Spark expression calls — StartsWith `startsWith`,
+    * RLike `Pattern.compile(p).matcher(t).find()`, Like
+    * `escapeLikeRegex(p, '\\')` + `matches()`, Levenshtein
+    * `UTF8String.levenshteinDistance`, string comparison UTF-8 byte order
+    * ([[Utf8Ordering]]) — on the value a Spark string literal holds
+    * ([[asLiteral]]), so a dictionary scan matches exactly the terms a
+    * `term_stats` filter by that expression would. */
+  private[query] object TermPred {
+    /** The UTF-8 round trip a Spark literal takes: a lone surrogate
+      * becomes `?` (index terms, read back from UTF-8, hold none). */
+    private def asLiteral(s: String): String =
+      UTF8String.fromString(s).toString
+
+    private def regex(p: String): String => Boolean = {
+      val pat = java.util.regex.Pattern.compile(asLiteral(p))
+      pat.matcher(_).find()
+    }
+
+    def like(p: String): String => Boolean = {
+      val pat = java.util.regex.Pattern.compile(org.apache.spark.sql
+        .catalyst.util.StringUtils.escapeLikeRegex(asLiteral(p), '\\'))
+      pat.matcher(_).matches()
+    }
+
+    /** The code-point length band is implied by the distance; it only
+      * skips the O(n·m) distance for terms that cannot match. */
+    def fuzzy(t: String, maxEdits: Int): String => Boolean = {
+      val lit = UTF8String.fromString(t)
+      term => math.abs(term.codePointCount(0, term.length) - lit.numChars) <=
+        maxEdits && UTF8String.fromString(term).levenshteinDistance(lit) <= maxEdits
+    }
+
+    /** An expansion clause's predicate, its pattern folded (a regexp's
+      * is not: folding would corrupt regex syntax); None when the
+      * pattern is blank. Open-open range = the whole dictionary (Lucene
+      * semantics); on any real dictionary the maxExpansions cap then
+      * fails LOUDLY. */
+    def of(c: QueryParser.Clause): Option[String => Boolean] = {
+      import QueryParser._
+      def folded(s: String): Option[String] =
+        Some(Tokenizer.foldCase(s.trim)).filter(_.nonEmpty)
+      c match {
+        case PrefixQ(p, _, _) =>
+          folded(p).map(asLiteral).map(lit => _.startsWith(lit))
+        case WildcardQ(p, _, _) =>
+          // Lucene wildcard semantics (* any run, ? one char, all else
+          // literal) — a regex with quoted literals, NOT SQL LIKE, so a
+          // literal `_`/`%` in the pattern can never act as a wildcard
+          folded(p).map(w => regex("^" + w.map(ch => if (ch == '*') ".*"
+            else if (ch == '?') "."
+            else java.util.regex.Pattern.quote(ch.toString)).mkString + "$"))
+        case FuzzyQ(t, maxEdits, _, _) =>
+          require(maxEdits >= 0, s"maxEdits must be >= 0, got $maxEdits")
+          folded(t).map(fuzzy(_, maxEdits))
+        case RegexpQ(p, _, _) =>
+          Some(p.trim).filter(_.nonEmpty).map(r => regex("^(?:" + r + ")$"))
+        case RangeQ(lo0, hi0, incLo, incHi, _, _) =>
+          val (lo, hi, o) = (lo0.flatMap(folded), hi0.flatMap(folded),
+            Utf8Ordering)
+          Some(t => lo.forall(l => if (incLo) o.gteq(t, l) else o.gt(t, l)) &&
+            hi.forall(h => if (incHi) o.lteq(t, h) else o.lt(t, h)))
+        case other => sys.error(s"not an expansion clause: $other")
+      }
     }
   }
 

@@ -163,6 +163,28 @@ class GroupingSuggestSpec extends AnyFunSuite with SparkTestBase {
     } finally s.close()
   }
 
+  test("suggestSpelling's length band counts code points, as levenshtein " +
+    "does") {
+    val sp = spark
+    import sp.implicits._
+    val root = tmpDir("graft-spellcp-")
+    val pages = Seq("𠀀A SPARK", "SPARK INDEX").zipWithIndex.map {
+      case (t, i) => (s"https://s/$i",
+        new java.sql.Timestamp(1767225600000L + i * 1000L),
+        null: Array[Byte], t, "en")
+    }.toDF("url", "warc_ts", "html", "text", "lang")
+    IndexBuilder.buildFull(spark, pages, SynonymDict.empty, root,
+      IndexBuilder.IndexConfig(numParts = 2, rangeParts = 1))
+    val s = new Searcher(spark, root, SynonymDict.empty)
+    try {
+      // '𠀀AB' is 3 code points (4 UTF-16 units); Spark's levenshtein to
+      // the indexed '𠀀A' is 1, one deletion
+      val got = s.suggestSpelling("𠀀ab", 5, maxEdits = 1).collect()
+        .map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq
+      assert(got == Seq(("𠀀A", 1, 1L)))
+    } finally s.close()
+  }
+
   test("rangeCounts and drillSideways unit semantics: inclusivity, " +
     "overlap, zero ranges, undrilled dims") {
     val sp = spark

@@ -1,8 +1,8 @@
 package graft.query
 
 import graft.SparkTestBase
-import graft.analysis.SynonymDict
-import graft.index.{IndexBuilder, IndexStore, WebtextGen}
+import graft.analysis.{SynonymDict, Tokenizer}
+import graft.index.{FieldedIndex, IndexBuilder, IndexStore, WebtextGen}
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
@@ -27,6 +27,17 @@ class JobCountSpec extends AnyFunSuite with SparkTestBase {
       IndexBuilder.IndexConfig(numParts = 8, rangeParts = 4, saltDf = 200,
         saltFanout = 4, indexPositions = true), "jobs")
     new Searcher(spark, dir, dict)
+  }
+
+  /** Two fields (text, url) over one corpus. */
+  private lazy val fielded: FieldedIndex.FieldedSearcher = {
+    val dir = tmpDir("graft-jobs-fielded-")
+    val fields = Seq(FieldedIndex.FieldSpec("text", col("text")),
+      FieldedIndex.FieldSpec("url", col("url"),
+        analyzer = Tokenizer.Keyword))
+    FieldedIndex.buildFull(spark, WebtextGen.df(spark, 43L, 300), fields,
+      dir, IndexBuilder.IndexConfig(numParts = 4, rangeParts = 2))
+    new FieldedIndex.FieldedSearcher(spark, dir, fields)
   }
 
   private object Jobs extends SparkListener {
@@ -55,10 +66,12 @@ class JobCountSpec extends AnyFunSuite with SparkTestBase {
     val K = 10
     val en = Some(col("lang") === "en")
     // exact paths: the page collect (warm pages fetch no stored
-    // fields; literal terms are dictionary lookups, no job), plus one
-    // broadcast per NOT set / filter side; an expansion probe is a
-    // limited collect on term_stats (executeTake: 2 jobs here).
-    // Per-query term frames are lookups and start no job. searchWand's
+    // fields; every term — literal or expanded — resolves in the
+    // driver-side dictionaries, no job), plus one broadcast per NOT set /
+    // filter side, so an expansion query costs what a literal `search`
+    // costs. Per-query term frames are lookups and start no job. The
+    // suggesters rank on the driver and return a driver-local frame, so
+    // their collect runs none. searchWand's
     // exact fallbacks (below wandMinDf, restricted single term) cost
     // what `search` costs; its WAND pipeline is candidates +
     // rescore/page (AND) and θ seed + the candidates' distinct().take
@@ -73,7 +86,18 @@ class JobCountSpec extends AnyFunSuite with SparkTestBase {
         filter = en), 2),
       "searchBoolean" -> (() => searcher.searchBoolean("spark",
         "index fast", K), 1),
-      "searchPrefix" -> (() => searcher.searchPrefix("IND", K), 3),
+      "searchPrefix" -> (() => searcher.searchPrefix("IND", K), 1),
+      "searchFuzzy" -> (() => searcher.searchFuzzy("INDEX", K), 1),
+      "searchRegexp" -> (() => searcher.searchRegexp(".*NDE.*", K), 1),
+      "searchTermRange" -> (() => searcher.searchTermRange(Some("IN"),
+        Some("IZ"), K), 1),
+      "searchWildcard" -> (() => searcher.searchWildcard("%NDE%", K), 1),
+      "FieldedSearcher.searchQuery literal" -> (() => fielded.searchQuery(
+        "text:index url:example", "text", K), 1),
+      "FieldedSearcher.searchQuery prefix" -> (() => fielded.searchQuery(
+        "text:ind* url:exa*", "text", K), 1),
+      "suggest" -> (() => searcher.suggest("IN", K), 0),
+      "suggestSpelling" -> (() => searcher.suggestSpelling("INDEKS", K), 0),
       "searchPhrase" -> (() => searcher.searchPhrase("spark index", K), 1),
       "searchQuery" -> (() => searcher.searchQuery("+spark index -fast", K),
         2),
@@ -115,6 +139,12 @@ class JobCountSpec extends AnyFunSuite with SparkTestBase {
     assert(warmJobs(searcher.score("spark index data")) == 0)
     assert(warmJobs(searcher.scoreParsed(
       QueryParser.parse("spark +index -data"))) == 0)
+  }
+
+  test("an expansion query plans without a Spark job") {
+    // the expansions scan the driver's term dictionaries: no probe job
+    assert(warmJobs(searcher.scoreParsed(QueryParser.parse(
+      "ind* spork~1 /.*ARK/ [DATA TO INDEX] -fas*"))) == 0)
   }
 
   test("AND and OR score plans fold on the pivot shape (no collect_list)") {
@@ -228,6 +258,7 @@ class JobCountSpec extends AnyFunSuite with SparkTestBase {
   override def afterAll(): Unit = {
     spark.sparkContext.removeSparkListener(Jobs)
     searcher.close()
+    fielded.close()
     super.afterAll()
   }
 }
