@@ -128,8 +128,8 @@ object Main {
 
       case "merge" =>
         // posting-level compaction by default (O(posting bytes)); falls
-        // back to the rebuild merge on mixed-layout segments or huge
-        // dead sets; --rebuild forces the rebuild path; --tier-fanin N
+        // back to the rebuild merge on mixed-layout segments; --rebuild
+        // forces the rebuild path; --tier-fanin N
         // runs tiered passes (N smallest first) for many-segment backlogs
         val rep =
           if (opt.contains("rebuild"))

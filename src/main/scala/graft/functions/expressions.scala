@@ -317,6 +317,30 @@ case class LookupRowsExpr(child: Expression, valueType: StructType,
     copy(child = newChild)
 }
 
+/** `in_bitmap(id BIGINT) → BOOLEAN` — is `id` in a driver-side id
+  * bitmap (the [[graft.index.LiveDocs]] dead set)? The bitmap is a
+  * plan-embedded reference object, so the generated code is the same
+  * whatever set it holds, and no join or broadcast job runs. */
+case class InBitmapExpr(child: Expression,
+    bitmap: org.roaringbitmap.longlong.Roaring64NavigableMap)
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(LongType)
+  override def dataType: DataType = BooleanType
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "in_bitmap"
+  // the bitmap can hold millions of ids: plans show nothing of it
+  override protected def stringArgs: Iterator[Any] = Iterator(child)
+  override protected def nullSafeEval(input: Any): Any =
+    bitmap.contains(input.asInstanceOf[Long])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("bitmap", bitmap,
+      classOf[org.roaringbitmap.longlong.Roaring64NavigableMap].getName)
+    defineCodeGen(ctx, ev, c => s"$ref.contains($c)")
+  }
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
 /** `vec_lsh_buckets(v ARRAY<DOUBLE>) → ARRAY<BIGINT>` — one sign-LSH
   * bucket per seed with the seeded hyperplanes as a plan-embedded
   * reference object; same arithmetic as the interpreted
@@ -425,6 +449,9 @@ object graftFunctions {
   def lookup_rows(key: Column, valueType: StructType,
                   table: Map[String, Seq[org.apache.spark.sql.Row]]): Column =
     col(LookupRowsExpr(expr(key), valueType, table))
+  def in_bitmap(id: Column,
+                bitmap: org.roaringbitmap.longlong.Roaring64NavigableMap): Column =
+    col(InBitmapExpr(expr(id), bitmap))
 
   /** Register for `spark.sql` use. */
   def register(spark: SparkSession): Unit = {

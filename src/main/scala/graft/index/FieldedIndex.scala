@@ -273,26 +273,21 @@ object FieldedIndex {
     * keeps original ids; rebuild re-derives ids from the url total order
     * over live winners, which is identical across fields (same
     * (doc_id, url, warc_ts) triples, same tombstones ⇒ same winners).
-    * The dead-id broadcast gate inside mergeCompact also decides
-    * identically per field for the same reason. */
+    * The dead set ([[LiveDocs]]) is the same on every field for the same
+    * reason, and no dead-set size can change the path. */
   def mergeCompact(spark: SparkSession, root: String, fields: Seq[FieldSpec],
-                   cfg: IndexBuilder.IndexConfig = IndexBuilder.IndexConfig(),
-                   maxBroadcastDeadIds: Long = 4000000L)
+                   cfg: IndexBuilder.IndexConfig = IndexBuilder.IndexConfig())
       : Map[String, IndexBuilder.BuildReport] = {
     require(fields.nonEmpty, "fielded compact needs at least one field")
     val snaps = snapshotsInLockstep(spark, root, fields)
-    // the SAME gate mergeCompactImpl applies per root — shared helper so
-    // the all-fields decision can never diverge from the per-root one
-    val uniformAll = fields.forall { f =>
-      val fr = fieldRoot(root, f.name)
-      IndexBuilder.layoutUniform(snaps(f.name).segments.map(s =>
-        IndexStore.readSegmentConfig(spark, fr, s)))
-    }
+    // the SAME gate mergeCompact applies per root — shared helper so the
+    // all-fields decision can never diverge from the per-root one
+    val uniformAll = fields.forall(f => IndexBuilder.layoutUniform(spark,
+      fieldRoot(root, f.name), snaps(f.name).segments))
     perFieldParallel(fields) { (f, _) =>
       val fr = fieldRoot(root, f.name)
       val fcfg = cfg.copy(analyzer = f.analyzer)
-      if (uniformAll)
-        IndexBuilder.mergeCompact(spark, fr, f.dict, fcfg, maxBroadcastDeadIds)
+      if (uniformAll) IndexBuilder.mergeCompact(spark, fr, f.dict, fcfg)
       else IndexBuilder.merge(spark, fr, f.dict, fcfg)
     }
   }

@@ -10,6 +10,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.roaringbitmap.longlong.Roaring64NavigableMap
 
 /** Distributed inverted-index build (SURVEY.md §3.1, §7 steps 3-5).
   *
@@ -196,6 +197,19 @@ object IndexBuilder {
   final case class BuildReport(segment: String, docCount: Long, termCount: Long,
                                postingRows: Long, wallMs: Long,
                                phases: Seq[(String, Long)] = Seq.empty)
+
+  /** A build's or merge's phase timings: each `lap` records the ms since
+    * the previous lap (or since construction) under its name. */
+  private final class Laps(prior: Seq[(String, Long)] = Nil) {
+    private val phases = Seq.newBuilder[(String, Long)] ++= prior
+    private var prev = System.nanoTime()
+    def lap(name: String): Unit = {
+      val now = System.nanoTime()
+      phases += name -> (now - prev) / 1000000
+      prev = now
+    }
+    def result: Seq[(String, Long)] = phases.result()
+  }
 
   /** Growable (docId, tf, dl[, positions]) buffer — the per-(term, shard)
     * RAM posting buffer of the map-side build (the analog of Lucene's
@@ -456,7 +470,8 @@ object IndexBuilder {
   private[index] def mergeBlobsStreaming(blobs: Seq[Array[Byte]],
                                          withPos: Boolean, blockSize: Int,
                                          version: Int, maxPostings: Int,
-                                         dead: Array[Long] = Array.empty[Long])
+                                         dead: Roaring64NavigableMap =
+                                           new Roaring64NavigableMap())
       : Seq[(Array[Byte], Int, Int, Int)] = {
     require(maxPostings > 0, s"maxBlobPostings must be positive: $maxPostings")
     val cursors = blobs.iterator
@@ -495,7 +510,7 @@ object IndexBuilder {
     while (hn > 0) {
       val top = heap(0)
       val cur = cursors(top)
-      if (dead.isEmpty || java.util.Arrays.binarySearch(dead, cur.docId) < 0) {
+      if (!dead.contains(cur.docId)) {
         if (be == null)
           be = new VarByte.BlockEncoder(blockSize, version, withPos)
         be.append(cur.docId, cur.tf, cur.dl, cur.positions)
@@ -515,13 +530,13 @@ object IndexBuilder {
     out.result()
   }
 
-  /** Header-only conservative check: could any id of `dead` (sorted)
+  /** Header-only conservative check: could any id of `dead` (ranked)
     * coincide with a posting in this blob? Block docId ranges only —
     * `false` GUARANTEES the blob is untouched (licensing the byte
     * passthrough); `true` may be a near-miss (the posting then merely
     * loses the passthrough and takes the streaming merge). */
   private[index] def blobTouchesDead(blob: Array[Byte],
-                                     dead: Array[Long]): Boolean = {
+                                     dead: Roaring64NavigableMap): Boolean = {
     if (dead.isEmpty) return false
     var touched = false
     VarByte.scan(blob) { h =>
@@ -529,9 +544,7 @@ object IndexBuilder {
         // conservative range [prevBlockLast, lastDocId]: including the
         // boundary id (really the PREVIOUS block's last) only ever
         // flags extra, never misses
-        var lo = java.util.Arrays.binarySearch(dead, h.prevBlockLast)
-        if (lo < 0) lo = -lo - 1
-        if (lo < dead.length && dead(lo) <= h.lastDocId) touched = true
+        touched = LiveDocs.anyIn(dead, h.prevBlockLast, h.lastDocId)
       }
       false
     }((_, _, _) => ())
@@ -742,14 +755,8 @@ object IndexBuilder {
                               startNanos: Long = -1L): BuildReport = {
     import spark.implicits._
     val t0 = if (startNanos > 0) startNanos else System.nanoTime()
-    val phases = Seq.newBuilder[(String, Long)]
-    phases ++= prePhases
-    var tPrev = System.nanoTime()
-    def lap(name: String): Unit = {
-      val now = System.nanoTime()
-      phases += name -> (now - tPrev) / 1000000
-      tPrev = now
-    }
+    val laps = new Laps(prePhases)
+    import laps.lap
 
     // docstore: row store for stored-field fetch (S8) + dl for BM25 —
     // written in ONE analysis pass and immediately becoming the build's
@@ -1151,7 +1158,7 @@ object IndexBuilder {
     val postingRows = manifestRows.map(_.rows).sum // no extra job
     BuildReport(seg, docCount, termCount, postingRows,
       (System.nanoTime() - t0) / 1000000,
-      phases.result())
+      laps.result)
   }
 
   /** FULL build (reference `OpenMode.CREATE`, Indexer.java:199-204): one
@@ -1184,8 +1191,8 @@ object IndexBuilder {
 
   /** THE latest-wins order per url: newest `warc_ts` first, ties to the
     * later segment (higher doc_id). Every superseded-id batch
-    * ([[supersededByAppend]]) and the rebuild [[merge]] rank by it, so
-    * the dead sidecar the Searcher serves and the rebuilt segment agree. */
+    * ([[supersededByAppend]]) ranks by it, so the batches together name
+    * every loser, the set [[LiveDocs]] serves and every merge drops. */
   private val latestFirst = Window.partitionBy("url")
     .orderBy(col("warc_ts").desc, col("doc_id").desc)
 
@@ -1331,8 +1338,7 @@ object IndexBuilder {
     * docstore, which preserves the byte-identical-text invariant because
     * docstore.text IS the extracted text. */
   def merge(spark: SparkSession, root: String, dict: SynonymDict,
-            cfg: IndexConfig = IndexConfig(),
-            maxBroadcastTombstones: Long = 2000000L): BuildReport = {
+            cfg: IndexConfig = IndexConfig()): BuildReport = {
     val snap = IndexStore.readLatestSnapshot(spark, root)
       .getOrElse(sys.error(s"no snapshot at $root"))
     // identity knobs (analyzer / positions / facets) are properties of
@@ -1356,25 +1362,11 @@ object IndexBuilder {
       formatVersion = (cfg.formatVersion +: stored.map(_.formatVersion)
         .filter(graft.codec.VarByte.SupportedVersions.contains)).max,
       buildFacets = false, facetSpecs = Nil)
-    val all = IndexStore.read(spark, IndexStore.Table.Docstore,
-      snap.segments.map(IndexStore.docstorePath(root, _)): _*)
-    val live =
-      IndexStore.readBatches(spark, root, "tombstones", snap.tombstones) match {
-        case None => all
-        case Some(tombs) =>
-          // size-gated like the Searcher's deadDocs: a mass-deletion
-          // tombstone table must anti-join via shuffle, not broadcast
-          // (count from the write-time sidecar — no job)
-          val n = IndexStore.sidecarCount(spark, root, "tombstones",
-            snap.tombstones)
-          val side =
-            if (n <= maxBroadcastTombstones) broadcast(tombs)
-            else tombs
-          all.join(side, Seq("url"), "left_anti")
-      }
-    // cross-segment latest-wins, the same rule the dead sidecar records
-    val winners = live.withColumn("__rn", row_number().over(latestFirst))
-      .filter(col("__rn") === 1).drop("__rn")
+    // the live docs: cross-segment latest-wins winners whose url no
+    // tombstone names — the complement of the snapshot's [[LiveDocs]]
+    val winners = IndexStore.read(spark, IndexStore.Table.Docstore,
+        snap.segments.map(IndexStore.docstorePath(root, _)): _*)
+      .where(!in_bitmap(col("doc_id"), LiveDocs.load(spark, root, snap).dead))
     // docstore.text is already extracted; present it in the pages shape
     val pages = winners.select(col("url"), col("warc_ts"), lit(null).cast("binary").as("html"),
       col("text"), col("lang"))
@@ -1438,18 +1430,14 @@ object IndexBuilder {
     *
     * Falls back to the rebuild [[merge]] when segments disagree on
     * layout/identity knobs (numParts, saltFanout, positions, analyzer —
-    * their posting spaces aren't unionable) or when the dead-id set
-    * exceeds `maxBroadcastDeadIds` (the per-task membership filter
-    * broadcasts the sorted id array; past the gate a rebuild's shuffle
-    * anti-joins are the scale-safe plan). */
+    * their posting spaces aren't unionable). */
   def mergeCompact(spark: SparkSession, root: String, dict: SynonymDict,
-                   cfg: IndexConfig = IndexConfig(),
-                   maxBroadcastDeadIds: Long = 4000000L): BuildReport = {
+                   cfg: IndexConfig = IndexConfig()): BuildReport = {
     val snap = IndexStore.readLatestSnapshot(spark, root)
       .getOrElse(sys.error(s"no snapshot at $root"))
-    mergeCompactImpl(spark, root, snap, snap.segments,
-      clearTombstones = true, cfg, maxBroadcastDeadIds)
-      .getOrElse(merge(spark, root, dict, cfg))
+    if (!layoutUniform(spark, root, snap.segments)) merge(spark, root, dict, cfg)
+    else mergeCompactImpl(spark, root, snap, snap.segments,
+      clearTombstones = true, cfg, LiveDocs.load(spark, root, snap).dead)
   }
 
   /** Tiered compaction for MANY segments (the Lucene TieredMergePolicy
@@ -1464,55 +1452,47 @@ object IndexBuilder {
     * until the final pass: each tier pass already drops its segments'
     * dead rows (the dead set is computed GLOBALLY — superseded versions
     * and tombstoned urls are filtered wherever they sit), and keeping
-    * the batch until the end makes re-application a harmless no-op. */
+    * the batch until the end makes re-application a harmless no-op.
+    * Mixed layouts go straight to the rebuild [[merge]]. */
   def mergeCompactTiered(spark: SparkSession, root: String,
                          dict: SynonymDict,
                          cfg: IndexConfig = IndexConfig(),
-                         tierFanin: Int = 10,
-                         maxBroadcastDeadIds: Long = 4000000L)
-      : Seq[BuildReport] = {
+                         tierFanin: Int = 10): Seq[BuildReport] = {
     require(tierFanin >= 2, s"tierFanin must be >= 2, got $tierFanin")
-    val out = Seq.newBuilder[BuildReport]
     var snap = IndexStore.readLatestSnapshot(spark, root)
       .getOrElse(sys.error(s"no snapshot at $root"))
-    // ONE dead scan for the whole schedule: liveness is invariant across
-    // passes (a pass drops dead rows; it neither creates nor revives
-    // deads), so every pass — including the final one — reuses this set.
-    // Ids whose rows were dropped by an earlier pass match nothing.
-    var ok = true
-    val dead0 = globalDeadIds(spark, root, snap, maxBroadcastDeadIds)
-    if (dead0.isEmpty) ok = false // past the broadcast gate ⇒ rebuild
+    if (!layoutUniform(spark, root, snap.segments))
+      return Seq(merge(spark, root, dict, cfg))
+    // ONE dead-set load for the whole schedule: liveness is invariant
+    // across passes (a pass drops dead rows; it neither creates nor
+    // revives deads), so every pass — including the final one — reuses
+    // this set. Ids whose rows an earlier pass dropped match nothing.
+    val dead = LiveDocs.load(spark, root, snap).dead
     // segment sizes read ONCE (one read of every stats row), then
     // maintained from each pass's BuildReport — re-reading per pass would
     // issue O(passes) tiny driver jobs just for tier selection
     val sizes = scala.collection.mutable.Map.empty[String, Long]
-    if (ok) IndexStore.readSegmentStats(spark, root, snap.segments)
+    IndexStore.readSegmentStats(spark, root, snap.segments)
       .foreach { case (s, st) => sizes(s) = st.docCount }
-    while (ok && snap.segments.size > tierFanin) {
+    val out = Seq.newBuilder[BuildReport]
+    while (snap.segments.size > tierFanin) {
       val tier = snap.segments.map(s => s -> sizes.getOrElse(s, 0L))
         .sortBy { case (s, n) => (n, s) }
         .take(tierFanin).map(_._1)
-      mergeCompactImpl(spark, root, snap, tier, clearTombstones = false,
-        cfg, maxBroadcastDeadIds, precomputedDead = dead0) match {
-        case Some(r) =>
-          out += r
-          tier.foreach(sizes.remove)
-          sizes(r.segment) = r.docCount
-        case None => ok = false // mixed layouts ⇒ one rebuild collapses all
-      }
+      val r = mergeCompactImpl(spark, root, snap, tier,
+        clearTombstones = false, cfg, dead)
+      out += r
+      tier.foreach(sizes.remove)
+      sizes(r.segment) = r.docCount
       snap = IndexStore.readLatestSnapshot(spark, root).get
     }
-    out += (if (ok)
-      mergeCompactImpl(spark, root, snap, snap.segments,
-        clearTombstones = true, cfg, maxBroadcastDeadIds,
-        precomputedDead = dead0)
-        .getOrElse(merge(spark, root, dict, cfg))
-    else merge(spark, root, dict, cfg))
+    out += mergeCompactImpl(spark, root, snap, snap.segments,
+      clearTombstones = true, cfg, dead)
     out.result()
   }
 
   /** THE compaction layout gate — one definition shared by
-    * [[mergeCompactImpl]] and [[FieldedIndex.mergeCompact]] (whose
+    * the merges and [[FieldedIndex.mergeCompact]] (whose
     * all-fields path decision must agree with the per-root one, or one
     * field could keep gappy original doc_ids while another re-assigns
     * dense ones). formatVersion is part of it twice over: an
@@ -1525,76 +1505,31 @@ object IndexBuilder {
     * merged segment records. The rebuild merge re-encodes from the
     * docstore, so it handles any layout — fall back, never error
     * (invariant 14). */
-  private[index] def layoutUniform(stored: Seq[IndexStore.SegmentConfig]): Boolean =
+  private[index] def layoutUniform(spark: SparkSession, root: String,
+                                   segs: Seq[String]): Boolean = {
+    val stored = segs.map(IndexStore.readSegmentConfig(spark, root, _))
     stored.forall(c =>
       graft.codec.VarByte.SupportedVersions.contains(c.formatVersion)) &&
       stored.map(c => (c.numParts, c.saltFanout, c.hasPositions, c.analyzer,
         c.formatVersion)).distinct.size == 1
-
-  /** The GLOBAL dead-id set (superseded versions + tombstoned urls over
-    * every segment — exactly the Searcher's liveDocs rule), sorted;
-    * None when it exceeds the broadcast gate. One action: fetch at most
-    * gate+1 ids. Invariant across compaction passes (dropping dead rows
-    * neither creates nor revives deads), so [[mergeCompactTiered]]
-    * computes it ONCE and reuses it for every pass. */
-  private def globalDeadIds(spark: SparkSession, root: String,
-                            snap: IndexStore.Snapshot,
-                            maxBroadcastDeadIds: Long)
-      : Option[Array[Long]] = {
-    import spark.implicits._
-    // superseded ids may include ids whose rows an earlier tier pass
-    // already dropped — they match nothing downstream
-    val superseded = IndexStore.readBatches(spark, root, "dead", snap.deadBatches)
-      .getOrElse(spark.emptyDataset[Long].toDF("doc_id"))
-    val tombstoned =
-      IndexStore.readBatches(spark, root, "tombstones", snap.tombstones) match {
-        case None => spark.emptyDataset[Long].toDF("doc_id")
-        case Some(tombs) =>
-          // url rows are wider than dead ids — gate at the same 2M-row
-          // threshold the Searcher and rebuild merge use for this table,
-          // not the 4M id gate (count from the write-time sidecar)
-          val n = IndexStore.sidecarCount(spark, root, "tombstones",
-            snap.tombstones)
-          val side =
-            if (n <= 2000000L) broadcast(tombs)
-            else tombs
-          IndexStore.read(spark, IndexStore.Table.Docstore,
-              snap.segments.map(IndexStore.docstorePath(root, _)): _*)
-            .join(side, Seq("url"), "left_semi").select("doc_id")
-      }
-    val deadDf = superseded.union(tombstoned).distinct()
-    val fetchCap =
-      math.min(maxBroadcastDeadIds + 1L, Int.MaxValue.toLong).toInt
-    val deadSorted: Array[Long] = deadDf.limit(fetchCap).as[Long].collect()
-    if (deadSorted.length >= fetchCap) None
-    else { java.util.Arrays.sort(deadSorted); Some(deadSorted) }
   }
 
   /** Posting-level compaction of `targets` (a subset of, or all of, the
-    * snapshot's segments) into one fresh segment. Returns None when the
-    * caller must fall back to the rebuild [[merge]] (mixed layouts /
-    * old format / dead set past the broadcast gate — invariant 14). */
+    * snapshot's segments, of one layout) into one fresh segment, dropping
+    * the rows of `dead` (the snapshot's GLOBAL dead set: a subset compact
+    * must drop a target row superseded by a newer version living OUTSIDE
+    * the subset). */
   private def mergeCompactImpl(spark: SparkSession, root: String,
                                snap: IndexStore.Snapshot,
                                targets: Seq[String],
                                clearTombstones: Boolean,
                                cfg: IndexConfig,
-                               maxBroadcastDeadIds: Long,
-                               precomputedDead: Option[Array[Long]] = None)
-      : Option[BuildReport] = {
+                               dead: Roaring64NavigableMap): BuildReport = {
     import spark.implicits._
     val t0 = System.nanoTime()
-    val phases = Seq.newBuilder[(String, Long)]
-    var tPrev = t0
-    def lap(name: String): Unit = {
-      val now = System.nanoTime()
-      phases += name -> (now - tPrev) / 1000000
-      tPrev = now
-    }
-    val stored = targets.map(s =>
-      IndexStore.readSegmentConfig(spark, root, s))
-    if (!layoutUniform(stored)) return None
-    val sc0 = stored.head
+    val laps = new Laps()
+    import laps.lap
+    val sc0 = IndexStore.readSegmentConfig(spark, root, targets.head)
     val (numParts, withPos, blockSize) =
       (sc0.numParts, sc0.hasPositions, cfg.blockSize)
     // blob-level compaction PRESERVES the segments' format version
@@ -1607,36 +1542,16 @@ object IndexBuilder {
     val targetDocs = IndexStore.read(spark, IndexStore.Table.Docstore,
       targets.map(IndexStore.docstorePath(root, _)): _*)
 
-    // the dead set is GLOBAL (every superseded-id batch + every
-    // tombstoned url over all segments): a subset compact must drop a target row
-    // superseded by a newer version living OUTSIDE the subset. The
-    // tiered driver precomputes it once for all its passes.
-    val deadGlobal: Array[Long] = precomputedDead match {
-      case Some(d) => d
-      case None =>
-        globalDeadIds(spark, root, snap, maxBroadcastDeadIds) match {
-          case Some(d) => d
-          case None => return None // past the gate: rebuild is the plan
-        }
-    }
-    // restrict the global dead set to ids that can live in the TARGETS:
-    // a tier whose segments contain no dead docs must keep the
-    // byte-identical blob passthrough + per-segment stats-sum fast
-    // paths — branching on the GLOBAL count would force the decode path
-    // on every pass of a schedule with a single tombstone anywhere. One
-    // column-pruned min/max over the target docstores is far cheaper
-    // than decoding a tier's every blob.
-    val deadSorted: Array[Long] =
-      if (deadGlobal.isEmpty || targets == snap.segments) deadGlobal
-      else {
-        val r = targetDocs.agg(min("doc_id"), max("doc_id")).head()
-        if (r.isNullAt(0)) Array.empty[Long]
-        else {
-          val (lo, hi) = (r.getLong(0), r.getLong(1))
-          deadGlobal.filter(id => id >= lo && id <= hi)
-        }
-      }
-    val deadCount: Long = deadSorted.length.toLong
+    // does a dead id live in the TARGETS? A tier whose segments contain
+    // no dead docs must keep the byte-identical blob passthrough +
+    // per-segment stats-sum fast paths — branching on the GLOBAL set
+    // would force the decode path on every pass of a schedule with a
+    // single tombstone anywhere. One column-pruned min/max over the
+    // target docstores is far cheaper than decoding a tier's every blob.
+    val touched = !dead.isEmpty && (targets == snap.segments || {
+      val r = targetDocs.agg(min("doc_id"), max("doc_id")).head()
+      !r.isNullAt(0) && LiveDocs.anyIn(dead, r.getLong(0), r.getLong(1))
+    })
     lap("dead_scan")
 
     // coalesce AFTER the part-hash repartition + sort: each compact
@@ -1659,55 +1574,28 @@ object IndexBuilder {
       .as[(Int, String, Long, Int, Int, Array[Byte])]
 
     val maxBlob = cfg.effectiveMaxBlobPostings
-    val merged: Dataset[CompactRow] =
-      if (deadCount == 0)
-        // no dead docs: single-source blobs pass through byte-identical;
-        // only genuinely multi-segment terms decode+merge (re-chunked to
-        // ≤ maxBlob postings per row)
-        allPostings.mapPartitions { it =>
-          runGrouped(it)((a, b) => a._1 == b._1 && a._2 == b._2) { run =>
-            val (part, term, df0, mt0, md0, first) = run.head
-            // single-source blobs pass through byte-identical IF within
-            // the cap — compaction is the one chance to re-chunk an
-            // oversized legacy blob. Multi-blob terms stream-merge and
-            // re-chunk (a disjoint-range passthrough would need the
-            // blobs' first doc ids, which headers don't carry).
-            if (run.size == 1 && VarByte.count(first) <= maxBlob)
-              Seq(CompactRow(part, term, df0, mt0, md0, first))
-            else
-              mergeBlobsStreaming(run.map(_._6), withPos, blockSize,
-                  segVer, maxBlob)
-                .map { case (blob, cnt, mt, md) =>
-                  CompactRow(part, term, cnt.toLong, mt, md, blob)
-                }
-          }
-        }
-      else {
-        val bcDead = spark.sparkContext.broadcast(deadSorted)
-        allPostings.mapPartitions { it =>
-          val dead = bcDead.value
-          runGrouped(it)((a, b) => a._1 == b._1 && a._2 == b._2) { run =>
-            val (part, term, df0, mt0, md0, first) = run.head
-            // single-blob fast path: a cheap header walk (block docId
-            // ranges) detects terms no dead id can touch — their bytes
-            // pass through UNDECODED; everything else stream-merges
-            // with the dead skip applied per emitted posting (the
-            // decode-everything + filterDead shape held whole head-term
-            // shards in memory and OOM'd the 10M compaction)
-            if (run.size == 1 && VarByte.count(first) <= maxBlob &&
-                !blobTouchesDead(first, dead))
-              Seq(CompactRow(part, term, df0, mt0, md0, first))
-            else {
-              val chunks = mergeBlobsStreaming(run.map(_._6), withPos,
-                blockSize, segVer, maxBlob, dead)
-              if (chunks.isEmpty) Seq.empty // all docs died: term vanishes
-              else chunks.map { case (blob, cnt, mt, md) =>
-                CompactRow(part, term, cnt.toLong, mt, md, blob)
-              }
+    // the closure carries the bitmap: each task ranks its own copy
+    val drop = if (touched) dead else new Roaring64NavigableMap()
+    val merged: Dataset[CompactRow] = allPostings.mapPartitions { it =>
+      runGrouped(it)((a, b) => a._1 == b._1 && a._2 == b._2) { run =>
+        val (part, term, df0, mt0, md0, first) = run.head
+        // single-source blobs no dead id can touch (a cheap header walk)
+        // pass through byte-identical IF within the cap — compaction is
+        // the one chance to re-chunk an oversized legacy blob. The rest
+        // stream-merge and re-chunk, skipping dead ids per posting (the
+        // decode-everything + filterDead shape OOM'd the 10M
+        // compaction); a term whose docs all died vanishes.
+        if (run.size == 1 && VarByte.count(first) <= maxBlob &&
+            !blobTouchesDead(first, drop))
+          Seq(CompactRow(part, term, df0, mt0, md0, first))
+        else
+          mergeBlobsStreaming(run.map(_._6), withPos, blockSize, segVer,
+              maxBlob, drop)
+            .map { case (blob, cnt, mt, md) =>
+              CompactRow(part, term, cnt.toLong, mt, md, blob)
             }
-          }
-        }
       }
+    }
 
     val seg = f"seg-${snap.id + 1}%06d"
     // NO persist: caching the merged blob Dataset unrolls O(posting
@@ -1727,7 +1615,7 @@ object IndexBuilder {
     // stored per row, live ttf is re-derived by one vb_decode fold (the
     // written schema is the pinned postings layout, which carries no ttf)
     val termRows =
-      if (deadCount == 0)
+      if (!touched)
         IndexStore.read(spark, IndexStore.Table.TermStats,
             targets.map(IndexStore.termStatsPath(root, _)): _*)
           .groupBy("term").agg(sum("df").as("df"), sum("ttf").as("ttf"),
@@ -1745,14 +1633,12 @@ object IndexBuilder {
       .parquet(IndexStore.termStatsPath(root, seg))
     lap("term_stats")
 
-    // docstore: live rows only, ids unchanged (broadcast anti-join — the
-    // dead set already passed the gate); stats observed during the write
-    val deadIdsDf = spark.createDataset(deadSorted.toSeq).toDF("doc_id")
-    val liveDocs =
-      if (deadCount == 0) targetDocs
-      else targetDocs.join(broadcast(deadIdsDf), Seq("doc_id"), "left_anti")
+    // docstore: live rows only, ids unchanged; stats observed during
+    // the write
+    def live(rows: DataFrame): DataFrame =
+      if (touched) rows.where(!in_bitmap(col("doc_id"), dead)) else rows
     val docObs = org.apache.spark.sql.Observation()
-    liveDocs
+    live(targetDocs)
       .observe(docObs, count(lit(1)).as("cnt"),
         sum(col("dl").cast("long")).as("sdl"), max(col("doc_id")).as("mx"))
       .write.mode("overwrite").options(IndexStore.docstoreWriteOptions)
@@ -1767,12 +1653,9 @@ object IndexBuilder {
       val present = targets.forall(s =>
         f.exists(new org.apache.hadoop.fs.Path(pathOf(root, s))))
       if (!present) return
-      val old = targets.map(s => spark.read.parquet(pathOf(root, s)))
-        .reduce(_ unionByName _)
-      val live =
-        if (deadCount == 0) old
-        else old.join(broadcast(deadIdsDf), Seq("doc_id"), "left_anti")
-      live.write.mode("overwrite").parquet(pathOf(root, seg))
+      live(targets.map(s => spark.read.parquet(pathOf(root, s)))
+          .reduce(_ unionByName _))
+        .write.mode("overwrite").parquet(pathOf(root, seg))
     }
     carrySidecar(IndexStore.facetsPath)
     carrySidecar(IndexStore.jsonFieldsPath)
@@ -1800,14 +1683,15 @@ object IndexBuilder {
     // rows left → sidecar resets to empty.
     // Tier passes carry the batches: REMAINING segments still hold
     // superseded rows those batches name; ids whose rows this pass
-    // dropped match nothing in the anti-join — harmless, same stance as
-    // the tombstones staying until the final pass.
+    // dropped no longer count ([[LiveDocs]] counts existing rows only) —
+    // harmless, same stance as the tombstones staying until the final
+    // pass.
     IndexStore.writeSnapshot(spark, root,
       IndexStore.Snapshot(snap.id + 1, remaining :+ seg,
         if (clearTombstones) Seq.empty else snap.tombstones,
         if (clearTombstones) Some(Seq.empty) else snap.dead))
     lap("manifest_and_swap")
-    Some(BuildReport(seg, docCount, termCount, manifestRows.map(_.rows).sum,
-      (System.nanoTime() - t0) / 1000000, phases.result()))
+    BuildReport(seg, docCount, termCount, manifestRows.map(_.rows).sum,
+      (System.nanoTime() - t0) / 1000000, laps.result)
   }
 }

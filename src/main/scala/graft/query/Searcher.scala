@@ -2,7 +2,7 @@ package graft.query
 
 import graft.analysis.{SynonymDict, Tokenizer}
 import graft.functions.graftFunctions._
-import graft.index.IndexStore
+import graft.index.{IndexStore, LiveDocs}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -34,7 +34,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * regardless of partitioning (SURVEY.md §7 hard-part 2).
   *
   * Deletes/upserts: older doc versions and tombstoned urls form the
-  * "dead docs" set (Lucene liveDocs analog), anti-joined before scoring.
+  * dead set ([[graft.index.LiveDocs]], the Lucene liveDocs analog), a
+  * driver-side bitmap probed per row before scoring.
   * Collection statistics deliberately include dead docs until [[
   * graft.index.IndexBuilder.merge]] — exactly Lucene's behavior for
   * deleted-but-unmerged docs.
@@ -51,10 +52,6 @@ final class Searcher(
     dict: SynonymDict = SynonymDict.empty,
     k1: Double = 1.2,
     b: Double = 0.75,
-    /** Above this many dead docs the liveDocs anti-join falls back to a
-      * shuffle: after heavy pre-merge upsert churn the dead set is
-      * O(corpus), and a forced broadcast of it would OOM the driver. */
-    maxBroadcastDeadDocs: Long = 2000000L,
     /** TIME TRAVEL (Iceberg snapshot-read analog): open the index at a
       * specific snapshot id instead of LATEST — the searcher then serves
       * exactly that snapshot's segment + tombstone view (the reference
@@ -80,6 +77,10 @@ final class Searcher(
     case None => IndexStore.readLatestSnapshot(spark, root)
       .getOrElse(sys.error(s"no snapshot at $root"))
   }
+  // a deletion batch the snapshot names but the disk lacks fails the
+  // open, naming it: serving on would show its deleted docs again
+  Seq("dead" -> snapshot.deadBatches, "tombstones" -> snapshot.tombstones)
+    .foreach { case (dir, names) => IndexStore.readBatches(spark, root, dir, names) }
 
   /** Relations carried over from the predecessor (reopen path): a
     * segment directory is immutable once its snapshot commits, so a
@@ -135,8 +136,8 @@ final class Searcher(
     snapshot.segments.map(segTables(_).docstore).reduce(_ unionByName _)
 
   /** The cached per-query hot set (doc_id, url, warc_ts, lang, dl):
-    * liveDocs derivation, filter clauses, and rank-time metadata all
-    * come from here — O(rows × ~100B) instead of O(corpus text). */
+    * filter clauses and rank-time metadata come from here —
+    * O(rows × ~100B) instead of O(corpus text). */
   private val narrowCols = Seq("doc_id", "url", "warc_ts", "lang", "dl")
   private val narrowSet = narrowCols.toSet
   private val docstoreNarrow: DataFrame =
@@ -289,43 +290,28 @@ final class Searcher(
     (n, if (n == 0) 0.0 else s.toDouble / n)
   }
 
-  /** Lucene-liveDocs analog: doc_ids superseded by a newer version of the
-    * same url (upsert) or tombstoned (delete). Usually small; broadcast
-    * into an anti-join on the match path.
-    *
-    * The superseded side comes from the per-append sidecar batches
-    * (`snapshot.dead` — maintained incrementally by
-    * [[graft.index.IndexBuilder.appendSegment]]), so a cold open on a
-    * churned 50-segment root reads O(appends) tiny parquet files
-    * instead of paying a full-corpus window shuffle before the first
-    * query. Each batch side is semi-joined to the docstore: superseded
-    * ids by `doc_id` (restricting to ids whose rows still EXIST — a
-    * tiered compaction pass drops its tier's dead rows but carries the
-    * batches, and stale ids would inflate deadDocCount), tombstones by
-    * `url`. The `.count` sidecars (no job) gate broadcast-vs-shuffle:
-    * after a mass deletion either table is O(corpus), and force-
-    * broadcasting it would OOM the driver. */
-  val deadDocs: DataFrame = {
-    def docIdsIn(dir: String, batches: Seq[String], key: String): DataFrame =
-      IndexStore.readBatches(spark, root, dir, batches) match {
-        case None => spark.emptyDataset[Long].toDF("doc_id")
-        case Some(df) =>
-          val n = IndexStore.sidecarCount(spark, root, dir, batches)
-          val side = if (n <= maxBroadcastDeadDocs) broadcast(df) else df
-          docstoreNarrow.join(side, Seq(key), "left_semi").select("doc_id")
-      }
-    docIdsIn("dead", snapshot.deadBatches, "doc_id")
-      .union(docIdsIn("tombstones", snapshot.tombstones, "url"))
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
+  /** The newest dead set this searcher knows: its own once loaded, else
+    * its predecessor's ([[reopen]]), which the load then grows. */
+  @volatile private var knownLiveDocs: Option[LiveDocs] =
+    reuseFrom.filter(o => !o.isClosed && o.root == root).flatMap(_.knownLiveDocs)
+
+  /** The dead set, loaded on first use (racing callers wait for it). */
+  private[graft] lazy val liveDocs: LiveDocs = {
+    val ld = LiveDocs.load(spark, root, snapshot, knownLiveDocs)
+    knownLiveDocs = Some(ld)
+    ld
   }
-  private lazy val deadDocCount: Long = deadDocs.count()
-  private lazy val hasDeadDocs: Boolean = deadDocCount > 0
+  private def hasDeadDocs: Boolean = liveDocs.count > 0
+
+  /** Superseded + tombstoned doc ids: an unpersisted view of [[liveDocs]]. */
+  def deadDocs: DataFrame =
+    docstore.select("doc_id").where(in_bitmap(col("doc_id"), liveDocs.dead))
 
   val maxDoc: Long = docCount
-  def numDocs: Long = docCount - deadDocCount // S9: live doc count
+  def numDocs: Long = docCount - numDeletedDocs // S9: live doc count
   /** Superseded + tombstoned doc count (reference numDeletedDocs,
-    * Searcher.java:698). */
-  def numDeletedDocs: Long = deadDocCount
+    * Searcher.java:698): the set's cardinality. */
+  def numDeletedDocs: Long = liveDocs.count
 
   // serving counters (reference totalSearchCnt / currentSearchCnt /
   // isClosePossible, Searcher.java:162-163,1614-1634 — ops metrics and
@@ -496,12 +482,10 @@ final class Searcher(
       case None => rows
     }
 
-  /** Drop rows of superseded/tombstoned docs (size-gated broadcast). */
+  /** Drop rows of superseded/tombstoned docs (a [[liveDocs]] probe). */
   private def dropDead(rows: DataFrame): DataFrame =
     if (!hasDeadDocs) rows
-    else if (deadDocCount <= maxBroadcastDeadDocs)
-      rows.join(broadcast(deadDocs), Seq("doc_id"), "left_anti")
-    else rows.join(deadDocs, Seq("doc_id"), "left_anti")
+    else rows.where(!in_bitmap(col("doc_id"), liveDocs.dead))
 
   /** Restrict matches to the non-scoring filter clause and drop dead
     * docs (both row-level semi/anti joins — order-independent). */
@@ -1036,7 +1020,7 @@ final class Searcher(
     val notSet = notTerms.toSet
     val presentNot = all.map(_.term).filter(notSet.contains)
     val isRestricted = hasDeadDocs || filter.nonEmpty || presentNot.nonEmpty
-    // filter semi-join + dead-docs anti-join + MUST_NOT anti-join — the
+    // filter semi-join + dead-docs filter + MUST_NOT anti-join — the
     // exact path's restriction set, applied to per-term rows pre-fold.
     // The restricted OR path evaluates restrictions in BOTH the θ-seed
     // collect and the final page job; for large NOT postings the doc set
@@ -1926,8 +1910,8 @@ final class Searcher(
     * append opens the NEW segments only — one job for their stats rows,
     * however many segments and deletion batches the root holds
     * (`JobCountSpec` pins it) — and the first lookup after it reads the
-    * new segments' dictionaries only, in one job; the dead-doc set and
-    * term_stats are persisted lazily, on first use. The document LRU
+    * new segments' dictionaries only, in one job; the dead set is grown
+    * from the predecessor's ([[liveDocs]]). The document LRU
     * survives when no existing segment was replaced (see
     * [[documentCache]]). The query-result cache never carries — cached
     * pages depend on the serving view. The caller keeps
@@ -1935,7 +1919,7 @@ final class Searcher(
     * [[close(drainMs:Long)* closes]] the old one (the reference's
     * hot-swap discipline). */
   def reopen(): Searcher =
-    new Searcher(spark, root, dict, k1, b, maxBroadcastDeadDocs,
+    new Searcher(spark, root, dict, k1, b,
       snapshotId = None, reuseFrom = Some(this),
       phraseJoinMinDf = phraseJoinMinDf)
 
@@ -1973,7 +1957,6 @@ final class Searcher(
           Thread.currentThread().interrupt(); interrupted = true
         }
       docstoreNarrow.unpersist()
-      deadDocs.unpersist()
     }
 }
 

@@ -99,10 +99,29 @@ class IncrementalSpec extends AnyFunSuite with SparkTestBase {
     } finally s.close()
   }
 
-  test("majority-superseded corpus: the deadDocs anti-join falls back " +
-    "from broadcast to shuffle above the size gate with identical results") {
+  /** `s`'s top-`k` (doc_id, score) page for each query. */
+  private def pages(s: Searcher, qs: Seq[String], k: Int = 10) =
+    qs.map(q => s.search(q, k).select("doc_id", "score")
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+
+  /** After `mergeCompact`, `s.reopen()` and a fresh Searcher serve the
+    * same live count and the same pages. */
+  private def compactedPagesMatchFreshOpen(s: Searcher, root: String): Unit = {
+    IndexBuilder.mergeCompact(spark, root, dict, cfg)
+    val reopened = s.reopen()
+    val fresh = new Searcher(spark, root, dict)
+    try {
+      assert(reopened.numDocs == s.numDocs && fresh.numDocs == s.numDocs)
+      val qs = Seq("spark", "index data")
+      assert(pages(reopened, qs) == pages(fresh, qs))
+      assert(pages(fresh, qs).forall(_.nonEmpty))
+    } finally { reopened.close(); fresh.close() }
+  }
+
+  test("majority-superseded corpus: the dead set serves only the live " +
+    "half, and pages equal a fresh open after mergeCompact") {
     // EVERY batch-1 url re-crawled ⇒ dead set ≈ half the corpus — the
-    // pre-merge churn profile where a forced broadcast would OOM at scale
+    // pre-merge churn profile
     val reb = batch1.map { p =>
       val fresh = WebtextGen.page(Seed + 9999, p.url.hashCode.toLong & 0xFFFF)
       p.copy(warc_ts = new Timestamp(p.warc_ts.getTime + dayMs),
@@ -111,35 +130,21 @@ class IncrementalSpec extends AnyFunSuite with SparkTestBase {
     val root = tmpDir("graft-churn-")
     IndexBuilder.buildFull(spark, toDf(batch1), dict, root, cfg, "b1")
     IndexBuilder.appendSegment(spark, toDf(reb), dict, root, cfg, "b2")
-    val sBroadcast = new Searcher(spark, root, dict) // default: broadcast
-    val sShuffle = new Searcher(spark, root, dict,
-      maxBroadcastDeadDocs = 0L) // gate forces the shuffle anti-join
+    val s = new Searcher(spark, root, dict)
     try {
-      assert(sShuffle.numDocs == batch1.size.toLong) // half the corpus dead
-      for (q <- Seq("spark", "index data")) {
-        val eb = sBroadcast.search(q, 10).select("doc_id", "score")
-          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        val es = sShuffle.search(q, 10).select("doc_id", "score")
-          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        assert(eb == es, s"query '$q'")
-        assert(eb.nonEmpty)
-      }
-      // the LeftAnti join (the dead-docs filter) must carry the broadcast
-      // hint only below the gate — line-level check because the idf join
-      // is legitimately broadcast in both plans
-      def antiHasBroadcastHint(s: Searcher): Boolean =
-        s.score("spark").queryExecution.optimizedPlan.toString
-          .linesIterator.exists(l =>
-            l.contains("LeftAnti") && l.contains("broadcast"))
-      assert(antiHasBroadcastHint(sBroadcast))
-      assert(!antiHasBroadcastHint(sShuffle),
-        "dead-docs broadcast hint survived the size gate")
-    } finally { sBroadcast.close(); sShuffle.close() }
+      assert(s.numDocs == batch1.size.toLong) // half the corpus dead
+      assert(s.numDeletedDocs == batch1.size.toLong)
+      // every batch-1 id (0 until N) is superseded: no hit may be one
+      val hits = pages(s, Seq("spark", "index data"), batch1.size)
+      assert(hits.forall(_.nonEmpty))
+      assert(hits.flatten.forall(_._1 >= batch1.size), "a superseded doc served")
+      compactedPagesMatchFreshOpen(s, root)
+    } finally s.close()
   }
 
-  test("mass deletion: tombstones stay distributed — DataFrame deleteByPk, " +
-    "parquet batch, and a semi-join that drops the broadcast hint above " +
-    "the size gate") {
+  test("mass deletion: a 1/3 purge issued as a DataFrame deleteByPk " +
+    "hides every purged url, and pages equal a fresh open after " +
+    "mergeCompact") {
     val root = tmpDir("graft-tomb-")
     IndexBuilder.buildFull(spark, toDf(batch1), dict, root, cfg, "b1")
     // a GDPR-style purge: 1/3 of the corpus, issued as a DataFrame so the
@@ -147,30 +152,14 @@ class IncrementalSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     val purged = batch1.zipWithIndex.collect { case (p, i) if i % 3 == 0 => p.url }
     IndexBuilder.deleteByPk(spark, root, purged.toDF("url"))
-    val sBroadcast = new Searcher(spark, root, dict) // default gate
-    val sShuffle = new Searcher(spark, root, dict, maxBroadcastDeadDocs = 0L)
+    val s = new Searcher(spark, root, dict)
     try {
-      assert(sShuffle.numDocs == (batch1.size - purged.size).toLong)
-      for (q <- Seq("spark", "index data")) {
-        val eb = sBroadcast.search(q, 10).select("doc_id", "score")
-          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        val es = sShuffle.search(q, 10).select("doc_id", "score")
-          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        assert(eb == es && eb.nonEmpty, s"query '$q'")
-      }
-      // no purged url survives
-      val hits = sShuffle.search("spark", batch1.size).select("url")
+      assert(s.numDocs == (batch1.size - purged.size).toLong)
+      val hits = s.search("spark", batch1.size).select("url")
         .collect().map(_.getString(0)).toSet
-      assert(purged.forall(u => !hits.contains(u)))
-      // the tombstone semi-join carries the broadcast hint only below the
-      // gate (analyzed plan: deadDocs is persisted, so the optimized plan
-      // would already be cache-substituted)
-      def semiBroadcastHinted(s: Searcher): Boolean =
-        s.deadDocs.queryExecution.analyzed.toString.contains("broadcast")
-      assert(semiBroadcastHinted(sBroadcast))
-      assert(!semiBroadcastHinted(sShuffle),
-        "tombstone broadcast hint survived the size gate")
-    } finally { sBroadcast.close(); sShuffle.close() }
+      assert(hits.nonEmpty && purged.forall(u => !hits.contains(u)))
+      compactedPagesMatchFreshOpen(s, root)
+    } finally s.close()
   }
 
   test("merge inherits the index's identity knobs (analyzer, positions, " +

@@ -1,6 +1,7 @@
 package graft.index
 
 import graft.codec.VarByte
+import org.roaringbitmap.longlong.Roaring64NavigableMap.bitmapOf
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The streaming k-way blob merge (cursors + heap + BlockEncoder) must
@@ -63,7 +64,7 @@ class MergeStreamingSpec extends AnyFunSuite {
         java.util.Arrays.sort(dead)
         val maxPostings = 1 + rnd.nextInt(200)
         val chunks = IndexBuilder.mergeBlobsStreaming(blobs, withPos,
-          VarByte.DefaultBlockSize, ver, maxPostings, dead)
+          VarByte.DefaultBlockSize, ver, maxPostings, bitmapOf(dead: _*))
         // reference: flat survivor list
         val want = all.filter(e =>
           java.util.Arrays.binarySearch(dead, e._1) < 0)
@@ -96,14 +97,14 @@ class MergeStreamingSpec extends AnyFunSuite {
       val idSet = ids.toSet
       // a real member must be detected
       val hit = Array(ids(rnd.nextInt(n)))
-      assert(IndexBuilder.blobTouchesDead(blob, hit))
+      assert(IndexBuilder.blobTouchesDead(blob, bitmapOf(hit: _*)))
       // a non-member may be flagged (conservative) but false must imply
       // genuinely no overlap
       val probe = Array(rnd.nextLong(ids.last + 100))
-      if (!IndexBuilder.blobTouchesDead(blob, probe))
+      if (!IndexBuilder.blobTouchesDead(blob, bitmapOf(probe: _*)))
         assert(!idSet.contains(probe(0)))
-      assert(!IndexBuilder.blobTouchesDead(blob, Array.empty[Long]))
-      assert(!IndexBuilder.blobTouchesDead(blob, Array(ids.last + 1)))
+      assert(!IndexBuilder.blobTouchesDead(blob, bitmapOf()))
+      assert(!IndexBuilder.blobTouchesDead(blob, bitmapOf(ids.last + 1)))
     }
   }
 }

@@ -247,11 +247,55 @@ class JobCountSpec extends AnyFunSuite with SparkTestBase {
       try {
         val added = next.snapshot.segments.filterNot(s.snapshot.segments.contains)
         assert(added.size == 1, next.snapshot.segments)
-        next.numDeletedDocs // the dead-doc count's jobs, counted apart
+        // the new dead batch and segment only, against the tombstones
+        assert(jobsOf(next.numDeletedDocs) == 2)
         assert(jobsOf(next.score("spark index")) == 1)
         assert(next.termDictSegmentsRead == added)
         assert(jobsOf(next.score("spark index")) == 0)
       } finally next.close()
+    } finally s.close()
+  }
+
+  test("a warm search runs one job on a root with dead and tombstone " +
+    "batches, as on a clean root") {
+    val counts = Seq(0, 3).map { cycles =>
+      val s = new Searcher(spark, churnedRoot(cycles), dict)
+      try {
+        assert((s.numDeletedDocs > 0) == (cycles > 0))
+        warmJobs(s.search("spark index", 10).collect())
+      } finally s.close()
+    }
+    assert(counts == Seq(1, 1), s"(clean, churned) jobs: $counts")
+  }
+
+  test("reopen plus numDeletedDocs after an append reads only the new " +
+    "segment's docstore; after an append and a delete, every docstore " +
+    "against the tombstones") {
+    val root = churnedRoot(3)
+    var s = new Searcher(spark, root, dict)
+    try {
+      s.numDeletedDocs
+      def cycle(delete: Boolean): (Int, Seq[String], Seq[String]) = {
+        IndexBuilder.appendSegment(spark, batch(s"next$delete", 9), dict,
+          root, writeCfg)
+        if (delete) IndexBuilder.deleteByPk(spark, root,
+          basePages.take(3).map(_.url))
+        var next: Searcher = null
+        val n = jobsOf { next = s.reopen(); next.numDeletedDocs }
+        s.close()
+        s = next
+        val added = next.snapshot.segments.last
+        (n, next.liveDocs.docstoresRead,
+          next.snapshot.segments.filterNot(_ == added))
+      }
+      val (appendJobs, appendRead, _) = cycle(delete = false)
+      info(s"append: $appendJobs jobs, read $appendRead")
+      assert(appendJobs <= 3)
+      assert(appendRead == Seq(s.snapshot.segments.last))
+      val (deleteJobs, deleteRead, carried) = cycle(delete = true)
+      info(s"append + delete: $deleteJobs jobs, read $deleteRead")
+      assert(deleteJobs <= 3)
+      assert(carried.forall(deleteRead.contains))
     } finally s.close()
   }
 
