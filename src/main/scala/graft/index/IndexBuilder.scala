@@ -24,18 +24,21 @@ import org.roaringbitmap.longlong.Roaring64NavigableMap
   *         → one analysis pass: coalesce(text, extract_text(html)) +
   *           qube_tf (tokenize + synonyms + per-doc (term, tf, dl))
   *         → docstore parquet  — the build's only stable materialization
-  *   docstore → qube_tf re-stream → term_stats (df, ttf, WAND bounds)
+  *   docstore → head set: terms of df ≥ saltDf (counted over a sample
+  *              above headSampleDocs docs; no job under saltDf docs)
   *            → map-side per-(term, salt-shard) RAM posting buffers
   *              (Lucene's indexing buffer) flushed as delta+varbyte
   *              FRAGMENTS
   *            → ONE salted shuffle of fragments (not posting rows)
   *            → sortWithinPartitions(part, term) → per-term k-way merge
   *            → postings(part, term, df_local, max_tf, min_dl, blob)
+  *   postings read-back → term_stats (df, ttf, WAND bounds) + manifest
   * }}}
   *
-  * Exactly two shuffles, zero long-lived caches; head terms (df ≥
-  * saltDf, known exactly from term_stats) split across saltFanout
-  * partitions. Measured rationale for each decision: BENCH.md.
+  * Exactly two shuffles of documents or postings, zero long-lived
+  * caches; head terms split across saltFanout partitions. Every segment
+  * writer, this build and the compaction alike, finishes through
+  * [[finishSegment]]. Measured rationale for each decision: BENCH.md.
   */
 object IndexBuilder {
 
@@ -94,14 +97,9 @@ object IndexBuilder {
                                        // dispatch, Indexer.java:420);
                                        // recorded in config.json so the
                                        // query side analyzes identically
-      headSampleDocs: Long = 1L << 16, // corpora > 2× this derive the
-                                       // salting head set from a
-                                       // tokenized SAMPLE of this many
-                                       // docs and term_stats from the
-                                       // written posting blobs, removing
-                                       // a full tokenize pass; smaller
-                                       // builds keep the exact
-                                       // term_stats-first pipeline.
+      headSampleDocs: Long = 1L << 16, // builds of more docs than this
+                                       // count the salting head set over
+                                       // a sample of this many docs.
                                        // Salting is LAYOUT-only (the
                                        // Searcher probes every salt of
                                        // every term), so the sampled
@@ -778,51 +776,6 @@ object IndexBuilder {
 
     val docstore = IndexStore.read(spark, IndexStore.Table.Docstore,
       IndexStore.docstorePath(root, seg))
-    // the docstore write above has completed, so its observed metrics
-    // are available now; captured once — the stats row below reuses it
-    val docObsRow = docObs.get
-    val builtDocs = docObsRow.get("cnt") match {
-      case Some(n: Long) => n
-      case _ => 0L
-    }
-    // Large corpora derive term_stats from the WRITTEN posting blobs
-    // (df/bounds are stored per row, ttf is one VarByte.sumTf walk) and
-    // the salting head set from a tokenized sample — removing one of the
-    // build's three tokenize passes. Small builds keep the exact
-    // term_stats-first pipeline: at ≤ 2× the sample size the sample IS
-    // most of the corpus, so nothing is saved. See IndexConfig
-    // .headSampleDocs for why the sampled head set can never change a
-    // query result (layout-only).
-    val sampledStats = builtDocs > 2L * math.max(1L, cfg.headSampleDocs)
-
-    // (doc_id, dl, term, tf): a per-row qube_tf over the pre-extracted
-    // docstore text + a native explode — shuffle-free (SURVEY.md §3.1).
-    // Deliberately NOT cached: each consumer re-streams it from the
-    // docstore parquet. Re-tokenizing extracted text is a few seconds of
-    // fully-parallel codegen'd compute, while materializing the token
-    // stream (10^8+ rows at bench scale, ~10^14 at the design point) into
-    // the in-memory columnar cache measurably COLLAPSES under high thread
-    // counts (allocation/GC contention) and could never fit at scale.
-    def tf: DataFrame = docstore
-      .select(col("doc_id"), col("dl"),
-        explode(qube_tf(col("text"), dict, cfg.analyzer)).as("p"))
-      .select(col("doc_id"), col("dl"), col("p.term").as("term"),
-        col("p.tf").cast("long").as("tf"))
-
-    // collection + per-term statistics (S10): df = docs containing term,
-    // ttf = total term frequency; max_tf/min_dl are the term-level
-    // block-max WAND upper-bound inputs, kept here so the query planner
-    // gets (idf, df, bounds) from the segment's driver-side term
-    // dictionary, with no per-query job
-    val termObs = org.apache.spark.sql.Observation()
-    if (!sampledStats) {
-      val termRows = tf.groupBy("term")
-        .agg(count(lit(1)).as("df"), sum("tf").as("ttf"),
-          max("tf").cast("int").as("max_tf"), min("dl").cast("int").as("min_dl"))
-      termRows.observe(termObs, count(lit(1)).as("terms"))
-        .write.mode("overwrite").parquet(IndexStore.termStatsPath(root, seg))
-      lap("term_stats")
-    }
 
     // build-time facet sidecar (reference facet fields, Indexer.java:
     // 277-364): config-driven dims — flat label + hierarchical path per
@@ -842,8 +795,8 @@ object IndexBuilder {
 
     // stats row from the metrics observed during the docstore write — no
     // job; layout shared with mergeCompact via IndexStore
-    val (docCount, sumDl, idCeiling) =
-      IndexStore.writeStatsFromObservation(spark, root, seg, docObsRow)
+    val (docCount, _, _) =
+      IndexStore.writeStatsFromObservation(spark, root, seg, docObs.get)
     lap("collection_stats")
 
     // --- map-side posting fragments + skew-salted shuffle + merge ---
@@ -853,32 +806,30 @@ object IndexBuilder {
     // shuffle moves ~|vocab per task| compressed blobs instead of one row
     // per posting. (The naive posting-row shuffle+sort was measured
     // memory-bandwidth-bound: its wall time stopped scaling with cores.)
-    // Skew (SURVEY.md §7 risk 4): head terms — known exactly from
-    // term_stats — are salted into saltFanout shards by doc hash so no
-    // single posting partition holds an entire head term.
+    // Skew (SURVEY.md §7 risk 4): head terms — df ≥ saltDf, counted
+    // over the docstore before the fragment pass — are salted into
+    // saltFanout shards by doc hash so no single posting partition holds
+    // an entire head term. No term of a build under saltDf docs can be
+    // one, so that build runs no job for it. Above headSampleDocs docs
+    // the count runs over a fixed-seed sample of that many docs with a
+    // 4× safety margin on the threshold: over-inclusion salts a tail
+    // term into fanout small fragments (harmless), under-inclusion needs
+    // a true head term to draw < saltDf·frac/4 of an expected
+    // ≥ saltDf·frac sample hits — exponentially unlikely, and the more a
+    // term's volume matters the more certain its inclusion. Salting is
+    // layout-only, so the head set never changes a result.
     val headSet: Set[String] =
-      if (!sampledStats)
-        IndexStore.read(spark, IndexStore.Table.TermStats,
-            IndexStore.termStatsPath(root, seg))
-          .filter(col("df") >= cfg.saltDf)
-          .orderBy(col("df").desc).limit(cfg.maxSaltedTerms)
-          .select("term").collect().map(_.getString(0)).toSet
+      if (docCount < cfg.saltDf) Set.empty
       else {
-        // sampled estimate with a 4× safety margin on the threshold:
-        // over-inclusion salts a tail term into fanout small fragments
-        // (harmless), under-inclusion needs a true head term to draw
-        // < saltDf·frac/4 of an expected ≥ saltDf·frac sample hits —
-        // exponentially unlikely, and the more a term's volume matters
-        // the more certain its inclusion. The fixed seed keeps builds
-        // deterministic for a given input layout.
-        val frac = cfg.headSampleDocs.toDouble / builtDocs
-        val minSampled = math.max(1L, (cfg.saltDf * frac / 4).toLong)
-        docstore.sample(frac, 42L)
-          .select(explode(qube_tf(col("text"), dict, cfg.analyzer)).as("p"))
-          .select(col("p.term").as("term"))
-          .groupBy("term").agg(count(lit(1)).as("sdf"))
-          .filter(col("sdf") >= minSampled)
-          .orderBy(col("sdf").desc).limit(cfg.maxSaltedTerms)
+        val frac = math.min(1.0, cfg.headSampleDocs.toDouble / docCount)
+        val (docs, minDf) =
+          if (frac >= 1.0) (docstore, cfg.saltDf)
+          else (docstore.sample(frac, 42L),
+            math.max(1L, (cfg.saltDf * frac / 4).toLong))
+        docs.select(explode(qube_tf(col("text"), dict, cfg.analyzer)).as("p"))
+          .groupBy(col("p.term").as("term")).agg(count(lit(1)).as("df"))
+          .filter(col("df") >= minDf)
+          .orderBy(col("df").desc).limit(cfg.maxSaltedTerms)
           .select("term").collect().map(_.getString(0)).toSet
       }
     val bcHead = spark.sparkContext.broadcast(headSet)
@@ -1085,80 +1036,75 @@ object IndexBuilder {
       .parquet(IndexStore.postingsPath(root, seg))
     lap("postings_encode_write")
 
-    // per-partition lineage + metrics (north rule): rows, bytes,
-    // checksum — computed from a READ-BACK of the just-written files
-    // (column-pruned disk scan, zero heap retention) rather than a
-    // cached copy of the blobs; lineage over the DURABLE bytes also
-    // verifies the write. Under resume, restrict to the parts this run
-    // actually wrote (prior parts already have manifest rows).
-    def rowsOf(parts: org.apache.spark.sql.DataFrame) = {
-      val wallMs = (System.nanoTime() - t0) / 1000000
-      parts.collect().map { r =>
-        IndexStore.ManifestRow(r.getInt(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), inputSnapshot, wallMs)
-      }.toSeq
-    }
-    val partAgg = Seq(count(lit(1)).as("rows"), sum(col("bytes")).as("bytes"),
-      sum(crc32(concat(col("term"), lit("|"),
-        col("df_local").cast("string")))).as("cks"))
-    val manifestRows = if (sampledStats) {
-      // Sampled-stats builds derive term_stats from the written blobs —
-      // the same shape the compaction path has always used (and exactly
-      // what IndexCheck cross-validates): df = Σ df_local (each
-      // (term, doc) lands in exactly one merged chunk), ttf = Σ per-blob
-      // sumTf, bounds fold over the stored per-chunk bounds. Values are
-      // identical to the tokenize-pass aggregation by construction.
-      // ONE read-back pass serves BOTH term_stats and the manifest: the
-      // narrow per-row frame (stats + blob length, NO blob bytes — rule
-      // 17 is about the blobs, not metrics derived from them) persists,
-      // the term agg and the part agg each read the cache, and the
-      // postings parquet's blob column is scanned once instead of twice.
-      val derived = IndexStore.readPostingsOrEmpty(spark, root, seg)
-        .select("part", "term", "df_local", "max_tf", "min_dl", "blob")
-        .as[(Int, String, Long, Int, Int, Array[Byte])]
-        .map { case (p, t, dfl, mtf, mdl, blob) =>
-          (p, t, dfl, VarByte.sumTf(blob), mtf, mdl, blob.length.toLong)
-        }
-        .toDF("part", "term", "df_local", "ttf_local", "max_tf_l",
-          "min_dl_l", "bytes")
-        .persist()
-      try {
-        val fromBlobs = derived
-          .groupBy("term")
-          .agg(sum("df_local").as("df"), sum("ttf_local").as("ttf"),
-            max("max_tf_l").cast("int").as("max_tf"),
-            min("min_dl_l").cast("int").as("min_dl"))
-        fromBlobs.observe(termObs, count(lit(1)).as("terms"))
-          .write.mode("overwrite").parquet(IndexStore.termStatsPath(root, seg))
-        lap("term_stats")
-        val newParts =
-          if (done.isEmpty) derived
-          else derived.filter(!col("part").isin(done.toSeq: _*))
-        rowsOf(newParts.groupBy("part").agg(partAgg.head, partAgg.tail: _*))
-      } finally derived.unpersist()
-    } else {
-      // exact-stats builds wrote term_stats from the tokenize agg; the
-      // manifest is the only read-back (no sumTf walk added here)
-      val written = IndexStore.readPostingsOrEmpty(spark, root, seg)
-        .withColumn("bytes", length(col("blob")).cast("long"))
-      val newParts =
-        if (done.isEmpty) written
-        else written.filter(!col("part").isin(done.toSeq: _*))
-      rowsOf(newParts.groupBy("part").agg(partAgg.head, partAgg.tail: _*))
-    }
-    IndexStore.appendManifest(spark, root, seg, manifestRows)
-
+    val (termCount, manifestRows) =
+      finishSegment(spark, root, seg, inputSnapshot, t0, laps, done)
     IndexStore.writeSegmentConfig(spark, root, seg,
       IndexStore.SegmentConfig(cfg.numParts, cfg.saltFanout, cfg.blockSize,
         formatVersion = cfg.formatVersion,
         hasPositions = cfg.indexPositions, analyzer = cfg.analyzer))
-    // observed during the term_stats write — no extra job
-    val termCount = termObs.get("terms").asInstanceOf[Long]
     lap("manifest_and_counts")
     val postingRows = manifestRows.map(_.rows).sum // no extra job
     BuildReport(seg, docCount, termCount, postingRows,
       (System.nanoTime() - t0) / 1000000,
       laps.result)
+  }
+
+  /** THE segment-finish step of every writer (the builds through
+    * [[buildSegmentFromIdPages]] and [[mergeCompactImpl]]): term_stats
+    * and the manifest rows of segment `seg` from ONE read-back of its
+    * written postings, as Lucene's terms writer records docFreq and
+    * totalTermFreq from the postings it writes. Per row it carries
+    * df_local, max_tf, min_dl, ttf (one [[VarByte.sumTf]] walk) and the
+    * blob length, never the blob bytes, so the narrow frame persists
+    * (rule 17 is about the blobs, not metrics derived from them) and
+    * both aggregates read it: df = Σ df_local (each (term, doc) lands in
+    * exactly one chunk), ttf = Σ ttf, bounds fold over the per-chunk
+    * bounds. `statsRows` replaces the read-back as the aggregate's input
+    * where the caller has rows of the same shape without a blob walk (a
+    * compaction no dead doc touches sums its targets' term_stats). The
+    * manifest holds per-part lineage over the DURABLE bytes (rows,
+    * bytes, checksum), skipping the parts `done` (a resumed build's
+    * earlier run has their rows). Returns (term count, manifest rows). */
+  private def finishSegment(spark: SparkSession, root: String, seg: String,
+                            lineage: String, t0: Long, laps: Laps,
+                            done: Set[Int] = Set.empty,
+                            statsRows: Option[DataFrame] = None)
+      : (Long, Seq[IndexStore.ManifestRow]) = {
+    import spark.implicits._
+    val walkTf = statsRows.isEmpty
+    val derived = IndexStore.readPostingsOrEmpty(spark, root, seg)
+      .select("part", "term", "df_local", "max_tf", "min_dl", "blob")
+      .as[(Int, String, Long, Int, Int, Array[Byte])]
+      .map { case (p, t, dfl, mtf, mdl, blob) =>
+        (p, t, dfl, if (walkTf) VarByte.sumTf(blob) else 0L, mtf, mdl,
+          blob.length.toLong)
+      }
+      .toDF("part", "term", "df_local", "ttf", "max_tf", "min_dl", "bytes")
+      .withColumn("cks", crc32(concat(col("term"), lit("|"),
+        col("df_local").cast("string"))))
+      .persist()
+    try {
+      // the manifest first: an RDD reduce over the uncached plan is ONE
+      // job that also fills the cache (an adaptive plan would spend a
+      // job on the cache and one per shuffle)
+      val wallMs = (System.nanoTime() - t0) / 1000000
+      val rows = derived.filter(!col("part").isin(done.toSeq: _*))
+        .select("part", "bytes", "cks").as[(Int, Long, Long)].rdd
+        .map { case (p, b, c) => (p, (1L, b, c)) }
+        .reduceByKey((x, y) => (x._1 + y._1, x._2 + y._2, x._3 + y._3))
+        .collect().sortBy(_._1).map { case (p, (n, b, c)) =>
+          IndexStore.ManifestRow(p, n, b, c, lineage, wallMs)
+        }.toSeq
+      val termObs = org.apache.spark.sql.Observation()
+      statsRows.getOrElse(derived).groupBy("term")
+        .agg(sum("df_local").as("df"), sum("ttf").as("ttf"),
+          max("max_tf").as("max_tf"), min("min_dl").as("min_dl"))
+        .observe(termObs, count(lit(1)).as("terms"))
+        .write.mode("overwrite").parquet(IndexStore.termStatsPath(root, seg))
+      laps.lap("term_stats")
+      IndexStore.appendManifest(spark, root, seg, rows)
+      (termObs.get("terms").asInstanceOf[Long], rows)
+    } finally derived.unpersist()
   }
 
   /** FULL build (reference `OpenMode.CREATE`, Indexer.java:199-204): one
@@ -1424,9 +1370,11 @@ object IndexBuilder {
     * doc_ids are KEPT (gaps where dead docs fell out are harmless: no
     * query path assumes density, and `id_ceiling` in the stats keeps
     * future APPEND bases safe). Blobs of terms untouched by deletions
-    * pass through byte-identical without a re-encode; when there are no
-    * dead docs at all, term_stats merge as pure per-segment sums and no
-    * blob is even decoded.
+    * pass through byte-identical without a re-encode. term_stats and
+    * the manifest come from the written postings through
+    * [[finishSegment]], as in every build; when no dead doc touches the
+    * targets, term_stats are instead the per-segment sums and no blob is
+    * decoded for them.
     *
     * Falls back to the rebuild [[merge]] when segments disagree on
     * layout/identity knobs (numParts, saltFanout, positions, analyzer —
@@ -1608,30 +1556,6 @@ object IndexBuilder {
       .options(IndexStore.postingsWriteOptionsFor(withPos))
       .parquet(IndexStore.postingsPath(root, seg))
     lap("postings_blob_merge_write")
-    val written = IndexStore.readPostingsOrEmpty(spark, root, seg)
-
-    // term_stats: pure per-segment sums when nothing died (no blob ever
-    // decoded for them); otherwise from the written blobs — df/bounds are
-    // stored per row, live ttf is re-derived by one vb_decode fold (the
-    // written schema is the pinned postings layout, which carries no ttf)
-    val termRows =
-      if (!touched)
-        IndexStore.read(spark, IndexStore.Table.TermStats,
-            targets.map(IndexStore.termStatsPath(root, _)): _*)
-          .groupBy("term").agg(sum("df").as("df"), sum("ttf").as("ttf"),
-            max("max_tf").as("max_tf"), min("min_dl").as("min_dl"))
-      else written
-        .withColumn("ttf_local",
-          aggregate(vb_decode(col("blob")),
-            lit(0L), (acc, p) => acc + p.getField("tf").cast("long")))
-        .groupBy("term").agg(sum("df_local").as("df"),
-          sum("ttf_local").as("ttf"),
-          max("max_tf").as("max_tf"), min("min_dl").as("min_dl"))
-    val termObs = org.apache.spark.sql.Observation()
-    termRows.observe(termObs, count(lit(1)).as("terms"))
-      .write.mode("overwrite")
-      .parquet(IndexStore.termStatsPath(root, seg))
-    lap("term_stats")
 
     // docstore: live rows only, ids unchanged; stats observed during
     // the write
@@ -1661,23 +1585,18 @@ object IndexBuilder {
     carrySidecar(IndexStore.jsonFieldsPath)
     lap("sidecars")
 
-    val wallMs0 = (System.nanoTime() - t0) / 1000000
-    val manifestRows = written
-      .groupBy("part").agg(
-        count(lit(1)).as("rows"),
-        sum(length(col("blob"))).as("bytes"),
-        sum(crc32(concat(col("term"), lit("|"),
-          col("df_local").cast("string")))).as("cks"))
-      .collect().map { r =>
-        IndexStore.ManifestRow(r.getInt(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), s"compact-of-${targets.mkString("+")}", wallMs0)
-      }.toSeq
-    IndexStore.appendManifest(spark, root, seg, manifestRows)
+    // term_stats: pure per-segment sums when nothing died (no blob ever
+    // decoded for them); otherwise the shared read-back's aggregate
+    val (termCount, manifestRows) = finishSegment(spark, root, seg,
+      s"compact-of-${targets.mkString("+")}", t0, laps,
+      statsRows = Option.when(!touched)(IndexStore.read(spark,
+          IndexStore.Table.TermStats,
+          targets.map(IndexStore.termStatsPath(root, _)): _*)
+        .withColumnRenamed("df", "df_local")))
     IndexStore.writeSegmentConfig(spark, root, seg,
       IndexStore.SegmentConfig(numParts, sc0.saltFanout, blockSize,
         formatVersion = segVer,
         hasPositions = withPos, analyzer = sc0.analyzer))
-    val termCount = termObs.get("terms").asInstanceOf[Long]
     val remaining = snap.segments.filterNot(targets.contains)
     // full compact (clearTombstones): one clean segment, no superseded
     // rows left → sidecar resets to empty.

@@ -2,6 +2,7 @@ package graft.index
 
 import graft.SparkTestBase
 import graft.analysis.SynonymDict
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -35,24 +36,45 @@ class IndexBuildSpec extends AnyFunSuite with SparkTestBase {
     assert(ma == mb && ma.nonEmpty)
   }
 
-  test("sampled-stats build (headSampleDocs gate): term_stats and the " +
-    "logical posting content are identical to the exact pipeline; the " +
-    "integrity audit stays clean") {
+  private def termStats(root: String, seg: String) =
+    spark.read.parquet(IndexStore.termStatsPath(root, seg))
+      .select("term", "df", "ttf", "max_tf", "min_dl").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getInt(3),
+        r.getInt(4)))
+      .sortBy(_._1).toSeq
+
+  /** (term, df, ttf, max_tf, min_dl) aggregated over the tf pairs
+    * `IndexBuilder.analyze` gives the docstore rows `docs` — the
+    * tokenize pass the engine no longer runs for term_stats. */
+  private def tokenizeStats(docs: DataFrame) =
+    IndexBuilder.analyze(docs.withColumn("html", lit(null).cast("binary")),
+        dict)
+      .select(explode(col("tf_pairs")).as("p"))
+      .groupBy(col("p.term"))
+      .agg(count(lit(1)), sum(col("p.tf").cast("long")), max("p.tf"),
+        min("p.dl"))
+      .collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getInt(3),
+        r.getInt(4)))
+      .sortBy(_._1).toSeq
+
+  private def docstore(root: String, segs: Seq[String]) =
+    IndexStore.read(spark, IndexStore.Table.Docstore,
+      segs.map(IndexStore.docstorePath(root, _)): _*)
+
+  test("term_stats equal the tokenize aggregate, sampled or not") {
     val a = tmpDir("graft-samp-a-")
     val b = tmpDir("graft-samp-b-")
-    // a: exact pipeline (default gate keeps 300 docs on the small path);
-    // b: forced onto the sampled path (300 > 2 * 50)
+    // a: the head set is counted over every doc (300 ≤ headSampleDocs);
+    // b: over a sample (300 > 50)
     IndexBuilder.buildFull(spark, WebtextGen.df(spark, Seed, N), dict, a, cfg, "x")
     IndexBuilder.buildFull(spark, WebtextGen.df(spark, Seed, N), dict, b,
       cfg.copy(headSampleDocs = 50), "x")
-    def stats(root: String) =
-      spark.read.parquet(IndexStore.termStatsPath(root, "seg-000000"))
-        .select("term", "df", "ttf", "max_tf", "min_dl")
-        .collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-          r.getInt(3), r.getInt(4)))
-        .sortBy(_._1).toSeq
-    assert(stats(a) == stats(b))
+    for (root <- Seq(a, b)) {
+      val got = termStats(root, "seg-000000")
+      assert(got.nonEmpty)
+      assert(got == tokenizeStats(docstore(root, Seq("seg-000000"))), root)
+    }
     // salting is layout-only: the flattened (term, doc, tf, dl) content
     // must be identical no matter which terms the sample chose to salt
     def logical(root: String) =
@@ -65,6 +87,39 @@ class IndexBuildSpec extends AnyFunSuite with SparkTestBase {
     assert(logical(a) == logical(b))
     assert(IndexCheck.check(spark, b).collect()
       .map(_.getAs[String]("problem")).isEmpty)
+  }
+
+  test("mergeCompact's term_stats equal the tokenize aggregate over the " +
+    "live docs, with and without dead docs") {
+    import spark.implicits._
+    val pages = WebtextGen.pages(Seed, N)
+    val later = pages.zipWithIndex.collect {
+      case (p, i) if i % 10 == 0 =>
+        p.copy(warc_ts = new java.sql.Timestamp(p.warc_ts.getTime + 86400000L))
+    }
+    val fresh = (0 until 60).map(i =>
+      WebtextGen.page(Seed + 1, i.toLong).copy(url = s"https://fresh.example/$i"))
+    for (withDead <- Seq(true, false)) {
+      val root = tmpDir(s"graft-compact-stats-$withDead-")
+      IndexBuilder.buildFull(spark, pages.toDF(), dict, root, cfg, "x")
+      // with dead docs: upserts supersede base rows and a delete
+      // tombstones urls, so the compaction decodes the blobs it merges;
+      // without: fresh urls only, so term_stats are the segments' sums
+      IndexBuilder.appendSegment(spark,
+        (if (withDead) later ++ fresh else fresh).toDF(), dict, root, cfg)
+      if (withDead)
+        IndexBuilder.deleteByPk(spark, root, pages.take(7).map(_.url))
+      val snap = IndexStore.readLatestSnapshot(spark, root).get
+      val dead = LiveDocs.load(spark, root, snap).dead
+      assert(dead.isEmpty != withDead)
+      val want = tokenizeStats(docstore(root, snap.segments)
+        .where(!graft.functions.graftFunctions.in_bitmap(col("doc_id"), dead)))
+      val rep = IndexBuilder.mergeCompact(spark, root, dict, cfg)
+      assert(rep.phases.exists(_._1 == "postings_blob_merge_write"),
+        rep.phases)
+      assert(termStats(root, rep.segment) == want, s"withDead=$withDead")
+      assert(rep.termCount == want.size)
+    }
   }
 
   test("resume after a partial build rebuilds ONLY the missing posting " +
