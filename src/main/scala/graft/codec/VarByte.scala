@@ -1,7 +1,5 @@
 package graft.codec
 
-import scala.collection.mutable.ArrayBuffer
-
 /** Delta-compressed posting lists with block headers (SURVEY.md §2.11,
   * north-rule "delta-encoded + variable-byte-compressed posting lists"),
   * in two on-disk body formats behind one header layout:
@@ -139,40 +137,8 @@ object VarByte {
     buf += v.toByte
   }
 
-  final class Reader(val bytes: Array[Byte], var pos: Int) {
-    @inline def readVLong(): Long = {
-      var b = bytes(pos); pos += 1
-      var v = (b & 0x7F).toLong
-      var shift = 7
-      while ((b & 0x80) != 0) {
-        b = bytes(pos); pos += 1
-        v |= (b & 0x7F).toLong << shift
-        shift += 7
-      }
-      v
-    }
-    @inline def readVInt(): Int = readVLong().toInt
-  }
-
-  /** Validate magic + supported version, position the reader after the
-    * header, return (reader, version, flags). Every read path starts
-    * here — a foreign/stale blob fails loudly instead of decoding
-    * garbage. */
-  private def openReader(blob: Array[Byte]): (Reader, Int, Long) = {
-    require(blob.nonEmpty && blob(0) == Magic,
-      "posting blob lacks the graft magic byte — built by an " +
-        "incompatible (pre-v2) version or not a posting blob at all")
-    val r = new Reader(blob, 1)
-    val v = r.readVInt()
-    require(SupportedVersions.contains(v),
-      s"posting blob format v$v, this build reads " +
-        s"v${SupportedVersions.toSeq.sorted.mkString("/v")}")
-    val flags = r.readVLong()
-    (r, v, flags)
-  }
-
   /** The blob's own format version (from its header). */
-  def formatVersionOf(blob: Array[Byte]): Int = openReader(blob)._2
+  def formatVersionOf(blob: Array[Byte]): Int = new BlockReader(blob).version
 
   /** One decoded block header; `firstPossibleDocId` = prevBlockLast + 1
     * and `lastDocId` bound the block's docId range without body decode. */
@@ -396,8 +362,7 @@ object VarByte {
   }
 
   /** Does the blob carry per-posting positions? */
-  def hasPositions(blob: Array[Byte]): Boolean =
-    (openReader(blob)._3 & FlagPositions) != 0L
+  def hasPositions(blob: Array[Byte]): Boolean = new BlockReader(blob).withPos
 
   /** Primitive-specialized callback traits: scala.FunctionN erases its
     * arguments to Object, which BOXES three primitives per posting —
@@ -408,136 +373,193 @@ object VarByte {
     def apply(docId: Long, tf: Int, dl: Int, positions: Array[Int]): Unit
   }
 
-  /** Read one v3 block's packed sections into the caller's arrays at
-    * `off` (the reader must sit on the width bytes); advances the reader
-    * past the sections (positions varints, when present, follow) and
-    * returns the block-last docId. */
-  @inline private def readV3Sections(r: Reader, bn: Int, prev: Long,
-                                     ids: Array[Long], tfs: Array[Int],
-                                     dls: Array[Int], off: Int): Long = {
-    val blob = r.bytes
-    val w0 = blob(r.pos) & 0xFF
-    if (w0 == V3EscapeMarker) {
-      // short-block escape: varint triples (see V3EscapeMin)
-      r.pos += 1
-      var prevId = prev
-      var k = 0
-      while (k < bn) {
-        prevId += r.readVLong()
-        ids(off + k) = prevId
-        tfs(off + k) = r.readVInt()
-        dls(off + k) = r.readVInt()
+  /** THE posting-blob reader: every read of blob bytes goes through it.
+    * The constructor validates the blob header (magic + a supported
+    * version), so a foreign or stale blob fails loudly instead of
+    * decoding garbage. [[nextBlock]] is the one block-header parse; the
+    * body is then either decoded — [[readBody]] into the caller's arrays
+    * at an offset, [[readBlock]] into per-blob scratch — or skipped by
+    * its bodyLen ([[skipBody]]). Every block's first docId gap is based
+    * on the header chain (`prevBlockLast`), decoded or skipped alike.
+    *
+    * A decoded body must end exactly at `bodyPos + bodyLen`: the skips
+    * (WAND, [[decodeForDocs]], header-only walks) trust bodyLen, so a
+    * corrupt one fails every full decode — and [[graft.index.IndexCheck]]
+    * — instead of sending skips into the middle of a body. */
+  private final class BlockReader(blob: Array[Byte]) {
+    require(blob.nonEmpty && blob(0) == Magic,
+      "posting blob lacks the graft magic byte — built by an " +
+        "incompatible (pre-v2) version or not a posting blob at all")
+    private[this] var pos = 1
+    val version: Int = readVInt()
+    require(SupportedVersions.contains(version),
+      s"posting blob format v$version, this build reads " +
+        s"v${SupportedVersions.toSeq.sorted.mkString("/v")}")
+    val withPos: Boolean = (readVLong() & FlagPositions) != 0L
+    val total: Int = readVInt()
+    val blockSize: Int = readVInt()
+    private[this] var consumed = 0
+
+    // the current block's header
+    var n = 0
+    var bodyLen = 0
+    var maxTf = 0
+    var minDl = 0
+    var prevBlockLast = 0L
+    var lastDocId = 0L
+    var bodyPos = 0
+
+    // block-at-a-time scratch (Cursor, scanPos, sumTf, decodeForDocs):
+    // one block of min(blockSize, total) entries per blob, allocated at
+    // the first decoded block so header-only walks allocate none
+    var blockIds: Array[Long] = null
+    var blockTfs: Array[Int] = null
+    var blockDls: Array[Int] = null
+    var blockPos: Array[Array[Int]] = null
+
+    @inline private def readVLong(): Long = {
+      var b = blob(pos); pos += 1
+      var v = (b & 0x7F).toLong
+      var shift = 7
+      while ((b & 0x80) != 0) {
+        b = blob(pos); pos += 1
+        v |= (b & 0x7F).toLong << shift
+        shift += 7
+      }
+      v
+    }
+    @inline private def readVInt(): Int = readVLong().toInt
+
+    def hasBlock: Boolean = consumed < total
+
+    def nextBlock(): Unit = {
+      n = readVInt()
+      bodyLen = readVInt()
+      maxTf = readVInt()
+      minDl = readVInt()
+      prevBlockLast = lastDocId
+      lastDocId = prevBlockLast + readVLong()
+      bodyPos = pos
+      consumed += n
+    }
+
+    def header: BlockHeader =
+      BlockHeader(n, bodyLen, maxTf, minDl, prevBlockLast, lastDocId, bodyPos)
+
+    def skipBody(): Unit = pos = bodyPos + bodyLen
+
+    /** Decode the current body into `ids`/`tfs`/`dls` at `off`; each
+      * posting's positions go to `poss(off + k)`, or are skipped when
+      * `poss` is null or the blob has none. */
+    def readBody(ids: Array[Long], tfs: Array[Int], dls: Array[Int],
+                 off: Int, poss: Array[Array[Int]]): Unit = {
+      if (version == FormatV2) readTriples(ids, tfs, dls, off, poss, withPos)
+      else {
+        readV3Sections(ids, tfs, dls, off)
+        if (withPos) {
+          var k = off
+          while (k < off + n) { readPositions(tfs(k), poss, k); k += 1 }
+        }
+      }
+      require(pos == bodyPos + bodyLen,
+        s"block@$bodyPos: body ends at byte $pos but its header's " +
+          s"bodyLen=$bodyLen puts the end at ${bodyPos + bodyLen}")
+    }
+
+    /** Decode the current body into the per-blob scratch. */
+    def readBlock(wantPositions: Boolean): Unit = {
+      if (blockIds == null) {
+        val cap = math.min(blockSize, total)
+        blockIds = new Array(cap)
+        blockTfs = new Array(cap)
+        blockDls = new Array(cap)
+        if (wantPositions && withPos) blockPos = new Array(cap)
+      }
+      readBody(blockIds, blockTfs, blockDls, 0, blockPos)
+    }
+
+    /** Varint `[docGap][tf][dl]` triples: the v2 body (positions
+      * interleaved per entry when `interleaved`) and the v3 escaped
+      * body (its positions follow the triples). */
+    private def readTriples(ids: Array[Long], tfs: Array[Int],
+                            dls: Array[Int], off: Int,
+                            poss: Array[Array[Int]],
+                            interleaved: Boolean): Unit = {
+      var prev = prevBlockLast
+      var k = off
+      val end = off + n
+      while (k < end) {
+        prev += readVLong()
+        ids(k) = prev
+        val tf = readVInt()
+        tfs(k) = tf
+        dls(k) = readVInt()
+        if (interleaved) readPositions(tf, poss, k)
         k += 1
       }
-      return prevId
     }
-    val wGap = w0
-    val wTf = blob(r.pos + 1) & 0xFF
-    val wDl = blob(r.pos + 2) & 0xFF
-    var p = r.pos + 3
-    val last = BitPack.unpackGapsPrefix(blob, p, bn, wGap, prev, ids, off)
-    p += BitPack.packedBytes(bn, wGap)
-    BitPack.unpackInts(blob, p, bn, wTf, tfs, off)
-    p += BitPack.packedBytes(bn, wTf)
-    BitPack.unpackInts(blob, p, bn, wDl, dls, off)
-    p += BitPack.packedBytes(bn, wDl)
-    r.pos = p
-    last
+
+    /** A v3 body's triples: three packed sections behind their width
+      * bytes, or varint triples behind the escape marker (see
+      * [[V3EscapeMin]]). */
+    private def readV3Sections(ids: Array[Long], tfs: Array[Int],
+                               dls: Array[Int], off: Int): Unit = {
+      val wGap = blob(pos) & 0xFF
+      if (wGap == V3EscapeMarker) {
+        pos += 1
+        readTriples(ids, tfs, dls, off, null, interleaved = false)
+      } else {
+        val wTf = blob(pos + 1) & 0xFF
+        val wDl = blob(pos + 2) & 0xFF
+        var p = pos + 3
+        BitPack.unpackGapsPrefix(blob, p, n, wGap, prevBlockLast, ids, off)
+        p += BitPack.packedBytes(n, wGap)
+        BitPack.unpackInts(blob, p, n, wTf, tfs, off)
+        p += BitPack.packedBytes(n, wTf)
+        BitPack.unpackInts(blob, p, n, wDl, dls, off)
+        pos = p + BitPack.packedBytes(n, wDl)
+      }
+    }
+
+    /** One posting's `tf` positions (`[pos0][gap]*` varints) into
+      * `poss(i)`, or skipped when `poss` is null. */
+    @inline private def readPositions(tf: Int, poss: Array[Array[Int]],
+                                      i: Int): Unit =
+      if (poss != null) {
+        val ps = new Array[Int](tf)
+        var acc = 0
+        var j = 0
+        while (j < tf) { acc += readVInt(); ps(j) = acc; j += 1 }
+        poss(i) = ps
+      } else {
+        // a varint ends at its one byte with the high bit clear
+        var j = 0
+        while (j < tf) { if (blob(pos) >= 0) j += 1; pos += 1 }
+      }
   }
 
   /** Iterate block headers, calling `onBlock`; return value decides
     * whether the body is decoded (true) or skipped via bodyLen (false).
     * When decoded, `onEntry(docId, tf, dl, positions)` fires per posting
     * (`positions` is null when the blob has none or `wantPositions` is
-    * false — position bytes are then read-and-discarded). The workhorse
-    * behind WAND pruning, docId skipping and phrase decode (full decode
-    * is a specialized direct loop, see [[decode]]). */
+    * false — position bytes are then skipped). The workhorse behind WAND
+    * pruning, docId skipping, header-only walks and phrase decode;
+    * decoded blocks go through one scratch block per blob. */
   @inline def scanPos(blob: Array[Byte], wantPositions: Boolean)(
       onBlock: BlockHeader => Boolean)(
       onEntry: PosSink): Unit = {
-    val (r, ver, flags) = openReader(blob)
-    val withPos = (flags & FlagPositions) != 0L
-    val n = r.readVInt()
-    val blockSize = r.readVInt()
-    // v3 scratch: decoded per block, then replayed entry-wise (the
-    // callback contract is shared with v2; allocated once per scan)
-    var sIds: Array[Long] = null
-    var sTfs: Array[Int] = null
-    var sDls: Array[Int] = null
-    var filled = 0
-    var prevBlockLast = 0L
-    while (filled < n) {
-      val bn = r.readVInt()
-      val bodyLen = r.readVInt()
-      val maxTf = r.readVInt()
-      val minDl = r.readVInt()
-      val lastDelta = r.readVLong()
-      val h = BlockHeader(bn, bodyLen, maxTf, minDl, prevBlockLast,
-        prevBlockLast + lastDelta, r.pos)
-      if (onBlock(h)) {
-        // a POSITION-FREE v3 ESCAPED body is byte-identical to a v2
-        // body, so both stream through the same varint loop — no
-        // scratch, no replay. Positional blobs differ (v2 interleaves
-        // positions per entry; v3 trails them after the triples), so
-        // those keep the decode-then-replay shape either way.
-        val streamVarint = ver == FormatV2 || (!withPos && {
-          val esc = (blob(r.pos) & 0xFF) == V3EscapeMarker
-          if (esc) r.pos += 1
-          esc
-        })
-        if (streamVarint) {
-          var prev = prevBlockLast
-          var k = 0
-          while (k < bn) {
-            prev += r.readVLong()
-            val tf = r.readVInt()
-            val dl = r.readVInt()
-            var ps: Array[Int] = null
-            if (withPos) {
-              if (wantPositions) {
-                ps = new Array[Int](tf)
-                var acc = 0
-                var j = 0
-                while (j < tf) { acc += r.readVInt(); ps(j) = acc; j += 1 }
-              } else {
-                var j = 0
-                while (j < tf) { r.readVLong(); j += 1 }
-              }
-            }
-            onEntry(prev, tf, dl, ps)
-            k += 1
-          }
-        } else {
-          if (sIds == null) {
-            val cap = math.min(blockSize, n)
-            sIds = new Array[Long](cap); sTfs = new Array[Int](cap)
-            sDls = new Array[Int](cap)
-          }
-          readV3Sections(r, bn, prevBlockLast, sIds, sTfs, sDls, 0)
-          var k = 0
-          while (k < bn) {
-            val tf = sTfs(k)
-            var ps: Array[Int] = null
-            if (withPos) {
-              if (wantPositions) {
-                ps = new Array[Int](tf)
-                var acc = 0
-                var j = 0
-                while (j < tf) { acc += r.readVInt(); ps(j) = acc; j += 1 }
-              } else {
-                var j = 0
-                while (j < tf) { r.readVLong(); j += 1 }
-              }
-            }
-            onEntry(sIds(k), tf, sDls(k), ps)
-            k += 1
-          }
+    val br = new BlockReader(blob)
+    while (br.hasBlock) {
+      br.nextBlock()
+      if (onBlock(br.header)) {
+        br.readBlock(wantPositions)
+        var k = 0
+        while (k < br.n) {
+          onEntry(br.blockIds(k), br.blockTfs(k), br.blockDls(k),
+            if (br.blockPos == null) null else br.blockPos(k))
+          k += 1
         }
-      } else {
-        r.pos += bodyLen
-      }
-      prevBlockLast = h.lastDocId
-      filled += bn
+      } else br.skipBody()
     }
   }
 
@@ -550,253 +572,92 @@ object VarByte {
 
   /** Full decode → (docIds, tfs, dls).
     *
-    * SPECIALIZED direct loop, not the [[scan]] callback: the generic
-    * Function3/Function4 callbacks box three primitives per posting,
-    * which made full decode ~30× slower than the memory-bandwidth
+    * THE hot kernel of exact scoring, batch scoring and compaction, so it
+    * takes no callback: a generic callback boxed three primitives per
+    * posting and made full decode ~30× slower than the memory-bandwidth
     * ceiling (measured: 24M postings/s ≈ 0.08 GB/s of blob bytes vs a
-    * 2.3 GB/s raw scan of the same array). This is THE hot kernel of
-    * exact scoring, batch scoring and compaction, so it stays
-    * allocation-free per posting: v2 decodes varints in place; v3
-    * unpacks each block's sections STRAIGHT into the output arrays
-    * (no scratch, no callback). Byte-level semantics identical to scan
-    * (same Reader, same block walk) — pinned by VarByteSpec round-trips
-    * and the full golden-identity suite. */
+    * 2.3 GB/s raw scan of the same array). Each block is decoded by the
+    * block reader STRAIGHT into the output arrays at its offset — v2
+    * varints in place, v3 sections unpacked in place — with no scratch
+    * and no allocation per posting. */
   def decode(blob: Array[Byte]): (Array[Long], Array[Int], Array[Int]) = {
-    val (r, ver, flags) = openReader(blob)
-    val withPos = (flags & FlagPositions) != 0L
-    val n = r.readVInt()
-    r.readVInt() // blockSize
-    val docIds = new Array[Long](n)
-    val tfs = new Array[Int](n)
-    val dls = new Array[Int](n)
-    var filled = 0
-    var prev = 0L
-    while (filled < n) {
-      val bn = r.readVInt()
-      r.readVInt() // bodyLen
-      r.readVInt(); r.readVInt(); r.readVLong() // maxTf, minDl, lastDelta
-      if (ver == FormatV2) {
-        var k = 0
-        while (k < bn) {
-          prev += r.readVLong()
-          val tf = r.readVInt()
-          val dl = r.readVInt()
-          if (withPos) {
-            var j = 0
-            while (j < tf) { r.readVLong(); j += 1 }
-          }
-          docIds(filled) = prev; tfs(filled) = tf; dls(filled) = dl
-          filled += 1
-          k += 1
-        }
-      } else {
-        prev = readV3Sections(r, bn, prev, docIds, tfs, dls, filled)
-        if (withPos) {
-          var k = 0
-          while (k < bn) {
-            val tf = tfs(filled + k)
-            var j = 0
-            while (j < tf) { r.readVLong(); j += 1 }
-            k += 1
-          }
-        }
-        filled += bn
-      }
-    }
+    val (docIds, tfs, dls, _) = decodeAll(blob, withPositions = false)
     (docIds, tfs, dls)
   }
 
   /** Full decode incl. positions → (docIds, tfs, dls, positions);
-    * positions entries are null when the blob has none. Direct loop for
-    * the same reason as [[decode]]. */
+    * positions entries are null when the blob has none. Decodes straight
+    * into the output arrays, as [[decode]] does. */
   def decodeWithPositions(blob: Array[Byte])
+      : (Array[Long], Array[Int], Array[Int], Array[Array[Int]]) =
+    decodeAll(blob, withPositions = true)
+
+  private def decodeAll(blob: Array[Byte], withPositions: Boolean)
       : (Array[Long], Array[Int], Array[Int], Array[Array[Int]]) = {
-    val (r, ver, flags) = openReader(blob)
-    val withPos = (flags & FlagPositions) != 0L
-    val n = r.readVInt()
-    r.readVInt() // blockSize
-    val docIds = new Array[Long](n)
-    val tfs = new Array[Int](n)
-    val dls = new Array[Int](n)
-    val pos = new Array[Array[Int]](n)
+    val br = new BlockReader(blob)
+    val docIds = new Array[Long](br.total)
+    val tfs = new Array[Int](br.total)
+    val dls = new Array[Int](br.total)
+    val pos = if (withPositions) new Array[Array[Int]](br.total) else null
     var filled = 0
-    var prev = 0L
-    while (filled < n) {
-      val bn = r.readVInt()
-      r.readVInt() // bodyLen
-      r.readVInt(); r.readVInt(); r.readVLong() // maxTf, minDl, lastDelta
-      if (ver == FormatV2) {
-        var k = 0
-        while (k < bn) {
-          prev += r.readVLong()
-          val tf = r.readVInt()
-          val dl = r.readVInt()
-          if (withPos) {
-            val ps = new Array[Int](tf)
-            var acc = 0
-            var j = 0
-            while (j < tf) { acc += r.readVInt(); ps(j) = acc; j += 1 }
-            pos(filled) = ps
-          }
-          docIds(filled) = prev; tfs(filled) = tf; dls(filled) = dl
-          filled += 1
-          k += 1
-        }
-      } else {
-        prev = readV3Sections(r, bn, prev, docIds, tfs, dls, filled)
-        if (withPos) {
-          var k = 0
-          while (k < bn) {
-            val tf = tfs(filled + k)
-            val ps = new Array[Int](tf)
-            var acc = 0
-            var j = 0
-            while (j < tf) { acc += r.readVInt(); ps(j) = acc; j += 1 }
-            pos(filled + k) = ps
-            k += 1
-          }
-        }
-        filled += bn
-      }
+    while (br.hasBlock) {
+      br.nextBlock()
+      br.readBody(docIds, tfs, dls, filled, pos)
+      filled += br.n
     }
     (docIds, tfs, dls, pos)
   }
 
   /** Number of postings without decoding the body. */
-  def count(blob: Array[Byte]): Int = {
-    val (r, _, _) = openReader(blob)
-    r.readVInt()
-  }
+  def count(blob: Array[Byte]): Int = new BlockReader(blob).total
 
-  /** Sequential posting CURSOR over one blob: decodes one entry per
-    * [[advance]] (v3 unpacks one block at a time into O(blockSize)
-    * scratch), so a k-way merge over cursors holds O(k · blockSize)
+  /** Sequential posting CURSOR over one blob: decodes one block at a
+    * time into O(blockSize) scratch and hands out one entry per
+    * [[advance]], so a k-way merge over cursors holds O(k · blockSize)
     * postings instead of k fully-decoded lists — the streaming-merge
     * substrate (the decode-everything merge OOM'd the 10M dress's
     * compaction on head-term shards). Call [[advance]] before reading;
     * `positions` is null when the blob has none or `wantPositions` is
-    * false (position bytes are read-and-discarded). */
+    * false (position bytes are then skipped). */
   final class Cursor(blob: Array[Byte], wantPositions: Boolean = false) {
-    private val opened = openReader(blob)
-    private val r = opened._1
-    private val ver = opened._2
-    private val withPos = (opened._3 & FlagPositions) != 0L
-    private val total = r.readVInt()
-    private val blockSize = r.readVInt()
+    private val br = new BlockReader(blob)
     private var consumed = 0
-    private var remainingInBlock = 0
-    private var blockIdx = 0
-    private var prevBlockLast = 0L
-    // v3 per-block scratch
-    private val v3 = ver == FormatV3
-    private val sIds: Array[Long] =
-      if (v3 && total > 0) new Array(math.min(blockSize, total)) else null
-    private val sTfs: Array[Int] =
-      if (v3 && total > 0) new Array(math.min(blockSize, total)) else null
-    private val sDls: Array[Int] =
-      if (v3 && total > 0) new Array(math.min(blockSize, total)) else null
+    private var k = 0 // next entry of the current block
 
     var docId: Long = 0L
     var tf: Int = 0
     var dl: Int = 0
     var positions: Array[Int] = null
 
-    def hasNext: Boolean = consumed < total
-    def size: Int = total
+    def hasNext: Boolean = consumed < br.total
+    def size: Int = br.total
 
     def advance(): Unit = {
       if (!hasNext) throw new NoSuchElementException("cursor exhausted")
-      if (remainingInBlock == 0) {
-        prevBlockLast = docId // == previous block's last id; 0 at start
-        remainingInBlock = r.readVInt()
-        r.readVInt(); r.readVInt(); r.readVInt(); r.readVLong() // bodyLen..lastDelta
-        if (v3) {
-          readV3Sections(r, remainingInBlock, prevBlockLast,
-            sIds, sTfs, sDls, 0)
-          blockIdx = 0
-        }
+      if (k == br.n) {
+        br.nextBlock()
+        br.readBlock(wantPositions)
+        k = 0
       }
-      if (v3) {
-        docId = sIds(blockIdx); tf = sTfs(blockIdx); dl = sDls(blockIdx)
-        blockIdx += 1
-      } else {
-        // v2 gaps chain continuously: a block's first gap is relative to
-        // the previous block's last docId, which IS the running docId
-        docId += r.readVLong()
-        tf = r.readVInt()
-        dl = r.readVInt()
-      }
-      if (withPos) readPositions()
+      docId = br.blockIds(k); tf = br.blockTfs(k); dl = br.blockDls(k)
+      if (br.blockPos != null) positions = br.blockPos(k)
+      k += 1
       consumed += 1
-      remainingInBlock -= 1
-    }
-
-    @inline private def readPositions(): Unit = {
-      if (wantPositions) {
-        val ps = new Array[Int](tf)
-        var acc = 0
-        var j = 0
-        while (j < tf) { acc += r.readVInt(); ps(j) = acc; j += 1 }
-        positions = ps
-      } else {
-        var j = 0
-        while (j < tf) { r.readVLong(); j += 1 }
-        positions = null
-      }
     }
   }
 
   /** Σ tf over every posting in the blob — the per-blob ttf input when
     * term_stats is DERIVED from written blobs instead of a tokenize
-    * pass. Same Reader walk as [[decode]] (v3 unpacks each block's
-    * sections into O(blockSize) scratch), positions read-and-discarded;
-    * allocation-free per posting for the same reason decode is. */
+    * pass. Block by block through one scratch block, positions skipped;
+    * allocation-free per posting for the same reason [[decode]] is. */
   def sumTf(blob: Array[Byte]): Long = {
-    val (r, ver, flags) = openReader(blob)
-    val withPos = (flags & FlagPositions) != 0L
-    val n = r.readVInt()
-    val blockSize = r.readVInt()
+    val br = new BlockReader(blob)
     var acc = 0L
-    var filled = 0
-    var prev = 0L
-    val v3 = ver == FormatV3
-    val sIds: Array[Long] =
-      if (v3 && n > 0) new Array(math.min(blockSize, n)) else null
-    val sTfs: Array[Int] =
-      if (v3 && n > 0) new Array(math.min(blockSize, n)) else null
-    val sDls: Array[Int] =
-      if (v3 && n > 0) new Array(math.min(blockSize, n)) else null
-    while (filled < n) {
-      val bn = r.readVInt()
-      r.readVInt() // bodyLen
-      r.readVInt(); r.readVInt(); r.readVLong() // maxTf, minDl, lastDelta
-      if (ver == FormatV2) {
-        var k = 0
-        while (k < bn) {
-          r.readVLong() // docId gap
-          val tf = r.readVInt()
-          r.readVInt() // dl
-          acc += tf
-          if (withPos) {
-            var j = 0
-            while (j < tf) { r.readVLong(); j += 1 }
-          }
-          k += 1
-        }
-      } else {
-        prev = readV3Sections(r, bn, prev, sIds, sTfs, sDls, 0)
-        var k = 0
-        while (k < bn) {
-          val tf = sTfs(k)
-          acc += tf
-          if (withPos) {
-            var j = 0
-            while (j < tf) { r.readVLong(); j += 1 }
-          }
-          k += 1
-        }
-      }
-      filled += bn
+    while (br.hasBlock) {
+      br.nextBlock()
+      br.readBlock(wantPositions = false)
+      var k = 0
+      while (k < br.n) { acc += br.blockTfs(k); k += 1 }
     }
     acc
   }
@@ -816,24 +677,38 @@ object VarByte {
 
   /** Decode only entries whose docId is in `sorted` (ascending array):
     * blocks whose [first, last] docId range contains no candidate are
-    * skipped at header cost — the conjunctive-probe / rescore primitive. */
+    * skipped at header cost — the conjunctive-probe / rescore primitive.
+    * Matches go straight into primitive arrays sized by the smaller of
+    * the candidate count and the blob's posting count. */
   def decodeForDocs(blob: Array[Byte], sorted: Array[Long])
       : (Array[Long], Array[Int], Array[Int]) = {
-    val docIds = new ArrayBuffer[Long]()
-    val tfs = new ArrayBuffer[Int]()
-    val dls = new ArrayBuffer[Int]()
     if (sorted.isEmpty) return (Array.empty, Array.empty, Array.empty)
-    scan(blob) { h =>
+    val br = new BlockReader(blob)
+    val cap = math.min(sorted.length, br.total)
+    val docIds = new Array[Long](cap)
+    val tfs = new Array[Int](cap)
+    val dls = new Array[Int](cap)
+    var m = 0
+    while (br.hasBlock) {
+      br.nextBlock()
       // any candidate in (prevBlockLast, lastDocId]? (first block may
       // start at docId 0 == prevBlockLast)
-      var lo = java.util.Arrays.binarySearch(sorted, h.prevBlockLast)
+      var lo = java.util.Arrays.binarySearch(sorted, br.prevBlockLast)
       if (lo < 0) lo = -lo - 1
-      lo < sorted.length && sorted(lo) <= h.lastDocId
-    } { (d, tf, dl) =>
-      if (java.util.Arrays.binarySearch(sorted, d) >= 0) {
-        docIds += d; tfs += tf; dls += dl
-      }
+      if (lo < sorted.length && sorted(lo) <= br.lastDocId) {
+        br.readBlock(wantPositions = false)
+        var k = 0
+        while (k < br.n) {
+          val d = br.blockIds(k)
+          if (java.util.Arrays.binarySearch(sorted, d) >= 0) {
+            docIds(m) = d; tfs(m) = br.blockTfs(k); dls(m) = br.blockDls(k)
+            m += 1
+          }
+          k += 1
+        }
+      } else br.skipBody()
     }
-    (docIds.toArray, tfs.toArray, dls.toArray)
+    (java.util.Arrays.copyOf(docIds, m), java.util.Arrays.copyOf(tfs, m),
+      java.util.Arrays.copyOf(dls, m))
   }
 }

@@ -294,140 +294,6 @@ object IndexBuilder {
     java.lang.Math.floorMod(
       scala.util.hashing.MurmurHash3.stringHash(term) + salt, numParts)
 
-  /** K-way merge of per-map-task posting fragments of one term: doc sets
-    * are disjoint (each doc indexed by exactly one task) but id ranges
-    * interleave, so merge — never concatenate. Position lists (when the
-    * fragments carry them) ride along untouched: they are per-doc data. */
-  private[index] type Decoded =
-    (Array[Long], Array[Int], Array[Int], Array[Array[Int]])
-
-  /** K-way merge of DECODED posting lists with disjoint doc sets but
-    * (possibly) interleaved id ranges → merged arrays. The shared engine
-    * of both the within-build fragment merge and the cross-segment
-    * [[mergeCompact]].
-    *
-    * Small fan-ins use a linear best-of-k scan (cheapest constants);
-    * larger ones a binary min-heap over fragment heads — the linear
-    * scan is O(k·total), and the round-5 10M dress ran it at k ≈ 64
-    * fragments per head-term shard (32 concurrent map tasks × 2 flushes
-    * each), where it became the dominant cost of the whole postings
-    * phase. */
-  private[index] def mergeArrays(decoded: Array[Decoded],
-                                 withPos: Boolean): Decoded = {
-    val total = decoded.map(_._1.length).sum
-    val ids = new Array[Long](total)
-    val tfs = new Array[Int](total)
-    val dls = new Array[Int](total)
-    val poss: Array[Array[Int]] = if (withPos) new Array(total) else null
-    val pos = new Array[Int](decoded.length)
-    var filled = 0
-    if (decoded.length <= 8) {
-      while (filled < total) {
-        var best = -1
-        var bestId = Long.MaxValue
-        var k = 0
-        while (k < decoded.length) {
-          val p = pos(k)
-          if (p < decoded(k)._1.length && decoded(k)._1(p) < bestId) {
-            best = k; bestId = decoded(k)._1(p)
-          }
-          k += 1
-        }
-        ids(filled) = bestId
-        tfs(filled) = decoded(best)._2(pos(best))
-        dls(filled) = decoded(best)._3(pos(best))
-        if (withPos) poss(filled) = decoded(best)._4(pos(best))
-        pos(best) += 1
-        filled += 1
-      }
-    } else {
-      // min-heap of fragment indexes keyed by their head docId; doc
-      // sets are disjoint so keys never tie across live fragments
-      val heap = new Array[Int](decoded.length)
-      var hn = 0
-      @inline def headId(f: Int): Long = decoded(f)._1(pos(f))
-      @inline def siftUp(i0: Int): Unit = {
-        var i = i0
-        while (i > 0 && headId(heap(i)) < headId(heap((i - 1) >> 1))) {
-          val p = (i - 1) >> 1
-          val t = heap(i); heap(i) = heap(p); heap(p) = t
-          i = p
-        }
-      }
-      @inline def siftDown(): Unit = {
-        var i = 0
-        var done = false
-        while (!done) {
-          val l = 2 * i + 1
-          val r = l + 1
-          var m = i
-          if (l < hn && headId(heap(l)) < headId(heap(m))) m = l
-          if (r < hn && headId(heap(r)) < headId(heap(m))) m = r
-          if (m == i) done = true
-          else {
-            val t = heap(i); heap(i) = heap(m); heap(m) = t
-            i = m
-          }
-        }
-      }
-      var f = 0
-      while (f < decoded.length) {
-        if (decoded(f)._1.nonEmpty) { heap(hn) = f; hn += 1; siftUp(hn - 1) }
-        f += 1
-      }
-      while (filled < total) {
-        val best = heap(0)
-        val p = pos(best)
-        ids(filled) = decoded(best)._1(p)
-        tfs(filled) = decoded(best)._2(p)
-        dls(filled) = decoded(best)._3(p)
-        if (withPos) poss(filled) = decoded(best)._4(p)
-        pos(best) = p + 1
-        filled += 1
-        if (p + 1 < decoded(best)._1.length) siftDown()
-        else {
-          hn -= 1
-          if (hn > 0) { heap(0) = heap(hn); siftDown() }
-        }
-      }
-    }
-    (ids, tfs, dls, poss)
-  }
-
-  /** Encode merged posting arrays as ≤`maxPostings`-posting blob CHUNKS:
-    * no blob is ever O(df) — at 10^12 docs a monolithic head-term blob
-    * would be GBs regardless of salting, breaking both the byte[] limit
-    * and the vectorized reader. Every query path already handles
-    * multiple rows per (part, term) (a multi-segment index IS that
-    * shape). Positions ride along iff the decoded arrays carry them.
-    * Returns (blob, postingCount) per chunk. */
-  private[index] def encodeChunks(d: Decoded, blockSize: Int,
-                                  maxPostings: Int,
-                                  version: Int = VarByte.DefaultFormatVersion)
-      : Array[(Array[Byte], Int)] = {
-    require(maxPostings > 0, s"maxBlobPostings must be positive: $maxPostings")
-    val (ids, tfs, dls, poss) = d
-    val n = ids.length
-    if (n == 0) // preserve the legacy empty-blob shape for empty inputs
-      return Array((VarByte.encode(ids, tfs, dls, blockSize, poss, version), 0))
-    val out = Array.newBuilder[(Array[Byte], Int)]
-    var a = 0
-    while (a < n) {
-      val b = math.min(a.toLong + maxPostings, n.toLong).toInt
-      val blob = VarByte.encode(
-        java.util.Arrays.copyOfRange(ids, a, b),
-        java.util.Arrays.copyOfRange(tfs, a, b),
-        java.util.Arrays.copyOfRange(dls, a, b),
-        blockSize,
-        if (poss == null) null else java.util.Arrays.copyOfRange(poss, a, b),
-        version)
-      out += ((blob, b - a))
-      a = b
-    }
-    out.result()
-  }
-
-
   /** Group a sorted iterator into contiguous runs (same `sameRun` as the
     * run's first element) and flat-map each run through `emit` — the one
     * copy of the buffered-iterator/queued-rows state shared by the

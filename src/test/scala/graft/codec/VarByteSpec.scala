@@ -171,6 +171,109 @@ class VarByteSpec extends AnyFunSuite {
       assert(VarByte.sumTf(VarByte.encode(Array.empty[Long],
         Array.empty[Int], Array.empty[Int], version = ver)) == 0L)
     }
+
+    test(s"v$ver: read-path parity: decode, decodeWithPositions, Cursor, " +
+      "scanPos/scan with block skips, sumTf, count, termBounds and " +
+      "decodeForDocs agree (seeded)") {
+      val rnd = new scala.util.Random(2024 + ver)
+      val esc = VarByte.V3EscapeMin
+      for (withPos <- Seq(false, true);
+           bs <- Seq(1, 7, 63, 64, 65, 128, 200);
+           trial <- 1 to 10) {
+        // lengths on both sides of V3EscapeMin, and full blocks plus a
+        // short tail, so v3 blobs mix packed and escaped blocks
+        val n = rnd.nextInt(6) match {
+          case 0 => rnd.nextInt(esc)
+          case 1 => esc - 1 + rnd.nextInt(3)
+          case 2 => bs * (1 + rnd.nextInt(3)) + rnd.nextInt(esc)
+          case 3 => bs * (1 + rnd.nextInt(3))
+          case _ => rnd.nextInt(600)
+        }
+        val gaps = Array.fill(n)(
+          if (rnd.nextInt(8) == 0) 1L + rnd.nextLong(1L << 36)
+          else 1L + rnd.nextLong(40L))
+        val ids = gaps.scanLeft(-1L)(_ + _).tail // docId 0 possible
+        val tfs = Array.fill(n)(1 + rnd.nextInt(if (withPos) 9 else 1 << 18))
+        val dls = Array.fill(n)(rnd.nextInt(1 << 16))
+        val pos =
+          if (!withPos) null
+          else tfs.map { tf =>
+            Array.fill(tf)(1 + rnd.nextInt(30)).scanLeft(rnd.nextInt(3) - 1)(_ + _).tail
+          }
+        val blob = VarByte.encode(ids, tfs, dls, bs, pos, ver)
+        val ctx = s"n=$n bs=$bs withPos=$withPos trial=$trial"
+        def posSeq(p: Array[Int]): Option[Seq[Int]] = Option(p).map(_.toSeq)
+        val wantPos: Seq[Option[Seq[Int]]] =
+          if (withPos) pos.toSeq.map(posSeq) else Seq.fill(n)(None)
+        val want = (0 until n).map(i => (ids(i), tfs(i), dls(i)))
+
+        val (d, t, l) = VarByte.decode(blob)
+        assert(d.indices.map(i => (d(i), t(i), l(i))) == want, ctx)
+        val (d2, t2, l2, p2) = VarByte.decodeWithPositions(blob)
+        assert(d2.indices.map(i => (d2(i), t2(i), l2(i))) == want, ctx)
+        assert(p2.toSeq.map(posSeq) == wantPos, ctx)
+        for (wp <- Seq(false, true)) {
+          val c = new VarByte.Cursor(blob, wantPositions = wp)
+          assert(c.size == n, ctx)
+          val got = Seq.newBuilder[((Long, Int, Int), Option[Seq[Int]])]
+          while (c.hasNext) {
+            c.advance()
+            got += (((c.docId, c.tf, c.dl), posSeq(c.positions)))
+          }
+          assert(got.result() == want.zip(
+            if (wp) wantPos else Seq.fill(n)(None)), s"$ctx cursor wp=$wp")
+        }
+
+        // blocks are consecutive runs of bs postings; skip a random
+        // subset of them by header and expect exactly the rest
+        val nBlocks = (n + bs - 1) / bs
+        val skip = Array.fill(nBlocks)(rnd.nextInt(3) == 0)
+        def blockOf(i: Int): Int = i / bs
+        val keep = (0 until n).filterNot(i => skip(blockOf(i)))
+        for (wp <- Seq(false, true)) {
+          var b = 0
+          val got = Seq.newBuilder[((Long, Int, Int), Option[Seq[Int]])]
+          VarByte.scanPos(blob, wantPositions = wp) { h =>
+            val lo = b * bs
+            val hi = math.min(lo + bs, n)
+            assert(h.n == hi - lo, s"$ctx block $b n")
+            assert(h.prevBlockLast == (if (b == 0) 0L else ids(lo - 1)) &&
+              h.lastDocId == ids(hi - 1), s"$ctx block $b id range")
+            assert(h.maxTf == tfs.slice(lo, hi).max &&
+              h.minDl == dls.slice(lo, hi).min, s"$ctx block $b bounds")
+            val decodeIt = !skip(b)
+            b += 1
+            decodeIt
+          } { (id, tf, dl, ps) =>
+            got += (((id, tf, dl), posSeq(ps)))
+          }
+          assert(b == nBlocks, ctx)
+          assert(got.result() == keep.map(i => (want(i),
+            if (wp) wantPos(i) else None)), s"$ctx scanPos wp=$wp")
+        }
+        val scanned = Seq.newBuilder[(Long, Int, Int)]
+        var sb = 0
+        VarByte.scan(blob) { _ => val k = !skip(sb); sb += 1; k } {
+          (id, tf, dl) => scanned += ((id, tf, dl))
+        }
+        assert(scanned.result() == keep.map(want), s"$ctx scan")
+
+        assert(VarByte.sumTf(blob) == tfs.map(_.toLong).sum, ctx)
+        assert(VarByte.count(blob) == n, ctx)
+        assert(VarByte.termBounds(blob) ==
+          (if (n == 0) (0, 0) else (tfs.max, dls.min)), ctx)
+
+        // a random subset plus absent ids (between and beyond postings)
+        val absent = Array.fill(rnd.nextInt(5))(
+          rnd.nextLong(if (n == 0) 100L else ids.last + 100L))
+        val cand = (ids.filter(_ => rnd.nextBoolean()) ++ absent).distinct.sorted
+        val idSet = ids.toSet
+        val (fd, ft, fl) = VarByte.decodeForDocs(blob, cand)
+        val hit = cand.filter(idSet).toSet
+        assert(fd.indices.map(i => (fd(i), ft(i), fl(i))) ==
+          want.filter(e => hit(e._1)), s"$ctx decodeForDocs")
+      }
+    }
   }
 
   test("v3 short-block escape: blobs below V3EscapeMin carry varint " +

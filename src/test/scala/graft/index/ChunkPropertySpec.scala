@@ -6,7 +6,7 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Property test for the chunked k-way posting merge
-  * ([[IndexBuilder.mergeArrays]] / [[IndexBuilder.encodeChunks]]) —
+  * ([[IndexBuilder.mergeBlobsStreaming]]) over wide tf/dl/gap values —
   * lives in graft.index for private[index] access. */
 class ChunkPropertySpec extends AnyFunSuite {
 
@@ -38,19 +38,25 @@ class ChunkPropertySpec extends AnyFunSuite {
       // disjoint doc ids across lists (the merge precondition): id*k+i
       // keeps each list strictly increasing, makes lists globally
       // disjoint (distinct residues mod k), and INTERLEAVES their ranges
-      val decoded = lists.zipWithIndex.map { case ((ids, tfs, dls), i) =>
-        (ids.map(id => id * lists.size + i), tfs, dls,
-          null: Array[Array[Int]])
-      }.toArray
-      val chunks = IndexBuilder.encodeChunks(
-        IndexBuilder.mergeArrays(decoded, withPos = false), bs, cap)
-      val expected = decoded.flatMap(d =>
-        d._1.indices.map(i => (d._1(i), d._2(i), d._3(i)))).sortBy(_._1).toSeq
-      val got = chunks.flatMap { case (blob, cnt) =>
+      val disjoint = lists.zipWithIndex.map { case ((ids, tfs, dls), i) =>
+        (ids.map(id => id * lists.size + i), tfs, dls)
+      }
+      val blobs = disjoint.map { case (ids, tfs, dls) =>
+        VarByte.encode(ids, tfs, dls, bs)
+      }
+      val chunks = IndexBuilder.mergeBlobsStreaming(blobs, withPos = false,
+        bs, VarByte.DefaultFormatVersion, cap)
+      val expected = disjoint.flatMap { case (ids, tfs, dls) =>
+        ids.indices.map(i => (ids(i), tfs(i), dls(i)))
+      }.sortBy(_._1)
+      // every chunk but the last is full
+      assert(chunks.dropRight(1).forall(_._2 == cap))
+      val got = chunks.flatMap { case (blob, cnt, maxTf, minDl) =>
         val (d, t, l) = VarByte.decode(blob)
-        assert(d.length == cnt && cnt <= cap || expected.isEmpty)
+        assert(d.length == cnt && cnt > 0 && cnt <= cap)
+        assert(maxTf == t.max && minDl == l.min)
         d.indices.map(i => (d(i), t(i), l(i)))
-      }.toSeq
+      }
       assert(got == expected)
     }
   }

@@ -97,6 +97,38 @@ class IndexCheckSpec extends AnyFunSuite with SparkTestBase {
     assert(!got.exists(_.contains("but decoded max is")))
   }
 
+  test(s"v$ver: a corrupt per-BLOCK bodyLen with intact entries is detected — " +
+    "the length every block skip trusts") {
+    val root = build()
+    def firstBlockBodyLenPos(b: Array[Byte]): Int = {
+      var p = 1 // magic byte, then ver, flags, n, blockSize, bn
+      (0 until 5).foreach { _ =>
+        while ((b(p) & 0x80) != 0) p += 1
+        p += 1
+      }
+      p
+    }
+    var victim: String = null
+    rewritePostings(root) { rows =>
+      val i = rows.indexWhere { r =>
+        val b = r.getAs[Array[Byte]]("blob")
+        val p = firstBlockBodyLenPos(b)
+        (b(p) & 0x80) == 0 && b(p) > 0 && b(p) < 126
+      }
+      assert(i >= 0, "no row with a single-byte first-block bodyLen")
+      victim = rows(i).getAs[String]("term")
+      val b = rows(i).getAs[Array[Byte]]("blob").clone()
+      val p = firstBlockBodyLenPos(b)
+      b(p) = (b(p) + 1).toByte // same varint length, one byte too long
+      rows.updated(i, Row.fromSeq(rows(i).toSeq.updated(5, b)))
+    }
+    val got = IndexCheck.check(spark, root).collect()
+      .map(r => (r.getAs[String]("term"), r.getAs[String]("problem"))).toSeq
+    assert(got.exists { case (t, p) =>
+      t == victim && p.contains("decode failed") && p.contains("bodyLen")
+    }, got.take(5).mkString("; "))
+  }
+
   test(s"v$ver: a wrong df_local is detected (blob count AND term_stats sum)") {
     val root = build()
     rewritePostings(root) { rows =>
