@@ -30,9 +30,6 @@ object TextExtract {
     "amp" -> "&", "lt" -> "<", "gt" -> ">", "quot" -> "\"",
     "apos" -> "'", "nbsp" -> " ")
 
-  /** Java-friendly entry point used from generated code. */
-  def extractTextJava(html: Array[Byte]): String = extractText(html)
-
   def extractText(html: Array[Byte]): String = {
     if (html == null) return null
     val s = new String(html, StandardCharsets.UTF_8)

@@ -28,8 +28,8 @@ import org.apache.spark.sql.functions._
   *     postings ⇒ ghost hits);
   *  4. deletion batches: every tombstone and superseded-id batch the
   *     snapshot names holds exactly the rows its `.count` sidecar
-  *     claims (the sidecar alone sizes the broadcast-vs-shuffle
-  *     gates — an undercount would force-broadcast an O(corpus) table).
+  *     claims (the sidecar is a write-time row count that no engine
+  *     path reads; this audit is what keeps it honest).
   *
   * Returns a frame of issues `(segment, part, term, problem)` — empty ⇔
   * healthy. CLI: `graft.Main check --index <root>`.

@@ -454,9 +454,9 @@ object IndexStore {
   // Both are PARQUET per batch, never driver-resident lists: a GDPR-style
   // purge of 1% of 10^12 urls is a 10^10-row table — it must flow
   // executor-to-executor with the driver only tracking the batch NAMES
-  // in the snapshot. Each batch has a write-time `<name>.count` sidecar
-  // that sizes every broadcast-vs-shuffle gate without a job (invariant
-  // 21: never write a wrong one).
+  // in the snapshot. Each batch has a write-time `<name>.count` sidecar:
+  // its row count, which `IndexCheck` audits against the batch
+  // (invariant 21: never write a wrong one).
 
   /** One writer for both batch kinds: the row count is observed during
     * the parquet write (no extra job) and stored as the sidecar. */

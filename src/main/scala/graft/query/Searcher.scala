@@ -436,22 +436,21 @@ final class Searcher(
     }
   }
 
-  /** The shared exact score fold over per-(term, doc) rows
-    * `(term, doc_id, tf, dl, idf)`: per-term contributions summed in
-    * ascending term order — the bit-identical-determinism contract
-    * shared with the golden model and the WAND rescore phase. ONE
-    * definition for every exact path (invariant 11): the executor and
-    * [[searchWand]] group by doc_id, [[searchBatch]] by (query_id,
-    * doc_id), and the restricted WAND θ seed ranks by it. */
+  /** A per-(term, doc) row's BM25 contribution over its `idf`, `tf` and
+    * `dl` columns — the golden model's arithmetic shape. ONE definition
+    * for every exact path (invariant 11): the executor's rows (and so
+    * [[searchWand]]'s rescore and restricted θ seed) and [[searchBatch]]'s
+    * rows carry it into [[Searcher.foldPrepared]]. */
   private def contribBase: Column =
     col("idf") * (col("tf") * lit(k1 + 1.0)) /
       (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / lit(avgdl)))
 
-  private def foldScores(perTerm: DataFrame,
-                         keys: Seq[String] = Seq("doc_id"),
-                         pivotTerms: Option[Seq[String]] = None): DataFrame =
-    Searcher.foldPrepared(perTerm.withColumn("contrib", contribBase), keys,
-      pivotTerms = pivotTerms)
+  /** Every posting of `terms` as a (term, doc_id, tf, dl) row. */
+  private def decodedRows(terms: Seq[String]): DataFrame =
+    postingsForTerms(terms)
+      .select(col("term"), explode(vb_decode(col("blob"))).as("p"))
+      .select(col("term"), col("p.doc_id").as("doc_id"),
+        col("p.tf").as("tf"), col("p.dl").as("dl"))
 
   /** `rows` fanned out to the rows `table` holds under each row's
     * `key` value, with those rows' `valueType` fields as new columns; a
@@ -496,12 +495,12 @@ final class Searcher(
   /** Doc set containing ANY of the given index-present NOT terms
     * (unscored): the MUST_NOT side of the reference's BooleanQuery
     * (`Occur` clauses, Searcher.java:734-736). Presence must already be
-    * resolved by the caller's term lookup. */
-  private def notDocSet(presentNotTerms: Seq[String]): Option[DataFrame] =
+    * resolved by the caller's term lookup. `postings` reads their rows
+    * ([[resolvedFrames]]' reader). */
+  private def notDocSet(presentNotTerms: Seq[String],
+                        postings: Seq[String] => DataFrame): Option[DataFrame] =
     if (presentNotTerms.isEmpty) None
-    else Some(postingsForTerms(presentNotTerms)
-      .select(explode(vb_decode(col("blob"))).as("p"))
-      .select(col("p.doc_id").as("doc_id")).distinct())
+    else Some(postings(presentNotTerms).select("doc_id").distinct())
 
   /** Conjunctive (AND, Q5) or disjunctive (OR) match set with scores:
     * (doc_id, matched, score). AND = each analyzed term its own MUST
@@ -527,11 +526,17 @@ final class Searcher(
             filter: Option[Column] = None,
             notQuery: Option[String] = None,
             minShouldMatch: Int = 0,
-            among: Option[DataFrame] = None): DataFrame = {
+            among: Option[DataFrame] = None): DataFrame =
+    execute(termQuery(query, conjunctive, notQuery), filter, among,
+      if (conjunctive) 0 else minShouldMatch)
+
+  /** `query`'s analyzed terms as MUST (AND: each term its own
+    * requirement) or SHOULD (OR) subs, and `notQuery`'s as MUST_NOT. */
+  private def termQuery(query: String, conjunctive: Boolean,
+                        notQuery: Option[String]): Resolved = {
     import QueryParser._
-    execute(resolve(TermQ(query, if (conjunctive) Must else Should, 1.0) +:
-        notQuery.map(TermQ(_, MustNot, 1.0)).toSeq),
-      filter, among, if (conjunctive) 0 else minShouldMatch)
+    resolve(TermQ(query, if (conjunctive) Must else Should, 1.0) +:
+      notQuery.map(TermQ(_, MustNot, 1.0)).toSeq)
   }
 
   /** Mixed MUST/SHOULD BooleanQuery (the reference's full Occur clause
@@ -692,9 +697,11 @@ final class Searcher(
   private def execute(r: Resolved, filter: Option[Column] = None,
                       among: Option[DataFrame] = None,
                       minShouldMatch: Int = 0,
-                      maxExpansions: Int = 1024): DataFrame =
+                      maxExpansions: Int = 1024,
+                      postings: Seq[String] => DataFrame = decodedRows)
+      : DataFrame =
     Searcher.foldGated(
-        Seq(resolvedFrames(r, maxExpansions, "", filter, among)),
+        Seq(resolvedFrames(r, maxExpansions, "", filter, among, postings)),
         minShouldMatch)
       .getOrElse(Searcher.emptyMatches(spark))
 
@@ -717,11 +724,16 @@ final class Searcher(
     * and the fold stays a single aggregation. The `filter`/`among`/dead-doc
     * restrictions run on the per-term rows before the fold, and — with
     * the NOT sets — on the raw positional rows before each phrase
-    * alignment, so it shuffles only eligible docs. */
+    * alignment, so it shuffles only eligible docs. `postings` reads the
+    * (term, doc_id, tf, dl) rows of the non-phrase subs and the NOT
+    * terms: every posting by default, the candidates' alone in
+    * [[searchWand]]'s rescore (a NOT doc outside the candidates excludes
+    * no row there, so its NOT set is exact on the candidates). */
   private def resolvedFrames(r: Resolved, maxExpansions: Int,
                              keyPrefix: String = "",
                              filter: Option[Column] = None,
-                             among: Option[DataFrame] = None)
+                             among: Option[DataFrame] = None,
+                             postings: Seq[String] => DataFrame = decodedRows)
       : Searcher.ParsedFrames = {
     import Searcher.{ParsedFrames, matchNoDocs}
     val noRows = ParsedFrames(None, 0, Nil, matchNone = false)
@@ -759,7 +771,7 @@ final class Searcher(
 
     // -- MUST_NOT doc-set frames ----------------------------------------
     val notFrames = notDocSet((r.notTerms.distinct.filter(infoOf.contains) ++
-        expMatches.drop(r.exps.size).flatten).distinct)
+        expMatches.drop(r.exps.size).flatten).distinct, postings)
       .toSeq ++ r.notPhrases.flatMap { case (ordered, slop) =>
         val dts = ordered.distinct.sorted
         if (!dts.forall(infoOf.contains)) None // absent term: matches nothing
@@ -779,11 +791,8 @@ final class Searcher(
     val nonPhrase =
       if (wRows.isEmpty) Nil
       else Seq(restrict(withTermFrame(
-        postingsForTerms(wRows.map(_._1).distinct.sorted)
-          .select(col("term"), explode(vb_decode(col("blob"))).as("p"))
-          .select(col("term"), col("p.doc_id").as("doc_id"),
-            col("p.tf").as("tf"), col("p.dl").as("dl")),
-        Searcher.TermFrameType, wRows.groupBy(_._1).map { case (t, rs) =>
+        postings(wRows.map(_._1).distinct.sorted), Searcher.TermFrameType,
+        wRows.groupBy(_._1).map { case (t, rs) =>
           t -> rs.map { case (_, idf, w, key) => Row(idf, w, key) } })))
     val phraseFrames = r.phrases.zip(phraseSubs).collect {
       case ((ordered, slop, w, q), (dts, _, _)) if dts.nonEmpty =>
@@ -967,21 +976,26 @@ final class Searcher(
     *    term (a provable lower bound of the final kth score); a doc is a
     *    candidate unless EVERY block it appears in satisfies
     *    `bound(block) + Σ other-term upper bounds < θ`. Under
-    *    restrictions, θ is seeded AFTER restricting the single-term
-    *    scores to the eligible docset — there are ≥ n eligible docs whose
-    *    total score is ≥ that restricted kth contribution, so it still
-    *    lower-bounds the final kth score (an unrestricted seed could
-    *    over-prune; a restricted one cannot).
-    * Candidates are then rescored exactly via docId-skip decode
-    * ([[graft.codec.VarByte.decodeForDocs]]) with the SAME restrictions
-    * applied before the shared term-ordered fold.
+    *    restrictions, θ is the kth-largest `contrib` of the executor's
+    *    own rows for that one term ([[resolvedFrames]]: filter and dead
+    *    docs dropped) minus its NOT doc sets — there are ≥ n eligible
+    *    docs whose total score is ≥ that restricted kth contribution, so
+    *    it still lower-bounds the final kth score (an unrestricted seed
+    *    could over-prune; a restricted one cannot).
+    * Candidates are then rescored by the exact executor itself, reading
+    * only their postings ([[graft.codec.VarByte.decodeForDocs]]), the
+    * NOT terms' included: the same restrictions, requirement gate, fold
+    * and NOT exclusion as [[search]].
     *
     * Job shape (invariant 7), page fetch aside: the terms are
     * dictionary lookups (no job), then AND = candidate collect +
     * rescore/page (2 jobs), OR = θ seed + the candidates'
-    * `distinct().take` (2 jobs) + rescore/page (4).
-    * Falls back to the exact [[search]] result in five cases — pruning
-    * is an optimization, never a correctness risk:
+    * `distinct().take` (2 jobs) + rescore/page (4); a filter or NOT set
+    * the θ seed or the rescore joins may add a broadcast job each, as in
+    * [[search]] (`JobCountSpec`: AND with a filter 3, OR with a NOT
+    * term 6).
+    * Returns [[search]]'s own page in five cases — pruning is an
+    * optimization, never a correctness risk:
     *  1. `minShouldMatch > 0` (msm removes docs from the universe
     *     without a seedable per-doc bound);
     *  2. a single-term query under a restriction (filter / NOT / dead
@@ -991,10 +1005,7 @@ final class Searcher(
     *  4. even the rarest term's df above `maxRescore` (the candidate
     *     set is certain to trip the cap);
     *  5. the collected candidate set above `maxRescore` (the
-    *     10^12-scale guard).
-    * Fallback 1 runs [[search]] itself; 2-5 run the exact executor on
-    * the present terms, so an exact-path answer costs the page job (plus
-    * a restriction's broadcast), as [[search]] does. */
+    *     10^12-scale guard). */
   def searchWand(query: String, k: Int, start: Int = 0,
                  conjunctive: Boolean = true,
                  filter: Option[Column] = None,
@@ -1008,48 +1019,16 @@ final class Searcher(
       return search(query, k, start, conjunctive, filter, notQuery,
         minShouldMatch)
     val n = start + k
-    val terms = analyzeQuery(query)
+    val r = termQuery(query, conjunctive, notQuery)
+    val terms = r.terms.map(_._1)
     if (terms.isEmpty || docCount == 0) return emptyPage
-    val notTerms = notQuery.map(analyzeQuery).getOrElse(Seq.empty)
-    // ONE driver lookup covers MUST and MUST_NOT terms
-    val all = termIdfs((terms ++ notTerms).distinct)
-    val termSet = terms.toSet
-    val idfs = all.filter(i => termSet.contains(i.term))
+    val idfs = termIdfs(terms)
     if (idfs.isEmpty || (conjunctive && idfs.size < terms.size))
       return emptyPage
-    val notSet = notTerms.toSet
-    val presentNot = all.map(_.term).filter(notSet.contains)
-    val isRestricted = hasDeadDocs || filter.nonEmpty || presentNot.nonEmpty
-    // filter semi-join + dead-docs filter + MUST_NOT anti-join — the
-    // exact path's restriction set, applied to per-term rows pre-fold.
-    // The restricted OR path evaluates restrictions in BOTH the θ-seed
-    // collect and the final page job; for large NOT postings the doc set
-    // is materialized once (eager localCheckpoint — one extra job buys
-    // halving the NOT decode), while small ones stay inline (the
-    // duplicate row-group-pruned decode is cheaper than a job). Lazy so
-    // the exact-path fallbacks never trigger it.
-    lazy val ndShared: Option[DataFrame] = notDocSet(presentNot).map { nd =>
-      val notDfTotal = all.filter(i => notSet.contains(i.term)).map(_.df).sum
-      if (!conjunctive && notDfTotal >= wandMinDf) nd.localCheckpoint(true)
-      else nd
-    }
-    def restrict(rows: DataFrame): DataFrame = {
-      val r0 = applyMatchSetRestrictions(rows, filter)
-      ndShared match {
-        case Some(nd) => r0.join(nd, Seq("doc_id"), "left_anti")
-        case None => r0
-      }
-    }
+    val isRestricted =
+      hasDeadDocs || filter.nonEmpty || termIdfs(r.notTerms).nonEmpty
     val (k1c, bc, ac) = (k1, b, avgdl)
     val idfMap = idfs.map(i => i.term -> i.idf).toMap
-    // the exact fallbacks run the executor on the present terms with the
-    // requirement ids and count [[score]] gives them and the present NOT
-    // terms
-    def exact(): DataFrame = rankedPage(execute(Resolved(
-        terms = idfs.zipWithIndex.map { case (i, q) =>
-          (i.term, 1.0, if (conjunctive) q else -1) },
-        notTerms = presentNot,
-        reqCount = if (conjunctive) idfs.size else 0), filter), k, start)
 
     if (idfs.size == 1 && !isRestricted) {
       val i = idfs.head
@@ -1059,23 +1038,18 @@ final class Searcher(
     // cost-based path choice: the multi-term WAND pipeline spends 2-4
     // Spark jobs (θ seed, candidates, rescore) to AVOID decode work —
     // worth it only when the posting volume dominates the fixed per-job
-    // cost. Below the threshold (and for restricted single-term queries,
-    // where block pruning has nothing extra to skip) the exact path is
-    // strictly faster.
-    if (idfs.size == 1 || idfs.map(_.df).sum < wandMinDf) return exact()
-
-    // head-only pre-gate (pure economics — the exact fallback is
-    // always correct): when even the RAREST term's df exceeds the
-    // rescore cap, the pipeline is guaranteed to fall back — for AND
-    // the candidate list IS the rarest term's postings (length > cap
-    // by definition); for OR the θ seeded from one head term's kth
-    // score prunes almost nothing of the others, and the candidate
-    // job shuffles ~Σdf ids through a distinct only to trip the cap
-    // (measured on the 20M dress: a 3-head-term OR emitted ~55M
-    // candidate rows, then fell back). Genuinely mixed queries (any
-    // term with df ≤ maxRescore) keep the full WAND pipeline — that
-    // asymmetry is WAND's actual win.
-    if (idfs.map(_.df).min > maxRescore) return exact()
+    // cost (a restricted single term has no extra block to skip). The
+    // head-only pre-gate is the same economics: when even the RAREST
+    // term's df exceeds the rescore cap, the pipeline is certain to fall
+    // back — for AND the candidate list IS the rarest term's postings;
+    // for OR a θ seeded from one head term's kth score prunes almost
+    // nothing of the others (measured on the 20M dress: a 3-head-term OR
+    // emitted ~55M candidate rows, then fell back). Genuinely mixed
+    // queries (any term with df ≤ maxRescore) keep the full pipeline —
+    // that asymmetry is WAND's actual win.
+    if (idfs.size == 1 || idfs.map(_.df).sum < wandMinDf ||
+        idfs.map(_.df).min > maxRescore)
+      return search(query, k, start, conjunctive, filter, notQuery)
 
     // per-term upper bounds straight from the dictionary lookup — no
     // job, no posting-file touch
@@ -1094,56 +1068,42 @@ final class Searcher(
           .collect()
       } else {
         val best = ubs.maxBy(_._2)._1
-        val theta =
-          if (!isRestricted) {
-            val seed = singleTermTopK(best, idfMap(best), n).collect()
-            if (seed.length >= n) seed.last.getDouble(1)
-            else Double.NegativeInfinity
-          } else {
-            // restricted θ seed: the best term's exact contributions
-            // (contribBase, the fold's own arithmetic — a θ even one ulp
-            // above the true restricted kth could over-prune), restricted
-            // to the eligible docset, kth best
-            val seedRows = withTermFrame(postingsForTerms(Seq(best))
-                .select(col("term"), explode(vb_decode(col("blob"))).as("p"))
-                .select(col("term"), col("p.doc_id").as("doc_id"),
-                  col("p.tf").as("tf"), col("p.dl").as("dl")),
-              Searcher.TermFrameType,
-              Map(best -> Seq(Row(idfMap(best), 1.0, null))))
-            val seed = restrict(seedRows)
-              .select(col("doc_id"), contribBase.as("score"))
+        val seed =
+          if (!isRestricted) singleTermTopK(best, idfMap(best), n)
+          else {
+            // the executor's eligible rows of the one term: contrib is
+            // contribBase itself (a θ even one ulp above the true
+            // restricted kth could over-prune); no fold, no shuffle
+            val one = resolvedFrames(Resolved(terms = Seq((best, 1.0, -1)),
+              notTerms = r.notTerms), maxExpansions = 0, filter = filter)
+            one.notFrames.foldLeft(one.rows.get)(
+                _.join(_, Seq("doc_id"), "left_anti"))
+              .select(col("doc_id"), col("contrib").as("score"))
               .orderBy(col("score").desc, col("doc_id").asc).limit(n)
-              .select("score").as[Double].collect()
-            if (seed.length >= n) seed.last else Double.NegativeInfinity
           }
-        val ubsL = ubs
-        val idfL = idfMap
+        val top = seed.select("score").as[Double].collect()
+        val theta = if (top.length >= n) top.last else Double.NegativeInfinity
         postingsForTerms(idfs.map(_.term))
           .select("term", "blob").as[(String, Array[Byte])]
           .flatMap { case (t, blob) =>
-            Wand.candidatesAboveTheta(blob, idfL(t), sumUb - ubsL(t), theta,
+            Wand.candidatesAboveTheta(blob, idfMap(t), sumUb - ubs(t), theta,
               k1c, bc, ac)
           }
           .distinct().take(maxRescore + 1)
       }
-    if (candidates.length > maxRescore) return exact()
+    if (candidates.length > maxRescore)
+      return search(query, k, start, conjunctive, filter, notQuery)
 
     java.util.Arrays.sort(candidates)
     val bcCand = spark.sparkContext.broadcast(candidates)
-    // each term's idf rides the decode closure (no term-frame join)
-    val rescored = postingsForTerms(idfs.map(_.term))
-      .select("term", "blob").as[(String, Array[Byte])]
-      .flatMap { case (t, blob) =>
-        val (ds, tfs, dls) = graft.codec.VarByte.decodeForDocs(blob, bcCand.value)
-        val idf = idfMap(t)
-        ds.indices.iterator.map(i => (t, ds(i), tfs(i), dls(i), idf))
-      }.toDF("term", "doc_id", "tf", "dl", "idf")
-    val scored = foldScores(restrict(rescored),
-      pivotTerms = Some(idfs.map(_.term)))
-    val page =
-      (if (conjunctive) scored.filter(col("matched") === terms.size) else scored)
-        .orderBy(col("score").desc, col("doc_id").asc).offset(start).limit(k)
-    fetchPage(page)
+    def candidateRows(ts: Seq[String]): DataFrame =
+      postingsForTerms(ts).select("term", "blob").as[(String, Array[Byte])]
+        .flatMap { case (t, blob) =>
+          val (ds, tfs, dls) =
+            graft.codec.VarByte.decodeForDocs(blob, bcCand.value)
+          ds.indices.iterator.map(i => (t, ds(i), tfs(i), dls(i)))
+        }.toDF("term", "doc_id", "tf", "dl")
+    rankedPage(execute(r, filter, postings = candidateRows), k, start)
   }
 
   /** BATCHED top-k: score N queries in ONE declarative plan — the
@@ -1186,15 +1146,13 @@ final class Searcher(
     if (qTerm.isEmpty) return emptyOut
     // one scan over the union of terms; the (query_id, idf) term frame
     // fans each posting row to every query using its term
-    val decoded = withTermFrame(postingsForTerms(qTerm.map(_._2).distinct)
-        .select(col("term"), explode(vb_decode(col("blob"))).as("p"))
-        .select(col("term"), col("p.doc_id").as("doc_id"),
-          col("p.tf").as("tf"), col("p.dl").as("dl")),
+    val decoded = withTermFrame(decodedRows(qTerm.map(_._2).distinct),
       StructType(Seq(StructField("query_id", StringType, nullable = false),
         StructField("idf", DoubleType, nullable = false))),
       qTerm.groupBy(_._2).map { case (t, qs) =>
         t -> qs.map { case (qid, _, idf) => Row(qid, idf) } })
-    val scored = foldScores(dropDead(decoded),
+    val scored = Searcher.foldPrepared(
+        dropDead(decoded).withColumn("contrib", contribBase),
         keys = Seq("query_id", "doc_id"),
         // pivot over the UNION of the batch's terms: within a
         // (query_id, doc_id) group only that query's terms occur, and

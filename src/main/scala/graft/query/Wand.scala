@@ -91,14 +91,20 @@ object Wand {
 
   /** Candidate docIds for a multi-term query: decode only blocks where
     * `bound(block) + othersUb` could reach θ. Docs skipped in EVERY one
-    * of their terms' blocks provably score < θ in total. */
+    * of their terms' blocks provably score < θ in total. The ids collect
+    * in a growable primitive array (no boxed element per posting). */
   def candidatesAboveTheta(blob: Array[Byte], idf: Double, othersUb: Double,
                            theta: Double, k1: Double, b: Double,
                            avgdl: Double): Iterator[Long] = {
-    val out = new scala.collection.mutable.ArrayBuffer[Long]()
+    var out = new Array[Long](64)
+    var m = 0
     VarByte.scan(blob) { h =>
       contrib(idf, h.maxTf, h.minDl, k1, b, avgdl) + othersUb >= theta
-    } { (d, _, _) => out += d }
-    out.iterator
+    } { (d, _, _) =>
+      if (m == out.length) out = java.util.Arrays.copyOf(out, 2 * m)
+      out(m) = d
+      m += 1
+    }
+    out.iterator.take(m)
   }
 }

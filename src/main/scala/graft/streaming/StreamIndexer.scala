@@ -23,17 +23,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StreamIndexer {
 
-  /** Next free doc_id for a micro-batch append: max `id_ceiling` across
-    * the snapshot's segments ([[IndexBuilder.nextAppendBase]] — stats
-    * rows only, no docstore scan). NOT Σ doc_count: a compaction run
-    * against a streamed root (e.g. [[IndexBuilder.mergeCompactTiered]]
-    * draining a segment backlog) keeps original doc_ids WITH GAPS, so a
-    * count sum would hand the next micro-batch COLLIDING ids
-    * (invariant 12 — same rule as the batch APPEND path). */
-  def nextDocId(spark: SparkSession, root: String,
-                snap: IndexStore.Snapshot): Long =
-    IndexBuilder.nextAppendBase(spark, root, snap)
-
   /** Index one micro-batch as segment `seg-b<batchId>`; idempotent under
     * batch re-delivery. */
   def indexBatch(spark: SparkSession, batch: DataFrame, dict: SynonymDict,
@@ -49,8 +38,12 @@ object StreamIndexer {
           IndexStore.Snapshot(0L, Seq(seg), Seq.empty,
             dead = Some(Seq.empty)))
       case Some(snap) =>
+        // the append base is the max `id_ceiling`, never Σ doc_count: a
+        // compaction against a streamed root keeps doc_ids WITH GAPS
+        // (invariant 12)
         IndexBuilder.buildSegment(spark, batch, dict, root, seg,
-          nextDocId(spark, root, snap), cfg, s"stream-batch-$batchId")
+          IndexBuilder.nextAppendBase(spark, root, snap), cfg,
+          s"stream-batch-$batchId")
         // advanceForAppend maintains the superseded-id sidecar: upserted
         // urls across micro-batches stay O(appends) at searcher open —
         // a streamed root accumulating thousands of segments must never

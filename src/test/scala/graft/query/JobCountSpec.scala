@@ -114,7 +114,12 @@ class JobCountSpec extends AnyFunSuite with SparkTestBase {
       "searchWand AND pipeline" -> (() => searcher.searchWand("spark index",
         K, wandMinDf = 0L), 2),
       "searchWand OR pipeline" -> (() => searcher.searchWand("spark index",
-        K, conjunctive = false, wandMinDf = 0L), 4))
+        K, conjunctive = false, wandMinDf = 0L), 4),
+      "searchWand AND filter pipeline" -> (() => searcher.searchWand(
+        "spark index", K, filter = en, wandMinDf = 0L), 3),
+      "searchWand OR NOT pipeline" -> (() => searcher.searchWand(
+        "spark index", K, conjunctive = false, wandMinDf = 0L,
+        notQuery = Some("fast")), 6))
     val over = pinned.flatMap { case (name, (call, max)) =>
       val n = warmJobs(call().collect())
       info(s"$name: $n jobs (pinned $max)")

@@ -233,6 +233,48 @@ class SearchEndToEndSpec extends AnyFunSuite with SparkTestBase {
         assert(e.nonEmpty, s"dead-docs '$q' degenerate")
       }
     } finally s2.close()
+
+    // dead docs, a filter and a NOT term in one query; a later page; a
+    // page past the eligible docs (OR θ = −∞); minShouldMatch through
+    // searchWand — each page bit-identical to search's, in both modes
+    type Restr = (Option[org.apache.spark.sql.Column], Option[String])
+    def pageOf(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "score")
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    def both(s: Searcher, q: String, conj: Boolean, r: Restr, k: Int,
+             start: Int, msm: Int) = {
+      val e = pageOf(s.search(q, k, start, conj, r._1, r._2, msm))
+      val w = pageOf(s.searchWand(q, k, start, conj, r._1, wandMinDf = 0,
+        notQuery = r._2, minShouldMatch = msm))
+      (e, w)
+    }
+    val all: Restr = (Some(col("lang") === "en"), Some("fast"))
+    val s3 = new Searcher(spark, root2, dict)
+    try {
+      assert(s3.numDeletedDocs > 0)
+      for (conj <- Seq(true, false)) {
+        for (start <- Seq(0, 7)) {
+          val (e, w) = both(s3, "spark index", conj, all, K, start, 0)
+          assert(w == e, s"churned+filter+NOT conj=$conj start=$start")
+          assert(e.nonEmpty, s"churned+filter+NOT conj=$conj start=$start " +
+            "degenerate")
+        }
+        // the last few eligible docs: start + k exceeds the match set
+        val q = "search engine"
+        val (everything, _) = both(s3, q, conj, all, 1000, 0, 0)
+        assert(everything.size >= 4 && everything.size < 1000,
+          s"'$q' conj=$conj eligible ${everything.size}")
+        val tailStart = everything.size - 3
+        val (e, w) = both(s3, q, conj, all, K, tailStart, 0)
+        assert(w == e, s"θ = −∞ '$q' conj=$conj start=$tailStart")
+        assert(e == everything.drop(tailStart), s"'$q' conj=$conj tail page")
+      }
+      for (conj <- Seq(true, false); r <- Seq[Restr]((None, None), all)) {
+        val (e, w) = both(s3, "spark index data", conj, r, K, 0, 2)
+        assert(w == e, s"msm=2 conj=$conj restricted=${r._1.nonEmpty}")
+        assert(e.nonEmpty, s"msm=2 conj=$conj degenerate")
+      }
+    } finally s3.close()
   }
 
   test("searchBatch: N queries in one plan are rank- and score-identical " +

@@ -188,7 +188,7 @@ class StreamIndexerSpec extends AnyFunSuite with SparkTestBase {
     // post-compact: 4 live docs, max id 5 → a count-sum base (4) would
     // collide with ids 4 and 5
     val snap = IndexStore.readLatestSnapshot(spark, root).get
-    assert(StreamIndexer.nextDocId(spark, root, snap) == 6L)
+    assert(IndexBuilder.nextAppendBase(spark, root, snap) == 6L)
     StreamIndexer.indexBatch(spark,
       Seq(page("https://g/new", 99, "spark fresh post compact"))
         .toDF("url", "warc_ts", "html", "text", "lang"),
